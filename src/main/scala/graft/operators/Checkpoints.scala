@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The materialization fence used by every iterative / two-phase
   * operator (global rank, connected components, prefix sums): truncate
@@ -35,5 +36,15 @@ object Checkpoints {
           "SparkContext.setCheckpointDir or set spark.graft.checkpointDir")
       df.checkpoint(true)
     }
+  }
+
+  /** Drop a `fence`'s executor-local blocks once nothing will read
+    * them again (non-blocking unpersist). Without it a multi-round
+    * operator holds every superseded round's blocks until a GC lets
+    * the ContextCleaner find them. A reliable fence's files are left
+    * alone, and a frame that is not a fence is untouched. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+    case _ =>
   }
 }

@@ -13,19 +13,21 @@ import org.apache.spark.sql.functions._
   * Algorithm: min-label propagation with pointer jumping (the
   * map-reduce connected-components family of Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14). Each
-  * round every node takes the minimum label in its 1-hop
-  * neighborhood, then labels are resolved one extra hop
-  * (label := label(label)) — the pointer-jumping step that collapses
-  * label chains and gives O(log n) rounds on a path instead of O(n).
+  * round every node takes the minimum of its neighbors' labels and
+  * its own label's label (L'(i) = min(min_{j∈N(i)} L(j), L(L(i)))) —
+  * the second term is the pointer-jumping step that collapses label
+  * chains and gives O(log n) rounds on a path instead of O(n).
   *
-  * Scale shape: each round is two key-partitioned joins + one
-  * aggregation over the EDGE list — no per-node adjacency list is
-  * ever materialized, so a hub node with millions of neighbors costs
-  * map-side-combined min aggregation, not an in-memory list. The
-  * driver sees one boolean-sized aggregate per round (the converged
-  * check) and the checkpoint fence (Checkpoints.fence — executor-local
-  * by default, reliable FS under `spark.graft.reliableCheckpoints`)
-  * truncates lineage so round r's plan does not replay rounds 1..r-1.
+  * Scale shape: each round is one key-partitioned join + one
+  * aggregation over the EDGE list plus the label map — no per-node
+  * adjacency list is ever materialized, so a hub node with millions
+  * of neighbors costs map-side-combined min aggregation, not an
+  * in-memory list. Convergence is an exact DECIMAL label sum observed
+  * on the round's own materialization (no separate job), and the
+  * checkpoint fence (Checkpoints.fence — executor-local by default,
+  * reliable FS under `spark.graft.reliableCheckpoints`) truncates
+  * lineage so round r's plan does not replay rounds 1..r-1; each
+  * superseded fence is released as soon as the next one holds.
   * Measured on the committed sf0.1 pair graphs: 12 rounds — the
   * banded/embedding pair lists contain one chain-shaped component
   * (near-dups of near-dups), so rounds ≈ log2(chain length), not the
@@ -35,8 +37,7 @@ object ConnectedComponents {
 
   /** (id, component) for every node appearing in `edges` (id1, id2);
     * component = the minimum node id reachable from the node. */
-  def components(edges: DataFrame, maxRounds: Int = 25,
-                 jumpsPerRound: Int = 1): DataFrame = {
+  def components(edges: DataFrame, maxRounds: Int = 25): DataFrame = {
     val e = edges.select(col("id1").cast("long").as("a"), col("id2").cast("long").as("b"))
     // symmetric, self-loop-free edge list — both orientations in ONE
     // pass (Graph.symmetrized): the union form computes the pair
@@ -76,24 +77,6 @@ object ConnectedComponents {
         .join(assign.withColumnRenamed("id", "b"), "b")
         .groupBy(col("a").as("id"))
         .agg(min(col("comp")).as("comp"))
-      // OPTIONAL pointer-DOUBLING jumps 2..j (fence + self-join each):
-      // default 1 — on the committed sf0.1 graphs the deep component
-      // is a ~2^12-node chain, and doubling only cut rounds 12→10
-      // while TRIPLING wall (re-measured under this fused round:
-      // ~13 s vs ~3.3 s warm at 32c; r17 measured the same direction
-      // under the old 3-join round). Raise only when per-round shuffle
-      // volume, not round count × fixed job overhead, dominates.
-      var lab = next
-      var j = 1
-      while (j < jumpsPerRound) {
-        val m = Checkpoints.fence(lab)
-        lab = m
-          .join(m.select(col("id").as("__l_id"), col("comp").as("__l_comp")),
-            col("comp") === col("__l_id"), "left")
-          .select(col("id"),
-            coalesce(col("__l_comp"), col("comp")).as("comp"))
-        j += 1
-      }
       // convergence rides the round's materialization as an observed
       // metric — labels are pointwise non-increasing, so an unchanged
       // label SUM (exact DECIMAL, no overflow at any scale) means no
@@ -101,15 +84,17 @@ object ConnectedComponents {
       // job. One extra fixpoint-confirming round, same as the old
       // changed==0 check.
       val obs = org.apache.spark.sql.Observation()
-      val fenced = Checkpoints.fence(lab
+      val fenced = Checkpoints.fence(next
         .observe(obs, sum(col("comp").cast("decimal(38,0)")).as("lsum")))
       val s = obs.get("lsum").asInstanceOf[java.math.BigDecimal]
       // null sum = empty label table (no edges): nothing can change
       converged = s == null || (prevSum != null && s.compareTo(prevSum) == 0)
       prevSum = s
+      Checkpoints.release(assign)
       assign = fenced
       round += 1
     }
+    Checkpoints.release(sym)
     // measurement affordance (stderr only): the round count is the CC
     // family's cost driver — every optimization decision here starts
     // from it, and it is invisible in plans (the loop runs behind

@@ -1,7 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetBridge
+import org.apache.spark.sql.types.{IntegerType, LongType}
+import graft.plans.LargeInListToJoin
 
 /** Inverted-index query family — the reference engine's namesake
   * surface (reference src/main.rs:260-689):
@@ -33,24 +37,19 @@ import org.apache.spark.sql.functions._
   *    caller can pre-bucket by value range — the plan shape is
   *    unchanged.
   *  - doc-id restricted variants NEVER shuffle the fact table: small
-  *    sets (≤ `IsinThreshold`) become an `isin` literal predicate that
-  *    Catalyst pushes into the parquet scan, where row-group min/max
-  *    stats on a doc_id-clustered layout (graft.sources.ClusteredParquet)
-  *    prune all non-matching row groups — the reference's point-lookup
-  *    perf contract (README "100 doc_ids in ~1s on 10M rows"). Larger
-  *    sets become a broadcast inner join (hash lookup per row, no fact
-  *    shuffle, scan still pruned by the id min/max range predicate).
+  *    sets (≤ `LargeInListToJoin.Threshold`) become an `isin` literal
+  *    predicate that Catalyst pushes into the parquet scan, where
+  *    row-group min/max stats on a doc_id-clustered layout
+  *    (graft.sources.ClusteredParquet) prune all non-matching row
+  *    groups — the reference's point-lookup perf contract (README "100
+  *    doc_ids in ~1s on 10M rows"). Larger sets take
+  *    `LargeInListToJoin`'s plan: a pushed id-range predicate (same
+  *    pruning) over a semi-join against the id relation.
   */
 object InvertedIndex {
 
   /** R5: dotted field path → flattened physical column name. */
   def fieldNameToColumn(fieldName: String): String = fieldName.replace('.', '_')
-
-  /** Ids below this become an `isin` literal filter (pushed to the
-    * parquet reader for row-group pruning); above it, a broadcast join.
-    * ~10k In-values is where predicate evaluation starts costing more
-    * than a broadcast hash probe. */
-  val IsinThreshold = 10000
 
   /** R1: full inverted index — one row per distinct field value with
     * its sorted doc_id posting list.
@@ -77,21 +76,31 @@ object InvertedIndex {
            count(lit(1)).as("n_docs"))
   }
 
-  /** Restrict `df` to a doc-id set without shuffling `df`: literal
-    * `isin` pushdown for small sets, broadcast inner join otherwise.
-    * Either way an id-range predicate is also pushed so a clustered
-    * layout prunes row groups even on the join path. */
+  /** Restrict `df` to a doc-id set without shuffling `df`, keeping its
+    * columns and each matching row once: literal `isin` pushdown for at
+    * most `LargeInListToJoin.Threshold` distinct ids, above that
+    * `LargeInListToJoin.semiJoin`'s plan. For such sets the doc-id
+    * column must be a long or an int; ids outside an int column's range
+    * match nothing. */
   def restrictToDocIds(df: DataFrame, docIds: Seq[Long], docIdCol: String = "doc_id"): DataFrame = {
-    if (docIds.isEmpty) return df.where(lit(false))
-    if (docIds.size <= IsinThreshold) {
-      df.where(col(docIdCol).isin(docIds: _*))
-    } else {
+    val ids = docIds.distinct
+    if (ids.isEmpty) df.where(lit(false))
+    else if (ids.size <= LargeInListToJoin.Threshold) df.where(col(docIdCol).isin(ids: _*))
+    else {
       val spark = df.sparkSession
-      import spark.implicits._
-      val ids = docIds.toDF(docIdCol)
-      // min/max range predicate prunes row groups before the join probes
-      df.where(col(docIdCol) >= docIds.min && col(docIdCol) <= docIds.max)
-        .join(broadcast(ids), docIdCol)
+      val plan = df.queryExecution.analyzed
+      val attr = plan.resolveQuoted(docIdCol, spark.sessionState.conf.resolver) match {
+        case Some(a: Attribute) => a
+        case _ => throw new IllegalArgumentException(s"no top-level column $docIdCol in ${plan.output}")
+      }
+      val values: Seq[Any] = attr.dataType match {
+        case LongType => ids
+        case IntegerType => ids.filter(_.isValidInt).map(_.toInt)
+        case t => throw new IllegalArgumentException(
+          s"doc-id column $docIdCol must be long or int for a large id set, not $t")
+      }
+      if (values.isEmpty) df.where(lit(false))
+      else DatasetBridge.ofRows(spark, LargeInListToJoin.semiJoin(plan, attr, values))
     }
   }
 

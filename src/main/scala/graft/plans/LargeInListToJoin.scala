@@ -22,10 +22,13 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType, ShortType, T
   * Evaluating a multi-thousand-entry In() per row is linear in the
   * list and, worse, the predicate is too opaque for parquet row-group
   * pruning at that size; the range conjunct restores pruning and the
-  * semi-join restores O(1) membership. This serves SQL users the same
-  * plan `InvertedIndex.restrictToDocIds` builds through the DataFrame
-  * API (reference perf contract: src/main.rs README "100 doc_ids in
-  * ~1s on 10M rows" — point lookups must never full-scan).
+  * semi-join restores O(1) membership. `semiJoin` builds that plan;
+  * `InvertedIndex.restrictToDocIds` calls it directly for id sets
+  * above `Threshold`, so the SQL and DataFrame surfaces share one
+  * large-set plan (reference perf contract: src/main.rs README "100
+  * doc_ids in ~1s on 10M rows" — point lookups must never full-scan).
+  * A semi-join emits each child row at most once, so duplicate ids
+  * never duplicate rows.
   *
   * Scope: integral/date/timestamp-typed attributes with all-literal,
   * non-null lists longer than `Threshold`. The rewrite removes every
@@ -65,22 +68,28 @@ object LargeInListToJoin extends Rule[LogicalPlan] {
     case _ => None
   }
 
+  /** `child` restricted to the rows whose `attr` is one of `values`
+    * (non-empty, non-null internal values of `attr`'s data type): a
+    * min/max range filter over a LeftSemi join against a
+    * `LocalRelation` of the values. */
+  def semiJoin(child: LogicalPlan, attr: Attribute, values: Seq[Any]): LogicalPlan = {
+    val idAttr = AttributeReference("__graft_in_id", attr.dataType, nullable = false)()
+    val joined = Join(child, LocalRelation(Seq(idAttr), values.map(InternalRow(_))),
+      LeftSemi, Some(EqualTo(attr, idAttr)), JoinHint.NONE)
+    // literals built from the original internal values, so types
+    // stay consistent with the attribute's data type
+    val order = (v: Any) => v.asInstanceOf[Number].longValue()
+    Filter(And(GreaterThanOrEqual(attr, Literal(values.minBy(order), attr.dataType)),
+      LessThanOrEqual(attr, Literal(values.maxBy(order), attr.dataType))), joined)
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case Filter(cond, child) if splitConj(cond).exists(bigInValues(_).isDefined) =>
       val (bigIns, rest) = splitConj(cond).partition(bigInValues(_).isDefined)
-      var joined: LogicalPlan = child
-      val rangePreds = bigIns.map { e =>
+      val joined = bigIns.foldLeft(child) { (p, e) =>
         val (attr, values) = bigInValues(e).get
-        val idAttr = AttributeReference("__graft_in_id", attr.dataType, nullable = false)()
-        joined = Join(joined, LocalRelation(Seq(idAttr), values.map(InternalRow(_))),
-          LeftSemi, Some(EqualTo(attr, idAttr)), JoinHint.NONE)
-        // literals built from the original internal values, so types
-        // stay consistent with the attribute's data type
-        val sorted = values.sortBy(_.asInstanceOf[Number].longValue())
-        And(GreaterThanOrEqual(attr, Literal(sorted.head, attr.dataType)),
-          LessThanOrEqual(attr, Literal(sorted.last, attr.dataType)))
+        semiJoin(p, attr, values)
       }
-      val remaining = (rangePreds ++ rest).reduceOption(And)
-      remaining.map(Filter(_, joined)).getOrElse(joined)
+      rest.reduceOption(And).map(Filter(_, joined)).getOrElse(joined)
   }
 }

@@ -2,8 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Clustered parquet layout (R7) + the point-lookup pruning it buys
   * (R8).
@@ -44,8 +45,8 @@ object ClusteredParquet {
 
   def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
 
-  /** R8: doc-id point lookup over a clustered layout. The In predicate
-    * is pushed into the parquet scan (see
+  /** R8: doc-id point lookup over a clustered layout. The In or
+    * id-range predicate is pushed into the parquet scan (see
     * InvertedIndex.restrictToDocIds), where row-group stats skip
     * every group whose [min,max] misses the ids. */
   def pointLookup(spark: SparkSession, path: String, docIds: Seq[Long],
@@ -110,19 +111,24 @@ object ClusteredParquet {
     w.parquet(path)
   }
 
-  /** Rows the parquet scan emitted while executing `df` — i.e. rows
-    * surviving row-group pruning, BEFORE any post-scan filter. Used by
-    * the R8 spec to prove clustering skips row groups. Executes via
-    * collect() so the metrics land on THIS df's QueryExecution (a
-    * sink-based write would plan a separate QueryExecution and leave
-    * these metrics empty). */
+  /** Rows the file scans emitted while executing `df` — i.e. rows
+    * surviving partition and row-group pruning, BEFORE any post-scan
+    * filter. Used by the R7/R8 specs to prove clustering skips row
+    * groups. Executes via collect() so the metrics land on THIS df's
+    * QueryExecution (a sink-based write would plan a separate
+    * QueryExecution and leave these metrics empty). The walk enters
+    * AQE query stages and reused exchanges (an aggregating query's
+    * scans sit behind them) and counts `FileSourceScanExec` only, never
+    * an in-memory id relation. */
   def scanOutputRows(df: DataFrame): Long = {
     df.collect()
-    def finalPlan(p: SparkPlan): SparkPlan = p match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case other => other
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case r: ReusedExchangeExec => scans(r.child)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans) ++ other.subqueries.flatMap(scans)
     }
-    val scans = finalPlan(df.queryExecution.executedPlan).collectLeaves()
-    scans.flatMap(_.metrics.get("numOutputRows").map(_.value)).sum
+    scans(df.queryExecution.executedPlan).flatMap(_.metrics.get("numOutputRows").map(_.value)).sum
   }
 }

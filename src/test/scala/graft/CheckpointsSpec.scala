@@ -58,6 +58,16 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(local == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  test("connected components keep only the result's fence persisted") {
+    import spark.implicits._
+    val edges = (0L until 40L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val comps = ConnectedComponents.components(edges)
+    val held = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(held.size == 1, s"superseded fences still persisted: $held")
+    assert(comps.collect().forall(_.getLong(1) == 0L))
+  }
+
   test("groupedRank is identical through both routes") {
     import spark.implicits._
     val df = (0 until 120).map(i => (s"g${i % 2}", i.toLong)).toDF("stratum", "id")

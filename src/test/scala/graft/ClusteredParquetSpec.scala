@@ -72,4 +72,19 @@ class ClusteredParquetSpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == ids.toSet)
   }
+
+  test("R2 over a large contiguous id set counts the scan behind the aggregation's stages") {
+    val total = 20000L
+    val path = s"$tmp/clustered_r2"
+    ClusteredParquet.write(spark.range(total)
+      .select(col("id").as("doc_id"), (col("id") % 7).cast("string").as("source")),
+      path, numFiles = 4, rowGroupBytes = 1024)
+    val ids = 5000L until 6001L
+    val r2 = graft.operators.InvertedIndex.fieldValuesByDocIds(
+      ClusteredParquet.read(spark, path), "source", ids)
+    val scanned = ClusteredParquet.scanOutputRows(r2)
+    assert(scanned >= ids.size && scanned < total,
+      s"expected the pruned scan's rows, between ${ids.size} and $total: $scanned")
+    assert(r2.collect().map(_.getLong(2)).sum == ids.size)
+  }
 }

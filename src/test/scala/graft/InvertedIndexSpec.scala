@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.InvertedIndex
+import graft.plans.LargeInListToJoin
 
 class InvertedIndexSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -63,13 +64,43 @@ class InvertedIndexSpec extends AnyFunSuite {
     assert(!plan.contains("Join"), "small sets must not plan a join")
   }
 
-  test("R2: large id-set becomes a broadcast join with a pushed range predicate") {
-    val big = (0L until InvertedIndex.IsinThreshold + 1L)
+  test("R2: large id-set becomes a LeftSemi join with a pushed range predicate") {
+    val big = (0L until LargeInListToJoin.Threshold + 1L)
     val plan = InvertedIndex.restrictToDocIds(docs, big)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
+    assert(plan.contains("LeftSemi"), s"expected a semi-join against the id relation:\n$plan")
     assert(plan.contains("GreaterThanOrEqual(doc_id"),
       "expected id-range predicate pushed for row-group pruning")
+  }
+
+  test("R2/R4/restrictToDocIds: duplicate ids give the distinct set's result on every route") {
+    val cols = Seq("lang", "n_chars", "doc_id")
+    val narrow = docs.select(cols.map(col): _*)
+    def r2(ids: Seq[Long]) = InvertedIndex.fieldValuesByDocIds(docs, "lang", ids).collect()
+      .map(r => r.getString(0) -> (r.getSeq[Long](1), r.getLong(2))).toMap
+    def r4(ids: Seq[Long]) = InvertedIndex.numericStatsByDocIds(docs, "n_chars", ids)
+      .collect()(0).toSeq
+    def rows(ids: Seq[Long]) = InvertedIndex.restrictToDocIds(narrow, ids).collect()
+      .map(_.toSeq).sortBy(_(2).asInstanceOf[Long]).toSeq
+    Seq(300, LargeInListToJoin.Threshold, LargeInListToJoin.Threshold + 1, 12000).foreach { n =>
+      val ids = (0 until n).map(_ * 3L)
+      val withDups = ids ++ ids.take(3)
+      assert(r2(withDups) == r2(ids), s"R2 differs with duplicates at $n ids")
+      assert(r4(withDups) == r4(ids), s"R4 differs with duplicates at $n ids")
+      val got = rows(withDups)
+      assert(got == rows(ids) && got.nonEmpty, s"rows differ with duplicates at $n ids")
+      assert(InvertedIndex.restrictToDocIds(narrow, withDups).columns.toSeq == cols,
+        s"column order changed at $n ids")
+    }
+  }
+
+  test("restrictToDocIds above the threshold on an int doc-id column") {
+    val intDocs = docs.withColumn("doc_id", col("doc_id").cast("int"))
+    val ids = (0 until LargeInListToJoin.Threshold + 500).map(_ * 2L) :+ (Int.MaxValue + 2L)
+    val got = InvertedIndex.restrictToDocIds(intDocs, ids)
+    assert(got.schema("doc_id").dataType == org.apache.spark.sql.types.IntegerType)
+    val want = docs.select("doc_id").collect().map(_.getLong(0)).filter(ids.toSet).toSet
+    assert(got.select("doc_id").collect().map(_.getInt(0).toLong).toSet == want && want.nonEmpty)
   }
 
   test("R1 chunked: concatenated chunks reproduce the full posting list, bounded per row") {

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components over a near-duplicate pair list — the step
   * that turns pairwise dedup output (L2/L3/L5) into actionable
@@ -28,15 +31,37 @@ import org.apache.spark.sql.functions._
   * reliable FS under `spark.graft.reliableCheckpoints`) truncates
   * lineage so round r's plan does not replay rounds 1..r-1; each
   * superseded fence is released as soon as the next one holds.
-  * Measured on the committed sf0.1 pair graphs: 12 rounds — the
+  * Measured through this loop on the committed sf0.1 pair graphs: 12
+  * rounds — the
   * banded/embedding pair lists contain one chain-shaped component
   * (near-dups of near-dups), so rounds ≈ log2(chain length), not the
   * 2-3 a clique-only graph would need.
+  *
+  * Two routes, chosen once from the fenced symmetric edge list's row
+  * count (observed on the fence's own materialization, no extra job):
+  *  - driver: when rows × 24 B (a two-long UnsafeRow: 8 B null bitmap
+  *    + 2 × 8 B) is at or below `spark.sql.autoBroadcastJoinThreshold`
+  *    — the byte bound Spark already applies before it collects a
+  *    relation to the driver to broadcast it — the edge list is
+  *    collected and union-find with path compression labels it on the
+  *    driver; the result is a local relation and no fence stays held.
+  *    Small pair graphs are dispatch-bound: every round of the loop
+  *    below pays a fence, AQE re-planning and several tiny jobs.
+  *  - distributed: otherwise (and always when the threshold is -1),
+  *    the fenced min-label loop. Production-scale pair graphs are far
+  *    above the bound and take this route.
+  * Both return the same labels. `maxRounds` caps only the distributed
+  * loop; the driver route always returns converged labels.
   */
 object ConnectedComponents {
 
-  /** (id, component) for every node appearing in `edges` (id1, id2);
-    * component = the minimum node id reachable from the node. */
+  /** Bytes one (a, b) edge row takes as an UnsafeRow: an 8 B null
+    * bitmap plus two 8 B longs. */
+  private val EdgeRowBytes = 24L
+
+  /** (id, component) for every node appearing in `edges` (id1, id2)
+    * with an edge to another node; component = the minimum node id
+    * reachable from the node. */
   def components(edges: DataFrame, maxRounds: Int = 25): DataFrame = {
     val e = edges.select(col("id1").cast("long").as("a"), col("id2").cast("long").as("b"))
     // symmetric, self-loop-free edge list — both orientations in ONE
@@ -45,11 +70,58 @@ object ConnectedComponents {
     // candidate + verify pipeline here — only the deepest exchange is
     // reused across the union's branches, the CPU-dense verify re-runs
     // per branch) and doubles the partition count entering distinct
+    val size = org.apache.spark.sql.Observation()
     val sym = Checkpoints.fence(
       Graph.symmetrized(e)
         .where(col("a") =!= col("b"))
-        .distinct())
+        .distinct()
+        .observe(size, count(lit(1)).as("rows")))
+    val rows = size.get("rows").asInstanceOf[Long]
+    val bytes = rows * EdgeRowBytes
+    val bound = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (bytes <= bound) {
+      val out = driverComponents(sym)
+      System.err.println(s"[cc] converged after 0 rounds " +
+        s"(driver finish: $rows edges, $bytes bytes <= $bound)")
+      out
+    } else minLabelLoop(sym, maxRounds)
+  }
 
+  /** Union-find over the collected edge list. Links always point at
+    * the smaller id, so every root is its component's minimum id. */
+  private def driverComponents(sym: DataFrame): DataFrame = {
+    val edges = sym.collect()
+    Checkpoints.release(sym)
+    val a = edges.map(_.getLong(0))
+    val b = edges.map(_.getLong(1))
+    // sym is symmetric: its `a` column already holds every node
+    val ids = a.distinct
+    java.util.Arrays.sort(ids)
+    val parent = Array.range(0, ids.length)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x)) // path halving
+        x = parent(x)
+      }
+      x
+    }
+    def index(id: Long) = java.util.Arrays.binarySearch(ids, id)
+    var i = 0
+    while (i < a.length) {
+      val (ra, rb) = (find(index(a(i))), find(index(b(i))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 1
+    }
+    val labels = ids.indices.map(k => Row(ids(k), ids(find(k))))
+    val schema = StructType(Seq(
+      StructField("id", LongType, sym.schema("a").nullable),
+      StructField("comp", LongType)))
+    sym.sparkSession.createDataFrame(labels.asJava, schema)
+  }
+
+  /** The fenced min-label loop; releases `sym` once it is done. */
+  private def minLabelLoop(sym: DataFrame, maxRounds: Int): DataFrame = {
     // label(id) starts at min(id, min neighbor) — one round for free
     var assign = Checkpoints.fence(
       sym.groupBy(col("a").as("id"))

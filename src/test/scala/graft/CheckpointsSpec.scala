@@ -46,12 +46,14 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(local.values.toSeq.sorted == local.values.toSeq.indices.map(_.toLong))
   }
 
+  // the two CC specs below pin the distributed loop: graphs this small
+  // take the driver finish, which holds no fence across rounds
   test("connected components are identical through both routes") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 10L), (5L, 5L), (3L, 1L))
       .toDF("id1", "id2")
-    def run() = ConnectedComponents.components(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def run() = onCcLoop(ConnectedComponents.components(edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
     val local = run()
     val reliable = withReliable(run())
     assert(local == reliable)
@@ -62,10 +64,23 @@ class CheckpointsSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = (0L until 40L).map(i => (i, i + 1)).toDF("id1", "id2")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val comps = ConnectedComponents.components(edges)
+    val comps = onCcLoop(ConnectedComponents.components(edges))
     val held = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(held.size == 1, s"superseded fences still persisted: $held")
     assert(comps.collect().forall(_.getLong(1) == 0L))
+  }
+
+  test("connected components through the driver finish keep no fence persisted") {
+    import spark.implicits._
+    val edges = (0L until 40L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val comps = ConnectedComponents.components(edges)
+    val held = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(held.isEmpty, s"fences still persisted: $held")
+    val local = comps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(local.size == 41 && local.values.forall(_ == 0L))
+    assert(withReliable(ConnectedComponents.components(edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap) == local)
   }
 
   test("groupedRank is identical through both routes") {

@@ -1,6 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.operators.{ConnectedComponents, Decontaminate, Sampling, TextStats}
 
@@ -39,12 +42,53 @@ class PipelineOpsSpec extends AnyFunSuite {
   test("components converges on a long path in O(log n) rounds (pointer jumping)") {
     import spark.implicits._
     // 64-node path: plain 1-hop propagation needs 63 rounds; pointer
-    // jumping must finish well inside maxRounds=10
+    // jumping must finish well inside maxRounds=10 (a graph this small
+    // would take the driver finish, which has no rounds)
     val edges = (0L until 63L).map(i => (i, i + 1))
-    val got = ConnectedComponents.components(edges.toDF("id1", "id2"), maxRounds = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = onCcLoop(ConnectedComponents.components(edges.toDF("id1", "id2"), maxRounds = 10)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(got.size == 64 && got.values.forall(_ == 0L),
       s"path must collapse to component 0: ${got.toSeq.sortBy(_._1).take(8)}...")
+  }
+
+  /** `components` through the driver finish (default threshold) and
+    * through the distributed loop (threshold -1): same routes taken as
+    * asked, same schema, same labels. Returns the labels. */
+  private def bothRoutes(edges: DataFrame): Map[Long, Long] = {
+    def run() = {
+      val df = ConnectedComponents.components(edges)
+      (df.queryExecution.logical, df.schema, df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    }
+    val (driverPlan, driverSchema, driver) = run()
+    val (loopPlan, loopSchema, loop) = onCcLoop(run())
+    assert(driverPlan.isInstanceOf[LocalRelation], driverPlan.nodeName)
+    assert(loopPlan.isInstanceOf[LogicalRDD], loopPlan.nodeName)
+    assert(driverSchema == loopSchema)
+    assert(driver == loop)
+    driver
+  }
+
+  test("components: driver finish and distributed loop agree with union-find") {
+    import spark.implicits._
+    def check(edges: Seq[(Long, Long)]) =
+      assert(bothRoutes(edges.toDF("id1", "id2")) == ufComponents(edges.filter { case (a, b) => a != b }))
+    check(Seq((4L, 3L), (2L, 3L), (1L, 2L), (5L, 4L)))                      // path, ids out of order
+    check((1L to 9L).map(i => (100L, 100L + i)))                            // star, hub is the min
+    check((1L to 9L).map(i => (200L - i, 200L)))                            // star, hub is the max
+    check(for (i <- 300L to 305L; j <- 300L to 305L if i < j) yield (i, j)) // clique
+    check((0L until 63L).map(i => (1063L - i, 1062L - i)))                  // 64-node chain
+    check(Seq((5L, 5L), (6L, 6L)))                                          // self-loops only
+    check(Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L), (2L, 3L), (8L, 7L), (8L, 7L), (9L, 9L)))
+    check(Seq.empty)                                                        // same schema, zero rows
+  }
+
+  test("components: NULL ids and int-typed ids take both routes alike") {
+    import spark.implicits._
+    val withNulls = Seq[(Option[Long], Option[Long])]((Some(1L), None), (None, Some(2L)), (None, None),
+      (Some(4L), Some(3L)), (Some(4L), Some(5L))).toDF("id1", "id2")
+    assert(bothRoutes(withNulls) == Map(3L -> 3L, 4L -> 3L, 5L -> 3L))
+    val ints = Seq((2, 1), (2, 3), (11, 10), (7, 7)).toDF("id1", "id2")
+    assert(bothRoutes(ints) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
   test("clusters + dropClustered keep exactly one doc per near-dup group") {

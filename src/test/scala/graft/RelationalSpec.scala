@@ -10,6 +10,20 @@ object SparkTestSession {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Run `body` with `ConnectedComponents` pinned to its distributed
+    * min-label loop (the driver finish needs a non-negative broadcast
+    * threshold), then restore the threshold. */
+  def onCcLoop[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {

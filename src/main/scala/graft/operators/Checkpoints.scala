@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.DatasetBridge
 
 /** The materialization fence used by every iterative / two-phase
   * operator (global rank, connected components, prefix sums): truncate
@@ -22,7 +23,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Checkpoints {
 
-  def fence(df: DataFrame): DataFrame = {
+  def fence(df: DataFrame): DataFrame =
+    DatasetBridge.capCheckpointStats(checkpoint(df))
+
+  private def checkpoint(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val reliable =
       spark.conf.getOption("spark.graft.reliableCheckpoints").exists(_.toBoolean)

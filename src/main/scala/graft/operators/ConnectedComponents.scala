@@ -32,24 +32,23 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * lineage so round r's plan does not replay rounds 1..r-1; each
   * superseded fence is released as soon as the next one holds.
   * Measured through this loop on the committed sf0.1 pair graphs: 12
-  * rounds — the
-  * banded/embedding pair lists contain one chain-shaped component
-  * (near-dups of near-dups), so rounds ≈ log2(chain length), not the
-  * 2-3 a clique-only graph would need.
+  * rounds — the banded/embedding pair lists contain one chain-shaped
+  * component (near-dups of near-dups), so rounds ≈ log2(chain length),
+  * not the 2-3 a clique-only graph would need.
   *
   * Two routes, chosen once from the fenced symmetric edge list's row
   * count (observed on the fence's own materialization, no extra job):
   *  - driver: when rows × 24 B (a two-long UnsafeRow: 8 B null bitmap
-  *    + 2 × 8 B) is at or below `spark.sql.autoBroadcastJoinThreshold`
+  *    + 2 × 8 B) is at or below both `spark.sql.autoBroadcastJoinThreshold`
   *    — the byte bound Spark already applies before it collects a
-  *    relation to the driver to broadcast it — the edge list is
-  *    collected and union-find with path compression labels it on the
-  *    driver; the result is a local relation and no fence stays held.
-  *    Small pair graphs are dispatch-bound: every round of the loop
-  *    below pays a fence, AQE re-planning and several tiny jobs.
+  *    relation to the driver to broadcast it — and the fixed
+  *    `DriverFinishMaxBytes` cap, the edge list is collected as
+  *    primitive long arrays and union-find with path halving labels it
+  *    on the driver; the result is a local relation and no fence stays
+  *    held. Small pair graphs are dispatch-bound: every round of the
+  *    loop below pays a fence, AQE re-planning and several tiny jobs.
   *  - distributed: otherwise (and always when the threshold is -1),
-  *    the fenced min-label loop. Production-scale pair graphs are far
-  *    above the bound and take this route.
+  *    the fenced min-label loop.
   * Both return the same labels. `maxRounds` caps only the distributed
   * loop; the driver route always returns converged labels.
   */
@@ -58,6 +57,20 @@ object ConnectedComponents {
   /** Bytes one (a, b) edge row takes as an UnsafeRow: an 8 B null
     * bitmap plus two 8 B longs. */
   private val EdgeRowBytes = 24L
+
+  /** The driver finish never takes an edge list above this many
+    * bytes, however high the broadcast threshold is raised for joins:
+    * Spark's default threshold, 10 MB (436,906 directed edges). Timed
+    * by `CcRouteTiming` on 4 local cores against the loop's cheapest
+    * shape (4-node cliques, 2 rounds): the driver finish is 1.8×
+    * faster at the cap (1.29 vs 2.38 s) but only 1.2× at 1M edges and
+    * 1.1× at 2M, where the driver would hold ever more of the graph. */
+  private[graft] val DriverFinishMaxBytes = 10L << 20
+
+  /** Whether an edge list of `rows` directed edges finishes on the
+    * driver under broadcast threshold `threshold` (-1 never does). */
+  private[graft] def driverFinish(rows: Long, threshold: Long): Boolean =
+    rows * EdgeRowBytes <= math.min(threshold, DriverFinishMaxBytes)
 
   /** (id, component) for every node appearing in `edges` (id1, id2)
     * with an edge to another node; component = the minimum node id
@@ -77,12 +90,11 @@ object ConnectedComponents {
         .distinct()
         .observe(size, count(lit(1)).as("rows")))
     val rows = size.get("rows").asInstanceOf[Long]
-    val bytes = rows * EdgeRowBytes
-    val bound = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (bytes <= bound) {
+    val threshold = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (driverFinish(rows, threshold)) {
       val out = driverComponents(sym)
-      System.err.println(s"[cc] converged after 0 rounds " +
-        s"(driver finish: $rows edges, $bytes bytes <= $bound)")
+      System.err.println(s"[cc] converged after 0 rounds (driver finish: $rows edges, " +
+        s"${rows * EdgeRowBytes} bytes <= ${math.min(threshold, DriverFinishMaxBytes)})")
       out
     } else minLabelLoop(sym, maxRounds)
   }
@@ -90,13 +102,23 @@ object ConnectedComponents {
   /** Union-find over the collected edge list. Links always point at
     * the smaller id, so every root is its component's minimum id. */
   private def driverComponents(sym: DataFrame): DataFrame = {
-    val edges = sym.collect()
+    // one primitive (a, b, a, b, ...) array per partition: no Row or
+    // boxed long per edge on the driver
+    val parts = sym.queryExecution.toRdd.mapPartitions { rows =>
+      val ab = Array.newBuilder[Long]
+      rows.foreach { r => ab += r.getLong(0); ab += r.getLong(1) }
+      Iterator.single(ab.result())
+    }.collect()
     Checkpoints.release(sym)
-    val a = edges.map(_.getLong(0))
-    val b = edges.map(_.getLong(1))
-    // sym is symmetric: its `a` column already holds every node
-    val ids = a.distinct
-    java.util.Arrays.sort(ids)
+    // sym is symmetric: its `a` values already hold every node; sort
+    // them and drop repeats in place, no boxed set
+    val all = new Array[Long](parts.iterator.map(_.length / 2).sum)
+    var n = 0
+    for (p <- parts; i <- 0 until p.length by 2) { all(n) = p(i); n += 1 }
+    java.util.Arrays.sort(all)
+    n = 0
+    for (k <- all.indices if n == 0 || all(k) != all(n - 1)) { all(n) = all(k); n += 1 }
+    val ids = java.util.Arrays.copyOf(all, n)
     val parent = Array.range(0, ids.length)
     def find(x0: Int): Int = {
       var x = x0
@@ -107,11 +129,10 @@ object ConnectedComponents {
       x
     }
     def index(id: Long) = java.util.Arrays.binarySearch(ids, id)
-    var i = 0
-    while (i < a.length) {
-      val (ra, rb) = (find(index(a(i))), find(index(b(i))))
+    // each edge is in sym both ways round: link it once
+    for (p <- parts; i <- 0 until p.length by 2 if p(i) < p(i + 1)) {
+      val (ra, rb) = (find(index(p(i))), find(index(p(i + 1))))
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      i += 1
     }
     val labels = ids.indices.map(k => Row(ids(k), ids(find(k))))
     val schema = StructType(Seq(

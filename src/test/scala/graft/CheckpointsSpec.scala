@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{ConnectedComponents, Dedup, TrainingOrder}
+import graft.operators.{Checkpoints, ConnectedComponents, Dedup, TrainingOrder}
 
 /** `spark.graft.reliableCheckpoints` must be a pure durability trade:
   * every fenced operator returns identical results through the
@@ -81,6 +81,26 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(local.size == 41 && local.values.forall(_ == 0L))
     assert(withReliable(ConnectedComponents.components(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap) == local)
+  }
+
+  test("a fence joined with itself round after round keeps a size estimate within a Long") {
+    import spark.implicits._
+    def size(df: org.apache.spark.sql.DataFrame) = df.queryExecution.logical.stats.sizeInBytes
+    for (reliable <- Seq(false, true)) {
+      def run() = {
+        var df = Checkpoints.fence((0L until 50L).map(i => (i, i)).toDF("a", "b"))
+        // a small fence keeps its real estimate, so it can still be broadcast
+        assert(size(df) < 10L * 1024 * 1024)
+        // without the cap each round squares the inner join's product
+        // estimate, past 2^63 bytes by round 3
+        for (_ <- 1 to 8)
+          df = Checkpoints.fence(df.join(df.select(col("a"), col("b").as("c")), "a")
+            .select(col("a"), col("c").as("b")))
+        assert(size(df) <= Long.MaxValue, s"estimate ${size(df)}")
+        assert(df.count() == 50)
+      }
+      if (reliable) withReliable(run()) else run()
+    }
   }
 
   test("groupedRank is identical through both routes") {

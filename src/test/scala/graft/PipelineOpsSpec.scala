@@ -30,13 +30,20 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("components matches union-find on a mixed graph (chain, triangle, singles)") {
     import spark.implicits._
+    def check(edges: Seq[(Long, Long)]) =
+      assert(bothRoutes(edges.toDF("id1", "id2")) == ufComponents(edges.filter { case (a, b) => a != b }))
     // a 6-node path (worst case for plain propagation), a triangle,
     // an isolated pair, ids deliberately out of order
-    val edges = Seq((10L, 9L), (9L, 8L), (8L, 7L), (7L, 6L), (6L, 5L),
-      (20L, 22L), (22L, 21L), (21L, 20L), (30L, 31L))
-    val got = ConnectedComponents.components(edges.toDF("id1", "id2"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == ufComponents(edges))
+    check(Seq((10L, 9L), (9L, 8L), (8L, 7L), (7L, 6L), (6L, 5L),
+      (20L, 22L), (22L, 21L), (21L, 20L), (30L, 31L)))
+    check(Seq((4L, 3L), (2L, 3L), (1L, 2L), (5L, 4L)))                      // path, ids out of order
+    check((1L to 9L).map(i => (100L, 100L + i)))                            // star, hub is the min
+    check((1L to 9L).map(i => (200L - i, 200L)))                            // star, hub is the max
+    check(for (i <- 300L to 305L; j <- 300L to 305L if i < j) yield (i, j)) // clique
+    check((0L until 63L).map(i => (1063L - i, 1062L - i)))                  // 64-node chain
+    check(Seq((5L, 5L), (6L, 6L)))                                          // self-loops only
+    check(Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L), (2L, 3L), (8L, 7L), (8L, 7L), (9L, 9L)))
+    check(Seq.empty)                                                        // same schema, zero rows
   }
 
   test("components converges on a long path in O(log n) rounds (pointer jumping)") {
@@ -68,20 +75,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     driver
   }
 
-  test("components: driver finish and distributed loop agree with union-find") {
-    import spark.implicits._
-    def check(edges: Seq[(Long, Long)]) =
-      assert(bothRoutes(edges.toDF("id1", "id2")) == ufComponents(edges.filter { case (a, b) => a != b }))
-    check(Seq((4L, 3L), (2L, 3L), (1L, 2L), (5L, 4L)))                      // path, ids out of order
-    check((1L to 9L).map(i => (100L, 100L + i)))                            // star, hub is the min
-    check((1L to 9L).map(i => (200L - i, 200L)))                            // star, hub is the max
-    check(for (i <- 300L to 305L; j <- 300L to 305L if i < j) yield (i, j)) // clique
-    check((0L until 63L).map(i => (1063L - i, 1062L - i)))                  // 64-node chain
-    check(Seq((5L, 5L), (6L, 6L)))                                          // self-loops only
-    check(Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L), (2L, 3L), (8L, 7L), (8L, 7L), (9L, 9L)))
-    check(Seq.empty)                                                        // same schema, zero rows
-  }
-
   test("components: NULL ids and int-typed ids take both routes alike") {
     import spark.implicits._
     val withNulls = Seq[(Option[Long], Option[Long])]((Some(1L), None), (None, Some(2L)), (None, None),
@@ -91,16 +84,38 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(bothRoutes(ints) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  test("components: a threshold raised above the fixed cap still sends larger graphs to the loop") {
+    import ConnectedComponents.{DriverFinishMaxBytes => cap, driverFinish}
+    val capRows = cap / 24
+    val oneGb = 1L << 30
+    assert(driverFinish(capRows, oneGb) && !driverFinish(capRows + 1, oneGb))
+    assert(driverFinish(1000, 24000) && !driverFinish(1001, 24000)) // a lower threshold binds
+    assert(!driverFinish(0, -1))
+    // end to end at a 1 GB threshold: a small graph stays on the
+    // driver, pairs one edge past the cap run the loop
+    import spark.implicits._
+    val small = withBroadcastThreshold(oneGb)(ConnectedComponents.components(Seq((2L, 1L)).toDF("id1", "id2")))
+    assert(small.queryExecution.logical.isInstanceOf[LocalRelation])
+    val pairs = capRows / 2 + 1 // 2 × pairs directed edges > capRows
+    val large = withBroadcastThreshold(oneGb)(ConnectedComponents.components(
+      spark.range(pairs).select((col("id") * 2).as("id1"), (col("id") * 2 + 1).as("id2"))))
+    assert(large.queryExecution.logical.isInstanceOf[LogicalRDD], large.queryExecution.logical.nodeName)
+    val Array(labels) = large.agg(count(lit(1)), sum(col("id") - col("comp"))).collect()
+    assert(labels.getLong(0) == 2 * pairs && labels.getLong(1) == pairs)
+  }
+
   test("clusters + dropClustered keep exactly one doc per near-dup group") {
     import spark.implicits._
     val docs = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id1", "id2")
-    val kept = ConnectedComponents.dropClustered(docs, edges)
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(kept == Seq(1L, 4L, 5L), s"got $kept")
-    val cl = ConnectedComponents.clusters(edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sortBy(_._1)
-    assert(cl.toSeq == Seq((1L, 3L, "1,2,3"), (5L, 2L, "5,6")))
+    onBothCcRoutes {
+      val kept = ConnectedComponents.dropClustered(docs, edges)
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(kept == Seq(1L, 4L, 5L), s"got $kept")
+      val cl = ConnectedComponents.clusters(edges)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sortBy(_._1)
+      assert(cl.toSeq == Seq((1L, 3L, "1,2,3"), (5L, 2L, "5,6")))
+    }
   }
 
   // ---- decontamination -------------------------------------------------

@@ -11,19 +11,27 @@ object SparkTestSession {
   }
   val sf = "/root/testdata/sf0.001"
 
-  /** Run `body` with `ConnectedComponents` pinned to its distributed
-    * min-label loop (the driver finish needs a non-negative broadcast
-    * threshold), then restore the threshold. */
-  def onCcLoop[T](body: => T): T = {
+  /** Run `body` with `spark.sql.autoBroadcastJoinThreshold` at
+    * `bytes`, then restore it. */
+  def withBroadcastThreshold[T](bytes: Long)(body: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
+    spark.conf.set(key, bytes.toString)
     try body
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
   }
+
+  /** Run `body` with `ConnectedComponents` pinned to its distributed
+    * min-label loop (the driver finish needs a non-negative broadcast
+    * threshold). */
+  def onCcLoop[T](body: => T): T = withBroadcastThreshold(-1)(body)
+
+  /** Run `body` through both routes of `ConnectedComponents`: the
+    * driver finish (the session's threshold), then the loop. */
+  def onBothCcRoutes(body: => Unit): Unit = { body; onCcLoop(body) }
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -189,15 +189,8 @@ object Bench {
     // cpus is stamped so cross-artifact wall ratios (10x vs 1x) can be
     // read as data scaling, not a silent core-count change
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
-    // warm intermediates the untimed warmup pass leaves behind, so the
-    // artifact declares (rather than hides) what the timed reps see
-    // warm: the SNM candidate memo (spark.graft.snm.cacheCandidates)
-    // and the banded kNN graph memo (spark.graft.knn.cacheGraph) —
-    // both within-JVM only, both serving declared sharing (verifier
-    // pipelines share the candidate stage; the six graph entries
-    // consume the same kNN table). Every other query computes from
-    // the parquet inputs each rep.
-    val meta = s""""failed":$failedJson,"reps":$reps,"cpus":$cpus,"ceiling_sec":$ceiling,"loadavg_pre":$loadAvg,"loadavg_post":${loadavg()},"accepted_decaying_load":$acceptedDecaying,"warm_intermediates":["snm_candidate_cache","knn_graph_cache"],"sf":"$sfDir""""
+    // the warm-up leaves only Tables' plan memo, which holds plans, not results
+    val meta = s""""failed":$failedJson,"reps":$reps,"cpus":$cpus,"ceiling_sec":$ceiling,"loadavg_pre":$loadAvg,"loadavg_post":${loadavg()},"accepted_decaying_load":$acceptedDecaying,"warm_intermediates":[],"sf":"$sfDir""""
     val loadsJson = entryLoads.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fullLine =

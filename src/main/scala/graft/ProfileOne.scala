@@ -74,8 +74,7 @@ object ProfileOne {
         val wallMs = (w1 - w0) / 1e6
         val buildMs = (planned - w0) / 1e6
         println(f"[profile] $n rep$rep wall=${wallMs / 1000}%.2fs build=${buildMs / 1000}%.2fs " +
-          f"jobs=${snap.size} sumJobs=${sumJobs / 1000.0}%.2fs driverGap=${(wallMs - sumJobs) / 1000}%.2fs " +
-          f"snmCache=${graft.operators.Dedup.candidateCacheSize}")
+          f"jobs=${snap.size} sumJobs=${sumJobs / 1000.0}%.2fs driverGap=${(wallMs - sumJobs) / 1000}%.2fs")
         snap.sortBy(j => -(j.end - j.start)).take(12).foreach { j =>
           val nt = jobs.synchronized { j.stageIds.map(s => stageTasks.getOrElse(s, 0)).sum }
           val d = if (j.desc.length > 90) j.desc.take(90) else j.desc

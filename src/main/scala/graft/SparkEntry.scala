@@ -1863,7 +1863,7 @@ object SparkEntry {
     // exact-cosine rerank; the all-pairs exact scorer now lives
     // behind spark.graft.knn.exact and is spec-tested, never gated
     "knn_graph" -> ((s, dir) => {
-      Similarity.knnGraphBandedCached(Tables.embeddings(s, dir), 10,
+      Similarity.knnGraphBanded(Tables.embeddings(s, dir), 10,
           numPlanes = 0, bands = 4, maxBucket = 500)
         .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
           round(col("score"), 4).as("score"), col("mutual"))
@@ -1977,7 +1977,7 @@ object SparkEntry {
     // kNN graph — most-frequent-then-smallest neighbor vote
     "embed_knn_classify" -> ((s, dir) =>
       EmbeddingStats.knnClassify(
-        Similarity.knnGraphBandedCached(Tables.embeddings(s, dir), 10,
+        Similarity.knnGraphBanded(Tables.embeddings(s, dir), 10,
           numPlanes = 0, bands = 4, maxBucket = 500),
         Tables.embeddings(s, dir))),
     // X205: per-vector silhouette via normalized-sum linearity — no
@@ -2084,7 +2084,7 @@ object SparkEntry {
     * the width from count(*), so the banding stays bit-reproducible at
     * every SF — a pinned width caps out at 10× and drops every edge). */
   private def bandedGraphEdges(s: SparkSession, dir: String): DataFrame =
-    Graph.undirectedMutual(Similarity.knnGraphBandedCached(
+    Graph.undirectedMutual(Similarity.knnGraphBanded(
       Tables.embeddings(s, dir), 10, numPlanes = 0, bands = 4, maxBucket = 500))
 
   /** DuckDB-dialect twins of `queries`, identical column names and

@@ -23,7 +23,7 @@ object Tables {
     * table's cached metadata would; every action still scans the
     * parquet from disk — nothing computed is cached. Keyed by session
     * (plans must not leak across sessions), cleared on application
-    * end, opt-out via spark.graft.tables.cachePlans=false. */
+    * end. */
   private val planCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private val cleanupRegistered =
@@ -43,15 +43,11 @@ object Tables {
       }
     }
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val cacheOn = spark.conf.getOption("spark.graft.tables.cachePlans")
-      .forall(_.toBoolean)
-    if (!cacheOn) spark.read.parquet(s"$sfDir/$name.parquet")
-    else planCache.getOrElseUpdate((spark, s"$sfDir/$name.parquet"), {
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    planCache.getOrElseUpdate((spark, s"$sfDir/$name.parquet"), {
       registerCleanup(spark)
       spark.read.parquet(s"$sfDir/$name.parquet")
     })
-  }
 
   /** Event-time normalization to session-TZ (UTC) TIMESTAMP — the
     * type every event-time operator (unix_micros, watermarks, window)

@@ -21,13 +21,6 @@ import graft.functions.TextFunctions._
   */
 object Dedup {
 
-  /** L4 helper: exact n-gram (set) Jaccard between two text columns. */
-  def ngramJaccard(a: Column, b: Column, n: Int = 3): Column = {
-    val sa = distinctWordShingles(a, n)
-    val sb = distinctWordShingles(b, n)
-    size(array_intersect(sa, sb)).cast("double") / size(array_union(sa, sb))
-  }
-
   /** L1: per-content-hash group summary (hash, multiplicity, keeper =
     * min id). One map-side-combined shuffle on the 128-bit content
     * hash; group state is O(1). */
@@ -258,109 +251,25 @@ object Dedup {
     * the window from blocking-key density, compute the global
     * (sortCols, id) rank (two-phase — only partition counts reach the
     * driver), and explode each row against its `window − 1` rank
-    * successors. Returns the undirected pair set (id1 < id2).
-    *
-    * Verifier choice does NOT change this stage, so recomputing it per
-    * verifier is pure waste — a pipeline composing two SNM verifiers
-    * (e.g. Jaccard + edit distance) would pay the rank shuffle twice.
-    * Unless `spark.graft.snm.cacheCandidates=false`, the result is
-    * persisted (MEMORY_AND_DISK) and memoized per (session,
-    * canonicalized input plan, sortCols, window, idCol): the cached
-    * pairs are two longs per row × rows·window — bounded by the same
-    * 256 window cap that bounds the candidate count itself. */
+    * successors. Returns the undirected pair set (id1 < id2). The
+    * pair table is bytes-tiny, so its layout is left to the verifier,
+    * which spreads it ahead of the CPU-dense per-pair stage. */
   def snmCandidates(docs: DataFrame, sortCols: Seq[String],
                     window: Int = 0,
                     idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    def build(): DataFrame = {
-      val win = resolveWindow(docs, sortCols, window)
-      // only (key cols, id) travel through the rank shuffle — never text
-      val ranked = globalRank(
-        docs.select(col(idCol).cast("long").as("__id") +: sortCols.map(col): _*),
-        sortCols :+ "__id")
-        .select(col("__id"), col("rank"))
-      val probes = ranked
-        .withColumn("__d", explode(sequence(lit(1), lit(win - 1))))
-        .select(col("__id").as("idA"), (col("rank") + col("__d")).as("rank"))
-      // pin the candidate table's layout at the session's shuffle
-      // parallelism BEFORE it is persisted/consumed: the rank-join
-      // output is bytes-tiny (two longs/row) so AQE's byte-driven
-      // coalescing collapses it to ~1 partition, and that collapsed
-      // layout then becomes the CACHED block layout — every downstream
-      // union/verify stage reads the multi-million-row candidate set
-      // single-threaded (measured: two 3.4 s one-task jobs inside
-      // dedup_snm_multipass). See Parallelize.spreadPairs.
-      Parallelize.spreadPairs(
-        probes.join(ranked, "rank")
-          .select(least(col("idA"), col("__id")).as("id1"),
-            greatest(col("idA"), col("__id")).as("id2")))
-    }
-    val cacheOn = spark.conf.getOption("spark.graft.snm.cacheCandidates")
-      .forall(_.toBoolean)
-    if (!cacheOn) build()
-    else {
-      val key = (spark, docs.queryExecution.analyzed.canonicalized,
-        sortCols, window, idCol)
-      candidateCache.synchronized {
-        candidateCache.get(key) match {
-          case Some(df) => df
-          case None =>
-            registerCacheCleanup(spark)
-            val df = build().persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            candidateCache.put(key, df)
-            // LRU-ish bound: varying inputs (incremental batches as
-            // LocalRelations, different windows) must not pin storage
-            // for the JVM's lifetime — evict insertion-order eldest,
-            // releasing its blocks (non-blocking; recompute on re-use).
-            while (candidateCache.size > candidateCacheMax) {
-              val (k, v) = candidateCache.head
-              try v.unpersist(blocking = false) catch { case _: Throwable => () }
-              candidateCache.remove(k)
-            }
-            df
-        }
-      }
-    }
+    val win = resolveWindow(docs, sortCols, window)
+    // only (key cols, id) travel through the rank shuffle — never text
+    val ranked = globalRank(
+      docs.select(col(idCol).cast("long").as("__id") +: sortCols.map(col): _*),
+      sortCols :+ "__id")
+      .select(col("__id"), col("rank"))
+    val probes = ranked
+      .withColumn("__d", explode(sequence(lit(1), lit(win - 1))))
+      .select(col("__id").as("idA"), (col("rank") + col("__d")).as("rank"))
+    probes.join(ranked, "rank")
+      .select(least(col("idA"), col("__id")).as("id1"),
+        greatest(col("idA"), col("__id")).as("id2"))
   }
-
-  /** Memoized SNM candidate DataFrames — see [[snmCandidates]]. Keyed
-    * by session so plans never leak across sessions; size-bounded
-    * (unpersist-on-evict) and cleared when the owning session's
-    * SparkContext ends, so long-lived processes composing many
-    * distinct inputs never grow storage unboundedly. Insertion-ordered
-    * (LinkedHashMap) so eviction drops the eldest entry. The cache
-    * holds id pairs only, never text. */
-  private val candidateCache =
-    scala.collection.mutable.LinkedHashMap.empty[
-      (org.apache.spark.sql.SparkSession,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Seq[String], Int, String), DataFrame]
-  private val candidateCacheMax = 64
-  private val cleanupRegistered =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean])
-
-  /** One listener per SparkContext: on application end, drop (and
-    * release) every cached candidate frame whose session rides that
-    * context — entries must not survive session.stop(). */
-  private def registerCacheCleanup(spark: org.apache.spark.sql.SparkSession): Unit =
-    cleanupRegistered.synchronized {
-      val sc = spark.sparkContext
-      if (cleanupRegistered.add(sc)) {
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            candidateCache.synchronized {
-              val dead = candidateCache.keys.filter(_._1.sparkContext eq sc).toSeq
-              dead.foreach(candidateCache.remove)
-            }
-        })
-      }
-    }
-
-  private[graft] def candidateCacheSize: Int =
-    candidateCache.synchronized(candidateCache.size)
 
   /** Sorted-neighborhood near-dup pairs (Hernández & Stolfo's
     * merge/purge method): sort the corpus by a cheap blocking key
@@ -391,10 +300,7 @@ object Dedup {
     * key's sort order separates (same-length docs in different
     * languages, same-language docs of drifting length) at the same
     * rows × window cost per pass. Candidates dedup BEFORE the shingle
-    * verify, so a pair found by both passes is verified once, and each
-    * pass's candidate stage is the memoized [[snmCandidates]] — a
-    * pipeline already running single-pass SNM pays only the new key's
-    * rank. */
+    * verify, so a pair found by both passes is verified once. */
   def sortedNeighborhoodMultiPass(docs: DataFrame, keySets: Seq[Seq[String]],
                                   window: Int = 0, minJaccard: Double = 0.8,
                                   textCol: String = "text",
@@ -499,7 +405,7 @@ object Dedup {
     val d1 = sh.select(col("__sid").as("id1"), col("__s").as("__s1"))
     val d2 = sh.select(col("__sid").as("id2"), col("__s").as("__s2"))
     // pin verify parallelism: the pair table is bytes-tiny and its
-    // partitioning may have collapsed (AQE coalesce / cached block);
+    // partitioning may have collapsed (AQE coalesce);
     // broadcast joins would carry that collapse into the CPU-dense
     // intersect stage — see Parallelize.spreadPairs
     // graft_set_inter: one fused counting pass per pair (no

@@ -40,16 +40,6 @@ object Graph {
       struct(col("b").as("a"), col("a").as("b")))).as("__e"))
       .select(col("__e.a").as("a"), col("__e.b").as("b"))
 
-  /** Undirected mutual edges (a < b) of the k-NN graph — conf-routed
-    * via Similarity.knnGraph (banded by default; see X132/X157). The
-    * driver entries instead pass Similarity.knnGraphBanded with pinned
-    * band geometry through `undirectedMutual`, so the oracle can
-    * reproduce the banding. */
-  def mutualEdges(vectors: DataFrame, k: Int,
-                  vecCol: String = "embedding",
-                  idCol: String = "vec_id"): DataFrame =
-    undirectedMutual(Similarity.knnGraph(vectors, k, vecCol, idCol))
-
   /** X153: PageRank over the mutual-kNN graph — the global importance
     * score (centrality ≈ representativeness in a similarity graph;
     * high-rank nodes are canonical exemplars, low-rank the fringe).
@@ -61,16 +51,10 @@ object Graph {
     * grid is 5e-10) so both engines iterate on IDENTICAL doubles;
     * the symmetric edge set has no dangling nodes by construction.
     * Lineage is fenced per round (conf-routed checkpoint) exactly
-    * like ConnectedComponents. */
-  def pageRank(vectors: DataFrame, k: Int, iters: Int = 5,
-               damping: Double = 0.85,
-               vecCol: String = "embedding",
-               idCol: String = "vec_id"): DataFrame =
-    pageRankEdges(mutualEdges(vectors, k, vecCol, idCol), iters, damping)
-
-  /** PageRank over a prebuilt undirected (a, b) edge list. An empty
-    * edge set returns an empty result — not a divide-by-zero in the
-    * teleport term (an over-filtered corpus must degrade, not crash). */
+    * like ConnectedComponents. Takes a prebuilt undirected (a, b)
+    * edge list. An empty edge set returns an empty result — not a
+    * divide-by-zero in the teleport term (an over-filtered corpus
+    * must degrade, not crash). */
   def pageRankEdges(e: DataFrame, iters: Int = 5,
                     damping: Double = 0.85): DataFrame = {
     val sym = Checkpoints.fence(symmetrized(e))
@@ -110,13 +94,8 @@ object Graph {
     * two-paths between a and c equals |N(a) ∩ N(c)|, so one
     * dst-keyed count over the k²N-bounded wedge set, an anti-join
     * against the edge list, and a degree join give the score —
-    * integer counts with one division per candidate pair. */
-  def linkPrediction(vectors: DataFrame, k: Int, topN: Int = 50,
-                     vecCol: String = "embedding",
-                     idCol: String = "vec_id"): DataFrame =
-    linkPredictionEdges(mutualEdges(vectors, k, vecCol, idCol), topN)
-
-  /** Link prediction over a prebuilt undirected (a, b) edge list. */
+    * integer counts with one division per candidate pair. Takes a
+    * prebuilt undirected (a, b) edge list. */
   def linkPredictionEdges(e: DataFrame, topN: Int = 50): DataFrame = {
     val sym = symmetrized(e)
     val deg = sym.groupBy(col("a").as("v")).agg(count(lit(1)).as("d"))
@@ -255,13 +234,8 @@ object Graph {
 
   /** Per-node triangle participation + degree + local clustering
     * coefficient over the mutual-kNN graph; nodes with degree < 2
-    * have undefined coefficient and report 0 triangles, cc = 0. */
-  def triangleStats(vectors: DataFrame, k: Int,
-                    vecCol: String = "embedding",
-                    idCol: String = "vec_id"): DataFrame =
-    triangleStatsEdges(mutualEdges(vectors, k, vecCol, idCol))
-
-  /** Triangle stats over a prebuilt undirected (a, b) edge list. */
+    * have undefined coefficient and report 0 triangles, cc = 0.
+    * Takes a prebuilt undirected (a, b) edge list. */
   def triangleStatsEdges(e: DataFrame): DataFrame = {
     // one-pass twin of `symmetrized` for the endpoint multiset
     val deg = e.select(explode(array(col("a"), col("b"))).as("v"))

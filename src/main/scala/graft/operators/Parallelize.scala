@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions.col
   *  - [[spreadPairs]]: a per-pair verifier (array_intersect Jaccard,
   *    banded levenshtein) fed by a bytes-tiny pair table whose
   *    partitioning collapsed (AQE byte-based coalescing of the
-  *    candidate exchange, or a 1-partition persisted cache block)
-  *    keeps that collapsed layout straight through broadcast-hash
-  *    joins — the CPU-dense verify then runs in 1-2 tasks (measured:
-  *    the dedup_snm_multipass verify was two 3.6 s single-task jobs).
+  *    candidate exchange) keeps that collapsed layout straight
+  *    through broadcast-hash joins — the CPU-dense verify then runs
+  *    in 1-2 tasks (measured: the dedup_snm_multipass verify was two
+  *    3.6 s single-task jobs).
   *    AQE coalescing is BYTE-driven and cannot see per-row CPU cost,
   *    so the operator pins the verify stage's parallelism with an
   *    explicit hash repartition — an exchange of two-long rows, paid

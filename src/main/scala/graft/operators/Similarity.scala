@@ -382,79 +382,6 @@ object Similarity {
                      maxBucket: Int = 2000): DataFrame =
     markMutual(bandedSelfTopK(vectors, k, vecCol, idCol, numPlanes, bands, maxBucket))
 
-  /** [[knnGraphBanded]] with the result MEMOIZED per (session,
-    * canonicalized input plan, k, geometry) — the graph/eval family
-    * (triangles, PageRank, link prediction, label propagation,
-    * k-core, kNN-classify) all consume the SAME banded kNN table, and
-    * without sharing each operator re-runs the banding + rerank
-    * pipeline from the scan (the SNM candidate-cache lesson, round
-    * 10). The cached frame is k·N rows of ids/scores — never the
-    * vectors. Size-bounded with unpersist-on-evict, cleared on
-    * application end; `spark.graft.knn.cacheGraph=false` opts out. */
-  def knnGraphBandedCached(vectors: DataFrame, k: Int,
-                           vecCol: String = "embedding", idCol: String = "vec_id",
-                           numPlanes: Int = 0, bands: Int = 8,
-                           maxBucket: Int = 2000): DataFrame = {
-    val spark = vectors.sparkSession
-    def build(): DataFrame =
-      knnGraphBanded(vectors, k, vecCol, idCol, numPlanes, bands, maxBucket)
-    val cacheOn = spark.conf.getOption("spark.graft.knn.cacheGraph")
-      .forall(_.toBoolean)
-    if (!cacheOn) build()
-    else {
-      val key = (spark, vectors.queryExecution.analyzed.canonicalized,
-        k, vecCol, idCol, numPlanes, bands, maxBucket)
-      graphCache.synchronized {
-        graphCache.get(key) match {
-          case Some(df) => df
-          case None =>
-            registerGraphCacheCleanup(spark)
-            val df = build().persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            graphCache.put(key, df)
-            while (graphCache.size > graphCacheMax) {
-              val (kk, v) = graphCache.head
-              try v.unpersist(blocking = false) catch { case _: Throwable => () }
-              graphCache.remove(kk)
-            }
-            df
-        }
-      }
-    }
-  }
-
-  /** Memoized banded kNN graphs — see [[knnGraphBandedCached]].
-    * Insertion-ordered for eldest-first eviction; session-keyed so
-    * plans never leak across sessions. */
-  private val graphCache =
-    scala.collection.mutable.LinkedHashMap.empty[
-      (org.apache.spark.sql.SparkSession,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Int, String, String, Int, Int, Int), DataFrame]
-  private val graphCacheMax = 16
-  private val graphCleanupRegistered =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean])
-
-  private def registerGraphCacheCleanup(
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    graphCleanupRegistered.synchronized {
-      val sc = spark.sparkContext
-      if (graphCleanupRegistered.add(sc)) {
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            graphCache.synchronized {
-              val dead = graphCache.keys.filter(_._1.sparkContext eq sc).toSeq
-              dead.foreach(graphCache.remove)
-            }
-        })
-      }
-    }
-
-  private[graft] def graphCacheSize: Int =
-    graphCache.synchronized(graphCache.size)
-
   /** The exact (all-pairs) kNN graph — recall-1 baseline, quadratic
     * scoring; small-corpus use only. */
   def knnGraphExact(vectors: DataFrame, k: Int,

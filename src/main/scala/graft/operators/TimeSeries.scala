@@ -20,11 +20,6 @@ import graft.Tables
   */
 object TimeSeries {
 
-  /** Memoized raw-parquet row counts per sf-dir — the rolling-anomaly
-    * route decision only needs the order of magnitude once. */
-  private val rawEventCount =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
   private def dayCol = datediff(to_date(col("ts")), lit("2024-01-01"))
 
   /** X180: per-user time-weighted average value (TWAP) — each event's
@@ -106,15 +101,13 @@ object TimeSeries {
     // wall time. AUTO above 300k rows (the type-keyed sort's win from
     // skipping the rank exchange is gone by then — measured 2x better
     // at 10x sf0.1); spark.graft.rolling.partitioned=true/false pins
-    // either route explicitly. The row count is parquet-metadata cheap.
+    // either route explicitly. The row count runs on every call and
+    // is parquet-metadata cheap: it counts the RAW table, with no
+    // projection on top of the scan, so Spark answers from row-group
+    // metadata (a count over Tables.events would run normalizeTs).
     val partitioned =
       spark.conf.getOption("spark.graft.rolling.partitioned").map(_.toBoolean)
-        .getOrElse(rawEventCount.getOrElseUpdate(sfDir,
-          // count the RAW table: no projection on top of the scan, so
-          // Spark answers from parquet row-group metadata (a count over
-          // Tables.events would run normalizeTs first); memoized so
-          // repeated invocations (bench reps) skip even that job
-          Tables.table(spark, sfDir, "events").count()) >= 300000)
+        .getOrElse(Tables.table(spark, sfDir, "events").count() >= 300000)
     if (partitioned)
       return rollingAnomaliesPartitioned(spark, sfDir, frame, minWarm, zMax)
     val w = Window.partitionBy($"event_type")

@@ -446,43 +446,44 @@ class DedupSpec extends AnyFunSuite {
     assert(single.subsetOf(multi), "multi-pass is a superset of every single pass")
   }
 
-  test("SNM candidate stage is memoized across verifiers over the same input") {
+  test("SNM verifiers and the banded kNN graph keep no result across calls") {
     import spark.implicits._
-    // a UNIQUE inline corpus: other suites exercise the gated entries
-    // over Tables.documents and may have already cached that exact
-    // (plan, sortCols, window) key — this test must own its key
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import graft.operators.Similarity
     val uniq = (1L to 40L).map(i =>
       (i, s"memo probe body alpha beta gamma delta token$i", "en", 40L + i % 7))
       .toDF("doc_id", "text", "lang", "n_chars")
-    val before = Dedup.candidateCacheSize
-    // three different verifiers, same (docs plan, sortCols, window):
-    // one candidate build, one cache entry
-    val snm = Dedup.sortedNeighborhoodPairs(uniq,
-      Seq("n_chars"), window = 0, minJaccard = 0.5).count()
-    val mid = Dedup.candidateCacheSize
-    Dedup.containmentPairs(uniq,
-      Seq("n_chars"), window = 0, minContainment = 0.5).count()
-    Dedup.editDistancePairs(uniq,
-      Seq("n_chars"), window = 0, minSim = 0.6, prefixChars = 64).count()
-    assert(snm > 0)
-    assert(mid == before + 1, "first verifier populates the cache")
-    assert(Dedup.candidateCacheSize == mid,
-      "same-input verifiers must reuse the cached candidate stage")
-    // a DIFFERENT window is a different candidate set — not shareable
-    Dedup.sortedNeighborhoodPairs(uniq,
-      Seq("n_chars"), window = 5, minJaccard = 0.5).count()
-    assert(Dedup.candidateCacheSize == mid + 1)
-  }
-
-  test("SNM candidate cache is size-bounded: old entries evict, never pin forever") {
-    import spark.implicits._
-    val rows = (1L to 20L).map(i => (i, s"text body $i", "en", 10L + i))
-      .toDF("doc_id", "text", "lang", "n_chars")
-    // 80 distinct (window) keys > the 64-entry bound; building the
-    // candidate frame is lazy, so this exercises ONLY the cache paths
-    (2 to 81).foreach(w => Dedup.snmCandidates(rows, Seq("n_chars"), window = w))
-    assert(Dedup.candidateCacheSize <= 64,
-      "cache must evict above its bound instead of growing unboundedly")
+    val vecs = (0L until 40L).map(i =>
+      (i, Array.tabulate(8)(d => ((i * 7 + d * 3) % 11 - 5).toFloat), (i % 3).toInt))
+      .toDF("vec_id", "embedding", "label")
+    val builds: Seq[(String, () => DataFrame)] = Seq(
+      "sortedNeighborhoodPairs" -> (() => Dedup.sortedNeighborhoodPairs(uniq,
+        Seq("n_chars"), window = 0, minJaccard = 0.5)),
+      "containmentPairs" -> (() => Dedup.containmentPairs(uniq,
+        Seq("n_chars"), window = 0, minContainment = 0.5)),
+      "editDistancePairs" -> (() => Dedup.editDistancePairs(uniq,
+        Seq("n_chars"), window = 0, minSim = 0.6, prefixChars = 64)),
+      "knnGraphBanded" -> (() => Similarity.knnGraphBanded(vecs, 5,
+        numPlanes = 0, bands = 4, maxBucket = 500)))
+    // numCachedEntries is private[sql] in Scala but public in bytecode
+    val cache = spark.sharedState.cacheManager
+    def cachedEntries: Int =
+      cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val before = cachedEntries
+    builds.foreach { case (name, build) =>
+      val runs = Seq(build(), build())
+      runs.foreach { df =>
+        assert(df.queryExecution.withCachedData.collectFirst {
+          case r: InMemoryRelation => r }.isEmpty,
+          s"$name must compute from its input, not read a cached relation")
+      }
+      val Seq(first, second) = runs.map(_.collect().map(_.toString).sorted.toSeq)
+      assert(first.nonEmpty, s"$name found nothing on the probe corpus")
+      assert(first == second, s"$name differs between two calls")
+    }
+    assert(cachedEntries == before,
+      "no operator may register a cached result")
   }
 
   test("NULL blocking keys: sentinel density count + NULLS LAST ranking") {

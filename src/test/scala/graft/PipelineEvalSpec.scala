@@ -130,30 +130,6 @@ class PipelineEvalSpec extends AnyFunSuite {
     assert(got.values.forall(_ == 3L))
   }
 
-  test("banded kNN graph is memoized across graph-family consumers") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    // a UNIQUE inline vector table so this test owns its cache key
-    val uniq = (0L until 40L).map(i =>
-      (i, Array.tabulate(8)(d => ((i * 7 + d * 3) % 11 - 5).toFloat), (i % 3).toInt))
-      .toDF("vec_id", "embedding", "label")
-    val before = Similarity.graphCacheSize
-    val knn = Similarity.knnGraphBandedCached(uniq, 5,
-      numPlanes = 0, bands = 4, maxBucket = 500)
-    assert(knn.count() > 0)
-    val mid = Similarity.graphCacheSize
-    assert(mid == before + 1, "first consumer populates the cache")
-    // a second consumer over the same plan + geometry reuses the entry
-    Graph.undirectedMutual(Similarity.knnGraphBandedCached(uniq, 5,
-      numPlanes = 0, bands = 4, maxBucket = 500)).count()
-    assert(Similarity.graphCacheSize == mid,
-      "same-input graph consumers must share one cached kNN table")
-    // different geometry = different graph — not shareable
-    Similarity.knnGraphBandedCached(uniq, 5,
-      numPlanes = 0, bands = 2, maxBucket = 500).count()
-    assert(Similarity.graphCacheSize == mid + 1)
-  }
-
   test("decay score: the weighted sum replays with exact BigInt weights") {
     val got = EventAnalytics.decayScore(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.collection.mutable
 
@@ -50,6 +53,17 @@ object ProfileOne {
     }
     spark.sparkContext.addSparkListener(listener)
 
+    // the noop write's own QueryExecution holds the plan that ran
+    val ranWrite = new java.util.concurrent.atomic.AtomicReference[QueryExecution]
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical match {
+          case w: V2WriteCommand if w.table.name == "noop-table" => ranWrite.set(qe)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+
     def materialize(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
@@ -61,13 +75,15 @@ object ProfileOne {
         val w0 = System.nanoTime()
         val df = SparkEntry.queries(n)(spark, sfDir)
         val planned = System.nanoTime()
+        ranWrite.set(null)
         materialize(df)
         val w1 = System.nanoTime()
-        sys.env.get("SPARK_GRAFT_PROFILE_PLAN").foreach { p =>
-          java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$p/${n}_executed.txt"),
-            df.queryExecution.executedPlan.toString)
-        }
         Thread.sleep(300) // let the listener bus drain
+        sys.env.get("SPARK_GRAFT_PROFILE_PLAN").foreach { p =>
+          val ran = Option(ranWrite.get).getOrElse(sys.error(s"no noop write reported for $n"))
+          java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$p/${n}_executed.txt"),
+            ran.executedPlan.toString)
+        }
         val snap = jobs.synchronized { jobs.values.toVector }
         val jobMs = snap.map(j => math.max(0L, j.end - j.start))
         val sumJobs = jobMs.sum

@@ -1860,8 +1860,8 @@ object SparkEntry {
     // candidate generation at AUTO width (integer ⌊log₂(n/100)⌋ bits
     // per band, which the oracle recomputes from count(*) — a pinned
     // width loses every bucket past the cap at 10×: recall 0) with
-    // exact-cosine rerank; the all-pairs exact scorer now lives
-    // behind spark.graft.knn.exact and is spec-tested, never gated
+    // exact-cosine rerank; the all-pairs exact scorer
+    // (Similarity.knnGraphExact) is spec-tested, never gated
     "knn_graph" -> ((s, dir) => {
       Similarity.knnGraphBanded(Tables.embeddings(s, dir), 10,
           numPlanes = 0, bands = 4, maxBucket = 500)

@@ -242,8 +242,8 @@ object StressBench {
       // — must stay near-linear where the exact all-pairs scorer is
       // inherently quadratic (which is why exact is NOT in this table)
       "knn_graph_banded" -> (() =>
-        // banded IS the knnGraph default now; auto band geometry
-        operators.Similarity.knnGraph(emb, 10)),
+        // auto band geometry
+        operators.Similarity.knnGraphBanded(emb, 10)),
       // boilerplate strip: two stacked df aggs + doc reassembly, all
       // keyed shuffles — token-linear like dedup_paragraph
       "text_boilerplate" -> (() =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the similarity graph (X152): once embeddings
-  * become a mutual-kNN graph (Similarity.knnGraph), its STRUCTURE is a
+  * become a mutual-kNN graph (Similarity.knnGraphBanded), its STRUCTURE is a
   * data-quality signal — triangle-dense neighborhoods are coherent
   * topics, triangle-free hubs are boilerplate/outliers, and the
   * clustering coefficient ranks them. This is the standard

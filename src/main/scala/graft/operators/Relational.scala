@@ -537,10 +537,10 @@ object Relational {
   /** C15: percentiles per group, conf-routed between the exact and
     * sketch forms. Exact `percentile` buffers every value of the group
     * in one ObjectHashAggregate task — correct for bounded groups, a
-    * per-task OOM when one group holds a 100 TB corpus's rows. Set
-    * `spark.graft.quantiles.approx=true` (the 100 TB default; accuracy
-    * via `spark.graft.quantiles.accuracy`, rank error ≤ 1/accuracy) to
-    * route the SAME query shape through the mergeable
+    * per-task OOM when one group holds a 100 TB corpus's rows. Exact is
+    * the default; a 100 TB run sets `spark.graft.quantiles.approx=true`
+    * (accuracy via `spark.graft.quantiles.accuracy`, rank error
+    * ≤ 1/accuracy) to route the SAME query shape through the mergeable
     * `approx_percentile` sketch — constant memory per group, identical
     * output schema, so callers flip one conf instead of rewriting.
     * RelationalSpec proves the two routes agree within the sketch's
@@ -897,12 +897,12 @@ object Relational {
     * distributions where mean/stddev z-scores (q_rolling_anomaly's
     * arithmetic) drown: median and MAD have a 50% breakdown point, so
     * a crawl shard whose spam inflates the tail still scores its bulk
-    * correctly. Two exact-percentile passes (value median, then
-    * deviation median) over |types| groups — the percentile buffer is
-    * per-GROUP row count, which is exactly the case SURVEY §5 allows
-    * exact percentile for (bounded groups); a 100 TB run with
-    * high-cardinality groups routes to approx_percentile the same way
-    * q_quantiles does. Outlier rule: |value − median| > k·MAD. */
+    * correctly. Two exact `percentile` passes (value median, then
+    * deviation median) over |types| groups. Each pass buffers every
+    * value of a group in one task, so it is sized for bounded groups
+    * (SURVEY §5); it reads no conf and has no sketch route, so a group
+    * holding a 100 TB corpus's rows would not fit one task (ROADMAP:
+    * exact grouped quantiles). Outlier rule: |value − median| > k·MAD. */
   def madOutliers(spark: SparkSession, sfDir: String,
                   k: Double = 3.0): DataFrame = {
     import spark.implicits._

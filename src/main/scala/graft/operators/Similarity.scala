@@ -351,31 +351,15 @@ object Similarity {
     * the other endpoint's top-k (the mutual-kNN graph is the standard
     * substrate for agglomerative/density clustering of embeddings).
     *
-    * The DEFAULT route is the scale-safe one: `bandedSelfTopK` —
-    * SRP-banded candidate generation with exact-cosine rerank, cost
-    * Σ bucket² ≤ maxBucket·N per band. The all-pairs exact scorer
-    * (quadratic — dead at corpus scale, but the recall-1 baseline for
-    * small corpora) sits behind `spark.graft.knn.exact=true`; band
-    * geometry is tunable via `spark.graft.knn.{numPlanes,bands,
-    * maxBucket}` (numPlanes unset/≤0 → auto width from the corpus
-    * count). Either way the graph step (the self-join marking mutual
-    * edges) is k·N-bounded and joins on (q_id, c_id), a key both
-    * sides already carry. */
-  def knnGraph(vectors: DataFrame, k: Int,
-               vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val conf = vectors.sparkSession.conf
-    val exact = conf.getOption("spark.graft.knn.exact").exists(_.toBoolean)
-    if (exact) knnGraphExact(vectors, k, vecCol, idCol)
-    else knnGraphBanded(vectors, k, vecCol, idCol,
-      numPlanes = conf.getOption("spark.graft.knn.numPlanes").map(_.toInt).getOrElse(0),
-      bands = conf.getOption("spark.graft.knn.bands").map(_.toInt).getOrElse(8),
-      maxBucket = conf.getOption("spark.graft.knn.maxBucket").map(_.toInt).getOrElse(2000))
-  }
-
-  /** The banded kNN graph with EXPLICIT band geometry — what the
-    * driver-gated entries call (fixed planes/bands so the cross-engine
-    * oracle reproduces the banding bit-for-bit), and what a deployment
-    * pins once it has tuned recall. */
+    * This is the scale-safe route: `bandedSelfTopK` — SRP-banded
+    * candidate generation with exact-cosine rerank, cost
+    * Σ bucket² ≤ maxBucket·N per band (numPlanes ≤ 0 → auto width from
+    * the corpus count). The driver-gated entries pass explicit band
+    * geometry so the cross-engine oracle reproduces the banding
+    * bit-for-bit. The all-pairs exact scorer is `knnGraphExact`.
+    * Either way the graph step (the self-join marking mutual edges) is
+    * k·N-bounded and joins on (q_id, c_id), a key both sides already
+    * carry. */
   def knnGraphBanded(vectors: DataFrame, k: Int,
                      vecCol: String = "embedding", idCol: String = "vec_id",
                      numPlanes: Int = 0, bands: Int = 8,

@@ -100,15 +100,11 @@ object TimeSeries {
     // bit-identical (spec-proven), so the swap is invisible except in
     // wall time. AUTO above 300k rows (the type-keyed sort's win from
     // skipping the rank exchange is gone by then — measured 2x better
-    // at 10x sf0.1); spark.graft.rolling.partitioned=true/false pins
-    // either route explicitly. The row count runs on every call and
-    // is parquet-metadata cheap: it counts the RAW table, with no
+    // at 10x sf0.1). The row count runs on every call and is
+    // parquet-metadata cheap: it counts the RAW table, with no
     // projection on top of the scan, so Spark answers from row-group
     // metadata (a count over Tables.events would run normalizeTs).
-    val partitioned =
-      spark.conf.getOption("spark.graft.rolling.partitioned").map(_.toBoolean)
-        .getOrElse(Tables.table(spark, sfDir, "events").count() >= 300000)
-    if (partitioned)
+    if (Tables.table(spark, sfDir, "events").count() >= 300000)
       return rollingAnomaliesPartitioned(spark, sfDir, frame, minWarm, zMax)
     val w = Window.partitionBy($"event_type")
       .orderBy(unix_micros($"ts"), $"event_id")
@@ -160,9 +156,9 @@ object TimeSeries {
     * Cost: the rank's ranged exchange + ≤ (frame−1)/bucketRows
     * duplicated bytes.
     *
-    * The driver entry routes here when
-    * `spark.graft.rolling.partitioned=true`; both routes share the
-    * z-score arithmetic so the choice is invisible in the output. */
+    * [[rollingAnomalies]] routes here at 300,000 raw events or more;
+    * both routes share the z-score arithmetic so the choice is
+    * invisible in the output. */
   def rollingAnomaliesPartitioned(spark: SparkSession, sfDir: String,
                                   frame: Int = 20, minWarm: Int = 15,
                                   zMax: Double = 2.5,

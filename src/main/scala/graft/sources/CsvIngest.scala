@@ -23,9 +23,10 @@ object CsvIngest {
     * NOT multiLine: line-splittable files are what lets 100 TB of CSV
     * fan out across tasks (multiLine parses each file whole in one
     * task); records with embedded newlines belong in JSONL/parquet,
-    * not CSV, at that scale. Cached for the same reason as
-    * JsonlIngest: the clean/corrupt split must not re-parse, and
-    * corrupt-only projections need the materialized parse. */
+    * not CSV, at that scale. Not cached: each plan parses only the
+    * fields it reads, and a line is corrupt when one of THOSE fails.
+    * Spark refuses a plan that reads ONLY the corrupt column; such a
+    * caller reads another column too or caches the frame itself. */
   def readWithCorruptCapture(spark: SparkSession, path: String,
                              schema: StructType): DataFrame =
     spark.read
@@ -35,13 +36,12 @@ object CsvIngest {
       .option("header", "false")
       .option("escape", "\"")
       .csv(path)
-      .cache()
 
   /** The `ingest_csv` queries entry: round-trip the documents table
     * through CSV (quoted free text with embedded commas/quotes),
     * append three known-malformed lines, read back with the explicit
     * schema, and roll up per (lang, source) over the parsed columns —
-    * plus the `__corrupt` sentinel row. Spark's PERMISSIVE CSV
+    * plus the `__corrupt` sentinel row, in one parse. Spark's PERMISSIVE CSV
     * quarantines BOTH un-typeable fields and arity mismatches
     * (stricter than JSONL, where a missing field reads as NULL); the
     * injected lines cover each kind. */
@@ -65,14 +65,19 @@ object CsvIngest {
       StructField("n_chars", LongType),
       StructField("text", StringType)))
     val read = readWithCorruptCapture(spark, tmp, schema)
-    val clean = read.where(col(CorruptCol).isNull)
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
-        sum(length(col("text"))).as("sum_text_len"))
-    val corrupt = read.where(col(CorruptCol).isNotNull)
-      .agg(count(lit(1)).as("__n"))
-      .select(lit("__corrupt").as("lang"), lit("__corrupt").as("source"),
-        col("__n").as("n"), lit(0L).as("sum_chars"), lit(0L).as("sum_text_len"))
-    clean.union(corrupt).orderBy(col("lang"), col("source"))
+    // a line is clean only if every field parses, doc_id included; the
+    // rollup never reads doc_id, so the RDD boundary keeps the whole
+    // row in the parse
+    val clean = col(CorruptCol).isNull
+    def orCorrupt(c: String) = when(col("clean"), col(c)).otherwise("__corrupt").as(c)
+    spark.createDataFrame(read.rdd, read.schema)
+      .groupBy(clean.as("clean"), when(clean, col("lang")).as("lang"),
+        when(clean, col("source")).as("source"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(clean, col("n_chars")).otherwise(0L)).as("sum_chars"),
+        sum(when(clean, length(col("text"))).otherwise(0)).as("sum_text_len"))
+      .select(orCorrupt("lang"), orCorrupt("source"), col("n"), col("sum_chars"),
+        col("sum_text_len"))
+      .orderBy(col("lang"), col("source"))
   }
 }

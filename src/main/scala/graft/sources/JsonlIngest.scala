@@ -21,10 +21,11 @@ object JsonlIngest {
 
   val CorruptCol = "_corrupt_record"
 
-  /** Read a JSONL directory with `schema` plus corrupt capture. The
-    * returned frame is cached: Spark (correctly) refuses plans that
-    * touch ONLY the corrupt column of an unparsed source, and the
-    * cache also keeps the clean/corrupt split to one parse pass. */
+  /** Read a JSONL directory with `schema` plus corrupt capture. Not
+    * cached: a malformed line is always corrupt, a type error only in
+    * a field the plan reads. Spark refuses a plan that reads ONLY the
+    * corrupt column; such a caller reads another column too (as
+    * `ingestEntry` does) or caches the frame itself. */
   def readWithCorruptCapture(spark: SparkSession, path: String,
                              schema: StructType): DataFrame =
     spark.read
@@ -32,15 +33,14 @@ object JsonlIngest {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
       .json(path)
-      .cache()
 
   /** The `ingest_jsonl` queries entry: round-trip the events table
     * through line-delimited JSON, inject three known-malformed lines,
     * read back with the explicit schema, and roll up per event type —
     * clean rows aggregated, corrupt rows counted under a sentinel
-    * `__corrupt` type. Proves the full path: distributed JSONL write,
-    * schema-on-read parse, permissive quarantine, aggregation over the
-    * parsed columns. */
+    * `__corrupt` type, in one parse. Proves the full path: distributed
+    * JSONL write, schema-on-read parse, permissive quarantine,
+    * aggregation over the parsed columns. */
   def ingestEntry(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
@@ -57,14 +57,13 @@ object JsonlIngest {
       StructField("event_type", StringType),
       StructField("value", DoubleType),
       StructField("props", StringType)))
-    val read = readWithCorruptCapture(spark, tmp, schema)
-    val clean = read.where(col(CorruptCol).isNull)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-    val corrupt = read.where(col(CorruptCol).isNotNull)
-      .agg(count(lit(1)).as("__n"))
-      .select(lit("__corrupt").as("event_type"), col("__n").as("n"),
-        lit(0.0).as("sum_value"))
-    clean.union(corrupt).orderBy(col("event_type"))
+    val clean = col(CorruptCol).isNull
+    readWithCorruptCapture(spark, tmp, schema)
+      .groupBy(clean.as("clean"), when(clean, col("event_type")).as("event_type"))
+      .agg(count(lit(1)).as("n"),
+        round(sum(when(clean, col("value")).otherwise(0.0)), 2).as("sum_value"))
+      .select(when(col("clean"), col("event_type")).otherwise("__corrupt").as("event_type"),
+        col("n"), col("sum_value"))
+      .orderBy(col("event_type"))
   }
 }

@@ -37,18 +37,14 @@ object Replay {
     * (= cores) one 4-batch replay of a kilobyte trigger commits
     * 4 stores × cores × batches files. State-store count should track
     * LIVE-STATE BYTES / target-state-per-partition, not driver cores —
-    * so the default derives from the staged input's byte size (an
+    * so the count derives from the staged input's byte size (an
     * upper bound on what the stateful operators can retain), clamped
-    * to [4, session shuffle partitions]: at bench scale the staged
-    * slices are KB-MB and the floor of 4 applies (measured: 4 → 6.3 s,
-    * 8 → 6.8 s, 16 → 11.4 s warm on q_stream_join at 32 cores —
-    * per-partition commit fan-out, not parallelism, dominates); at
-    * production scale the count grows with the data, never past the
-    * cluster's configured shuffle width. Explicit override:
-    * `spark.graft.stream.statePartitions`; per-partition byte target:
-    * `spark.graft.stream.stateTargetBytes` (default 64 MB). Measured
-    * r17 (sf0.1, local[32], cores/4 heuristic): q_stream_join
-    * micro-batches 2.0-2.5 s → ~0.6 s each; entry 18.2 s → ~6 s.
+    * to [4, session shuffle partitions] ([[statePartitionCount]]): at
+    * bench scale the staged slices are KB-MB and the floor of 4
+    * applies (measured: 4 → 6.3 s, 8 → 6.8 s, 16 → 11.4 s warm on
+    * q_stream_join at 32 cores — per-partition commit fan-out, not
+    * parallelism, dominates); at production scale the count grows with
+    * the data, never past the cluster's configured shuffle width.
     *
     * Isolation: the naive set/restore had two leaks — an entry
     * abandoned mid-run by a bench timeout could leave the shrunken
@@ -67,7 +63,7 @@ object Replay {
   private val lastSetStatePartitions =
     new java.util.concurrent.atomic.AtomicReference[String](null)
   private[graft] def withStatePartitions[T](
-      spark: SparkSession, stagedBytesHint: Long = -1L)(
+      spark: SparkSession, stagedBytesHint: Long)(
       body: => T): T = statePartitionsLock.synchronized {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
@@ -76,22 +72,23 @@ object Replay {
         spark.sparkContext.getConf.get(key, prev) // leaked shrink → heal to default
       else prev
     val sessionWidth = scala.util.Try(base.toInt).getOrElse(16)
-    val n = spark.conf.getOption("spark.graft.stream.statePartitions")
-      .getOrElse {
-        if (stagedBytesHint >= 0L) {
-          val target = spark.conf.getOption("spark.graft.stream.stateTargetBytes")
-            .map(_.toLong).getOrElse(64L << 20)
-          val byBytes = (stagedBytesHint + target - 1L) / math.max(1L, target)
-          math.min(math.max(4L, byBytes), math.max(4, sessionWidth).toLong).toString
-        } else math.max(4, sessionWidth / 4).toString
-      }
+    val n = statePartitionCount(stagedBytesHint, sessionWidth).toString
     lastSetStatePartitions.set(n)
     spark.conf.set(key, n)
     try body finally spark.conf.set(key, base)
   }
 
+  private val StateTargetBytes = 64L << 20 // live state per state-store partition
+
+  /** State-store partitions for a replay over `stagedBytes` of input:
+    * ceil(stagedBytes / 64 MB), clamped to [4, max(4, sessionWidth)]. */
+  private[graft] def statePartitionCount(stagedBytes: Long, sessionWidth: Int): Int = {
+    val byBytes = (stagedBytes + StateTargetBytes - 1L) / StateTargetBytes
+    math.min(math.max(4L, byBytes), math.max(4, sessionWidth).toLong).toInt
+  }
+
   /** Total bytes of the staged replay files under `dirs` — the
-    * bytes-driven state-partition default's input. Local listing of
+    * bytes-driven state-partition count's input. Local listing of
     * the just-written temp stage; no Spark job. */
   private[graft] def stagedBytes(dirs: String*): Long =
     dirs.map { d =>

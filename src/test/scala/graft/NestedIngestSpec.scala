@@ -51,7 +51,9 @@ class NestedIngestSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     // missing fields are null, not corrupt; malformed lines are corrupt
     assert(clean == Set((1L, "a"), (2L, "b"), (3L, "a")))
-    assert(read.where(col(graft.sources.JsonlIngest.CorruptCol).isNotNull).count() == 2)
+    // collect, not count: a count over the raw source reads only the
+    // corrupt column, which Spark refuses
+    assert(read.where(col(graft.sources.JsonlIngest.CorruptCol).isNotNull).collect().length == 2)
     // the driver entry shape: per-kind rollup + sentinel corrupt row
     val entry = graft.sources.JsonlIngest.ingestEntry(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
@@ -83,7 +85,7 @@ class NestedIngestSpec extends AnyFunSuite {
       (2L, "plain", Some("text"))))
     // CSV quarantines BOTH bad arity and bad types — stricter than
     // JSONL, where a missing field is just NULL
-    assert(read.where(col(graft.sources.CsvIngest.CorruptCol).isNotNull).count() == 2)
+    assert(read.where(col(graft.sources.CsvIngest.CorruptCol).isNotNull).collect().length == 2)
     // the driver entry shape: per-(lang, source) rollup + sentinel
     val entry = graft.sources.CsvIngest.ingestEntry(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
@@ -92,6 +94,17 @@ class NestedIngestSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("s"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(entry.filterNot(_._1._1 == "__corrupt") == expected)
+  }
+
+  test("ingest_csv and ingest_jsonl leave no cached relation or persisted RDD behind") {
+    // numCachedEntries is private[sql] in Scala but public in bytecode
+    val cache = spark.sharedState.cacheManager
+    def held = (cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int],
+      spark.sparkContext.getPersistentRDDs.keySet)
+    val before = held
+    for (name <- Seq("ingest_csv", "ingest_jsonl"); _ <- 1 to 2)
+      assert(SparkEntry.queries(name)(spark, sf).collect().nonEmpty)
+    assert(held == before, "an ingest entry must not cache its parsed read")
   }
 
   test("orc ingest: values survive the format hop to the microsecond and bit") {

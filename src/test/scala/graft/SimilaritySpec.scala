@@ -295,8 +295,8 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("X132: knn graph edges equal per-query brute force; mutual = reverse edge present") {
     val k = 5
-    // the exact route (spark.graft.knn.exact or knnGraphExact) is the
-    // recall-1 baseline this test pins against brute force
+    // knnGraphExact is the recall-1 baseline this test pins against
+    // brute force
     val got = Similarity.knnGraphExact(emb, k).collect()
       .map(r => (r.getLong(0), r.getInt(1).toLong, r.getLong(2), r.getBoolean(4)))
     val vecs = emb.select("vec_id", "embedding").collect()
@@ -317,16 +317,9 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("X132 banded route: DEFAULT SRP candidates, exact scores, bounded recall loss") {
     val k = 5
-    // conf-routing: spark.graft.knn.exact=true selects the all-pairs
-    // scorer; the unset default is the banded scale route
-    spark.conf.set("spark.graft.knn.exact", "true")
-    val exact = try Similarity.knnGraph(emb, k).collect()
-        .map(r => (r.getLong(0), r.getLong(2)))
-      finally spark.conf.unset("spark.graft.knn.exact")
-    assert(exact.toSet == Similarity.knnGraphExact(emb, k).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSet,
-      "conf-routed exact must equal knnGraphExact")
-    val banded = Similarity.knnGraph(emb, k) // default route
+    val exact = Similarity.knnGraphExact(emb, k).collect()
+      .map(r => (r.getLong(0), r.getLong(2)))
+    val banded = Similarity.knnGraphBanded(emb, k) // default band geometry
     val rows = banded.collect()
     assert(banded.columns.toSeq ==
       Seq("q_id", "rank", "c_id", "score", "mutual"), "route must keep the schema")

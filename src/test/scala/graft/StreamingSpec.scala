@@ -196,4 +196,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.nonEmpty && streamed == batch,
       "a hash seen in an earlier micro-batch must stay suppressed in later ones")
   }
+
+  test("replay state partitions: ceil(staged bytes / 64 MB) within [4, session width], session width restored") {
+    import graft.streaming.Replay
+    assert(Replay.statePartitionCount(1L << 10, 16) == 4)
+    assert(Replay.statePartitionCount(200L << 20, 16) == 4)
+    assert(Replay.statePartitionCount(1L << 30, 16) == 16)
+    assert(Replay.statePartitionCount(10L << 30, 8) == 8)
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try {
+      assert(Replay.withStatePartitions(spark, 1L << 10)(spark.conf.get(key)) == "4")
+      assert(spark.conf.get(key) == "16", "width must be restored after the body returns")
+      intercept[IllegalStateException] {
+        Replay.withStatePartitions(spark, 1L << 10)(throw new IllegalStateException("body failed"))
+      }
+      assert(spark.conf.get(key) == "16", "width must be restored after the body throws")
+    } finally spark.conf.set(key, prev)
+  }
 }

@@ -101,13 +101,6 @@ class TimeSeriesSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
     assert(plain.nonEmpty && routed == plain,
       "bucketed window + frame-1 carry must reproduce the global trailing frame exactly")
-    // and the conf routes the entry through the partitioned form
-    spark.conf.set("spark.graft.rolling.partitioned", "true")
-    try {
-      val viaConf = TimeSeries.rollingAnomalies(spark, sf).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
-      assert(viaConf == plain)
-    } finally spark.conf.unset("spark.graft.rolling.partitioned")
   }
 
   test("rolling anomalies: zero-variance runs are unscored, not a crash") {

@@ -20,8 +20,11 @@ import graft.functions.expr._
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    // the inverted-index optimization for SQL-shaped doc-id lookups
+    // the inverted-index optimization for SQL-shaped doc-id lookups,
+    // and the physical rule that keeps its id range out of the
+    // generated filter code
     ext.injectOptimizerRule(_ => graft.plans.LargeInListToJoin)
+    ext.injectColumnar(_ => graft.plans.DropImpliedRangeRule)
     // the posting-list-intersection physical operator (index-backed
     // boolean search as a custom whole-operator plan node)
     ext.injectPlannerStrategy(_ => graft.plans.PostingListStrategy)

@@ -32,7 +32,7 @@ object SparkEntry {
     * becomes hash-comparable, not just its verification stage. */
   /** Deterministic 1200-key probe set for q_large_in — longer than
     * LargeInListToJoin.Threshold (1000), so the SQL-surface IN list
-    * rewrites to the pushed range + broadcast semi-join plan
+    * rewrites to the pushed range + `graft_doc_id_in` kernel plan
     * (gcd(17, 4000) = 1 keeps the 1200 keys distinct). */
   private[graft] def largeInKeys: Seq[Long] =
     (0 until 1200).map(i => (i.toLong * 17) % 4000)
@@ -1553,7 +1553,8 @@ object SparkEntry {
         .orderBy(col("l_returnflag"))
     }),
     // the X10 optimizer rule driver-gated: a 1200-literal IN list
-    // (above the rewrite threshold) becomes range-prune + semi-join
+    // (above the rewrite threshold) becomes range-prune + the
+    // graft_doc_id_in membership kernel
     "q_large_in" -> ((s, dir) =>
       Tables.lineitem(s, dir)
         .where(col("l_partkey").isin(largeInKeys: _*))

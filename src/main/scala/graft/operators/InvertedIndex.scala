@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, InSet}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -37,14 +38,16 @@ import graft.plans.LargeInListToJoin
   *    caller can pre-bucket by value range — the plan shape is
   *    unchanged.
   *  - doc-id restricted variants NEVER shuffle the fact table: small
-  *    sets (≤ `LargeInListToJoin.Threshold`) become an `isin` literal
+  *    sets (≤ `LargeInListToJoin.Threshold`) become an `InSet`
   *    predicate that Catalyst pushes into the parquet scan, where
   *    row-group min/max stats on a doc_id-clustered layout
   *    (graft.sources.ClusteredParquet) prune all non-matching row
   *    groups — the reference's point-lookup perf contract (README "100
   *    doc_ids in ~1s on 10M rows"). Larger sets take
   *    `LargeInListToJoin`'s plan: a pushed id-range predicate (same
-  *    pruning) over a semi-join against the id relation.
+  *    pruning) and the `graft_doc_id_in` binary-search kernel in the
+  *    post-scan filter — no join, no id relation, and generated code
+  *    that is the same for every id set.
   */
 object InvertedIndex {
 
@@ -77,31 +80,31 @@ object InvertedIndex {
   }
 
   /** Restrict `df` to a doc-id set without shuffling `df`, keeping its
-    * columns and each matching row once: literal `isin` pushdown for at
-    * most `LargeInListToJoin.Threshold` distinct ids, above that
-    * `LargeInListToJoin.semiJoin`'s plan. For such sets the doc-id
-    * column must be a long or an int; ids outside an int column's range
-    * match nothing. */
+    * columns and each matching row once. The doc-id column must be a
+    * long or an int; ids outside an int column's range match nothing.
+    * At most `LargeInListToJoin.Threshold` distinct ids become an
+    * `InSet`, pushed to the scan as `In`; above that, the rule's plan
+    * (`LargeInListToJoin.restrict`): a pushed id range and the
+    * `graft_doc_id_in` kernel. Both filters are built on the analyzed
+    * plan directly: `isin(ids: _*)` would make one `Literal` child per
+    * id for every analyzer and optimizer rule to walk. */
   def restrictToDocIds(df: DataFrame, docIds: Seq[Long], docIdCol: String = "doc_id"): DataFrame = {
-    val ids = docIds.distinct
-    if (ids.isEmpty) df.where(lit(false))
-    else if (ids.size <= LargeInListToJoin.Threshold) df.where(col(docIdCol).isin(ids: _*))
-    else {
-      val spark = df.sparkSession
-      val plan = df.queryExecution.analyzed
-      val attr = plan.resolveQuoted(docIdCol, spark.sessionState.conf.resolver) match {
-        case Some(a: Attribute) => a
-        case _ => throw new IllegalArgumentException(s"no top-level column $docIdCol in ${plan.output}")
-      }
-      val values: Seq[Any] = attr.dataType match {
-        case LongType => ids
-        case IntegerType => ids.filter(_.isValidInt).map(_.toInt)
-        case t => throw new IllegalArgumentException(
-          s"doc-id column $docIdCol must be long or int for a large id set, not $t")
-      }
-      if (values.isEmpty) df.where(lit(false))
-      else DatasetBridge.ofRows(spark, LargeInListToJoin.semiJoin(plan, attr, values))
+    val spark = df.sparkSession
+    val plan = df.queryExecution.analyzed
+    val attr = plan.resolveQuoted(docIdCol, spark.sessionState.conf.resolver) match {
+      case Some(a: Attribute) => a
+      case _ => throw new IllegalArgumentException(s"no top-level column $docIdCol in ${plan.output}")
     }
+    val values: Seq[Any] = attr.dataType match {
+      case LongType => docIds.distinct
+      case IntegerType => docIds.distinct.filter(_.isValidInt).map(_.toInt)
+      case t => throw new IllegalArgumentException(
+        s"doc-id column $docIdCol must be long or int, not $t")
+    }
+    if (values.isEmpty) df.where(lit(false))
+    else if (values.size <= LargeInListToJoin.Threshold)
+      DatasetBridge.ofRows(spark, Filter(InSet(attr, values.toSet), plan))
+    else DatasetBridge.ofRows(spark, LargeInListToJoin.restrict(plan, attr, values))
   }
 
   /** R2: inverted index restricted by doc-id set. */

@@ -1,53 +1,56 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression, GreaterThanOrEqual, In, InSet, LessThanOrEqual, Literal}
-import org.apache.spark.sql.catalyst.plans.LeftSemi
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Expression, GreaterThanOrEqual, In, InSet, LessThanOrEqual, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DateType, IntegerType, LongType, ShortType, TimestampType}
+import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
+import org.apache.spark.sql.types.{DateType, IntegerType, ShortType}
+
+import graft.functions.expr.DocIdIn
 
 /** The inverted-index Catalyst optimization, as an injected optimizer
   * rule (SparkSessionExtensions.injectOptimizerRule): a doc-id lookup
   * arriving as SQL — `WHERE doc_id IN (<thousands of literals>)` —
   * becomes
   *
-  *   Filter(doc_id >= min AND doc_id <= max)   ← pushed to the scan,
-  *                                               prunes row groups on
-  *                                               the clustered layout
-  *   LeftSemi Join(child, LocalRelation(ids))  ← hash probe, planner
-  *                                               broadcasts the tiny
-  *                                               id relation
+  *   Filter(doc_id >= min AND doc_id <= max     ← pushed to the scan,
+  *                                                prunes row groups and
+  *                                                pages on the clustered
+  *                                                layout
+  *          AND graft_doc_id_in(doc_id, ids))   ← binary search over a
+  *                                                sorted long array
   *
   * Evaluating a multi-thousand-entry In() per row is linear in the
   * list and, worse, the predicate is too opaque for parquet row-group
-  * pruning at that size; the range conjunct restores pruning and the
-  * semi-join restores O(1) membership. `semiJoin` builds that plan;
-  * `InvertedIndex.restrictToDocIds` calls it directly for id sets
-  * above `Threshold`, so the SQL and DataFrame surfaces share one
-  * large-set plan (reference perf contract: src/main.rs README "100
-  * doc_ids in ~1s on 10M rows" — point lookups must never full-scan).
-  * A semi-join emits each child row at most once, so duplicate ids
-  * never duplicate rows.
+  * pruning at that size; the range conjuncts restore pruning and the
+  * kernel (graft.functions.expr.DocIdIn) restores O(log n) membership.
+  * `restrict` builds that plan; `InvertedIndex.restrictToDocIds` calls
+  * it directly for id sets above `Threshold`, so the SQL and DataFrame
+  * surfaces share one large-set plan (reference perf contract:
+  * src/main.rs README "100 doc_ids in ~1s on 10M rows" — point lookups
+  * must never full-scan). A filter emits each row at most once, so
+  * duplicate ids never duplicate rows. (The name is older than the
+  * kernel: the plan was a semi-join against a relation of the ids,
+  * which cost a broadcast job, a second adaptive stage and freshly
+  * compiled code for every id set.)
+  *
+  * The range conjuncts are pushed but not evaluated. The kernel implies
+  * them — every id lies in [min, max] — so per row they select nothing
+  * the kernel does not, and left in the post-scan filter they would be
+  * compiled into its generated code as Java literals, making that code
+  * differ for every id set (three new classes per lookup). The physical
+  * rule `DropImpliedRange` therefore removes them from the `FilterExec`
+  * once the scan has taken them as pushed filters; the scan keeps them
+  * for pruning, and the generated code is the same for every set.
   *
   * Scope: integral/date/timestamp-typed attributes with all-literal,
   * non-null lists longer than `Threshold`. The rewrite removes every
   * qualifying In, so the rule is idempotent under the optimizer's
   * fixed-point driver.
   */
-object LargeInListToJoin extends Rule[LogicalPlan] {
+object LargeInListToJoin extends Rule[LogicalPlan] with PredicateHelper {
 
   val Threshold = 1000
-
-  private def rangeable(e: Expression): Boolean = e.dataType match {
-    case LongType | IntegerType | ShortType | DateType | TimestampType => true
-    case _ => false
-  }
-
-  private def splitConj(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConj(l) ++ splitConj(r)
-    case other => Seq(other)
-  }
 
   /** The attribute and internal values of a qualifying membership
     * test. Matches BOTH surface forms of the same predicate: `In` with
@@ -59,37 +62,71 @@ object LargeInListToJoin extends Rule[LogicalPlan] {
     * no Casts to delay the conversion). */
   private def bigInValues(e: Expression): Option[(Attribute, Seq[Any])] = e match {
     case In(a: Attribute, vs)
-        if rangeable(a) && vs.length > Threshold &&
+        if DocIdIn.accepts(a.dataType) && vs.length > Threshold &&
           vs.forall { case Literal(v, _) => v != null; case _ => false } =>
       Some((a, vs.map { case Literal(v, _) => v }))
     case InSet(a: Attribute, hset)
-        if rangeable(a) && hset.size > Threshold && !hset.contains(null) =>
+        if DocIdIn.accepts(a.dataType) && hset.size > Threshold && !hset.contains(null) =>
       Some((a, hset.toSeq))
     case _ => None
   }
 
-  /** `child` restricted to the rows whose `attr` is one of `values`
-    * (non-empty, non-null internal values of `attr`'s data type): a
-    * min/max range filter over a LeftSemi join against a
-    * `LocalRelation` of the values. */
-  def semiJoin(child: LogicalPlan, attr: Attribute, values: Seq[Any]): LogicalPlan = {
-    val idAttr = AttributeReference("__graft_in_id", attr.dataType, nullable = false)()
-    val joined = Join(child, LocalRelation(Seq(idAttr), values.map(InternalRow(_))),
-      LeftSemi, Some(EqualTo(attr, idAttr)), JoinHint.NONE)
-    // literals built from the original internal values, so types
-    // stay consistent with the attribute's data type
-    val order = (v: Any) => v.asInstanceOf[Number].longValue()
-    Filter(And(GreaterThanOrEqual(attr, Literal(values.minBy(order), attr.dataType)),
-      LessThanOrEqual(attr, Literal(values.maxBy(order), attr.dataType))), joined)
+  /** `attr` is one of `values` (non-empty, non-null internal values of
+    * `attr`'s data type), as three conjuncts: the values' range, for
+    * the scan to prune with, and the kernel. */
+  private def conjuncts(attr: Attribute, values: Iterable[Any]): Seq[Expression] = {
+    val kernel = DocIdIn.of(attr, values)
+    // literals of the attribute's own internal type (int for an int
+    // column), so the range pushes down without a cast
+    def bound(v: Long) = Literal(attr.dataType match {
+      case ShortType => v.toShort
+      case IntegerType | DateType => v.toInt
+      case _ => v
+    }, attr.dataType)
+    Seq(GreaterThanOrEqual(attr, bound(kernel.ids.head)),
+      LessThanOrEqual(attr, bound(kernel.ids.last)), kernel)
   }
 
+  /** `child` restricted to the rows whose `attr` is one of `values`. */
+  def restrict(child: LogicalPlan, attr: Attribute, values: Iterable[Any]): LogicalPlan =
+    Filter(conjuncts(attr, values).reduce(And), child)
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case Filter(cond, child) if splitConj(cond).exists(bigInValues(_).isDefined) =>
-      val (bigIns, rest) = splitConj(cond).partition(bigInValues(_).isDefined)
-      val joined = bigIns.foldLeft(child) { (p, e) =>
-        val (attr, values) = bigInValues(e).get
-        semiJoin(p, attr, values)
+    case Filter(cond, child) if splitConjunctivePredicates(cond).exists(bigInValues(_).isDefined) =>
+      val rewritten = splitConjunctivePredicates(cond).flatMap { e =>
+        bigInValues(e).map { case (attr, values) => conjuncts(attr, values) }.getOrElse(Seq(e))
       }
-      rest.reduceOption(And).map(Filter(_, joined)).getOrElse(joined)
+      Filter(rewritten.reduce(And), child)
   }
+}
+
+/** Removes from a `FilterExec` each `attr >= lo` / `attr <= hi` literal
+  * conjunct that a `DocIdIn` conjunct on the same attribute implies
+  * (lo ≤ its least id, hi ≥ its greatest), so the filter's generated
+  * code carries no id-set literal. Runs after planning, when a scan
+  * below has already taken the conjuncts as pushed filters; see
+  * `LargeInListToJoin`. A filter with no kernel is left as it is. */
+object DropImpliedRange extends Rule[SparkPlan] with PredicateHelper {
+  override def apply(plan: SparkPlan): SparkPlan = plan.transform {
+    case f @ FilterExec(cond, _) if cond.exists(_.isInstanceOf[DocIdIn]) =>
+      val conj = splitConjunctivePredicates(cond)
+      val kernels = conj.collect { case k: DocIdIn => k }
+      def num(v: Any) = v.asInstanceOf[Number].longValue()
+      def implied(e: Expression) = e match {
+        case GreaterThanOrEqual(a, Literal(lo, _)) if lo != null =>
+          kernels.exists(k => k.child.semanticEquals(a) && num(lo) <= k.ids.head)
+        case LessThanOrEqual(a, Literal(hi, _)) if hi != null =>
+          kernels.exists(k => k.child.semanticEquals(a) && num(hi) >= k.ids.last)
+        case _ => false
+      }
+      val kept = conj.filterNot(implied)
+      if (kept.length == conj.length) f else f.copy(condition = kept.reduce(And))
+  }
+}
+
+/** `DropImpliedRange` as a columnar rule: Spark applies columnar rules
+  * to every plan it prepares, and under adaptive execution to every
+  * query stage and the final plan, after the scans are planned. */
+object DropImpliedRangeRule extends ColumnarRule {
+  override def preColumnarTransitions: Rule[SparkPlan] = DropImpliedRange
 }

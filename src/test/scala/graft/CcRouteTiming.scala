@@ -7,7 +7,8 @@ import graft.operators.ConnectedComponents
   * through the distributed loop on the same graphs, to place the
   * driver-finish cap. Two shapes bracket the loop's round count:
   * `cliques` (4-node near-dup groups, 2 rounds) and `chains` (64-node
-  * paths with scattered ids, which run the loop to its 25-round cap).
+  * paths with scattered ids, which run the loop to its 25-round cap;
+  * such a row reads "did not converge").
   * The loop runs at threshold -1; the driver finish runs at a 1 GB
   * threshold and only for sizes up to
   * `ConnectedComponents.DriverFinishMaxBytes` (raise that constant to
@@ -44,20 +45,24 @@ object CcRouteTiming {
         .select(scatter(col("a")) as "id1", scatter(col("b")) as "id2")
         .write.mode("overwrite").parquet(path)
       val edges = spark.read.parquet(path)
-      def time(threshold: String): Double = {
+      // the median in seconds, or "did not converge" when the loop
+      // reached its round cap
+      def time(threshold: String): String = {
         spark.conf.set(key, threshold)
-        val runs = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          ConnectedComponents.components(edges).agg(count(lit(1)), sum("comp")).collect()
-          (System.nanoTime() - t0) / 1e9
-        }
-        runs.sorted.apply(reps / 2)
+        try {
+          val runs = (1 to reps).map { _ =>
+            val t0 = System.nanoTime()
+            ConnectedComponents.components(edges).agg(count(lit(1)), sum("comp")).collect()
+            (System.nanoTime() - t0) / 1e9
+          }
+          f"${runs.sorted.apply(reps / 2)}%.3f"
+        } catch { case _: IllegalStateException => "did not converge" }
       }
       val loop = time("-1")
       val driver =
-        if (directed * 24 <= ConnectedComponents.DriverFinishMaxBytes) f"${time("1073741824")}%.3f"
+        if (directed * 24 <= ConnectedComponents.DriverFinishMaxBytes) time("1073741824")
         else "-"
-      println(f"$shape\t$directed\t$driver\t$loop%.3f")
+      println(s"$shape\t$directed\t$driver\t$loop")
     }
     spark.stop()
   }

@@ -64,13 +64,27 @@ class InvertedIndexSpec extends AnyFunSuite {
     assert(!plan.contains("Join"), "small sets must not plan a join")
   }
 
-  test("R2: large id-set becomes a LeftSemi join with a pushed range predicate") {
+  test("R2: large id-set becomes the doc-id kernel with a pushed range predicate") {
     val big = (0L until LargeInListToJoin.Threshold + 1L)
-    val plan = InvertedIndex.restrictToDocIds(docs, big)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), s"expected a semi-join against the id relation:\n$plan")
-    assert(plan.contains("GreaterThanOrEqual(doc_id"),
-      "expected id-range predicate pushed for row-group pruning")
+    val df = InvertedIndex.restrictToDocIds(docs, big)
+    assert(df.collect().length == docs.count())
+    LargeSetPlan.assertKernelPlan(df, "doc_id")
+  }
+
+  test("R2/R4 on large id sets reuse their generated code across id sets") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // contiguous and scattered 5,000-id sets; `shift` picks a different
+    // set of the same shape
+    def run(shift: Long): Unit = Seq(
+      (0L until 5000L).map(_ + shift), (0L until 5000L).map(i => i * 7 + shift)).foreach { ids =>
+      InvertedIndex.fieldValuesByDocIds(docs, "lang", ids).collect()
+      InvertedIndex.numericStatsByDocIds(docs, "n_chars", ids).collect()
+    }
+    run(0L)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run(3L)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "a new id set of the same shape must not compile new generated classes")
   }
 
   test("R2/R4/restrictToDocIds: duplicate ids give the distinct set's result on every route") {

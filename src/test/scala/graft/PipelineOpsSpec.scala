@@ -58,6 +58,25 @@ class PipelineOpsSpec extends AnyFunSuite {
       s"path must collapse to component 0: ${got.toSeq.sortBy(_._1).take(8)}...")
   }
 
+  test("the components loop never returns unconverged labels (256-node path, scrambled ids)") {
+    import spark.implicits._
+    // a prime-modulus scramble: ids neither grow nor shrink along the
+    // path, so the min-label loop needs far more than its 25-round cap;
+    // labels at the cap are not component minima
+    val ids = (0L until 256L).map(i => (i * 2654435761L) % 1000003L)
+    val edges = ids.zip(ids.tail)
+    scala.util.Try(onCcLoop(ConnectedComponents.components(edges.toDF("id1", "id2"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)) match {
+      case scala.util.Success(got) =>
+        val want = ufComponents(edges)
+        val wrong = want.count { case (id, comp) => !got.get(id).contains(comp) }
+        assert(got.size == want.size && wrong == 0, s"$wrong of ${want.size} labels are not component minima")
+      case scala.util.Failure(e: IllegalStateException) =>
+        assert(e.getMessage.contains("did not converge in 25 rounds"), e.getMessage)
+      case scala.util.Failure(e) => throw e
+    }
+  }
+
   /** `components` through the driver finish (default threshold) and
     * through the distributed loop (threshold -1): same routes taken as
     * asked, same schema, same labels. Returns the labels. */

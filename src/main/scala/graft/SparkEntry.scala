@@ -1080,8 +1080,9 @@ object SparkEntry {
       Dedup.embeddingPairs(Tables.embeddings(s, dir))
         .select(col("id1"), col("id2"), round(col("cos"), 4).as("cos"))
         .orderBy(col("id1"), col("id2"))),
-    // pairs → clusters: connected components (pointer-jumping min-label
-    // propagation) over the L5 embedding near-dup pairs
+    // pairs → clusters: connected components (union-find on the driver
+    // for small pair lists, the min-label loop otherwise) over the L5
+    // embedding near-dup pairs
     "dedup_clusters" -> ((s, dir) =>
       ConnectedComponents.clusters(Dedup.embeddingPairs(Tables.embeddings(s, dir)))
         .orderBy(col("component"))),

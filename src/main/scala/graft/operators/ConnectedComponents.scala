@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Connected components over a near-duplicate pair list — the step
   * that turns pairwise dedup output (L2/L3/L5) into actionable
@@ -39,22 +39,34 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * replay of the rule needs about 55 rounds on a 256-node path with
   * random ids.
   *
-  * Two routes, chosen once from the fenced symmetric edge list's row
-  * count (observed on the fence's own materialization, no extra job):
-  *  - driver: when rows × 24 B (a two-long UnsafeRow: 8 B null bitmap
+  * Two routes, chosen once from the raw pair list: the input's
+  * (id1, id2) cast to long, with self-loops and NULL ids dropped, is
+  * fenced and its row count r observed on that fence (no extra job).
+  * The route reads 2r as the directed edge count: for a distinct,
+  * one-way pair list, which every dedup producer emits, 2r is exactly
+  * the symmetric edge list's size; repeats and reversed pairs only
+  * raise it, so they can move a graph toward the loop, never toward
+  * the driver.
+  *  - driver: when 2r × 24 B (a two-long UnsafeRow: 8 B null bitmap
   *    + 2 × 8 B) is at or below both `spark.sql.autoBroadcastJoinThreshold`
   *    — the byte bound Spark already applies before it collects a
   *    relation to the driver to broadcast it — and the fixed
-  *    `DriverFinishMaxBytes` cap, the edge list is collected as
-  *    primitive long arrays and union-find with path halving labels it
-  *    on the driver; the result is a local relation and no fence stays
-  *    held. Small pair graphs are dispatch-bound: every round of the
-  *    loop below pays a fence, AQE re-planning and several tiny jobs.
+  *    `DriverFinishMaxBytes` cap, the raw pairs are collected as
+  *    primitive long arrays and union-find with path halving labels
+  *    them on the driver (it links an edge in either orientation, and
+  *    a repeat is a no-op, so no symmetric or distinct stage runs);
+  *    the result is a local relation and no fence stays held. Small
+  *    pair graphs are dispatch-bound: every round of the loop below
+  *    pays a fence, AQE re-planning and several tiny jobs.
   *  - distributed: otherwise (and always when the threshold is -1),
-  *    the fenced min-label loop.
-  * Both return the same labels. `maxRounds` caps only the distributed
-  * loop, which throws an IllegalStateException when it reaches the cap
-  * before the labels converge; the driver route always converges.
+  *    the symmetric, distinct edge list is fenced from the raw fence
+  *    (one more fence than the driver route) and the fenced min-label
+  *    loop runs over it.
+  * Both return the same labels, and `clusters` summarizes the driver's
+  * labels on the driver without a second query. `maxRounds` caps only
+  * the distributed loop, which throws an IllegalStateException when it
+  * reaches the cap before the labels converge; the driver route always
+  * converges.
   */
 object ConnectedComponents {
 
@@ -79,48 +91,59 @@ object ConnectedComponents {
   /** (id, component) for every node appearing in `edges` (id1, id2)
     * with an edge to another node; component = the minimum node id
     * reachable from the node. */
-  def components(edges: DataFrame, maxRounds: Int = 25): DataFrame = {
-    val e = edges.select(col("id1").cast("long").as("a"), col("id2").cast("long").as("b"))
-    // symmetric, self-loop-free edge list — both orientations in ONE
-    // pass (Graph.symmetrized): the union form computes the pair
-    // subtree twice (the CC consumers feed an UNFENCED banded
-    // candidate + verify pipeline here — only the deepest exchange is
-    // reused across the union's branches, the CPU-dense verify re-runs
-    // per branch) and doubles the partition count entering distinct
+  def components(edges: DataFrame, maxRounds: Int = 25): DataFrame =
+    labels(edges, maxRounds) match {
+      case Left(d) =>
+        edges.sparkSession.createDataFrame(d.ids.indices.map(k => Row(d.ids(k), d.comps(k))).asJava,
+          StructType(Seq(StructField("id", LongType, d.idNullable), StructField("comp", LongType))))
+      case Right(assign) => assign
+    }
+
+  /** The driver route's labels: every node id ascending, `comps(k)`
+    * the component of `ids(k)`. The loop's `id` column is nullable
+    * when either input column is (Graph.symmetrized merges them), and
+    * `idNullable` says the same. */
+  private final case class DriverLabels(ids: Array[Long], comps: Array[Long], idNullable: Boolean)
+
+  /** The route: the driver's union-find labels, or the distributed
+    * loop's fenced (id, comp) frame. */
+  private def labels(edges: DataFrame, maxRounds: Int): Either[DriverLabels, DataFrame] = {
     val size = org.apache.spark.sql.Observation()
-    val sym = Checkpoints.fence(
-      Graph.symmetrized(e)
+    val raw = Checkpoints.fence(
+      edges.select(col("id1").cast("long").as("a"), col("id2").cast("long").as("b"))
         .where(col("a") =!= col("b"))
-        .distinct()
         .observe(size, count(lit(1)).as("rows")))
-    val rows = size.get("rows").asInstanceOf[Long]
+    val pairs = size.get("rows").asInstanceOf[Long]
     val threshold = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (driverFinish(rows, threshold)) {
-      val out = driverComponents(sym)
-      System.err.println(s"[cc] converged after 0 rounds (driver finish: $rows edges, " +
-        s"${rows * EdgeRowBytes} bytes <= ${math.min(threshold, DriverFinishMaxBytes)})")
-      out
-    } else minLabelLoop(sym, maxRounds)
+    if (driverFinish(2 * pairs, threshold)) {
+      val out = driverLabels(raw)
+      System.err.println(s"[cc] converged after 0 rounds (driver finish: $pairs pairs, " +
+        s"${2 * pairs * EdgeRowBytes} bytes <= ${math.min(threshold, DriverFinishMaxBytes)})")
+      Left(out)
+    } else {
+      val sym = Checkpoints.fence(Graph.symmetrized(raw).distinct())
+      Checkpoints.release(raw)
+      Right(minLabelLoop(sym, maxRounds))
+    }
   }
 
-  /** Union-find over the collected edge list. Links always point at
-    * the smaller id, so every root is its component's minimum id. */
-  private def driverComponents(sym: DataFrame): DataFrame = {
+  /** Union-find over the collected raw pairs; releases `raw`. Links
+    * always point at the smaller id, so every root is its component's
+    * minimum id. */
+  private def driverLabels(raw: DataFrame): DriverLabels = {
     // one primitive (a, b, a, b, ...) array per partition: no Row or
     // boxed long per edge on the driver
-    val parts = sym.queryExecution.toRdd.mapPartitions { rows =>
+    val parts = raw.queryExecution.toRdd.mapPartitions { rows =>
       val ab = Array.newBuilder[Long]
       rows.foreach { r => ab += r.getLong(0); ab += r.getLong(1) }
       Iterator.single(ab.result())
     }.collect()
-    Checkpoints.release(sym)
-    // sym is symmetric: its `a` values already hold every node; sort
-    // them and drop repeats in place, no boxed set
-    val all = new Array[Long](parts.iterator.map(_.length / 2).sum)
-    var n = 0
-    for (p <- parts; i <- 0 until p.length by 2) { all(n) = p(i); n += 1 }
+    Checkpoints.release(raw)
+    // every node is an endpoint of some pair: sort both columns and
+    // drop repeats in place, no boxed set
+    val all = Array.concat(parts.toIndexedSeq: _*)
     java.util.Arrays.sort(all)
-    n = 0
+    var n = 0
     for (k <- all.indices if n == 0 || all(k) != all(n - 1)) { all(n) = all(k); n += 1 }
     val ids = java.util.Arrays.copyOf(all, n)
     val parent = Array.range(0, ids.length)
@@ -133,16 +156,14 @@ object ConnectedComponents {
       x
     }
     def index(id: Long) = java.util.Arrays.binarySearch(ids, id)
-    // each edge is in sym both ways round: link it once
-    for (p <- parts; i <- 0 until p.length by 2 if p(i) < p(i + 1)) {
+    // union-find links a pair in either orientation and a repeat is a
+    // no-op, so the raw pairs need no symmetric or distinct stage
+    for (p <- parts; i <- 0 until p.length by 2) {
       val (ra, rb) = (find(index(p(i))), find(index(p(i + 1))))
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    val labels = ids.indices.map(k => Row(ids(k), ids(find(k))))
-    val schema = StructType(Seq(
-      StructField("id", LongType, sym.schema("a").nullable),
-      StructField("comp", LongType)))
-    sym.sparkSession.createDataFrame(labels.asJava, schema)
+    DriverLabels(ids, Array.tabulate(ids.length)(k => ids(find(k))),
+      raw.schema("a").nullable || raw.schema("b").nullable)
   }
 
   /** The fenced min-label loop; releases `sym` once it is done. */
@@ -210,10 +231,22 @@ object ConnectedComponents {
   /** Cluster summary: one row per component with its size and sorted
     * member list — the dedup "keep component id, drop the rest" view. */
   def clusters(edges: DataFrame, maxRounds: Int = 25): DataFrame =
-    components(edges, maxRounds)
-      .groupBy(col("comp").as("component"))
-      .agg(count(lit(1)).as("n_members"),
-        array_join(array_sort(collect_list(col("id"))), ",").as("members"))
+    labels(edges, maxRounds) match {
+      case Left(d) =>
+        // ids ascend, so each component's members come out sorted, as
+        // array_sort leaves them on the loop route
+        val rows = d.ids.indices.groupBy(d.comps(_)).toSeq.sortBy(_._1).map { case (comp, ks) =>
+          Row(comp, ks.length.toLong, ks.map(d.ids(_)).mkString(","))
+        }
+        edges.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+          StructField("component", LongType),
+          StructField("n_members", LongType, nullable = false),
+          StructField("members", StringType, nullable = false))))
+      case Right(assign) =>
+        assign.groupBy(col("comp").as("component"))
+          .agg(count(lit(1)).as("n_members"),
+            array_join(array_sort(collect_list(col("id"))), ",").as("members"))
+    }
 
   /** X135: canonical-keeper selection — dedup's POLICY step: within
     * each near-dup cluster, which member survives? `dropClustered`

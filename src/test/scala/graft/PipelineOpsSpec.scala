@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -46,7 +46,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     check(Seq.empty)                                                        // same schema, zero rows
   }
 
-  test("components converges on a long path in O(log n) rounds (pointer jumping)") {
+  test("components loop converges within 10 rounds on a 64-node ascending-id path") {
     import spark.implicits._
     // 64-node path: plain 1-hop propagation needs 63 rounds; pointer
     // jumping must finish well inside maxRounds=10 (a graph this small
@@ -77,21 +77,90 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
   }
 
-  /** `components` through the driver finish (default threshold) and
-    * through the distributed loop (threshold -1): same routes taken as
-    * asked, same schema, same labels. Returns the labels. */
+  /** `components` and `clusters` through the driver finish (default
+    * threshold) and through the distributed loop (threshold -1): same
+    * routes taken as asked, same schema (names, types, nullability),
+    * same rows, and the clusters are the labels grouped with their
+    * members ascending. Returns the labels. */
   private def bothRoutes(edges: DataFrame): Map[Long, Long] = {
-    def run() = {
-      val df = ConnectedComponents.components(edges)
-      (df.queryExecution.logical, df.schema, df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    def run(df: => DataFrame) = {
+      val d = df
+      (d.queryExecution.logical, d.schema, d.collect().toSet)
     }
-    val (driverPlan, driverSchema, driver) = run()
-    val (loopPlan, loopSchema, loop) = onCcLoop(run())
+    val (driverPlan, driverSchema, driver) = run(ConnectedComponents.components(edges))
+    val (loopPlan, loopSchema, loop) = onCcLoop(run(ConnectedComponents.components(edges)))
     assert(driverPlan.isInstanceOf[LocalRelation], driverPlan.nodeName)
     assert(loopPlan.isInstanceOf[LogicalRDD], loopPlan.nodeName)
     assert(driverSchema == loopSchema)
     assert(driver == loop)
-    driver
+    val (clDriverPlan, clDriverSchema, clDriver) = run(ConnectedComponents.clusters(edges))
+    val (clLoopPlan, clLoopSchema, clLoop) = onCcLoop(run(ConnectedComponents.clusters(edges)))
+    assert(clDriverPlan.isInstanceOf[LocalRelation], clDriverPlan.nodeName)
+    assert(!clLoopPlan.isInstanceOf[LocalRelation], clLoopPlan.nodeName)
+    assert(clDriverSchema == clLoopSchema)
+    assert(clDriver == clLoop)
+    val labels = driver.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(clDriver == labels.groupBy(_._2).map { case (comp, members) =>
+      Row(comp, members.size.toLong, members.keys.toSeq.sorted.mkString(","))
+    }.toSet)
+    labels
+  }
+
+  test("components and clusters: multigraph inputs agree across routes and with union-find") {
+    import spark.implicits._
+    // every pair repeated in both orientations, plus self-loops: the
+    // raw pair count the route reads is four times the pairs
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L))
+    val multi = pairs.flatMap { case (a, b) => Seq((a, b), (b, a), (a, b), (b, a)) } ++
+      Seq((3L, 3L), (9L, 9L))
+    assert(bothRoutes(multi.toDF("id1", "id2")) == ufComponents(pairs))
+    // int-typed ids with NULLs, repeats and a self-loop
+    val ints = Seq[(Option[Int], Option[Int])]((Some(2), Some(1)), (Some(1), Some(2)), (Some(2), Some(1)),
+      (None, Some(1)), (Some(4), None), (None, None), (Some(5), Some(5)), (Some(5), Some(6)), (Some(6), Some(5)))
+      .toDF("id1", "id2")
+    assert(bothRoutes(ints) == Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L))
+    // only one column nullable: the id column is nullable on both routes
+    val oneNullable = Seq[(Long, Option[Long])]((2L, Some(1L)), (3L, None), (2L, Some(1L))).toDF("id1", "id2")
+    assert(bothRoutes(oneNullable) == Map(1L -> 1L, 2L -> 1L))
+    assert(bothRoutes(Seq.empty[(Int, Int)].toDF("id1", "id2")).isEmpty)
+  }
+
+  test("clusters on the driver route runs no shuffle and no query of its own") {
+    import spark.implicits._
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id1", "id2")
+    val sc = spark.sparkContext
+    val group = s"cc-driver-route-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val shuffleWrite = new AtomicLong()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && group == j.properties.getProperty("spark.jobGroup.id")) {
+          jobs.incrementAndGet()
+          j.stageIds.foreach(stages.add(_))
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          shuffleWrite.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "clusters on the driver route")
+    val (plan, rows) = try {
+      val cl = ConnectedComponents.clusters(edges)
+      val rows = cl.collect()
+      org.apache.spark.graft.SparkInternals.waitListenerBusEmpty(sc)
+      (cl.queryExecution.logical, rows)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(shuffleWrite.get == 0, s"${shuffleWrite.get} shuffle bytes written")
+    assert(jobs.get <= 2, s"${jobs.get} jobs: the fence and its collect are all it needs")
+    assert(plan.isInstanceOf[LocalRelation], plan.nodeName)
+    assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sortBy(_._1).toSeq ==
+      Seq((1L, 3L, "1,2,3"), (5L, 2L, "5,6")))
   }
 
   test("components: NULL ids and int-typed ids take both routes alike") {

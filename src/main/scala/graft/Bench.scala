@@ -32,10 +32,11 @@ object Bench {
 
   /** Run `body` on its own thread under `ceilingSec`; on timeout cancel
     * the entry's Spark job group and report failure. Job groups are
-    * thread-local, so the group is set INSIDE the task thread. */
-  private def runBounded(spark: SparkSession, name: String, ceilingSec: Int)
-                        (body: => Unit): Boolean = {
-    val group = s"bench-$name"
+    * thread-local, so the group is set INSIDE the task thread. `tag`
+    * prefixes the group and the stderr lines ("bench", "verify"). */
+  private[graft] def runBounded(spark: SparkSession, tag: String, name: String,
+                                ceilingSec: Int)(body: => Unit): Boolean = {
+    val group = s"$tag-$name"
     val task = new FutureTask[Unit](() => {
       spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
       try body finally spark.sparkContext.clearJobGroup()
@@ -46,7 +47,7 @@ object Bench {
     try { task.get(ceilingSec.toLong, TimeUnit.SECONDS); true }
     catch {
       case _: TimeoutException =>
-        System.err.println(s"[bench] $name exceeded ${ceilingSec}s ceiling — cancelling")
+        System.err.println(s"[$tag] $name exceeded ${ceilingSec}s ceiling — cancelling")
         spark.sparkContext.cancelJobGroup(group)
         task.cancel(true)
         // give the cancelled jobs a moment to drain so they don't
@@ -55,12 +56,18 @@ object Bench {
         false
       case e: Throwable =>
         val cause = e.getCause match { case null => e; case c => c }
-        System.err.println(s"[bench] $name failed: ${cause.getMessage}")
+        System.err.println(s"[$tag] $name failed: ${cause.getMessage}")
         false
     }
   }
 
   def main(args: Array[String]): Unit = {
+    // dev affordance: SPARK_GRAFT_ONLY=a,b,c restricts the run to the
+    // named entries for ISOLATED measurement (full-sweep wall ratios
+    // carry cross-query contention; scale triage needs both). An
+    // unknown name throws here, before any wait or artifact write. The
+    // driver never sets it — full sweep by default.
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // fail fast on a malformed core count — interpolated unquoted into
     // the JSON artifact below, so "32 "/"8g" would silently corrupt it
@@ -145,16 +152,8 @@ object Bench {
     }
     val spark = GraftSession.builder(Some(s"local[$cpus]"), Some(cpus.toString)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // dev affordance mirroring Verify's SPARK_GRAFT_ONLY: restrict the
-    // run to named entries for ISOLATED measurement (full-sweep wall
-    // ratios carry cross-query contention; scale triage needs both).
-    // The driver never sets it — full sweep by default.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    names.foreach { n =>
-      runBounded(spark, n, ceiling)(materialize(SparkEntry.queries(n)(spark, sfDir)))
+    selected.foreach { e =>
+      runBounded(spark, "bench", e.name, ceiling)(materialize(e.build(spark, sfDir)))
     }
     // per-entry 1-min loadavg at the entry's first timed rep: the
     // admission gate above checks the START of the run, but a sweep
@@ -164,18 +163,17 @@ object Bench {
     // script discount exactly the poisoned entries instead of the
     // whole artifact. Detail-file only — the stdout line stays short.
     val entryLoads = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val results = names.map { n =>
-      entryLoads(n) = math.rint(loadavg() * 100) / 100
+    val results = selected.map { e =>
+      entryLoads(e.name) = math.rint(loadavg() * 100) / 100
       // a failed/over-ceiling rep must not masquerade as a fast one:
       // such entries report -1 and are excluded from the total
       val times = (1 to reps).flatMap { _ =>
         val t0 = System.nanoTime()
-        if (runBounded(spark, n, ceiling)(
-              materialize(SparkEntry.queries(n)(spark, sfDir))))
+        if (runBounded(spark, "bench", e.name, ceiling)(materialize(e.build(spark, sfDir))))
           Some((System.nanoTime() - t0) / 1e9)
         else None
       }.sorted
-      n -> (if (times.length < reps) -1.0 else times(times.length / 2))
+      e.name -> (if (times.length < reps) -1.0 else times(times.length / 2))
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

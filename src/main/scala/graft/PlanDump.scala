@@ -5,10 +5,12 @@ import java.nio.file.{Files, Paths}
 /** Dumps each SparkEntry query's physical plan to PLANS.md — the
   * scale-review artifact: one place to check pushed filters, pruned
   * schemas, broadcast choices, partial aggregation, and codegen
-  * stages for every operator. `runMain graft.PlanDump [sfDir] [out]`.
+  * stages for every operator. `runMain graft.PlanDump [sfDir] [out]`;
+  * SPARK_GRAFT_ONLY=a,b,c dumps only the named entries.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
@@ -22,16 +24,16 @@ object PlanDump {
     sb.append("ReadSchema pruned to used columns; dims broadcast; aggregates show a\n")
     sb.append("partial_ phase; `*(n)` codegen-stage markers span the hot projections;\n")
     sb.append("no CartesianProduct outside the intended broadcast NLJ in ANN scoring.\n")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    selected.foreach { e =>
       try {
-        val df = fn(spark, sfDir)
-        sb.append(s"\n## $name\n\n```\n")
+        val df = e.build(spark, sfDir)
+        sb.append(s"\n## ${e.name}\n\n```\n")
         sb.append(df.queryExecution.explainString(
           org.apache.spark.sql.execution.SimpleMode))
         sb.append("```\n")
       } catch {
-        case e: Throwable =>
-          sb.append(s"\n## $name\n\nFAILED TO PLAN: ${e.getMessage}\n")
+        case t: Throwable =>
+          sb.append(s"\n## ${e.name}\n\nFAILED TO PLAN: ${t.getMessage}\n")
       }
     }
     Files.writeString(Paths.get(out), sb.toString)

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.functions.TextFunctions
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the operator
-  * inventory each entry implements. Every `queries` key has either a
-  * DuckDB oracle in `oracleSql` (hash-compared at sf0.01) or a
-  * rows-only check plus a ScalaTest oracle.
+/** Driver contract — see SURVEY.md §2 for the operator inventory each
+  * entry implements. Every entry declares its builder and its DuckDB
+  * oracle together in `entries` (hash-compared at sf0.01); `queries` and
+  * `oracleSql` are derived from that one list.
   */
 object SparkEntry {
 
@@ -758,47 +758,83 @@ object SparkEntry {
        |FROM scored ORDER BY score DESC, doc_id LIMIT $k""".stripMargin
   }
 
+  /** One driver entry: the DataFrame builder the driver runs against an
+    * sf directory, and its DuckDB-dialect twin with identical column
+    * names and ORDER BY, so the driver's hash compare is deterministic. */
+  final case class Entry(name: String, build: (SparkSession, String) => DataFrame,
+                         oracle: String)
+
+  /** `es` unchanged; throws naming every name declared more than once
+    * (a `Map(...)` literal silently keeps the last of two equal keys). */
+  private[graft] def registry(es: Seq[Entry]): Seq[Entry] = {
+    val repeated = es.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(repeated.isEmpty,
+      s"entries declared more than once: ${repeated.toSeq.sorted.mkString(", ")}")
+    es
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = registry(Seq(
     // §2.1 reference surface: inverted-index log engine
-    "ii_field_values" -> ((s, dir) =>
+    Entry("ii_field_values", (s, dir) =>
       InvertedIndex.fieldValues(Tables.documents(s, dir), "lang")
         .select(col("value"), col("n_docs"),
                 array_join(col("doc_ids"), ",").as("doc_ids"))
-        .orderBy(col("value"))),
+        .orderBy(col("value")),
+      """SELECT lang AS value, count(*) AS n_docs,
+        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
+        |FROM documents GROUP BY lang ORDER BY value""".stripMargin),
     // X175: R1 under the reference's `low_memory` profile
     // (GraftSession.applyLowMemory on an isolated sibling session:
     // quarter scan splits, small reader batches, 256 shuffle
     // partitions, 4 MB broadcast ceiling) — same oracle as
     // ii_field_values, proving the profile trades only footprint
-    "ii_field_values_lowmem" -> ((s, dir) => {
+    Entry("ii_field_values_lowmem", (s, dir) => {
       val lm = GraftSession.applyLowMemory(s.newSession())
       InvertedIndex.fieldValues(Tables.documents(lm, dir), "lang")
         .select(col("value"), col("n_docs"),
                 array_join(col("doc_ids"), ",").as("doc_ids"))
         .orderBy(col("value"))
-    }),
-    "ii_field_values_by_doc_ids" -> ((s, dir) =>
+    },
+      // low-memory twin: identical result by construction — the profile
+      // may only change memory shape, never values
+      """SELECT lang AS value, count(*) AS n_docs,
+        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
+        |FROM documents GROUP BY lang ORDER BY value""".stripMargin),
+    Entry("ii_field_values_by_doc_ids", (s, dir) =>
       InvertedIndex.fieldValuesByDocIds(Tables.documents(s, dir), "source", iiDocIds)
         .select(col("value"), col("n_docs"),
                 array_join(col("doc_ids"), ",").as("doc_ids"))
-        .orderBy(col("value"))),
-    "ii_numeric_stats" -> ((s, dir) =>
+        .orderBy(col("value")),
+      s"""SELECT source AS value, count(*) AS n_docs,
+        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
+        |FROM documents WHERE doc_id IN ($iiDocIdsSql)
+        |GROUP BY source ORDER BY value""".stripMargin),
+    Entry("ii_numeric_stats", (s, dir) =>
       InvertedIndex.numericStats(Tables.documents(s, dir), "n_chars")
         .select(col("field"), col("min_v"), col("max_v"),
-                round(col("avg_v"), 4).as("avg_v"))),
-    "ii_numeric_stats_by_doc_ids" -> ((s, dir) =>
+                round(col("avg_v"), 4).as("avg_v")),
+      """SELECT 'n_chars' AS field, CAST(min(n_chars) AS DOUBLE) AS min_v,
+        | CAST(max(n_chars) AS DOUBLE) AS max_v, round(avg(n_chars), 4) AS avg_v
+        |FROM documents""".stripMargin),
+    Entry("ii_numeric_stats_by_doc_ids", (s, dir) =>
       InvertedIndex.numericStatsByDocIds(Tables.documents(s, dir), "n_chars", iiDocIds)
         .select(col("field"), col("min_v"), col("max_v"),
-                round(col("avg_v"), 4).as("avg_v"))),
-    "ii_field_values_chunked" -> ((s, dir) =>
+                round(col("avg_v"), 4).as("avg_v")),
+      s"""SELECT 'n_chars' AS field, CAST(min(n_chars) AS DOUBLE) AS min_v,
+        | CAST(max(n_chars) AS DOUBLE) AS max_v, round(avg(n_chars), 4) AS avg_v
+        |FROM documents WHERE doc_id IN ($iiDocIdsSql)""".stripMargin),
+    Entry("ii_field_values_chunked", (s, dir) =>
       InvertedIndex.fieldValuesChunked(Tables.documents(s, dir), "source", chunkSize = 100)
         .select(col("value"), col("chunk"), col("n_docs"),
                 array_join(col("doc_ids"), ",").as("doc_ids"))
-        .orderBy(col("value"), col("chunk"))),
+        .orderBy(col("value"), col("chunk")),
+      """SELECT source AS value, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_docs,
+        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
+        |FROM documents GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin),
     // index maintenance: delta-merge compaction must equal a full
     // rebuild (base = 90% of docs, delta = the appended 10%)
-    "ii_index_merge" -> ((s, dir) => {
+    Entry("ii_index_merge", (s, dir) => {
       val d = Tables.documents(s, dir)
       val base = InvertedIndex.fieldValuesChunked(
         d.where(col("doc_id") % 10 =!= 0), "source", chunkSize = 100)
@@ -808,20 +844,29 @@ object SparkEntry {
         .select(col("value"), col("chunk"), col("n_docs"),
                 array_join(col("doc_ids"), ",").as("doc_ids"))
         .orderBy(col("value"), col("chunk"))
-    }),
+    },
+      // merge invariant: compacting base+delta must equal rebuilding the
+      // chunked index over the whole corpus — the oracle IS the rebuild
+      """SELECT source AS value, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_docs,
+        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
+        |FROM documents GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin),
     // index lifecycle step 3 (add → merge → DELETE): tombstones
     // applied per touched chunk; oracle is the rebuild-without set
-    "ii_index_delete" -> ((s, dir) => {
+    Entry("ii_index_delete", (s, dir) => {
       val d = Tables.documents(s, dir)
       val idx = InvertedIndex.fieldValuesChunked(d, "source", chunkSize = 100)
       InvertedIndex.deleteFromChunked(idx, d.where(col("doc_id") % 7 === 0), chunkSize = 100)
         .select(col("value"), col("chunk"), col("n_docs"),
                 array_join(col("doc_ids"), ",").as("doc_ids"))
         .orderBy(col("value"), col("chunk"))
-    }),
+    },
+      // delete == rebuild-without invariant
+      """SELECT source AS value, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_docs,
+        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
+        |FROM documents WHERE doc_id % 7 <> 0 GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin),
     // delete then compact 4×: the lifecycle's final step; oracle is
     // the index rebuilt at the coarser width over the surviving docs
-    "ii_index_compact" -> ((s, dir) => {
+    Entry("ii_index_compact", (s, dir) => {
       val d = Tables.documents(s, dir)
       val idx = InvertedIndex.fieldValuesChunked(d, "source", chunkSize = 100)
       val afterDelete = InvertedIndex.deleteFromChunked(
@@ -830,7 +875,11 @@ object SparkEntry {
         .select(col("value"), col("chunk"), col("n_docs"),
                 array_join(col("doc_ids"), ",").as("doc_ids"))
         .orderBy(col("value"), col("chunk"))
-    }),
+    },
+      // compact twin: compact(index(A,100) \ D, 4) == index(A \ D, 400)
+      """SELECT source AS value, CAST(doc_id // 400 AS BIGINT) AS chunk, count(*) AS n_docs,
+        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
+        |FROM documents WHERE doc_id % 7 <> 0 GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin),
     // X75 driver-gated: the streaming index-maintenance loop replayed
     // as 4 deterministic micro-batches (disjoint doc_id mod classes)
     // through the SAME processBatch the foreachBatch query runs —
@@ -838,7 +887,7 @@ object SparkEntry {
     // committed index must equal the one-shot chunked build over the
     // union (the merge invariant), which is exactly what the DuckDB
     // oracle rebuilds.
-    "ii_index_streaming" -> ((s, dir) => {
+    Entry("ii_index_streaming", (s, dir) => {
       val stateDir = java.nio.file.Files
         .createTempDirectory("graft-ii-stream").toString
       val docs = Tables.documents(s, dir)
@@ -851,117 +900,318 @@ object SparkEntry {
         .select(col("value"), col("chunk"), col("n_docs"),
                 array_join(col("doc_ids"), ",").as("doc_ids"))
         .orderBy(col("value"), col("chunk"))
-    }),
-    "ingest_nested_json" -> (NestedIngest.ingestNestedJson _),
+    },
+      // streaming maintenance invariant: N replayed micro-batch merges
+      // must equal the one-shot rebuild over the union
+      """SELECT lang AS value, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_docs,
+        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
+        |FROM documents GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin),
+    Entry("ingest_nested_json", NestedIngest.ingestNestedJson _,
+      """SELECT event_type AS level,
+        | CASE WHEN user_id % 3 = 0 THEN 'us-east'
+        |      WHEN user_id % 3 = 1 THEN 'us-west'
+        |      ELSE 'eu-central' END AS source_region,
+        | count(*) AS n,
+        | CAST(sum(event_id % 37) AS BIGINT) AS sum_clicks,
+        | round(avg(CAST(floor(value * 100) AS BIGINT)), 4) AS avg_payload,
+        | CAST(sum(CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_processed
+        |FROM events GROUP BY 1, 2 ORDER BY level, source_region""".stripMargin),
     // schema-on-read JSONL round trip with permissive corrupt capture:
     // clean rows roll up per type, 3 injected malformed lines are
     // quarantined and counted under the __corrupt sentinel
-    "ingest_jsonl" -> (graft.sources.JsonlIngest.ingestEntry _),
+    Entry("ingest_jsonl", graft.sources.JsonlIngest.ingestEntry _,
+      // jsonl twin: the round trip is lossless for these columns (2-dp
+      // doubles print shortest-repr and parse back exact), so clean rows
+      // aggregate straight off the parquet; the 3 injected malformed
+      // lines appear as the __corrupt sentinel row
+      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value
+        |FROM events GROUP BY event_type
+        |UNION ALL
+        |SELECT '__corrupt', CAST(3 AS BIGINT), 0.0
+        |ORDER BY event_type""".stripMargin),
     // profiling complement of stats_profile: per-group Pearson
     // correlation between two measures
-    "stats_corr" -> ((s, dir) =>
+    Entry("stats_corr", (s, dir) =>
       Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
           round(corr(col("l_quantity"), col("l_extendedprice")), 4)
             .as("corr_qty_price"))
-        .orderBy(col("l_returnflag"))),
+        .orderBy(col("l_returnflag")),
+      // corr twin: both engines' one-pass co-moment formulas agree to
+      // well past the reported 4 decimals
+      """SELECT l_returnflag, count(*) AS n,
+        | round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
     // the search layer over the inverted-index surface: boolean
     // posting-list algebra, positional phrase adjacency, BM25 ranking
-    "ii_search_boolean" -> ((s, dir) =>
+    Entry("ii_search_boolean", (s, dir) =>
       Search.booleanSearch(Tables.documents(s, dir),
           must = Seq("spark", "vector"), mustNot = Seq("slow"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents)
+        |SELECT doc_id FROM toks
+        |WHERE list_contains(t, 'spark') AND list_contains(t, 'vector')
+        | AND NOT list_contains(t, 'slow')
+        |ORDER BY doc_id""".stripMargin),
     // disjunctive (OR) search with minimum-should-match 2-of-3 and the
     // coordination match count
-    "ii_search_or" -> ((s, dir) =>
+    Entry("ii_search_or", (s, dir) =>
       Search.orSearch(Tables.documents(s, dir),
           should = Seq("spark", "vector", "slow"), minMatch = 2)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // OR twin: distinct-term match count, minimum-should-match 2
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents)
+        |SELECT doc_id,
+        | CAST(CASE WHEN list_contains(t, 'spark') THEN 1 ELSE 0 END
+        |    + CASE WHEN list_contains(t, 'vector') THEN 1 ELSE 0 END
+        |    + CASE WHEN list_contains(t, 'slow') THEN 1 ELSE 0 END AS BIGINT) AS n_matched
+        |FROM toks
+        |WHERE (CASE WHEN list_contains(t, 'spark') THEN 1 ELSE 0 END
+        |     + CASE WHEN list_contains(t, 'vector') THEN 1 ELSE 0 END
+        |     + CASE WHEN list_contains(t, 'slow') THEN 1 ELSE 0 END) >= 2
+        |ORDER BY doc_id""".stripMargin),
     // the same boolean query answered FROM the materialized index by
     // the custom PostingListIntersectExec physical node (planner
     // strategy injected via GraftExtensions) — same result set as
     // ii_search_boolean by construction, different terms so the two
     // entries can't mask each other
-    "ii_posting_intersect" -> ((s, dir) =>
+    Entry("ii_posting_intersect", (s, dir) =>
       graft.plans.PostingListIntersect.search(
           Search.positionalIndexChunked(Tables.documents(s, dir)),
           must = Seq("spark", "fast"), mustNot = Seq("batch"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // semantic twin of the custom-exec-node entry: boolean AND/NOT
+      // membership over the tokenized corpus
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents)
+        |SELECT doc_id FROM toks
+        |WHERE list_contains(t, 'spark') AND list_contains(t, 'fast')
+        | AND NOT list_contains(t, 'batch')
+        |ORDER BY doc_id""".stripMargin),
     // min-should-match OR answered FROM the index through the same
     // custom node — per-chunk should-bitmask counting instead of the
     // DataFrame path's doc-keyed aggregation; terms differ from
     // ii_search_or so the twins can't mask each other
-    "ii_posting_or" -> ((s, dir) =>
+    Entry("ii_posting_or", (s, dir) =>
       graft.plans.PostingListIntersect.orSearch(
           Search.positionalIndexChunked(Tables.documents(s, dir)),
           should = Seq("merge", "hash", "stream"), minMatch = 2)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // node-answered OR twin: distinct-term coordination count,
+      // minimum-should-match 2 over merge/hash/stream
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents)
+        |SELECT doc_id,
+        | CAST(CASE WHEN list_contains(t, 'merge') THEN 1 ELSE 0 END
+        |    + CASE WHEN list_contains(t, 'hash') THEN 1 ELSE 0 END
+        |    + CASE WHEN list_contains(t, 'stream') THEN 1 ELSE 0 END AS BIGINT) AS n_matched
+        |FROM toks
+        |WHERE (CASE WHEN list_contains(t, 'merge') THEN 1 ELSE 0 END
+        |     + CASE WHEN list_contains(t, 'hash') THEN 1 ELSE 0 END
+        |     + CASE WHEN list_contains(t, 'stream') THEN 1 ELSE 0 END) >= 2
+        |ORDER BY doc_id""".stripMargin),
     // exact-adjacency phrase FROM the index: the node evaluates the
     // positional adjacency per chunk instead of the DataFrame path's
     // one-join-per-word alignment
-    "ii_posting_phrase" -> ((s, dir) =>
+    Entry("ii_posting_phrase", (s, dir) =>
       graft.plans.PostingListIntersect.phrase(
           Search.positionalIndexChunked(Tables.documents(s, dir)),
           Seq("merge", "group"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // node-answered phrase twin: 1-based comprehension index i means
+      // 0-based token position i-1, hence the -1 on first_pos
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents),
+        |occ AS (
+        | SELECT doc_id,
+        |  [i for i in range(1, len(t)) if t[i] = 'merge' and t[i+1] = 'group'] AS ps
+        | FROM toks)
+        |SELECT doc_id, CAST(len(ps) AS BIGINT) AS n_occurrences,
+        | CAST(list_min(ps) - 1 AS BIGINT) AS first_pos
+        |FROM occ WHERE len(ps) > 0 ORDER BY doc_id""".stripMargin),
     // sloppy phrase FROM the index: per-doc chain DP with the same
     // chain-count semantics as the band-join formulation
-    "ii_posting_phrase_slop" -> ((s, dir) =>
+    Entry("ii_posting_phrase_slop", (s, dir) =>
       graft.plans.PostingListIntersect.phraseSlop(
           Search.positionalIndexChunked(Tables.documents(s, dir)),
           Seq("merge", "group", "join"), slop = 2)
-        .orderBy(col("doc_id"))),
-    "ii_phrase_search" -> ((s, dir) =>
+        .orderBy(col("doc_id")),
+      // node-answered sloppy-phrase twin: chain count = join
+      // cardinality, same band per gap as ii_phrase_slop
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents),
+        |a AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'merge']) AS p1 FROM toks),
+        |b AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'group']) AS p2 FROM toks),
+        |c AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'join']) AS p3 FROM toks),
+        |ch AS (
+        | SELECT a.doc_id, p1 FROM a JOIN b USING (doc_id) JOIN c USING (doc_id)
+        | WHERE p2 > p1 AND p2 <= p1 + 3 AND p3 > p2 AND p3 <= p2 + 3)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
+        | CAST(min(p1) - 1 AS BIGINT) AS first_pos
+        |FROM ch GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Entry("ii_phrase_search", (s, dir) =>
       Search.phraseSearch(Tables.documents(s, dir), Seq("fast", "table"))
-        .orderBy(col("doc_id"))),
-    "ii_phrase_slop" -> ((s, dir) =>
+        .orderBy(col("doc_id")),
+      // 1-based list positions: occurrence at comprehension index i means
+      // 0-based token position i-1, hence the -1 on first_pos
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents),
+        |occ AS (
+        | SELECT doc_id,
+        |  [i for i in range(1, len(t)) if t[i] = 'fast' and t[i+1] = 'table'] AS ps
+        | FROM toks)
+        |SELECT doc_id, CAST(len(ps) AS BIGINT) AS n_occurrences,
+        | CAST(list_min(ps) - 1 AS BIGINT) AS first_pos
+        |FROM occ WHERE len(ps) > 0 ORDER BY doc_id""".stripMargin),
+    Entry("ii_phrase_slop", (s, dir) =>
       Search.phraseSearchSlop(Tables.documents(s, dir),
           Seq("fast", "table", "scan"), slop = 2)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // sloppy-phrase twin: per-term 1-based position lists, chained with
+      // the same (prev < next <= prev + 1 + slop) band per gap; chain
+      // count = join cardinality in both engines; -1 converts first_pos
+      // to the operator's 0-based convention
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents),
+        |a AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'fast']) AS p1 FROM toks),
+        |b AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'table']) AS p2 FROM toks),
+        |c AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'scan']) AS p3 FROM toks),
+        |ch AS (
+        | SELECT a.doc_id, p1 FROM a JOIN b USING (doc_id) JOIN c USING (doc_id)
+        | WHERE p2 > p1 AND p2 <= p1 + 3 AND p3 > p2 AND p3 <= p2 + 3)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
+        | CAST(min(p1) - 1 AS BIGINT) AS first_pos
+        |FROM ch GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // materialized positional index: term -> chunked sorted (doc:pos)
     // postings; the build-side counterpart of the phrase query path
-    "ii_positional_index" -> ((s, dir) =>
+    Entry("ii_positional_index", (s, dir) =>
       Search.positionalIndexChunked(Tables.documents(s, dir))
-        .orderBy(col("term"), col("chunk"))),
-    "search_bm25" -> ((s, dir) =>
+        .orderBy(col("term"), col("chunk")),
+      // positional-index twin: zipped unnest gives 0-based positions;
+      // string_agg ORDER BY (doc_id, pos) = array_sort on the struct
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents),
+        |p AS (
+        | SELECT doc_id, unnest(t) AS term, unnest(range(0, len(t))) AS pos FROM toks)
+        |SELECT term, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_occ,
+        | string_agg(CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR),
+        |  ',' ORDER BY doc_id, pos) AS postings
+        |FROM p GROUP BY 1, 2 ORDER BY term, chunk""".stripMargin),
+    Entry("search_bm25", (s, dir) =>
       Search.bm25TopK(Tables.documents(s, dir), Seq("spark", "vector", "slow"), 20)
-        .select(col("doc_id"), round(col("score"), 4).as("score"))),
+        .select(col("doc_id"), round(col("score"), 4).as("score")),
+      bm25OracleSql(Seq("spark", "vector", "slow"), 20)),
     // hybrid lexical⊕semantic retrieval: the BM25 leg and an exact
     // vector leg (query = embedding 0; doc_id ≡ vec_id) fused by
     // reciprocal-rank, κ=60 — rank-only fusion needs no calibration
-    "search_hybrid_rrf" -> ((s, dir) =>
+    Entry("search_hybrid_rrf", (s, dir) =>
       Search.hybridRrf(Tables.documents(s, dir), Tables.embeddings(s, dir),
-        Seq("spark", "vector", "slow"), qVecId = 0L, k = 20)),
+        Seq("spark", "vector", "slow"), qVecId = 0L, k = 20),
+      hybridRrfOracleSql(Seq("spark", "vector", "slow"), 0L, 20)),
     // pseudo-relevance feedback: top-5 feedback docs expand the query
     // by 3 terms (feedback-df DESC, corpus-df ASC), then re-rank
-    "search_bm25_prf" -> ((s, dir) =>
+    Entry("search_bm25_prf", (s, dir) =>
       Search.bm25PrfTopK(Tables.documents(s, dir), Seq("spark", "vector"), 20)
-        .select(col("doc_id"), round(col("score"), 4).as("score"))),
+        .select(col("doc_id"), round(col("score"), 4).as("score")),
+      bm25PrfOracleSql(Seq("spark", "vector"), 20, r = 5, e = 3)),
     // spreadScan on the positional search: the per-row position
     // extraction is the whole cost and rides the (single-split at sf)
     // scan — no-op at scale, result-identical
-
-    "search_proximity" -> ((s, dir) =>
+    Entry("search_proximity", (s, dir) =>
       Search.proximitySearch(Parallelize.spreadScan(Tables.documents(s, dir)),
           "spark", "slow", maxDist = 5)
-        .orderBy(col("doc_id"))),
-    "search_fuzzy" -> ((s, dir) =>
+        .orderBy(col("doc_id")),
+      // 1-based positions cancel in the distance; join over unnested
+      // per-term position lists = the per-row O(|pa|·|pb|) array min
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents),
+        |a AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'spark']) AS pa FROM toks),
+        |b AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'slow']) AS pb FROM toks)
+        |SELECT doc_id, CAST(min(abs(pa - pb)) AS BIGINT) AS best_dist
+        |FROM a JOIN b USING (doc_id)
+        |GROUP BY doc_id HAVING min(abs(pa - pb)) <= 5
+        |ORDER BY doc_id""".stripMargin),
+    Entry("search_fuzzy", (s, dir) =>
       Search.fuzzySearch(Tables.documents(s, dir), Seq("spak", "strem", "jion"), maxDist = 2)
-        .orderBy(col("q"), col("dist"), col("term"))),
+        .orderBy(col("q"), col("dist"), col("term")),
+      // levenshtein with the same length-difference lower-bound gate;
+      // DuckDB's uncapped distance equals the capped one inside ≤ maxDist
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents),
+        |v AS (
+        | SELECT term, count(*) AS df
+        | FROM (SELECT doc_id, unnest(list_distinct(t)) AS term FROM toks)
+        | GROUP BY term),
+        |q AS (SELECT unnest(['spak', 'strem', 'jion']) AS q)
+        |SELECT q, term, CAST(levenshtein(q, term) AS BIGINT) AS dist, df
+        |FROM v CROSS JOIN q
+        |WHERE abs(len(term) - len(q)) <= 2 AND levenshtein(q, term) <= 2
+        |ORDER BY q, dist, term""".stripMargin),
     // did-you-mean: fuzzy candidates ranked (dist, df DESC, term),
     // top-3 corrections per misspelled probe
-    "search_suggest" -> ((s, dir) =>
+    Entry("search_suggest", (s, dir) =>
       Search.suggestTerms(Tables.documents(s, dir), Seq("spak", "strem", "jion"))
-        .orderBy(col("q"), col("rank"))),
+        .orderBy(col("q"), col("rank")),
+      // suggest twin: the fuzzy candidate set + per-probe rank window
+      // (dist, df DESC, term), top 3
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents),
+        |v AS (
+        | SELECT term, count(*) AS df
+        | FROM (SELECT doc_id, unnest(list_distinct(t)) AS term FROM toks)
+        | GROUP BY term),
+        |q AS (SELECT unnest(['spak', 'strem', 'jion']) AS q),
+        |cand AS (
+        | SELECT q, term, CAST(levenshtein(q, term) AS BIGINT) AS dist, df
+        | FROM v CROSS JOIN q
+        | WHERE abs(len(term) - len(q)) <= 2 AND levenshtein(q, term) <= 2),
+        |rk AS (
+        | SELECT q, term, dist, df,
+        |  CAST(row_number() OVER (PARTITION BY q
+        |    ORDER BY dist, df DESC, term) AS BIGINT) AS rank
+        | FROM cand)
+        |SELECT q, rank, term, dist, df FROM rk
+        |WHERE rank <= 3 ORDER BY q, rank""".stripMargin),
     // infix wildcard via the trigram term index; oracle is the direct
     // LIKE scan — the index path must be result-identical
-    "search_infix" -> ((s, dir) =>
+    Entry("search_infix", (s, dir) =>
       Search.infixSearch(Tables.documents(s, dir), "park")
-        .orderBy(col("term"))),
-    "search_prefix" -> ((s, dir) =>
+        .orderBy(col("term")),
+      // infix twin: the layout-blind direct scan — LIKE '%park%' over
+      // distinct tokens; the trigram index must change nothing
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |                            x -> len(x) > 0) AS t
+        | FROM documents)
+        |SELECT term, count(*) AS df
+        |FROM (SELECT doc_id,
+        |       unnest(list_filter(list_distinct(t), x -> x LIKE '%park%')) AS term
+        |      FROM toks)
+        |GROUP BY term ORDER BY term""".stripMargin),
+    Entry("search_prefix", (s, dir) =>
       Search.prefixSearch(Tables.documents(s, dir), "s")
-        .orderBy(col("term"))),
+        .orderBy(col("term")),
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        | FROM documents)
+        |SELECT term, count(*) AS df
+        |FROM (SELECT doc_id, unnest(list_filter(list_distinct(t), x -> x LIKE 's%')) AS term FROM toks)
+        |GROUP BY term ORDER BY term""".stripMargin),
     // the reference's actual query shape: inverted index over a
     // dotted nested field, resolved through JSON ingest + flattening
     // (R1 ∘ R5 ∘ R6; reference src/main.rs:398-499 + 260-262).
@@ -969,23 +1219,31 @@ object SparkEntry {
     // total CASE (never null), and keeping the default isNotNull filter
     // makes Catalyst push it below the parse — from_json evaluated
     // twice per row, the round-2 bench's slowest query at 4.1s.
-    "ii_nested_field_values" -> ((s, dir) =>
+    Entry("ii_nested_field_values", (s, dir) =>
       InvertedIndex.fieldValues(
           NestedIngest.ingestJson(NestedIngest.eventsAsJson(s, dir), "json"),
           "source.region", dropNullValues = false)
         .select(col("value"), col("n_docs"),
                 array_join(col("doc_ids"), ",").as("doc_ids"))
-        .orderBy(col("value"))),
-    "clustered_write_scan" -> ((s, dir) => {
+        .orderBy(col("value")),
+      """SELECT CASE WHEN user_id % 3 = 0 THEN 'us-east'
+        |            WHEN user_id % 3 = 1 THEN 'us-west'
+        |            ELSE 'eu-central' END AS value,
+        | count(*) AS n_docs,
+        | array_to_string(list_sort(list(event_id)), ',') AS doc_ids
+        |FROM events GROUP BY 1 ORDER BY value""".stripMargin),
+    Entry("clustered_write_scan", (s, dir) => {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_clustered_${dir.hashCode.abs}"
       graft.sources.ClusteredParquet.write(Tables.documents(s, dir), path, numFiles = 8)
       graft.sources.ClusteredParquet.pointLookup(s, path, iiDocIds)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      s"""SELECT doc_id, lang, source, n_chars FROM documents
+        |WHERE doc_id IN ($iiDocIdsSql) ORDER BY doc_id""".stripMargin),
     // partition pruning on a hive-partitioned clustered layout: the
     // lang predicate eliminates whole directories at planning time
-    "partitioned_scan" -> ((s, dir) => {
+    Entry("partitioned_scan", (s, dir) => {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_partitioned_${dir.hashCode.abs}"
       graft.sources.ClusteredParquet.writePartitioned(Tables.documents(s, dir), path, "lang")
       graft.sources.ClusteredParquet.read(s, path)
@@ -993,11 +1251,14 @@ object SparkEntry {
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
         .orderBy(col("source"))
-    }),
+    },
+      """SELECT source, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
+        |FROM documents WHERE lang = 'en'
+        |GROUP BY source ORDER BY source""".stripMargin),
     // z-order clustered layout: a 2-d box predicate over the Morton
     // layout — row-group stats prune BOTH dimensions (pruning itself
     // is asserted in ZOrderSpec; this entry pins result correctness)
-    "zorder_scan" -> ((s, dir) => {
+    Entry("zorder_scan", (s, dir) => {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_${dir.hashCode.abs}"
       graft.sources.ClusteredParquet.writeZOrdered(
         Tables.lineitem(s, dir), path, "l_partkey", "l_orderkey", numFiles = 8)
@@ -1006,11 +1267,15 @@ object SparkEntry {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
                 col("l_suppkey"), col("l_extendedprice"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_extendedprice
+        |FROM lineitem
+        |WHERE l_partkey BETWEEN 100 AND 299 AND l_orderkey BETWEEN 1000 AND 3999
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // Hilbert-clustered layout: same box query, same result (the
     // oracle is layout-blind); the curve changes only what row groups
     // the scan touches — pruning proven in ZOrderSpec
-    "hilbert_scan" -> ((s, dir) => {
+    Entry("hilbert_scan", (s, dir) => {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_hilbert_${dir.hashCode.abs}"
       graft.sources.ClusteredParquet.writeHilbert(
         Tables.lineitem(s, dir), path, "l_partkey", "l_orderkey", numFiles = 8)
@@ -1019,1180 +1284,26 @@ object SparkEntry {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
                 col("l_suppkey"), col("l_extendedprice"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // hilbert twin: identical to the zorder twin — the curve is a
+      // physical layout, the query result is layout-invariant
+      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_extendedprice
+        |FROM lineitem
+        |WHERE l_partkey BETWEEN 100 AND 299 AND l_orderkey BETWEEN 1000 AND 3999
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // §2.3 LLM-data-pipeline operators
-    "dedup_exact" -> ((s, dir) =>
-      Dedup.exactGroups(Tables.documents(s, dir)).orderBy(col("h"))),
+    Entry("dedup_exact", (s, dir) =>
+      Dedup.exactGroups(Tables.documents(s, dir)).orderBy(col("h")),
+      """SELECT md5(text) AS h, count(*) AS n, min(doc_id) AS keeper
+        |FROM documents GROUP BY 1 ORDER BY h""".stripMargin),
     // sub-document dedup: corpus-wide first-occurrence keep per
     // 12-token paragraph, survivors reassembled in chunk order
-    "dedup_paragraph" -> ((s, dir) =>
+    Entry("dedup_paragraph", (s, dir) =>
       Dedup.paragraphDedup(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))),
-    // CCNet-style boilerplate strip: paragraphs in >= 3 distinct docs
-    // dropped from EVERY doc (vs dedup_paragraph's keep-first)
-    "text_boilerplate" -> ((s, dir) =>
-      Dedup.boilerplateRemoval(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))),
-    // exact-substring duplication signal: spans duplicated anywhere in
-    // the corpus, per-doc coverage by interval union
-    "dedup_substring" -> ((s, dir) =>
-      Dedup.substringDedup(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))),
-    // deterministic seeded epoch shuffle: two-phase distributed rank
-    // of md5(seed:id) — no single-partition window
-    "order_shuffle" -> ((s, dir) =>
-      TrainingOrder.shuffled(Tables.documents(s, dir), seed = "ep0")
-        .select(col("pos"), col("id").as("doc_id"))
-        .orderBy(col("pos"))),
-    // weighted curriculum interleave: stratum r-th row at virtual
-    // time (r+1)/weight, globally ranked — en 3×, zh 1.5×, fr 0.5×
-    "order_interleave" -> ((s, dir) =>
-      TrainingOrder.interleaved(Tables.documents(s, dir),
-          weights = Map("en" -> 3.0, "zh" -> 1.5, "fr" -> 0.5),
-          seed = "ep0", stratumCol = "lang")
-        .select(col("pos"), col("stratum"), col("id").as("doc_id"))
-        .orderBy(col("pos"))),
-    "dedup_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLshPairs(Tables.documents(s, dir))
-        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(col("id1"), col("id2"))),
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(Tables.documents(s, dir))
-        .orderBy(col("id1"), col("id2"))),
-    // sorted-neighborhood dedup: length-sorted window blocking, exact
-    // Jaccard verification — the linear-candidate alternative to LSH.
-    // window = 0 (auto): derived from n / distinct(n_chars) so recall
-    // survives corpus growth over a fixed key range (Dedup.autoWindow)
-    "dedup_snm" -> ((s, dir) =>
-      Dedup.sortedNeighborhoodPairs(Tables.documents(s, dir),
-          sortCols = Seq("n_chars"), window = 0, minJaccard = 0.5)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(col("id1"), col("id2"))),
-    "dedup_ngram_jaccard" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val pairs = d.select(col("doc_id").as("id1"), (col("doc_id") + 1).as("id2"))
-        .where(col("doc_id") < 100)
-      Dedup.verifyJaccard(pairs, d)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(col("id1"), col("id2"))
-    }),
-    "dedup_embedding" -> ((s, dir) =>
-      Dedup.embeddingPairs(Tables.embeddings(s, dir))
-        .select(col("id1"), col("id2"), round(col("cos"), 4).as("cos"))
-        .orderBy(col("id1"), col("id2"))),
-    // pairs → clusters: connected components (union-find on the driver
-    // for small pair lists, the min-label loop otherwise) over the L5
-    // embedding near-dup pairs
-    "dedup_clusters" -> ((s, dir) =>
-      ConnectedComponents.clusters(Dedup.embeddingPairs(Tables.embeddings(s, dir)))
-        .orderBy(col("component"))),
-    // TEXT-modality near-dup clusters: MinHash-LSH pairs closed into
-    // components — pairs→groups for the lexical leg, mirroring the
-    // embedding-leg dedup_clusters
-    "dedup_lsh_clusters" -> ((s, dir) =>
-      ConnectedComponents.clusters(Dedup.minhashLshPairs(Tables.documents(s, dir)))
-        .orderBy(col("component"))),
-    // hybrid semantic dedup: a doc pair is a duplicate if EITHER the
-    // texts are near-dups (SNM window + exact Jaccard) OR the
-    // embeddings are (SRP-banded cosine); union of edges → clusters.
-    // doc_id ≡ vec_id joins the two modalities of the same corpus.
-    "dedup_hybrid" -> ((s, dir) => {
-      val textPairs = Dedup.sortedNeighborhoodPairs(Tables.documents(s, dir),
-          sortCols = Seq("n_chars"), window = 0, minJaccard = 0.5)
-        .select(col("id1"), col("id2"))
-      val embPairs = Dedup.embeddingPairs(Tables.embeddings(s, dir))
-        .select(col("id1"), col("id2"))
-      ConnectedComponents.clusters(textPairs.unionByName(embPairs))
-        .orderBy(col("component"))
-    }),
-    // benchmark decontamination: corpus docs sharing a 5-gram with the
-    // (broadcast) benchmark subset, with per-doc hit counts
-    "decontaminate" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Decontaminate.contaminationHits(
-          d.where(col("doc_id") % 17 =!= 0), d.where(col("doc_id") % 17 === 0))
-        .orderBy(col("doc_id"))
-    }),
-    // semantic decontamination: per-train-vector max cosine to the
-    // (broadcast) benchmark subset — the paraphrase-leakage catcher
-    "decontaminate_semantic" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Decontaminate.semanticHits(
-          e.where(col("vec_id") % 23 =!= 0), e.where(col("vec_id") % 23 === 0))
-        .orderBy(col("vec_id"))
-    }),
-    // same decontamination on the Bloom-sketch path: corpus probes a
-    // broadcast Bloom of the benchmark shingles, survivors take a
-    // shuffled exact join — the plan for a benchmark too large to
-    // broadcast exactly. Result-identical to `decontaminate`.
-    "decontaminate_bloom" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Decontaminate.contaminationHitsBloom(
-          d.where(col("doc_id") % 17 =!= 0), d.where(col("doc_id") % 17 === 0))
-        .orderBy(col("doc_id"))
-    }),
-    // incremental dedup: new batch (vec_id%4=0) probed against the
-    // already-deduped corpus (the rest); corpus×corpus never recomputed
-    "dedup_incremental" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Dedup.embeddingPairsIncremental(
-          e.where(col("vec_id") % 4 =!= 0), e.where(col("vec_id") % 4 === 0))
-        .select(col("new_id"), col("old_id"), round(col("cos"), 4).as("cos"))
-        .orderBy(col("new_id"), col("old_id"))
-    }),
-    // sliding-window token chunking (window 64, stride 32): the
-    // context-window slicer between cleaning and packing; zero-shuffle
-    "chunk_docs" -> ((s, dir) =>
-      Chunking.chunkSummary(Tables.documents(s, dir), window = 64, stride = 32)
-        .orderBy(col("doc_id"), col("chunk_idx"))),
-    // sequence packing: two-phase distributed prefix sum over the
-    // corpus order, docs binned into fixed-budget context windows
-    "pack_sequences" -> ((s, dir) =>
-      Packing.packSummary(Tables.documents(s, dir), "n_chars", budget = 4096)
-        .orderBy(col("seq_id"))),
-    // the composed pipeline a training-data user actually runs:
-    // normalize → exact dedup → decontaminate → quality filter → pack
-    // into context windows. Every stage is the library operator; the
-    // oracle replays the whole chain in SQL.
-    "pipeline_e2e" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .withColumn("text", TextFunctions.normalizeText(col("text")))
-      val bench = d.where(col("doc_id") % 17 === 0)
-      val corpus = Dedup.dropExactDuplicates(d).where(col("doc_id") % 17 =!= 0)
-      val clean = Decontaminate.decontaminate(corpus, bench)
-      val good = clean.where(
-        TextFunctions.tokenCount(col("text")) >= 10 &&
-          TextFunctions.punctRatio(col("text")) <= 0.2)
-      Packing.packSummary(good, "n_chars", budget = 4096).orderBy(col("seq_id"))
-    }),
-    // deterministic hash-rate sampling: a scan-stage filter, summarized
-    // per language so membership differences hash-mismatch
-    "sample_hash" -> ((s, dir) =>
-      Sampling.hashRateSample(Tables.documents(s, dir), "doc_id", 0.3)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_ids"))
-        .orderBy(col("lang"))),
-    // mixture reweighting: per-source keep-rates as a scan-stage
-    // threshold filter; summarized per source
-    "sample_mixture" -> ((s, dir) =>
-      Sampling.mixtureSample(Tables.documents(s, dir), "source", "doc_id",
-          Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25), defaultRate = 0.1)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_ids"))
-        .orderBy(col("source"))),
-    // weighted sampling (Efraimidis-Spirakis A-Res, deterministic
-    // hash randomness): longer docs proportionally likelier
-    "sample_weighted" -> ((s, dir) =>
-      Sampling.weightedSample(Tables.documents(s, dir), "doc_id", "n_chars", 50)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))),
-    // per-stratum quota sampling in deterministic md5 order
-    "sample_stratified" -> ((s, dir) =>
-      Sampling.stratifiedQuota(Tables.documents(s, dir), "source", "doc_id", 20)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_sampled"),
-          array_join(array_sort(collect_list(col("doc_id"))), ",").as("ids"))
-        .orderBy(col("source"))),
-    // heavy hitters over the token stream: Misra-Gries candidates
-    // (O(cap) state) + exact bounded re-count; exact result => the
-    // oracle is the plain HAVING query the sketch plan avoids at scale
-    "text_heavy_hitters" -> ((s, dir) =>
-      FrequentItems.heavyHitters(
-          Tables.documents(s, dir)
-            .select(explode(TextFunctions.tokens(col("text"))).as("token")),
-          "token", phi = 0.02)
-        .orderBy(col("item"))),
-    "text_scrub" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          TextFunctions.countMatches(col("text"), TextFunctions.NumberPattern)
-            .cast("long").as("n_num"),
-          length(TextFunctions.scrubText(col("text"))).cast("long").as("len_scrubbed"))
-        .orderBy(col("doc_id"))),
-    "text_repetition" -> ((s, dir) =>
-      TextStats.ngramRepetition(Tables.documents(s, dir)).orderBy(col("doc_id"))),
-    // X184: code-vs-prose routing signals (symbol/digit/punctuation
-    // densities + the is_code call) — pure per-row regex passes
-    "text_code_ratio" -> ((s, dir) =>
-      TextStats.codeRatio(Tables.documents(s, dir)).orderBy(col("doc_id"))),
-    // BPE tokenizer training: 10 greedy merges learned on the
-    // distinct-word table; corpus is scanned exactly once
-    "text_bpe_train" -> ((s, dir) =>
-      Bpe.trainMerges(Tables.documents(s, dir), numMerges = 10)
-        .select(col("rank").cast("long").as("rank"), col("left_sym"),
-          col("right_sym"), col("merged"), col("pair_count"))
-        .orderBy(col("rank"))),
-    // tokenizer apply: the 10 learned merges re-encode the corpus as a
-    // literal replace() chain — per-doc whitespace vs BPE token counts
-    "text_bpe_apply" -> ((s, dir) =>
-      Bpe.trainAndEncode(Tables.documents(s, dir), numMerges = 10)
-        .orderBy(col("doc_id"))),
-    // token unigram entropy + type-token ratio, one fused scan pass
-    "text_entropy" -> ((s, dir) =>
-      TextStats.tokenEntropy(Tables.documents(s, dir)).orderBy(col("doc_id"))),
-    // TF-IDF top-5 keywords per doc; log-free rational idf so the
-    // DuckDB twin reproduces the ranking doubles bit-exactly
-    "text_tfidf" -> ((s, dir) =>
-      TextStats.tfidfTopTerms(Tables.documents(s, dir), k = 5)
-        .orderBy(col("doc_id"), col("rank"))),
-    // word2vec-style skip-gram co-occurrence: window-2 pairs counted
-    // corpus-wide, top-20 by count with lexicographic tiebreaks
-    "text_skipgrams" -> ((s, dir) =>
-      TextStats.skipgrams(Tables.documents(s, dir), window = 2, k = 20)),
-    // unigram-LM mean negative log-likelihood (perplexity stand-in)
-    "text_lm_score" -> ((s, dir) =>
-      TextStats.unigramLogLoss(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))),
-    // bigram conditional LM: order-sensitive NLL under MLE p(w2|w1)
-    "text_lm_bigram" -> ((s, dir) =>
-      TextStats.bigramLogLoss(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))),
-    // top-20 bigram collocations by PMI; ranking on the rational lift
-    // so the top-k SET is engine-exact, ln only on the reported value
-    "text_collocations" -> ((s, dir) =>
-      TextStats.collocations(Tables.documents(s, dir), minCount = 5, k = 20)),
-    // fixed-size deterministic per-group sample via bounded heap (the
-    // "k exemplars per class" contract; stratified = rate-based twin)
-    "sample_reservoir" -> ((s, dir) =>
-      Sampling.reservoirPerGroup(Tables.documents(s, dir), "lang", "doc_id", 10)
-        .orderBy(col("lang"), col("rank"))),
-    // contrastive negative mining: 4 md5-chain candidate draws per
-    // anchor, kept only when exact cosine < 0.5 (false-negative guard)
-    "sample_negative" -> ((s, dir) =>
-      Sampling.negativeSample(Tables.embeddings(s, dir))
-        .orderBy(col("vec_id"), col("j"))),
-    // incremental text dedup: new batch (doc_id%7=0) ranked into the
-    // corpus order, only cross pairs verified — corpus x corpus never
-    // recomputed (the text twin of dedup_incremental). The split
-    // modulus is COPRIME with the amplifier's factor on purpose:
-    // ScaleUp remaps ids as id*factor+rep, so a %10 split at 10x put
-    // every rep-0 doc in the batch and every replica in the corpus —
-    // all cross pairs crossed replica sets, which share no shingles
-    // by construction, and the entry returned a true-but-vacuous zero
-    // (caught by the ratio guard, round 9)
-    "dedup_snm_incremental" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Dedup.sortedNeighborhoodIncremental(
-          d.where(col("doc_id") % 7 =!= 0), d.where(col("doc_id") % 7 === 0),
-          sortCols = Seq("n_chars"), window = 0, minJaccard = 0.5)
-        .select(col("new_id"), col("old_id"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(col("new_id"), col("old_id"))
-    }),
-    // one-sided (containment) near-dup over the SNM candidate window:
-    // catches subsumption that symmetric Jaccard misses
-    "dedup_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(Tables.documents(s, dir),
-          sortCols = Seq("n_chars"), window = 0, minContainment = 0.5)
-        .select(col("id1"), col("id2"),
-          round(col("c1"), 4).as("c1"), round(col("c2"), 4).as("c2"))
-        .orderBy(col("id1"), col("id2"))),
-    // X189: multi-pass SNM — union of the n_chars window and a
-    // (lang, n_chars) window, one shared Jaccard verify; the
-    // documented escape hatch when one key's density outgrows the
-    // window cap (a second key recovers what the first sort separates)
-    "dedup_snm_multipass" -> ((s, dir) =>
-      Dedup.sortedNeighborhoodMultiPass(Tables.documents(s, dir),
-          keySets = Seq(Seq("n_chars"), Seq("lang", "n_chars")),
-          window = 0, minJaccard = 0.5)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(col("id1"), col("id2"))),
-    // X182: char-level near-dup pairs — the SNM candidate window
-    // verified by normalized edit distance over 64-char prefixes;
-    // catches OCR/typo drift that shreds word shingles (the prefix
-    // bound keeps the O(|a|·|b|) DP a per-candidate constant)
-    "dedup_edit_distance" -> ((s, dir) =>
-      Dedup.editDistancePairs(Tables.documents(s, dir),
-          sortCols = Seq("n_chars"), window = 0, minSim = 0.6, prefixChars = 64)
-        .select(col("id1"), col("id2"), round(col("sim"), 4).as("sim"))
-        .orderBy(col("id1"), col("id2"))),
-    // SemDeDup-shape semantic dedup: fixed-centroid clustering, then
-    // keep-lowest-id within-cell cosine dedup
-    "dedup_semantic" -> ((s, dir) =>
-      Dedup.semanticDedup(Tables.embeddings(s, dir))
-        .orderBy(col("vec_id"))),
-    "ann_ivf_fixed" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Similarity.ivfFixedTopK(e.where(col("vec_id") < 8), e, 10)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-                round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    // per-label centroid + each vector's cosine to its own centroid
-    // (semantic outlier score); centroid = ONE O(dim)-state aggregate
-    // (graft_vec_sum), broadcast back — embeddings never shuffle
-    "embed_centroid" -> ((s, dir) =>
-      EmbeddingStats.centroidCosine(Tables.embeddings(s, dir))
-        .orderBy(col("vec_id"))),
-    // exact dim-covariance matrix: integer-quantized DECIMAL sums
-    // (order-independent), closed-form cov over exact sums
-    "embed_cov" -> ((s, dir) =>
-      EmbeddingStats.covarianceMatrix(Tables.embeddings(s, dir))),
-    // top-PC projection: integer power iteration on the d×d matrix
-    // (bounded metadata), per-row exact-long dot inside the scan
-    "embed_pca" -> ((s, dir) =>
-      EmbeddingStats.pcaProjection(Tables.embeddings(s, dir))),
-    // X196: all-but-the-top post-processing — removed top-PC
-    // coefficient + residual norm per vector (Mu & Viswanath 2018)
-    "embed_abtt" -> ((s, dir) =>
-      EmbeddingStats.allButTop(Tables.embeddings(s, dir))),
-    // scalar int8 quantization summary: codes pinned via saturation
-    // count + code sum, plus the original↔dequantized cosine retention
-    "embed_quantize" -> ((s, dir) =>
-      Quantization.quantizeSummary(Tables.embeddings(s, dir))
-        .orderBy(col("vec_id"))),
-    // the ANN family running unchanged over the compressed store:
-    // exact top-k over dequantized int8 vectors (the 4×-less-memory
-    // scale path; recall vs float32 exact is pinned in the spec)
-    "ann_int8" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(
-          Quantization.dequantized(e.where(col("vec_id") < 8)),
-          Quantization.dequantized(e), 10)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-                round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    // product quantization: 8 nibble codes per 64-dim vector (64× vs
-    // float32); ADC scoring via broadcast per-query LUTs + graft_topk
-    "ann_pq" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      ProductQuantization.adcTopK(e.where(col("vec_id") < 8), e, 10)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-                round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    // MMR-diversified retrieval: top-20 pool re-ranked so each pick
-    // trades relevance against redundancy; greedy runs as the per-row
-    // graft_mmr kernel — zero shuffle beyond the m-row pool gather
-    "ann_mmr" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Similarity.mmrTopK(e.where(col("vec_id") < 8), e, k = 8, m = 20, lambda = 0.7)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-                round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    // IVF-PQ: probe-restricted ADC — cells bound WHICH candidates are
-    // scored, codes bound the BYTES per candidate; the composed index
-    // a billion-vector deployment actually runs
-    "ann_ivf_pq" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      ProductQuantization.ivfPqTopK(e.where(col("vec_id") < 8), e, 10)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-                round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    // two-stage retrieval: IVF-PQ nominates a top-30 pool per query,
-    // the pool alone re-scores exactly against the full vectors
-    "ann_rerank" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      ProductQuantization.rerankTopK(e.where(col("vec_id") < 8), e, 10, poolSize = 30)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-                round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    "ann_bruteforce" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(e.where(col("vec_id") < 8), e, 10)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-                round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    // filtered vector search: the metadata predicate applies BEFORE
-    // scoring (pre-filter), so top-k is exact within the filtered set
-    // — post-filtering a global top-k silently under-fills k; the
-    // label predicate reaches the parquet scan (PushedFilters)
-    "ann_filtered" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(e.where(col("vec_id") < 8), e.where(col("label") <= 2), 10)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-                round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    "ann_lsh" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Similarity.lshTopK(e.where(col("vec_id") < 8), e, 10)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-                round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    "ann_ivf" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      // one Lloyd pass here: the entry rebuilds the index per call,
-      // whereas a real deployment amortizes the build over many queries
-      Similarity.ivfTopK(e.where(col("vec_id") < 8), e, 10, iters = 1)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-                round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    "text_langid" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .groupBy(TextFunctions.langIdText(col("text")).as("detected"))
-        .agg(count(lit(1)).as("n")).orderBy(col("detected"))),
-    "text_quality" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("lang"), col("text"), TextFunctions.tokens(col("text")).as("toks"))
-        .select(col("lang"),
-          TextFunctions.punctRatio(col("text")).as("pr"),
-          TextFunctions.stopwordRatioFromTokens(col("toks"), TextFunctions.Stopwords.en).as("sr"),
-          TextFunctions.repetitionRatioFromTokens(col("toks")).as("rr"),
-          size(col("toks")).as("tc"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          round(avg(col("pr")), 4).as("avg_punct"),
-          round(avg(col("sr")), 4).as("avg_stop"),
-          round(avg(col("rr")), 4).as("avg_rep"),
-          round(avg(col("tc")), 4).as("avg_tokens"))
-        .orderBy(col("lang"))),
-    "text_tokens" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_ws"),
-          TextFunctions.bpeTokenCount(col("text")).cast("long").as("n_bpe"))
-        .orderBy(col("doc_id"))),
-    // the composed Gopher-style quality GATE as a per-(lang, source)
-    // funnel: per-rule reject counts + survivors
-    "quality_filter" -> ((s, dir) =>
-      graft.operators.TextStats.qualityFunnel(Tables.documents(s, dir))
-        .orderBy(col("lang"), col("source"))),
-    "text_fingerprint" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
-        .select(col("doc_id"), size(col("fp")).cast("long").as("n_fp"),
-          array_min(col("fp")).as("fp_min"), array_max(col("fp")).as("fp_max"))
-        .orderBy(col("doc_id"))),
-    "mm_decode_stats" -> (graft.multimodal.Multimodal.decodeStats _),
-    // audio modality path: per-clip amplitude stats from the stub PCM
-    // decode (bytes as unsigned 8-bit samples)
-    "mm_audio_stats" -> ((s, dir) =>
-      graft.multimodal.Multimodal.audioStats(s, dir)
-        .orderBy(col("media_id"))),
-    // frame-sample plumbing: every-2nd-frame fan-out per video inside
-    // mapPartitions batches; summarized per media row (the stub frame
-    // digest is 64-bit-hash-valued, so the oracle checks the fan-out
-    // structure — counts and last sampled index — not the digest)
-    "mm_frame_sample" -> ((s, dir) =>
-      graft.multimodal.Multimodal.sampleFrames(
-          graft.multimodal.Multimodal.mediaFromDocuments(s, dir)).toDF()
-        .groupBy(col("media_id"))
-        .agg(count(lit(1)).as("n_sampled"), max(col("frame_idx")).as("last_idx"))
-        .orderBy(col("media_id"))),
-    "q_sessionize" -> ((s, dir) =>
-      graft.streaming.Sessionize.batch(Tables.events(s, dir), gapMinutes = 480)),
-    "q_asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      AsOfJoin.lastValueAsOf(ev, purchases, "user_id", "ts", "value", "last_purchase")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-                round(col("last_purchase"), 2).as("last_purchase"))
-        .orderBy(col("event_id"))
-    }),
-    // X181: as-of with a 48 h staleness tolerance — the backward match
-    // voids when older than the tolerance (filter after the window,
-    // never a join predicate)
-    "q_asof_tolerance" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      AsOfJoin.lastValueAsOfWithin(ev, purchases, "user_id", "ts", "value",
-          "recent_purchase", 172800000000L)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          round(col("recent_purchase"), 2).as("recent_purchase"))
-        .orderBy(col("event_id"))
-    }),
-    // X180: per-user time-weighted average value
-    "q_twap" -> (graft.operators.TimeSeries.twapPerUser _),
-    // forward as-of: next purchase at-or-after each event — the
-    // mirrored one-exchange union+window, inclusive at equal ts
-    "q_asof_forward" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      AsOfJoin.firstValueAsOfForward(ev, purchases, "user_id", "ts", "value", "next_purchase")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-                round(col("next_purchase"), 2).as("next_purchase"))
-        .orderBy(col("event_id"))
-    }),
-    // nearest as-of: closer of before/after purchase, backward ties —
-    // one sort serves both direction frames
-    "q_asof_nearest" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      AsOfJoin.nearestValueAsOf(ev, purchases, "user_id", "ts", "value", "nearest_purchase")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-                round(col("nearest_purchase"), 2).as("nearest_purchase"))
-        .orderBy(col("event_id"))
-    }),
-    "q_range_join" -> ((s, dir) => {
-      val intervals = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("bucket"),
-        (col("n_nationkey") * 20.0).as("lo"),
-        (col("n_nationkey") * 20.0 + 25.0).as("hi"))
-      RangeJoin.pointInInterval(Tables.events(s, dir), "value", intervals, "lo", "hi",
-          binWidth = 25.0)
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("bucket"))
-    }),
-    "q_skew_agg" -> ((s, dir) =>
-      Skew.saltedSumCount(Tables.lineitem(s, dir), "l_returnflag", "l_quantity")
-        .select(col("l_returnflag"), round(col("sum_value"), 2).as("sum_value"), col("n"))
-        .orderBy(col("l_returnflag"))),
-    // salted shuffle join on a 3-value (maximally hot) key; the
-    // above-average predicate is the rational q*n > sum form so the
-    // threshold is FP-exact in both engines
-    "q_skew_join" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir).select("l_returnflag", "l_quantity")
-      val flagTotals = li.groupBy(col("l_returnflag"))
-        .agg(sum(col("l_quantity")).as("sum_q"), count(lit(1)).as("n_q"))
-      Skew.saltedJoin(li, flagTotals, "l_returnflag")
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("l_quantity") * col("n_q") > col("sum_q"), 1L)
-            .otherwise(0L)).as("n_above"))
-        .orderBy(col("l_returnflag"))
-    }),
-    // the X10 optimizer rule driver-gated: a 1200-literal IN list
-    // (above the rewrite threshold) becomes range-prune + the
-    // graft_doc_id_in membership kernel
-    "q_large_in" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .where(col("l_partkey").isin(largeInKeys: _*))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"))
-        .orderBy(col("l_returnflag"))),
-    // the X11 bucketed layout driver-gated: both sides persisted
-    // bucketBy(8, k) + sortBy, joined with zero exchange (asserted in
-    // BucketedTablesSpec), then rolled up per customer
-    "q_bucketed_join" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("k"), col("l_quantity"))
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderkey").as("k"), col("o_custkey"))
-      graft.sources.BucketedTables.write(li, "graft_q_bli", "k", 8)
-      graft.sources.BucketedTables.write(ord, "graft_q_bord", "k", 8)
-      graft.sources.BucketedTables.join(s, "graft_q_bli", "graft_q_bord", "k")
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"))
-        .orderBy(col("o_custkey"))
-    }),
-    // §2.2 relational core
-    "q_scan_filter"    -> (Relational.scanFilter _),
-    "q1_agg"           -> (Relational.q1Agg _),
-    "q_join_broadcast" -> (Relational.joinBroadcast _),
-    "q5_multijoin"     -> (Relational.multiJoin _),
-    "q_semi_anti"      -> (Relational.semiAnti _),
-    "q_distinct"       -> (Relational.distinctCounts _),
-    "q_topk"           -> (Relational.topK _),
-    "q_window"         -> (Relational.windowFns _),
-    "q_window_nav"     -> (Relational.navWindow _),
-    "q_intersect_except" -> (Relational.intersectExcept _),
-    "q_full_outer"     -> (Relational.fullOuter _),
-    "q_exists_subquery" -> (Relational.existsSubquery _),
-    "q_scalar_subquery" -> (Relational.scalarSubquery _),
-    "q_time_window"    -> (Relational.timeWindow _),
-    "q_sliding_window" -> (Relational.slidingWindow _),
-    "q_json_extract"   -> (Relational.jsonExtract _),
-    "q_explode_tokens" -> (Relational.explodeTokens _),
-    "q_union_case"     -> (Relational.unionCase _),
-    "q_rollup"         -> (Relational.rollupAgg _),
-    "q_grouped_topk"   -> ((s, dir) =>
-      Relational.groupedTopK(s, dir).orderBy(col("c_mktsegment"), col("rank"))),
-    "q_cube"           -> (Relational.cubeAgg _),
-    "q_pivot"          -> (Relational.pivotLangCounts _),
-    "q_unpivot"        -> (Relational.unpivotLangCounts _),
-    // keyed upsert: +100 balance on keys %10=3 (updates), re-keyed
-    // copies of keys %50=0 (inserts); everything else carries over
-    "q_upsert" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-      val updates = c.where(col("c_custkey") % 10 === 3)
-        .withColumn("c_acctbal", round(col("c_acctbal") + 100.0, 2))
-      val inserts = c.where(col("c_custkey") % 50 === 0)
-        .withColumn("c_custkey", col("c_custkey") + 1000000L)
-      Relational.upsert(c, updates.unionByName(inserts), "c_custkey")
-        .select(col("c_custkey"), col("row.c_name").as("c_name"),
-          col("row.c_acctbal").as("c_acctbal"),
-          col("row.c_mktsegment").as("c_mktsegment"), col("status"))
-        .orderBy(col("c_custkey"))
-    }),
-    "q_range_frame"    -> (Relational.rangeFrameWindow _),
-    "q_quantiles"      -> (Relational.quantiles _),
-    // X183: robust location — exact [p10, p90] band, DECIMAL-exact
-    // filtered mean; the bounds broadcast back (|groups| rows)
-    "q_trimmed_mean"   -> (Relational.trimmedMeanPerGroup _),
-    // ANALYZE-style per-column profile; exact distincts WITHOUT the
-    // count(DISTINCT) Expand — two chained aggregations per column
-    "stats_profile" -> ((s, dir) =>
-      Relational.profileColumns(Tables.lineitem(s, dir),
-          Seq("l_discount", "l_extendedprice", "l_quantity", "l_returnflag"))
-        .orderBy(col("col_name"))),
-    "q_histogram"      -> ((s, dir) => Relational.histogram(s, dir)),
-    "q_equidepth"      -> ((s, dir) => Relational.equiDepthHistogram(s, dir)),
-    "q_streaks"        -> (Relational.activityStreaks _),
-    // X93: exact Jaccard-threshold pairs via prefix filtering (PPJoin)
-    // — no LSH false negatives, no SNM sort-key assumption
-    "dedup_ppjoin" -> ((s, dir) =>
-      Dedup.ppjoinPairs(Tables.documents(s, dir), threshold = 0.5)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(col("id1"), col("id2"))),
-    // X94: per-group OLS regression from DECIMAL-exact co-moments
-    "stats_regression" -> (Relational.regressionByType _),
-    // X95: daily calendar resample with forward fill
-    "q_resample" -> (TimeSeries.resampleDaily _),
-    // X96: rolling z-score anomaly flags over a 20-row trailing frame
-    "q_rolling_anomaly" -> ((s, dir) => TimeSeries.rollingAnomalies(s, dir)),
-    // X97: first-touch ordered funnel view -> click -> purchase
-    "q_event_funnel" -> ((s, dir) => TimeSeries.funnel(s, dir)),
-    // X190: finite-horizon EWMA of daily counts, integer-exact weights
-    "q_ewma" -> (TimeSeries.ewmaDaily(_, _)),
-    // X191: lag-1..7 autocorrelation of the daily count series
-    "q_autocorr" -> (TimeSeries.autocorrDaily(_, _)),
-    // X192: monthly OHLC bars over the order-value series
-    "q_ohlc" -> (TimeSeries.ohlcMonthly _),
-    // X195: per-day tie-aware Mann-Whitney AUC, purchase vs rest
-    "stats_auc" -> (EventAnalytics.aucDaily(_, _)),
-    // X193: published Gopher quality ruleset, per-doc signals + verdict
-    "quality_gopher" -> ((s, dir) =>
-      TextStats.gopherRules(Tables.documents(s, dir))),
-    // X194: token-coverage curve (vocab concentration ladder)
-    "text_coverage" -> ((s, dir) =>
-      TextStats.tokenCoverage(Tables.documents(s, dir))),
-    // X98: explicit GROUPING SETS ((lang, source), (lang), ())
-    "q_grouping_sets" -> (Relational.groupingSetsAgg _),
-    // X99: threshold (range) vector search — the ε-neighborhood query
-    "ann_range" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      graft.operators.Similarity.rangeSearch(e.where(col("vec_id") < 8), e, 0.3)
-        .select(col("q_id"), col("c_id"), round(col("score"), 4).as("score"))
-        .orderBy(col("q_id"), col("c_id"))
-    }),
-    // X100: L13 driver-gated — the events stream replayed through the
-    // real Structured Streaming engine (4 file-per-trigger
-    // micro-batches, complete-mode memory sink) must equal the batch
-    // aggregation the oracle computes
-    "q_stream_window" -> ((s, dir) =>
-      graft.streaming.EventStream.replayWindowedCounts(s, dir, batches = 4)),
-    // X101: X2 driver-gated — sessionization replayed through
-    // flatMapGroupsWithState as 4 time-ranged micro-batches; open
-    // sessions flushed via sentinel-advanced event-time timeouts; must
-    // hash-match the batch running-break oracle
-    "q_stream_sessionize" -> ((s, dir) =>
-      graft.streaming.Replay.replaySessionize(s, dir, gapMinutes = 480, batches = 4)),
-    // X102: X9 driver-gated — exact streaming dedup as a first-seen
-    // stateful operator over 4 doc_id-ranged micro-batches; cross-batch
-    // state suppression must reproduce the batch min-id-per-hash
-    "dedup_stream_exact" -> ((s, dir) =>
-      graft.streaming.Replay.replayExactDedup(s, dir, batches = 4)),
-    // X174: the X101 sessionize replay with its state in the RocksDB
-    // state store provider — the 100 TB configuration (state spills to
-    // disk instead of growing the executor heap); must hash-match the
-    // SAME batch oracle as the default-provider run, proving the
-    // provider changes where state lives, never what it computes
-    "q_stream_sessionize_rocksdb" -> ((s, dir) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // replaySessionize runs the stream to completion eagerly, so the
-      // finally runs after every micro-batch has committed
-      try graft.streaming.Replay.replaySessionize(s, dir, gapMinutes = 480, batches = 4)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }),
-    // X103: SCD type-2 history build (validity intervals from an
-    // attribute-observation log; open versions close with a sentinel)
-    "q_scd2" -> (Relational.scdType2 _),
-    // X177: point-in-time join — orders matched to the SCD2 version
-    // covering their date, via the as-of machinery (no range join)
-    "q_scd2_join" -> (Relational.scd2PointInTime _),
-    // X178: cumulative distinct users per day via the first-seen
-    // reformulation (running sum over a |days|-bounded table)
-    "q_cum_distinct" -> (EventAnalytics.cumulativeDistinctUsers _),
-    // X179: cross-source near-dup contamination matrix over the LSH
-    // pair stream
-    "dedup_cross_source" -> ((s, dir) =>
-      Dedup.crossSourcePairs(Tables.documents(s, dir))),
-    // X104: 2-D Pareto frontier via distributive local-sweep +
-    // tiny-global-merge; oracle is the NOT EXISTS dominance definition
-    "q_skyline" -> ((s, dir) => graft.operators.Skyline.partFrontier(s, dir)),
-    // X105: per-group mode, smallest-value tie-break
-    "q_mode" -> (Relational.modePerGroup _),
-    // X106: greedy non-overlapping view->click->purchase subsequence
-    // automaton per user (MATCH_RECOGNIZE-lite), histogram output
-    "q_sequence_count" -> ((s, dir) => TimeSeries.sequenceCount(s, dir)),
-    // X107: CSV round trip with explicit schema + PERMISSIVE corrupt
-    // quarantine (the delimited-text half of the raw ingest surface)
-    "ingest_csv" -> (graft.sources.CsvIngest.ingestEntry _),
-    // X108: incremental MV maintenance — stored base MV + delta
-    // partial agg merged by addition must equal the full recompute
-    "q_mv_merge" -> ((s, dir) => graft.operators.MaterializedView.mvMerge(s, dir)),
-    // X109: index time travel — after 4 committed batches, the AS OF
-    // version-2 read must equal the one-shot rebuild over batches 0..2
-    "ii_index_asof" -> ((s, dir) => {
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("graft-ii-asof").toString
-      val docs = Tables.documents(s, dir)
-      (0 until 4).foreach { b =>
-        graft.streaming.StreamingIndex.processBatch(
-          docs.where(pmod(col("doc_id"), lit(4)) === b), b.toLong,
-          stateDir, "lang", chunkSize = 100, docIdCol = "doc_id", None)
-      }
-      graft.streaming.StreamingIndex.indexAsOf(s, stateDir, version = 2)
-        .select(col("value"), col("chunk"), col("n_docs"),
-          array_join(col("doc_ids"), ",").as("doc_ids"))
-        .orderBy(col("value"), col("chunk"))
-    }),
-    // X110: distribution-position windows (ntile/percent_rank/
-    // cume_dist) — one segment-keyed WindowExec for all three
-    "q_ntile" -> (Relational.distributionWindows _),
-    // X111: robust per-group outliers by median absolute deviation —
-    // the heavy-tail-safe complement of the z-score entries
-    "q_mad" -> ((s, dir) => Relational.madOutliers(s, dir)),
-    // X112: multi-epoch training reshuffle — nEpochs independent
-    // seeded permutations from ONE epoch-keyed two-phase rank
-    "order_epoch" -> ((s, dir) =>
-      graft.operators.TrainingOrder.epochs(Tables.documents(s, dir), 3, "ep7")
-        .orderBy(col("epoch"), col("pos"))),
-    // X113: CDC change-feed apply — last-writer-wins snapshot from an
-    // insert/update/delete feed, one key-hashed window
-    "q_cdc_apply" -> (graft.operators.ChangeFeed.applyEntry _),
-    // X114: ORC round trip — value fidelity (µs timestamps, DECIMAL
-    // sums) across the format hop, proven against the parquet original
-    "ingest_orc" -> (graft.sources.OrcIngest.ingestEntry _),
-    // X115: dynamic partition pruning — a runtime aggregate-derived
-    // dim key set prunes whole hive partitions off the fact scan;
-    // oracle joins without any pruning, proving it pure I/O
-    "q_dpp_scan" -> (graft.sources.RuntimeFilters.dppQuery _),
-    // X116: runtime bloom-filter join — filtered dim keys reach the
-    // shuffle-hash fact scan as a might_contain row predicate
-    "q_bloom_join" -> (graft.sources.RuntimeFilters.bloomJoin _),
-    // X117: stream-stream interval join through the REAL engine (two
-    // independent file streams, symmetric-hash join state + watermark
-    // eviction) must reproduce the batch interval self-join
-    "q_stream_join" -> ((s, dir) =>
-      graft.streaming.Replay.replayStreamJoin(s, dir)),
-    // X118: perceptual image-hash dedup — aHash per payload inside the
-    // batched decode mapPartitions, exact-phash dup groups
-    "mm_image_phash" -> ((s, dir) =>
-      graft.multimodal.Multimodal.imagePHash(s, dir)),
-    // X119: regex search — the grep layer under the term family, a
-    // pure scan-stage predicate (dialect kept engine-portable)
-    "search_regex" -> ((s, dir) =>
-      Search.regexSearch(Tables.documents(s, dir), "(spark|vector) (join|index)")),
-    // X120: keyword-in-context snippets — ±3 tokens around the first
-    // match, array-position arithmetic inside the scan
-    "search_snippet" -> ((s, dir) =>
-      Search.snippets(Tables.documents(s, dir), "vector")),
-    // X121: exact two-sample KS distance between every event-type
-    // pair's value distribution — the snapshot drift detector
-    "stats_ks" -> (Relational.ksTest _),
-    // X122: recursive CTE (Spark 4 native WITH RECURSIVE) — per-level
-    // rollup of the implicit doc-id binary tree (parent = id DIV 2);
-    // the d > parent guard is the monotone step that bounds recursion
-    // at log2(max_id) iterations
-    "q_recursive_depth" -> ((s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("graft_docs_rec")
-      s.sql(
-        """WITH RECURSIVE t(doc_id, depth) AS (
-          |  SELECT CAST(0 AS BIGINT) AS doc_id, CAST(0 AS BIGINT) AS depth
-          |  UNION ALL
-          |  SELECT d.doc_id, t.depth + 1
-          |  FROM graft_docs_rec d JOIN t
-          |    ON d.doc_id DIV 2 = t.doc_id AND d.doc_id > t.doc_id)
-          |SELECT depth, count(*) AS n, min(doc_id) AS min_id,
-          |       max(doc_id) AS max_id
-          |FROM t GROUP BY depth ORDER BY depth""".stripMargin)
-    }),
-    // X123: suffix wildcard via the reversed-term dictionary trick —
-    // the suffix query becomes a sargable prefix query
-    "search_suffix" -> ((s, dir) =>
-      Search.suffixSearch(Tables.documents(s, dir), "ow")
-        .orderBy(col("term"))),
-    // X124: correlated LATERAL subquery (per-customer top order) —
-    // the decorrelation surface grouped_topk's window form avoids
-    "q_lateral" -> ((s, dir) => {
-      Tables.customer(s, dir).createOrReplaceTempView("graft_cust_lat")
-      Tables.orders(s, dir).createOrReplaceTempView("graft_ord_lat")
-      s.sql(
-        """SELECT c.c_custkey, t.o_orderkey,
-          |       round(t.o_totalprice, 2) AS top_price
-          |FROM graft_cust_lat c, LATERAL (
-          |  SELECT o_orderkey, o_totalprice FROM graft_ord_lat o
-          |  WHERE o.o_custkey = c.c_custkey
-          |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
-          |ORDER BY c.c_custkey""".stripMargin)
-    }),
-    // X125: re-touch sequencing funnel view→click→purchase (any later
-    // click counts, unlike X97's first-touch form) — per-step user
-    // counts from one (user_id, ts) window sort
-    "q_funnel_seq" -> (EventAnalytics.funnel(_, _)),
-    // X126: weekly cohort retention — integer week arithmetic from the
-    // corpus epoch, distinct users per (cohort, offset) cell
-    "q_retention" -> (EventAnalytics.retention _),
-    // deterministic md5-coin A/B readout: exact-DECIMAL moments,
-    // closed-form Welch z per event type
-    "q_ab_test" -> (EventAnalytics.abTest _),
-    // cohort LTV: cumulative purchase revenue per signup cohort /
-    // week offset, per-user normalized
-    "q_cohort_ltv" -> (EventAnalytics.cohortLtv _),
-    // X127: first-order Markov transition matrix over per-user event
-    // sequences; probabilities are integer-count divisions
-    "q_markov" -> (EventAnalytics.markovTransitions _),
-    // X128: chi-squared contingency cells (event_type × value bucket),
-    // reported per cell — cross-cell double sums are engine-dependent
-    "stats_chi2_cells" -> (EventAnalytics.contingency _),
-    // X129: more-like-this — TF-IDF cosine ranking against one query
-    // document via a posting-list join; DECIMAL accumulation makes
-    // float-sum order invisible cross-engine
-    "search_mlt" -> ((s, dir) =>
-      Search.moreLikeThis(Tables.documents(s, dir), queryDocId = 7L, k = 10)),
-    // X130: length-grouped batching with per-batch padding waste —
-    // two-phase distributed rank, all-integer output
-    "order_batches" -> ((s, dir) =>
-      TrainingOrder.lengthBatches(Tables.documents(s, dir), batchSize = 32)),
-    // X131: KL/PSI drift between the event-type mix of two time halves
-    "stats_psi" -> (EventAnalytics.klDrift(_, _)),
-    // X132+X157: mutual-kNN graph on the SCALE route — SRP-banded
-    // candidate generation at AUTO width (integer ⌊log₂(n/100)⌋ bits
-    // per band, which the oracle recomputes from count(*) — a pinned
-    // width loses every bucket past the cap at 10×: recall 0) with
-    // exact-cosine rerank; the all-pairs exact scorer
-    // (Similarity.knnGraphExact) is spec-tested, never gated
-    "knn_graph" -> ((s, dir) => {
-      Similarity.knnGraphBanded(Tables.embeddings(s, dir), 10,
-          numPlanes = 0, bands = 4, maxBucket = 500)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
-          round(col("score"), 4).as("score"), col("mutual"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-    // X133: faceted search — conjunctive query + per-facet rollup
-    "search_facets" -> ((s, dir) =>
-      Search.facetedSearch(Tables.documents(s, dir), Seq("spark"),
-        Seq("lang", "source"))),
-    // X134: posting-list delta-gap compression sizing
-    "ii_postings_delta" -> ((s, dir) =>
-      Search.postingsDeltaStats(Tables.documents(s, dir))),
-    // X135: canonical-keeper selection over the embedding near-dup
-    // clusters (longest doc wins, id tiebreak)
-    "dedup_keeper" -> ((s, dir) =>
-      ConnectedComponents.canonicalKeepers(Tables.documents(s, dir),
-        Dedup.embeddingPairs(Tables.embeddings(s, dir)))),
-    // X136: text-embedding pair curation with per-cohort stats
-    "mm_pair_stats" -> ((s, dir) =>
-      graft.multimodal.Multimodal.pairStats(Tables.documents(s, dir),
-        Tables.embeddings(s, dir))),
-    // X137: per-type Gini inequality over event values via the
-    // distributed grouped rank
-    "stats_gini" -> (EventAnalytics.gini _),
-    // Benford first-digit profile per event type: per-digit observed
-    // vs log10(1+1/d) expectation — the unit-mixing detector
-    "stats_benford" -> (EventAnalytics.benford _),
-    // X138: WAND/MaxScore-pruned BM25 — result-identical to
-    // search_bm25 (same oracle), but the scoring exchange only
-    // carries docs passing the scan-stage upper-bound gate
-    "search_wand" -> ((s, dir) =>
-      Search.wandTopK(Tables.documents(s, dir), Seq("spark", "vector", "slow"), 20)
-        .select(col("doc_id"), round(col("score"), 4).as("score"))),
-    // X139: entry-path analysis — first-3-event paths per user
-    "q_entry_paths" -> (EventAnalytics.entryPaths(_, _)),
-    // X140: RFM segmentation — quintile grid via the distributed rank
-    "q_rfm" -> (EventAnalytics.rfm(_, _)),
-    // X141: schema-evolution ingest — two-generation mergeSchema read
-    "ingest_evolve" -> (graft.sources.SchemaEvolution.ingestEvolved _),
-    // X142: view→purchase conversion-latency deciles via the
-    // distributed rank (exact percentiles, no percentile buffer)
-    "q_conv_latency" -> (EventAnalytics.conversionLatency _),
-    // X143: DAU / trailing-7-day WAU / stickiness from one user-day
-    // dedup + a bounded day expansion
-    "q_dau_wau" -> (EventAnalytics.dauWau _),
-    // X144: per-label embedding drift — half-centroid cosine agreement
-    "embed_drift" -> ((s, dir) =>
-      EmbeddingStats.centroidDrift(Tables.embeddings(s, dir))),
-    // X145: perceptual near-dup image pairs within Hamming ≤ 3 via
-    // banded signature join + exact bit_count verify
-    "mm_phash_neardup" -> (graft.multimodal.Multimodal.phashNearDupPairs(_, _)),
-    // X146: weekly churn accounting (new/retained/resurrected/churned)
-    "q_churn" -> (EventAnalytics.churn _),
-    // X147: last-touch revenue attribution with an explicit 'none'
-    // bucket; exact DECIMAL revenue sums
-    "q_attribution" -> (EventAnalytics.lastTouchAttribution _),
-    // X148: synonym-expanded search — canonical reach + variant hits
-    "ii_synonym_search" -> ((s, dir) =>
-      Search.synonymSearch(Tables.documents(s, dir), Map(
-        "fast" -> Seq("quick", "rapid"),
-        "index" -> Seq("lookup", "catalog"),
-        "spark" -> Seq("flame")))),
-    // X149: day-of-week seasonality profile with per-type shares
-    "q_seasonality" -> (EventAnalytics.seasonality _),
-    // X150: week-over-week movers with per-week |Δ| rank
-    "q_top_movers" -> (EventAnalytics.topMovers _),
-    // X151: audience-overlap Jaccard matrix between event types
-    "q_overlap_users" -> (EventAnalytics.audienceOverlap _),
-    // X152: triangle counts + clustering coefficients over the
-    // mutual-kNN graph — structure as a data-quality signal; the edge
-    // substrate is the BANDED kNN route (same pinned geometry as
-    // knn_graph), so no all-pairs scorer anywhere in the graph family
-    "graph_triangles" -> ((s, dir) =>
-      Graph.triangleStatsEdges(bandedGraphEdges(s, dir))),
-    // X153: PageRank centrality over the mutual-kNN graph — canonical
-    // exemplars rank high; per-iteration round(9) pins both engines
-    // to identical doubles
-    "graph_pagerank" -> ((s, dir) =>
-      Graph.pageRankEdges(bandedGraphEdges(s, dir), iters = 5)),
-    // X154: common-neighbor link prediction over the mutual-kNN graph
-    "graph_link_pred" -> ((s, dir) =>
-      Graph.linkPredictionEdges(bandedGraphEdges(s, dir))),
-    // X197: Mann–Kendall monotonic-trend test on each type's daily
-    // count series — integer S + ×18 tie-corrected variance, doubles
-    // only in the final z/tau sequence
-    "stats_mann_kendall" -> (Inference.mannKendallDaily _),
-    // X198: tie-aware Spearman rank correlation (n_chars vs token
-    // count) per language — doubled ranks keep the tie averages in
-    // integer space
-    "stats_spearman" -> (Inference.spearmanByLang _),
-    // X199: one-way ANOVA F of order value across order priorities —
-    // exact DECIMAL group sums, fixed left-assoc cross-group fold
-    "q_anova" -> (Inference.anovaPriority _),
-    // X200: lang × source pointwise mutual information cells — exact
-    // marginals over the bounded cell table, per-cell ln only
-    "stats_mutual_info" -> (Inference.mutualInfoCells _),
-    // X201: two-sided CUSUM changepoint walk over daily counts —
-    // the max(0, ·) recurrence in 100n-scaled exact integers
-    "q_cusum" -> (TimeSeries.cusumDaily _),
-    // X202: label-propagation communities over the mutual-kNN graph —
-    // synchronous rounds, most-frequent-then-smallest label, all
-    // integer
-    "graph_label_prop" -> ((s, dir) =>
-      Graph.labelPropagationEdges(
-        Tables.embeddings(s, dir), bandedGraphEdges(s, dir), iters = 4)),
-    // X203: Matryoshka truncation eval — top-10 overlap of
-    // prefix-truncated cosine search vs the full 64-dim answer
-    "embed_matryoshka" -> ((s, dir) =>
-      Similarity.matryoshkaRecall(Tables.embeddings(s, dir))),
-    // X204: leave-one-out kNN label classification over the banded
-    // kNN graph — most-frequent-then-smallest neighbor vote
-    "embed_knn_classify" -> ((s, dir) =>
-      EmbeddingStats.knnClassify(
-        Similarity.knnGraphBanded(Tables.embeddings(s, dir), 10,
-          numPlanes = 0, bands = 4, maxBucket = 500),
-        Tables.embeddings(s, dir))),
-    // X205: per-vector silhouette via normalized-sum linearity — no
-    // pairwise join, one label-sum broadcast
-    "embed_silhouette" -> ((s, dir) =>
-      EmbeddingStats.silhouette(Tables.embeddings(s, dir))),
-    // X206: Zipf power-law fit over the top-64 token frequency
-    // spectrum
-    "stats_zipf" -> ((s, dir) =>
-      TextStats.zipfFit(Tables.documents(s, dir))),
-    // X207: feature-hashing vectorizer — per-row bucket histogram
-    // inside the scan, zero vocabulary pass
-    "text_feature_hash" -> ((s, dir) =>
-      TextStats.featureHashing(Tables.documents(s, dir))),
-    // X208: plain-text line ingest round trip — tab-delimited stage,
-    // parse-back, per-lang rollup vs the original parquet
-    "ingest_text" -> (graft.sources.TextIngest.ingestEntry _),
-    // X209: 3-core degree peeling over the mutual-kNN graph (8
-    // unrolled rounds)
-    "graph_kcore" -> ((s, dir) =>
-      Graph.kCoreEdges(bandedGraphEdges(s, dir))),
-    // X210: per-user time-decayed engagement — exact integer
-    // half-life weights over a fixed 10^16 denominator
-    "q_decay_score" -> ((s, dir) => EventAnalytics.decayScore(s, dir)),
-    // X211: Welch's unequal-variance t-test of event value, purchase
-    // vs click — exact cent sums, fixed IEEE combine
-    "stats_welch_ttest" -> ((s, dir) => Inference.welchTTest(s, dir)),
-    // X212: Cramér's V for lang×source — per-cell χ² terms quantized
-    // to 10⁻⁶ and summed as exact longs, no float accumulation
-    "stats_cramers_v" -> ((s, dir) => Inference.cramersV(s, dir)),
-    // X213: degree assortativity of the mutual-kNN graph — Pearson of
-    // endpoint degrees from exact integer sums over symmetric edges
-    "graph_assortativity" -> ((s, dir) =>
-      Graph.assortativityEdges(bandedGraphEdges(s, dir))),
-    // X214: gaps-and-islands outage report over each type's minute
-    // clock — one calendar-bounded lead window after the map-side
-    // per-minute rollup
-    "q_gaps" -> (TimeSeries.minuteGaps _),
-    // X215: Kaplan–Meier survival of purchase inter-arrival times —
-    // censored tails from each user's last gap; the KM product walks
-    // a bounded left-assoc fold (the cusum move)
-    "q_survival" -> ((s, dir) => EventAnalytics.kmSurvival(s, dir)),
-    // X216: Flesch reading-ease per document — three regex-counted
-    // integers per row inside the scan, one fixed formula
-    "text_readability" -> ((s, dir) =>
-      TextStats.readability(Tables.documents(s, dir))),
-    // X217: Dirichlet-smoothed query likelihood top-20 — per-term tf
-    // inside the scan, one broadcast stats row, literal term-order sum
-    "search_lm_dirichlet" -> ((s, dir) =>
-      Search.lmDirichletTopK(Tables.documents(s, dir),
-        Seq("spark", "vector", "slow"), 20)
-        .select(col("doc_id"), round(col("score"), 4).as("score"))),
-    // X218: Lloyd k-means (k=8, 3 iterations, smallest-id seeds) on
-    // the 10⁻⁶ integer grid — broadcast-literal assignment, one
-    // graft_vec_sum update per round
-    "embed_kmeans" -> ((s, dir) =>
-      Clustering.kmeans(Tables.embeddings(s, dir))),
-    // X219: market-basket support/confidence/lift over order line
-    // items — bounded per-order pair join, exact half-up ratios
-    "q_basket_lift" -> ((s, dir) => EventAnalytics.basketLift(s, dir)),
-    // X220: seasonal-naive forecast error + MASE per event type —
-    // lag-7 vs lag-1 integer error sums on the daily table
-    "q_snaive" -> ((s, dir) => TimeSeries.snaiveDaily(s, dir)),
-    // X221: deterministic hash train/val/test split — pure function
-    // of doc_id, scan-stage, rerun- and growth-stable
-    "sample_split" -> ((s, dir) =>
-      Sampling.splitAssign(Tables.documents(s, dir))),
-    // X222: declarative constraint audit — per-table domain rules
-    // fused into one scan each, FK rules as unhinted anti-joins
-    "q_constraint_audit" -> ((s, dir) =>
-      DataQuality.constraintAudit(s, dir)),
-    // X223: snapshot reconciliation diff — per-user event state as of
-    // day 8 vs day 31 through ONE null-safe full outer join
-    "q_snapshot_diff" -> ((s, dir) =>
-      DataQuality.snapshotDiffEvents(s, dir)),
-    // X224: order-invariant dataset checksum per lang — commutative
-    // 60-bit md5-prefix sum, partitioning/retry-invariant
-    "stats_checksum" -> ((s, dir) =>
-      DataQuality.datasetChecksum(Tables.documents(s, dir))),
-    // X225: Theil–Sen robust trend per event type — median pairwise
-    // slope over the calendar-bounded daily table
-    "q_theil_sen" -> ((s, dir) => TimeSeries.theilSenDaily(s, dir)),
-    // X226: DBSCAN density clustering over the banded candidate
-    // graph — deterministic core/border/noise roles, min-label
-    // clusters over core-core edges
-    "embed_dbscan" -> ((s, dir) =>
-      Clustering.dbscan(Tables.embeddings(s, dir))),
-    // X227: WOE / information value of order priority predicting
-    // high-value orders — exact bin counts, fixed IEEE tail
-    "stats_woe_iv" -> ((s, dir) => Inference.woeIv(s, dir)),
-    // X228: linear-interpolation resample of the per-minute peak-value
-    // series, hash-verified through exact per-type rollup sums
-    "q_interp_resample" -> ((s, dir) =>
-      TimeSeries.interpResampleSummary(s, dir)),
-    // X229: nearest-bracket resample — step-fill sibling of X228 for
-    // quantized signals where a linear blend is meaningless; each gap
-    // minute takes the nearer observed bracket, previous wins ties
-    "q_interp_nearest" -> ((s, dir) =>
-      TimeSeries.nearestResampleSummary(s, dir)),
-  )
-
-  /** The graph family's shared edge substrate: undirected mutual edges
-    * of the banded kNN graph at AUTO band width (the oracle recomputes
-    * the width from count(*), so the banding stays bit-reproducible at
-    * every SF — a pinned width caps out at 10× and drops every edge). */
-  private def bandedGraphEdges(s: SparkSession, dir: String): DataFrame =
-    Graph.undirectedMutual(Similarity.knnGraphBanded(
-      Tables.embeddings(s, dir), 10, numPlanes = 0, bands = 4, maxBucket = 500))
-
-  /** DuckDB-dialect twins of `queries`, identical column names and
-    * ORDER BY so the driver's hash compare is deterministic. */
-  def oracleSql: Map[String, String] = Map(
-    // signature-family twins: the full FNV-1a/splitmix64 chains
-    // reproduced in HUGEINT-mod-2^64 arithmetic (OracleHashSql), so
-    // the LSH pipelines hash-compare end to end, not rows-only
-    "dedup_minhash_lsh" -> OracleHashSql.minhashSql(),
-    // cross-source matrix twin: the same HUGEINT minhash pair chain,
-    // nested as a subquery, rolled up by (least, greatest) source pair
-    "dedup_cross_source" ->
-      s"""WITH pairs AS (SELECT id1, id2 FROM (${OracleHashSql.minhashSql()}))
-         |SELECT least(da.source, db.source) AS source_a,
-         | greatest(da.source, db.source) AS source_b,
-         | CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM pairs JOIN documents da ON da.doc_id = pairs.id1
-         | JOIN documents db ON db.doc_id = pairs.id2
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // lsh-clusters twin: the same HUGEINT minhash chain + the
-    // recursive reachability closure dedup_clusters uses
-    "dedup_lsh_clusters" -> OracleHashSql.minhashClustersSql(),
-    "dedup_simhash" -> OracleHashSql.simhashSql(),
-    "text_fingerprint" -> OracleHashSql.fingerprintSql(),
-    "ii_field_values" ->
-      """SELECT lang AS value, count(*) AS n_docs,
-        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
-        |FROM documents GROUP BY lang ORDER BY value""".stripMargin,
-    // low-memory twin: identical result by construction — the profile
-    // may only change memory shape, never values
-    "ii_field_values_lowmem" ->
-      """SELECT lang AS value, count(*) AS n_docs,
-        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
-        |FROM documents GROUP BY lang ORDER BY value""".stripMargin,
-    "ii_field_values_by_doc_ids" ->
-      s"""SELECT source AS value, count(*) AS n_docs,
-        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
-        |FROM documents WHERE doc_id IN ($iiDocIdsSql)
-        |GROUP BY source ORDER BY value""".stripMargin,
-    "ii_numeric_stats" ->
-      """SELECT 'n_chars' AS field, CAST(min(n_chars) AS DOUBLE) AS min_v,
-        | CAST(max(n_chars) AS DOUBLE) AS max_v, round(avg(n_chars), 4) AS avg_v
-        |FROM documents""".stripMargin,
-    "ii_numeric_stats_by_doc_ids" ->
-      s"""SELECT 'n_chars' AS field, CAST(min(n_chars) AS DOUBLE) AS min_v,
-        | CAST(max(n_chars) AS DOUBLE) AS max_v, round(avg(n_chars), 4) AS avg_v
-        |FROM documents WHERE doc_id IN ($iiDocIdsSql)""".stripMargin,
-    "ii_field_values_chunked" ->
-      """SELECT source AS value, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_docs,
-        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
-        |FROM documents GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin,
-    // streaming maintenance invariant: N replayed micro-batch merges
-    // must equal the one-shot rebuild over the union
-    "ii_index_streaming" ->
-      """SELECT lang AS value, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_docs,
-        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
-        |FROM documents GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin,
-    // merge invariant: compacting base+delta must equal rebuilding the
-    // chunked index over the whole corpus — the oracle IS the rebuild
-    "ii_index_merge" ->
-      """SELECT source AS value, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_docs,
-        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
-        |FROM documents GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin,
-    // delete == rebuild-without invariant
-    "ii_index_delete" ->
-      """SELECT source AS value, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_docs,
-        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
-        |FROM documents WHERE doc_id % 7 <> 0 GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin,
-    // compact twin: compact(index(A,100) \ D, 4) == index(A \ D, 400)
-    "ii_index_compact" ->
-      """SELECT source AS value, CAST(doc_id // 400 AS BIGINT) AS chunk, count(*) AS n_docs,
-        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
-        |FROM documents WHERE doc_id % 7 <> 0 GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin,
-    "dedup_exact" ->
-      """SELECT md5(text) AS h, count(*) AS n, min(doc_id) AS keeper
-        |FROM documents GROUP BY 1 ORDER BY h""".stripMargin,
-    // epoch-shuffle twin: one window over the same md5(seed:id) order
-    "order_shuffle" ->
-      """SELECT CAST(row_number() OVER (
-        |  ORDER BY md5('ep0:' || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS BIGINT) AS pos,
-        | doc_id
-        |FROM documents ORDER BY pos""".stripMargin,
-    // interleave twin: per-stratum rank over the seeded key, virtual
-    // time lr/weight (all-double division so both engines compute the
-    // identical slot), global row_number over (slot, key, id)
-    "order_interleave" ->
-      """WITH k AS (
-        | SELECT lang AS stratum, doc_id,
-        |  md5('ep0:' || CAST(doc_id AS VARCHAR)) AS key
-        | FROM documents),
-        |r AS (
-        | SELECT stratum, doc_id, key,
-        |  row_number() OVER (PARTITION BY stratum ORDER BY key, doc_id) AS lr
-        | FROM k),
-        |s AS (
-        | SELECT stratum, doc_id, key,
-        |  CAST(lr AS DOUBLE) / CAST(CASE stratum WHEN 'en' THEN 3.0
-        |   WHEN 'zh' THEN 1.5 WHEN 'fr' THEN 0.5 ELSE 1.0 END AS DOUBLE) AS slot
-        | FROM r)
-        |SELECT CAST(row_number() OVER (ORDER BY slot, key, doc_id) - 1 AS BIGINT) AS pos,
-        | stratum, doc_id
-        |FROM s ORDER BY pos""".stripMargin,
-    // paragraph twin: same 12-token grid (chunk count mirrors
-    // Chunking.chunkTokens), first occurrence = rn 1 over (doc_id,
-    // chunk_idx); coalesce('') matches concat_ws over an empty array
-    "dedup_paragraph" ->
+        .orderBy(col("doc_id")),
+      // paragraph twin: same 12-token grid (chunk count mirrors
+      // Chunking.chunkTokens), first occurrence = rn 1 over (doc_id,
+      // chunk_idx); coalesce('') matches concat_ws over an empty array
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -2214,10 +1325,14 @@ object SparkEntry {
         | CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         | md5(coalesce(
         |   string_agg(CASE WHEN rn = 1 THEN chunk END, ' ' ORDER BY chunk_idx), '')) AS h_dedup
-        |FROM rk GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // boilerplate twin: same 12-token grid; df = distinct-doc count
-    // per paragraph, kept iff df < 3 (CCNet drop-everywhere policy)
-    "text_boilerplate" ->
+        |FROM rk GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    // CCNet-style boilerplate strip: paragraphs in >= 3 distinct docs
+    // dropped from EVERY doc (vs dedup_paragraph's keep-first)
+    Entry("text_boilerplate", (s, dir) =>
+      Dedup.boilerplateRemoval(Tables.documents(s, dir))
+        .orderBy(col("doc_id")),
+      // boilerplate twin: same 12-token grid; df = distinct-doc count
+      // per paragraph, kept iff df < 3 (CCNet drop-everywhere policy)
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -2236,12 +1351,16 @@ object SparkEntry {
         | CAST(sum(CASE WHEN df < 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         | md5(coalesce(
         |   string_agg(CASE WHEN df < 3 THEN chunk END, ' ' ORDER BY chunk_idx), '')) AS h_clean
-        |FROM pp JOIN dfq USING (chunk) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // substring twin: string 6-grams stand in for the engine's
-    // xxhash64 span keys (same location multiplicities barring 64-bit
-    // collisions); coverage is the identical sorted-starts lead
-    // formula, so the interval union is engine-exact
-    "dedup_substring" ->
+        |FROM pp JOIN dfq USING (chunk) GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    // exact-substring duplication signal: spans duplicated anywhere in
+    // the corpus, per-doc coverage by interval union
+    Entry("dedup_substring", (s, dir) =>
+      Dedup.substringDedup(Tables.documents(s, dir))
+        .orderBy(col("doc_id")),
+      // substring twin: string 6-grams stand in for the engine's
+      // xxhash64 span keys (same location multiplicities barring 64-bit
+      // collisions); coverage is the identical sorted-starts lead
+      // formula, so the interval union is engine-exact
       """WITH t AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS tk
         | FROM documents WHERE text IS NOT NULL),
@@ -2264,306 +1383,76 @@ object SparkEntry {
         |  THEN round(CAST(coalesce(a.dup_tokens, 0) AS DOUBLE) / len(tk), 4)
         |  ELSE 0.0 END AS dup_frac
         |FROM t LEFT JOIN agg a ON a.doc_id = t.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-    "ii_search_boolean" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents)
-        |SELECT doc_id FROM toks
-        |WHERE list_contains(t, 'spark') AND list_contains(t, 'vector')
-        | AND NOT list_contains(t, 'slow')
-        |ORDER BY doc_id""".stripMargin,
-    // OR twin: distinct-term match count, minimum-should-match 2
-    "ii_search_or" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents)
-        |SELECT doc_id,
-        | CAST(CASE WHEN list_contains(t, 'spark') THEN 1 ELSE 0 END
-        |    + CASE WHEN list_contains(t, 'vector') THEN 1 ELSE 0 END
-        |    + CASE WHEN list_contains(t, 'slow') THEN 1 ELSE 0 END AS BIGINT) AS n_matched
-        |FROM toks
-        |WHERE (CASE WHEN list_contains(t, 'spark') THEN 1 ELSE 0 END
-        |     + CASE WHEN list_contains(t, 'vector') THEN 1 ELSE 0 END
-        |     + CASE WHEN list_contains(t, 'slow') THEN 1 ELSE 0 END) >= 2
-        |ORDER BY doc_id""".stripMargin,
-    // semantic twin of the custom-exec-node entry: boolean AND/NOT
-    // membership over the tokenized corpus
-    "ii_posting_intersect" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents)
-        |SELECT doc_id FROM toks
-        |WHERE list_contains(t, 'spark') AND list_contains(t, 'fast')
-        | AND NOT list_contains(t, 'batch')
-        |ORDER BY doc_id""".stripMargin,
-    // node-answered OR twin: distinct-term coordination count,
-    // minimum-should-match 2 over merge/hash/stream
-    "ii_posting_or" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents)
-        |SELECT doc_id,
-        | CAST(CASE WHEN list_contains(t, 'merge') THEN 1 ELSE 0 END
-        |    + CASE WHEN list_contains(t, 'hash') THEN 1 ELSE 0 END
-        |    + CASE WHEN list_contains(t, 'stream') THEN 1 ELSE 0 END AS BIGINT) AS n_matched
-        |FROM toks
-        |WHERE (CASE WHEN list_contains(t, 'merge') THEN 1 ELSE 0 END
-        |     + CASE WHEN list_contains(t, 'hash') THEN 1 ELSE 0 END
-        |     + CASE WHEN list_contains(t, 'stream') THEN 1 ELSE 0 END) >= 2
-        |ORDER BY doc_id""".stripMargin,
-    // node-answered phrase twin: 1-based comprehension index i means
-    // 0-based token position i-1, hence the -1 on first_pos
-    "ii_posting_phrase" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
+        |ORDER BY t.doc_id""".stripMargin),
+    // deterministic seeded epoch shuffle: two-phase distributed rank
+    // of md5(seed:id) — no single-partition window
+    Entry("order_shuffle", (s, dir) =>
+      TrainingOrder.shuffled(Tables.documents(s, dir), seed = "ep0")
+        .select(col("pos"), col("id").as("doc_id"))
+        .orderBy(col("pos")),
+      // epoch-shuffle twin: one window over the same md5(seed:id) order
+      """SELECT CAST(row_number() OVER (
+        |  ORDER BY md5('ep0:' || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS BIGINT) AS pos,
+        | doc_id
+        |FROM documents ORDER BY pos""".stripMargin),
+    // weighted curriculum interleave: stratum r-th row at virtual
+    // time (r+1)/weight, globally ranked — en 3×, zh 1.5×, fr 0.5×
+    Entry("order_interleave", (s, dir) =>
+      TrainingOrder.interleaved(Tables.documents(s, dir),
+          weights = Map("en" -> 3.0, "zh" -> 1.5, "fr" -> 0.5),
+          seed = "ep0", stratumCol = "lang")
+        .select(col("pos"), col("stratum"), col("id").as("doc_id"))
+        .orderBy(col("pos")),
+      // interleave twin: per-stratum rank over the seeded key, virtual
+      // time lr/weight (all-double division so both engines compute the
+      // identical slot), global row_number over (slot, key, id)
+      """WITH k AS (
+        | SELECT lang AS stratum, doc_id,
+        |  md5('ep0:' || CAST(doc_id AS VARCHAR)) AS key
         | FROM documents),
-        |occ AS (
-        | SELECT doc_id,
-        |  [i for i in range(1, len(t)) if t[i] = 'merge' and t[i+1] = 'group'] AS ps
-        | FROM toks)
-        |SELECT doc_id, CAST(len(ps) AS BIGINT) AS n_occurrences,
-        | CAST(list_min(ps) - 1 AS BIGINT) AS first_pos
-        |FROM occ WHERE len(ps) > 0 ORDER BY doc_id""".stripMargin,
-    // node-answered sloppy-phrase twin: chain count = join
-    // cardinality, same band per gap as ii_phrase_slop
-    "ii_posting_phrase_slop" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents),
-        |a AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'merge']) AS p1 FROM toks),
-        |b AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'group']) AS p2 FROM toks),
-        |c AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'join']) AS p3 FROM toks),
-        |ch AS (
-        | SELECT a.doc_id, p1 FROM a JOIN b USING (doc_id) JOIN c USING (doc_id)
-        | WHERE p2 > p1 AND p2 <= p1 + 3 AND p3 > p2 AND p3 <= p2 + 3)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-        | CAST(min(p1) - 1 AS BIGINT) AS first_pos
-        |FROM ch GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // 1-based list positions: occurrence at comprehension index i means
-    // 0-based token position i-1, hence the -1 on first_pos
-    "ii_phrase_search" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents),
-        |occ AS (
-        | SELECT doc_id,
-        |  [i for i in range(1, len(t)) if t[i] = 'fast' and t[i+1] = 'table'] AS ps
-        | FROM toks)
-        |SELECT doc_id, CAST(len(ps) AS BIGINT) AS n_occurrences,
-        | CAST(list_min(ps) - 1 AS BIGINT) AS first_pos
-        |FROM occ WHERE len(ps) > 0 ORDER BY doc_id""".stripMargin,
-    // sloppy-phrase twin: per-term 1-based position lists, chained with
-    // the same (prev < next <= prev + 1 + slop) band per gap; chain
-    // count = join cardinality in both engines; -1 converts first_pos
-    // to the operator's 0-based convention
-    "ii_phrase_slop" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents),
-        |a AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'fast']) AS p1 FROM toks),
-        |b AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'table']) AS p2 FROM toks),
-        |c AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'scan']) AS p3 FROM toks),
-        |ch AS (
-        | SELECT a.doc_id, p1 FROM a JOIN b USING (doc_id) JOIN c USING (doc_id)
-        | WHERE p2 > p1 AND p2 <= p1 + 3 AND p3 > p2 AND p3 <= p2 + 3)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-        | CAST(min(p1) - 1 AS BIGINT) AS first_pos
-        |FROM ch GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // positional-index twin: zipped unnest gives 0-based positions;
-    // string_agg ORDER BY (doc_id, pos) = array_sort on the struct
-    "ii_positional_index" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents),
-        |p AS (
-        | SELECT doc_id, unnest(t) AS term, unnest(range(0, len(t))) AS pos FROM toks)
-        |SELECT term, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_occ,
-        | string_agg(CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR),
-        |  ',' ORDER BY doc_id, pos) AS postings
-        |FROM p GROUP BY 1, 2 ORDER BY term, chunk""".stripMargin,
-    "search_bm25" -> bm25OracleSql(Seq("spark", "vector", "slow"), 20),
-    "search_hybrid_rrf" -> hybridRrfOracleSql(Seq("spark", "vector", "slow"), 0L, 20),
-    // wand twin: the UNPRUNED bm25 oracle — pruning must be
-    // result-invisible, which is the entire correctness claim
-    "search_wand" -> bm25OracleSql(Seq("spark", "vector", "slow"), 20),
-    // rfm twin: same per-user metrics and integer rank·5 DIV n
-    // quintiles (row_number − 1 ≡ the two-phase rank; DuckDB // ≡ DIV)
-    "q_rfm" ->
-      """WITH u AS (
-        | SELECT user_id,
-        |  min(datediff('day', CAST(ts AS DATE), DATE '2024-01-31')) AS rec,
-        |  count(*) AS freq,
-        |  sum(CAST(value AS DECIMAL(18,2))) AS mon
-        | FROM events GROUP BY user_id),
-        |n AS (SELECT count(*) AS n_users FROM u),
-        |s AS (SELECT user_id,
-        |       (row_number() OVER (ORDER BY rec DESC, user_id) - 1) * 5 // n_users + 1 AS r_score,
-        |       (row_number() OVER (ORDER BY freq, user_id) - 1) * 5 // n_users + 1 AS f_score,
-        |       (row_number() OVER (ORDER BY mon, user_id) - 1) * 5 // n_users + 1 AS m_score
-        |      FROM u CROSS JOIN n)
-        |SELECT CAST(r_score AS BIGINT) AS r_score, CAST(f_score AS BIGINT) AS f_score,
-        | CAST(m_score AS BIGINT) AS m_score, CAST(count(*) AS BIGINT) AS n_users
-        |FROM s GROUP BY r_score, f_score, m_score
-        |ORDER BY r_score, f_score, m_score""".stripMargin,
-    // latency twin: same first-touch pair, integer µs latency, rank
-    // deciles (// ≡ DIV), all-integer output
-    "q_conv_latency" ->
-      """WITH u AS (
-        | SELECT user_id,
-        |  min(CASE WHEN event_type = 'view' THEN ts END) AS t1,
-        |  min(CASE WHEN event_type = 'purchase' THEN ts END) AS t2
-        | FROM events GROUP BY user_id),
-        |l AS (SELECT user_id, epoch_us(t2) - epoch_us(t1) AS lat_us
-        |      FROM u WHERE t1 IS NOT NULL AND t2 IS NOT NULL AND t1 < t2),
-        |n AS (SELECT count(*) AS n FROM l),
-        |r AS (SELECT lat_us,
-        |       (row_number() OVER (ORDER BY lat_us, user_id) - 1) * 10 // n + 1 AS decile
-        |      FROM l CROSS JOIN n)
-        |SELECT CAST(decile AS BIGINT) AS decile, CAST(count(*) AS BIGINT) AS n_users,
-        | CAST(min(lat_us) // 60000000 AS BIGINT) AS min_minutes,
-        | CAST(max(lat_us) // 60000000 AS BIGINT) AS max_minutes
-        |FROM r GROUP BY decile ORDER BY decile""".stripMargin,
-    // dau/wau twin: same user-day dedup and bounded day expansion
-    "q_dau_wau" ->
-      """WITH ud AS (
-        | SELECT DISTINCT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-        |        user_id
-        | FROM events),
-        |dau AS (SELECT day, count(*) AS dau FROM ud GROUP BY day),
-        |w AS (SELECT DISTINCT day + g AS rday, user_id
-        |      FROM ud CROSS JOIN (SELECT unnest([0,1,2,3,4,5,6]) AS g) t),
-        |wau AS (SELECT rday, count(*) AS wau FROM w GROUP BY rday)
-        |SELECT CAST(day AS BIGINT) AS day, CAST(dau AS BIGINT) AS dau,
-        | CAST(wau AS BIGINT) AS wau, round(dau / wau, 6) AS stickiness
-        |FROM dau JOIN wau ON day = rday ORDER BY day""".stripMargin,
-    // drift twin: the embed_centroid per-dim round-6 average, computed
-    // per half, then one list cosine per label
-    "embed_drift" ->
-      """WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |ua AS (SELECT label, unnest(e) AS x, unnest(range(1, len(e)+1)) AS pos
-        |       FROM v WHERE vec_id % 2 = 0),
-        |ca AS (SELECT label, pos, round(avg(x), 6) AS m FROM ua GROUP BY 1, 2),
-        |la AS (SELECT label, list(m ORDER BY pos) AS cva FROM ca GROUP BY label),
-        |na AS (SELECT label, count(*) AS n_a FROM v WHERE vec_id % 2 = 0 GROUP BY label),
-        |ub AS (SELECT label, unnest(e) AS x, unnest(range(1, len(e)+1)) AS pos
-        |       FROM v WHERE vec_id % 2 = 1),
-        |cb AS (SELECT label, pos, round(avg(x), 6) AS m FROM ub GROUP BY 1, 2),
-        |lb AS (SELECT label, list(m ORDER BY pos) AS cvb FROM cb GROUP BY label),
-        |nb AS (SELECT label, count(*) AS n_b FROM v WHERE vec_id % 2 = 1 GROUP BY label)
-        |SELECT label, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        | round(list_cosine_similarity(la.cva, lb.cvb), 4) AS drift_cos
-        |FROM la JOIN lb USING (label) JOIN na USING (label) JOIN nb USING (label)
-        |ORDER BY label""".stripMargin,
-    // evolve twin: the merged two-generation read must be
-    // result-invisible vs the original table's slices
-    "ingest_evolve" ->
-      """WITH m AS (
-        | SELECT 1 AS gen, l_quantity AS qty, CAST(NULL AS DOUBLE) AS price
-        | FROM lineitem WHERE l_linenumber = 1
-        | UNION ALL
-        | SELECT 2, l_quantity, l_extendedprice FROM lineitem WHERE l_linenumber = 2)
-        |SELECT CAST(gen AS BIGINT) AS gen, CAST(count(*) AS BIGINT) AS n_rows,
-        | CAST(count(price) AS BIGINT) AS n_price,
-        | CAST(sum(CAST(qty AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | coalesce(CAST(sum(CAST(price AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS sum_price
-        |FROM m GROUP BY gen ORDER BY gen""".stripMargin,
-    // entry-path twin: same rank window (epoch-µs order, event_id
-    // tiebreak) and NULL-skipping concat_ws
-    "q_entry_paths" ->
-      """WITH r AS (
-        | SELECT user_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id
-        |                     ORDER BY epoch_us(ts), event_id) AS rn
-        | FROM events),
-        |p AS (SELECT user_id,
-        |       min(CASE WHEN rn = 1 THEN event_type END) AS p1,
-        |       min(CASE WHEN rn = 2 THEN event_type END) AS p2,
-        |       min(CASE WHEN rn = 3 THEN event_type END) AS p3
-        |      FROM r WHERE rn <= 3 GROUP BY user_id)
-        |SELECT concat_ws('->', p1, p2, p3) AS path,
-        | CAST(count(*) AS BIGINT) AS n_users
-        |FROM p GROUP BY path ORDER BY path""".stripMargin,
-    "search_bm25_prf" -> bm25PrfOracleSql(Seq("spark", "vector"), 20, r = 5, e = 3),
-    // 1-based positions cancel in the distance; join over unnested
-    // per-term position lists = the per-row O(|pa|·|pb|) array min
-    "search_proximity" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents),
-        |a AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'spark']) AS pa FROM toks),
-        |b AS (SELECT doc_id, unnest([i for i in range(1, len(t)+1) if t[i] = 'slow']) AS pb FROM toks)
-        |SELECT doc_id, CAST(min(abs(pa - pb)) AS BIGINT) AS best_dist
-        |FROM a JOIN b USING (doc_id)
-        |GROUP BY doc_id HAVING min(abs(pa - pb)) <= 5
-        |ORDER BY doc_id""".stripMargin,
-    // levenshtein with the same length-difference lower-bound gate;
-    // DuckDB's uncapped distance equals the capped one inside ≤ maxDist
-    "search_fuzzy" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents),
-        |v AS (
-        | SELECT term, count(*) AS df
-        | FROM (SELECT doc_id, unnest(list_distinct(t)) AS term FROM toks)
-        | GROUP BY term),
-        |q AS (SELECT unnest(['spak', 'strem', 'jion']) AS q)
-        |SELECT q, term, CAST(levenshtein(q, term) AS BIGINT) AS dist, df
-        |FROM v CROSS JOIN q
-        |WHERE abs(len(term) - len(q)) <= 2 AND levenshtein(q, term) <= 2
-        |ORDER BY q, dist, term""".stripMargin,
-    // infix twin: the layout-blind direct scan — LIKE '%park%' over
-    // distinct tokens; the trigram index must change nothing
-    "search_infix" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |                            x -> len(x) > 0) AS t
-        | FROM documents)
-        |SELECT term, count(*) AS df
-        |FROM (SELECT doc_id,
-        |       unnest(list_filter(list_distinct(t), x -> x LIKE '%park%')) AS term
-        |      FROM toks)
-        |GROUP BY term ORDER BY term""".stripMargin,
-    // suggest twin: the fuzzy candidate set + per-probe rank window
-    // (dist, df DESC, term), top 3
-    "search_suggest" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents),
-        |v AS (
-        | SELECT term, count(*) AS df
-        | FROM (SELECT doc_id, unnest(list_distinct(t)) AS term FROM toks)
-        | GROUP BY term),
-        |q AS (SELECT unnest(['spak', 'strem', 'jion']) AS q),
-        |cand AS (
-        | SELECT q, term, CAST(levenshtein(q, term) AS BIGINT) AS dist, df
-        | FROM v CROSS JOIN q
-        | WHERE abs(len(term) - len(q)) <= 2 AND levenshtein(q, term) <= 2),
-        |rk AS (
-        | SELECT q, term, dist, df,
-        |  CAST(row_number() OVER (PARTITION BY q
-        |    ORDER BY dist, df DESC, term) AS BIGINT) AS rank
-        | FROM cand)
-        |SELECT q, rank, term, dist, df FROM rk
-        |WHERE rank <= 3 ORDER BY q, rank""".stripMargin,
-    "search_prefix" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
-        | FROM documents)
-        |SELECT term, count(*) AS df
-        |FROM (SELECT doc_id, unnest(list_filter(list_distinct(t), x -> x LIKE 's%')) AS term FROM toks)
-        |GROUP BY term ORDER BY term""".stripMargin,
-    // SNM twin: global (n_chars, doc_id) rank, auto-window successor
-    // pairs (same density-derived window as Dedup.autoWindow), the
-    // 3-gram Jaccard of dedup_ngram_jaccard, >= 0.5 gate. Overlap
-    // comes from the exploded co-shingle join (count of shared
-    // shingles per doc pair), NOT per-pair list_intersect — at a 10x
-    // sweep the window is 256 and 12.7M list_intersects run ~45x
-    // slower than one shingle equi-join + hash agg; pairs sharing
-    // zero shingles drop at the inner join (their J=0 can't clear the
-    // gate), so the rewrite is lossless. MATERIALIZED fences keep the
-    // shared CTEs single-evaluation.
-    "dedup_snm" ->
+        |r AS (
+        | SELECT stratum, doc_id, key,
+        |  row_number() OVER (PARTITION BY stratum ORDER BY key, doc_id) AS lr
+        | FROM k),
+        |s AS (
+        | SELECT stratum, doc_id, key,
+        |  CAST(lr AS DOUBLE) / CAST(CASE stratum WHEN 'en' THEN 3.0
+        |   WHEN 'zh' THEN 1.5 WHEN 'fr' THEN 0.5 ELSE 1.0 END AS DOUBLE) AS slot
+        | FROM r)
+        |SELECT CAST(row_number() OVER (ORDER BY slot, key, doc_id) - 1 AS BIGINT) AS pos,
+        | stratum, doc_id
+        |FROM s ORDER BY pos""".stripMargin),
+    Entry("dedup_minhash_lsh", (s, dir) =>
+      Dedup.minhashLshPairs(Tables.documents(s, dir))
+        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
+        .orderBy(col("id1"), col("id2")),
+      // signature-family twins: the full FNV-1a/splitmix64 chains
+      // reproduced in HUGEINT-mod-2^64 arithmetic (OracleHashSql), so
+      // the LSH pipelines hash-compare end to end, not rows-only
+      OracleHashSql.minhashSql()),
+    Entry("dedup_simhash", (s, dir) =>
+      Dedup.simhashPairs(Tables.documents(s, dir))
+        .orderBy(col("id1"), col("id2")),
+      OracleHashSql.simhashSql()),
+    // sorted-neighborhood dedup: length-sorted window blocking, exact
+    // Jaccard verification — the linear-candidate alternative to LSH.
+    // window = 0 (auto): derived from n / distinct(n_chars) so recall
+    // survives corpus growth over a fixed key range (Dedup.autoWindow)
+    Entry("dedup_snm", (s, dir) =>
+      Dedup.sortedNeighborhoodPairs(Tables.documents(s, dir),
+          sortCols = Seq("n_chars"), window = 0, minJaccard = 0.5)
+        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
+        .orderBy(col("id1"), col("id2")),
+      // SNM twin: global (n_chars, doc_id) rank, auto-window successor
+      // pairs (same density-derived window as Dedup.autoWindow), the
+      // 3-gram Jaccard of dedup_ngram_jaccard, >= 0.5 gate. Overlap
+      // comes from the exploded co-shingle join (count of shared
+      // shingles per doc pair), NOT per-pair list_intersect — at a 10x
+      // sweep the window is 256 and 12.7M list_intersects run ~45x
+      // slower than one shingle equi-join + hash agg; pairs sharing
+      // zero shingles drop at the inner join (their J=0 can't clear the
+      // gate), so the rewrite is lossless. MATERIALIZED fences keep the
+      // shared CTEs single-evaluation.
       s"""WITH toks AS (
         | SELECT doc_id, n_chars, list_filter(regexp_split_to_array(text, '\\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -2591,11 +1480,18 @@ object SparkEntry {
         | FROM pairs p JOIN co ON co.id1 = p.id1 AND co.id2 = p.id2
         | JOIN sz x ON x.doc_id = p.id1 JOIN sz y ON y.doc_id = p.id2)
         |SELECT id1, id2, round(j, 4) AS jaccard
-        |FROM scored WHERE j >= 0.5 ORDER BY id1, id2""".stripMargin,
-    // full n-gram Jaccard twin: 3-gram word shingles (docs shorter
-    // than 3 tokens collapse to one whole-doc shingle), distinct sets,
-    // |∩| / |∪| — mirrors TextFunctions.wordShingles + verifyJaccard
-    "dedup_ngram_jaccard" ->
+        |FROM scored WHERE j >= 0.5 ORDER BY id1, id2""".stripMargin),
+    Entry("dedup_ngram_jaccard", (s, dir) => {
+      val d = Tables.documents(s, dir)
+      val pairs = d.select(col("doc_id").as("id1"), (col("doc_id") + 1).as("id2"))
+        .where(col("doc_id") < 100)
+      Dedup.verifyJaccard(pairs, d)
+        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
+        .orderBy(col("id1"), col("id2"))
+    },
+      // full n-gram Jaccard twin: 3-gram word shingles (docs shorter
+      // than 3 tokens collapse to one whole-doc shingle), distinct sets,
+      // |∩| / |∪| — mirrors TextFunctions.wordShingles + verifyJaccard
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -2610,11 +1506,14 @@ object SparkEntry {
         | round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
         |       (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS jaccard
         |FROM pairs p JOIN sh a ON a.doc_id = p.id1 JOIN sh b ON b.doc_id = p.id2
-        |ORDER BY id1, id2""".stripMargin,
-    // full-pipeline twin of Dedup.embeddingPairs: SRP sign bits from
-    // the embedded hyperplane literals (same splitmix64 chain), 4-bit
-    // band buckets, the 2..maxBucket size gate, exact-cosine verify
-    "dedup_embedding" ->
+        |ORDER BY id1, id2""".stripMargin),
+    Entry("dedup_embedding", (s, dir) =>
+      Dedup.embeddingPairs(Tables.embeddings(s, dir))
+        .select(col("id1"), col("id2"), round(col("cos"), 4).as("cos"))
+        .orderBy(col("id1"), col("id2")),
+      // full-pipeline twin of Dedup.embeddingPairs: SRP sign bits from
+      // the embedded hyperplane literals (same splitmix64 chain), 4-bit
+      // band buckets, the 2..maxBucket size gate, exact-cosine verify
       s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |${autoSrpBandedSql(4)},
         |ok AS (SELECT band, bhash FROM banded GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 200),
@@ -2625,10 +1524,15 @@ object SparkEntry {
         |SELECT c.id1, c.id2, round(list_cosine_similarity(v1.e, v2.e), 4) AS cos
         |FROM cand c JOIN v v1 ON v1.id = c.id1 JOIN v v2 ON v2.id = c.id2
         |WHERE list_cosine_similarity(v1.e, v2.e) >= 0.35
-        |ORDER BY id1, id2""".stripMargin,
-    // clusters twin: the dedup_embedding pair pipeline feeding a
-    // recursive-CTE transitive closure; component = min reachable id
-    "dedup_clusters" ->
+        |ORDER BY id1, id2""".stripMargin),
+    // pairs → clusters: connected components (union-find on the driver
+    // for small pair lists, the min-label loop otherwise) over the L5
+    // embedding near-dup pairs
+    Entry("dedup_clusters", (s, dir) =>
+      ConnectedComponents.clusters(Dedup.embeddingPairs(Tables.embeddings(s, dir)))
+        .orderBy(col("component")),
+      // clusters twin: the dedup_embedding pair pipeline feeding a
+      // recursive-CTE transitive closure; component = min reachable id
       s"""WITH RECURSIVE v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |${autoSrpBandedSql(4)},
         |ok AS (SELECT band, bhash FROM banded GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 200),
@@ -2648,10 +1552,31 @@ object SparkEntry {
         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
         |SELECT component, count(*) AS n_members,
         | array_to_string(list_sort(list(id)), ',') AS members
-        |FROM comp GROUP BY component ORDER BY component""".stripMargin,
-    // hybrid twin: SNM text pairs ∪ SRP embedding pairs, closed by the
-    // recursive-CTE reachability of dedup_clusters
-    "dedup_hybrid" ->
+        |FROM comp GROUP BY component ORDER BY component""".stripMargin),
+    // TEXT-modality near-dup clusters: MinHash-LSH pairs closed into
+    // components — pairs→groups for the lexical leg, mirroring the
+    // embedding-leg dedup_clusters
+    Entry("dedup_lsh_clusters", (s, dir) =>
+      ConnectedComponents.clusters(Dedup.minhashLshPairs(Tables.documents(s, dir)))
+        .orderBy(col("component")),
+      // lsh-clusters twin: the same HUGEINT minhash chain + the
+      // recursive reachability closure dedup_clusters uses
+      OracleHashSql.minhashClustersSql()),
+    // hybrid semantic dedup: a doc pair is a duplicate if EITHER the
+    // texts are near-dups (SNM window + exact Jaccard) OR the
+    // embeddings are (SRP-banded cosine); union of edges → clusters.
+    // doc_id ≡ vec_id joins the two modalities of the same corpus.
+    Entry("dedup_hybrid", (s, dir) => {
+      val textPairs = Dedup.sortedNeighborhoodPairs(Tables.documents(s, dir),
+          sortCols = Seq("n_chars"), window = 0, minJaccard = 0.5)
+        .select(col("id1"), col("id2"))
+      val embPairs = Dedup.embeddingPairs(Tables.embeddings(s, dir))
+        .select(col("id1"), col("id2"))
+      ConnectedComponents.clusters(textPairs.unionByName(embPairs))
+        .orderBy(col("component"))
+    },
+      // hybrid twin: SNM text pairs ∪ SRP embedding pairs, closed by the
+      // recursive-CTE reachability of dedup_clusters
       s"""WITH RECURSIVE toks AS (
         | SELECT doc_id, n_chars, list_filter(regexp_split_to_array(text, '\\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -2700,24 +1625,57 @@ object SparkEntry {
         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
         |SELECT component, count(*) AS n_members,
         | array_to_string(list_sort(list(id)), ',') AS members
-        |FROM comp GROUP BY component ORDER BY component""".stripMargin,
-    "decontaminate" -> decontaminateOracle,
-    // semantic twin: max benchmark cosine per train vector; the 0.3
-    // decimal literal casts to the identical double in both engines
-    "decontaminate_semantic" ->
+        |FROM comp GROUP BY component ORDER BY component""".stripMargin),
+    // benchmark decontamination: corpus docs sharing a 5-gram with the
+    // (broadcast) benchmark subset, with per-doc hit counts
+    Entry("decontaminate", (s, dir) => {
+      val d = Tables.documents(s, dir)
+      Decontaminate.contaminationHits(
+          d.where(col("doc_id") % 17 =!= 0), d.where(col("doc_id") % 17 === 0))
+        .orderBy(col("doc_id"))
+    },
+      decontaminateOracle),
+    // semantic decontamination: per-train-vector max cosine to the
+    // (broadcast) benchmark subset — the paraphrase-leakage catcher
+    Entry("decontaminate_semantic", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Decontaminate.semanticHits(
+          e.where(col("vec_id") % 23 =!= 0), e.where(col("vec_id") % 23 === 0))
+        .orderBy(col("vec_id"))
+    },
+      // semantic twin: max benchmark cosine per train vector; the 0.3
+      // decimal literal casts to the identical double in both engines
       """WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |b AS (SELECT id, e FROM v WHERE id % 23 = 0),
         |t AS (SELECT id, e FROM v WHERE id % 23 <> 0),
         |m AS (SELECT t.id, max(list_cosine_similarity(t.e, b.e)) AS mc
         |      FROM t, b GROUP BY t.id)
         |SELECT id AS vec_id, round(mc, 4) AS max_cos, mc >= 0.3 AS contaminated
-        |FROM m ORDER BY vec_id""".stripMargin,
-    // the Bloom path only PREFILTERS — the exact join decides, so the
-    // oracle is the very same query
-    "decontaminate_bloom" -> decontaminateOracle,
-    // incremental twin: same SRP banding, corpus-side-only hot-bucket
-    // gate (no 2-member minimum — the batch supplies the second member)
-    "dedup_incremental" ->
+        |FROM m ORDER BY vec_id""".stripMargin),
+    // same decontamination on the Bloom-sketch path: corpus probes a
+    // broadcast Bloom of the benchmark shingles, survivors take a
+    // shuffled exact join — the plan for a benchmark too large to
+    // broadcast exactly. Result-identical to `decontaminate`.
+    Entry("decontaminate_bloom", (s, dir) => {
+      val d = Tables.documents(s, dir)
+      Decontaminate.contaminationHitsBloom(
+          d.where(col("doc_id") % 17 =!= 0), d.where(col("doc_id") % 17 === 0))
+        .orderBy(col("doc_id"))
+    },
+      // the Bloom path only PREFILTERS — the exact join decides, so the
+      // oracle is the very same query
+      decontaminateOracle),
+    // incremental dedup: new batch (vec_id%4=0) probed against the
+    // already-deduped corpus (the rest); corpus×corpus never recomputed
+    Entry("dedup_incremental", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Dedup.embeddingPairsIncremental(
+          e.where(col("vec_id") % 4 =!= 0), e.where(col("vec_id") % 4 === 0))
+        .select(col("new_id"), col("old_id"), round(col("cos"), 4).as("cos"))
+        .orderBy(col("new_id"), col("old_id"))
+    },
+      // incremental twin: same SRP banding, corpus-side-only hot-bucket
+      // gate (no 2-member minimum — the batch supplies the second member)
       s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |${autoSrpBandedSql(4, "WHERE id % 4 <> 0")},
         |cb AS (SELECT * FROM banded WHERE id % 4 <> 0),
@@ -2732,10 +1690,14 @@ object SparkEntry {
         | round(list_cosine_similarity(v1.e, v2.e), 4) AS cos
         |FROM cand JOIN v v1 ON v1.id = cand.new_id JOIN v v2 ON v2.id = cand.old_id
         |WHERE list_cosine_similarity(v1.e, v2.e) >= 0.35
-        |ORDER BY new_id, old_id""".stripMargin,
-    // chunking twin: chunk count 1 + ceil((len-64)/32) for long docs,
-    // 1-based inclusive list slicing t[a:b] = Spark's slice(t, a, 64)
-    "chunk_docs" ->
+        |ORDER BY new_id, old_id""".stripMargin),
+    // sliding-window token chunking (window 64, stride 32): the
+    // context-window slicer between cleaning and packing; zero-shuffle
+    Entry("chunk_docs", (s, dir) =>
+      Chunking.chunkSummary(Tables.documents(s, dir), window = 64, stride = 32)
+        .orderBy(col("doc_id"), col("chunk_idx")),
+      // chunking twin: chunk count 1 + ceil((len-64)/32) for long docs,
+      // 1-based inclusive list slicing t[a:b] = Spark's slice(t, a, 64)
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -2749,11 +1711,15 @@ object SparkEntry {
         |SELECT doc_id, CAST(ci AS BIGINT) AS chunk_idx,
         | CAST(len(t[ci*32+1 : ci*32+64]) AS BIGINT) AS n_toks,
         | md5(array_to_string(t[ci*32+1 : ci*32+64], ' ')) AS h
-        |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin,
-    // packing twin: DuckDB computes the prefix sum as one global
-    // window — correct for an oracle, the exact shape the distributed
-    // implementation avoids
-    "pack_sequences" ->
+        |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin),
+    // sequence packing: two-phase distributed prefix sum over the
+    // corpus order, docs binned into fixed-budget context windows
+    Entry("pack_sequences", (s, dir) =>
+      Packing.packSummary(Tables.documents(s, dir), "n_chars", budget = 4096)
+        .orderBy(col("seq_id")),
+      // packing twin: DuckDB computes the prefix sum as one global
+      // window — correct for an oracle, the exact shape the distributed
+      // implementation avoids
       """WITH c AS (
         | SELECT doc_id AS id, CAST(n_chars AS BIGINT) AS n_tokens,
         |  sum(CAST(n_chars AS BIGINT)) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
@@ -2762,12 +1728,26 @@ object SparkEntry {
         |SELECT CAST(start // 4096 AS BIGINT) AS seq_id, count(*) AS n_docs,
         | CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
         | min(id) AS first_id, max(id) AS last_id
-        |FROM c GROUP BY 1 ORDER BY seq_id""".stripMargin,
-    // end-to-end twin: every pipeline stage replayed in SQL over the
-    // normalized text (dedup keeper = min doc_id per md5; decontam =
-    // NOT EXISTS vs the benchmark shingles; quality = token count +
-    // punct ratio; packing = global-window prefix sum)
-    "pipeline_e2e" ->
+        |FROM c GROUP BY 1 ORDER BY seq_id""".stripMargin),
+    // the composed pipeline a training-data user actually runs:
+    // normalize → exact dedup → decontaminate → quality filter → pack
+    // into context windows. Every stage is the library operator; the
+    // oracle replays the whole chain in SQL.
+    Entry("pipeline_e2e", (s, dir) => {
+      val d = Tables.documents(s, dir)
+        .withColumn("text", TextFunctions.normalizeText(col("text")))
+      val bench = d.where(col("doc_id") % 17 === 0)
+      val corpus = Dedup.dropExactDuplicates(d).where(col("doc_id") % 17 =!= 0)
+      val clean = Decontaminate.decontaminate(corpus, bench)
+      val good = clean.where(
+        TextFunctions.tokenCount(col("text")) >= 10 &&
+          TextFunctions.punctRatio(col("text")) <= 0.2)
+      Packing.packSummary(good, "n_chars", budget = 4096).orderBy(col("seq_id"))
+    },
+      // end-to-end twin: every pipeline stage replayed in SQL over the
+      // normalized text (dedup keeper = min doc_id per md5; decontam =
+      // NOT EXISTS vs the benchmark shingles; quality = token count +
+      // punct ratio; packing = global-window prefix sum)
       s"""WITH norm AS (
         | SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS text, n_chars
         | FROM documents),
@@ -2798,13 +1778,26 @@ object SparkEntry {
         |SELECT CAST(start // 4096 AS BIGINT) AS seq_id, count(*) AS n_docs,
         | CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
         | min(id) AS first_id, max(id) AS last_id
-        |FROM packed GROUP BY 1 ORDER BY seq_id""".stripMargin,
-    "sample_hash" ->
+        |FROM packed GROUP BY 1 ORDER BY seq_id""".stripMargin),
+    // deterministic hash-rate sampling: a scan-stage filter, summarized
+    // per language so membership differences hash-mismatch
+    Entry("sample_hash", (s, dir) =>
+      Sampling.hashRateSample(Tables.documents(s, dir), "doc_id", 0.3)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_ids"))
+        .orderBy(col("lang")),
       s"""SELECT lang, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS sum_ids
         |FROM documents
         |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '${Sampling.rateThresholdHex(0.3)}'
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "sample_mixture" ->
+        |GROUP BY lang ORDER BY lang""".stripMargin),
+    // mixture reweighting: per-source keep-rates as a scan-stage
+    // threshold filter; summarized per source
+    Entry("sample_mixture", (s, dir) =>
+      Sampling.mixtureSample(Tables.documents(s, dir), "source", "doc_id",
+          Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25), defaultRate = 0.1)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_ids"))
+        .orderBy(col("source")),
       s"""SELECT source, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS sum_ids
         |FROM documents
         |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
@@ -2812,17 +1805,28 @@ object SparkEntry {
         |  WHEN 'src1' THEN '${Sampling.rateThresholdHex(0.5)}'
         |  WHEN 'src2' THEN '${Sampling.rateThresholdHex(0.25)}'
         |  ELSE '${Sampling.rateThresholdHex(0.1)}' END
-        |GROUP BY source ORDER BY source""".stripMargin,
-    // A-Res twin: identical ln(u)/w ranking; hex→int via CAST('0x'…)
-    "sample_weighted" ->
+        |GROUP BY source ORDER BY source""".stripMargin),
+    // weighted sampling (Efraimidis-Spirakis A-Res, deterministic
+    // hash randomness): longer docs proportionally likelier
+    Entry("sample_weighted", (s, dir) =>
+      Sampling.weightedSample(Tables.documents(s, dir), "doc_id", "n_chars", 50)
+        .select(col("doc_id"), col("source"), col("n_chars"))
+        .orderBy(col("doc_id")),
+      // A-Res twin: identical ln(u)/w ranking; hex→int via CAST('0x'…)
       """SELECT doc_id, source, n_chars FROM (
         | SELECT doc_id, source, n_chars,
         |  row_number() OVER (ORDER BY
         |   ln((CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) + 1.0)
         |      / 4294967296.0) / n_chars DESC, doc_id) AS rn
         | FROM documents WHERE n_chars > 0)
-        |WHERE rn <= 50 ORDER BY doc_id""".stripMargin,
-    "sample_stratified" ->
+        |WHERE rn <= 50 ORDER BY doc_id""".stripMargin),
+    // per-stratum quota sampling in deterministic md5 order
+    Entry("sample_stratified", (s, dir) =>
+      Sampling.stratifiedQuota(Tables.documents(s, dir), "source", "doc_id", 20)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_sampled"),
+          array_join(array_sort(collect_list(col("doc_id"))), ",").as("ids"))
+        .orderBy(col("source")),
       """SELECT source, count(*) AS n_sampled,
         | array_to_string(list_sort(list(doc_id)), ',') AS ids
         |FROM (
@@ -2830,8 +1834,16 @@ object SparkEntry {
         |  row_number() OVER (PARTITION BY source
         |   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
         | FROM documents)
-        |WHERE rn <= 20 GROUP BY source ORDER BY source""".stripMargin,
-    "text_heavy_hitters" ->
+        |WHERE rn <= 20 GROUP BY source ORDER BY source""".stripMargin),
+    // heavy hitters over the token stream: Misra-Gries candidates
+    // (O(cap) state) + exact bounded re-count; exact result => the
+    // oracle is the plain HAVING query the sketch plan avoids at scale
+    Entry("text_heavy_hitters", (s, dir) =>
+      FrequentItems.heavyHitters(
+          Tables.documents(s, dir)
+            .select(explode(TextFunctions.tokens(col("text"))).as("token")),
+          "token", phi = 0.02)
+        .orderBy(col("item")),
       """WITH tok AS (
         | SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0)) AS item
         | FROM documents),
@@ -2840,18 +1852,25 @@ object SparkEntry {
         | round(count(*) / (SELECT n FROM tot), 4) AS share
         |FROM tok GROUP BY item
         |HAVING count(*) > (SELECT n FROM tot) * 0.02
-        |ORDER BY item""".stripMargin,
-    "text_scrub" ->
+        |ORDER BY item""".stripMargin),
+    Entry("text_scrub", (s, dir) =>
+      Tables.documents(s, dir)
+        .select(col("doc_id"),
+          TextFunctions.countMatches(col("text"), TextFunctions.NumberPattern)
+            .cast("long").as("n_num"),
+          length(TextFunctions.scrubText(col("text"))).cast("long").as("len_scrubbed"))
+        .orderBy(col("doc_id")),
       s"""SELECT doc_id,
         | CAST(len(regexp_extract_all(text, '[0-9]+')) AS BIGINT) AS n_num,
         | CAST(len(regexp_replace(regexp_replace(regexp_replace(text,
         |   'https?://[^\\s]+', '<URL>', 'g'),
         |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
         |   '[0-9]+', '<NUM>', 'g')) AS BIGINT) AS len_scrubbed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // bigram repetition twin: per-(doc, bigram) counts, then top-share
-    // and duplicate-share per doc
-    "text_repetition" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Entry("text_repetition", (s, dir) =>
+      TextStats.ngramRepetition(Tables.documents(s, dir)).orderBy(col("doc_id")),
+      // bigram repetition twin: per-(doc, bigram) counts, then top-share
+      // and duplicate-share per doc
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -2866,10 +1885,13 @@ object SparkEntry {
         |SELECT doc_id, CAST(sum(c) AS BIGINT) AS total,
         | round(CAST(max(c) AS DOUBLE) / sum(c), 4) AS top_frac,
         | round(1 - CAST(count(*) AS DOUBLE) / sum(c), 4) AS dup_frac
-        |FROM cnt GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // code-ratio twin: identical character-class strips (RE2 classes
-    // match Java's here), double division, is_code on unrounded values
-    "text_code_ratio" ->
+        |FROM cnt GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    // X184: code-vs-prose routing signals (symbol/digit/punctuation
+    // densities + the is_code call) — pure per-row regex passes
+    Entry("text_code_ratio", (s, dir) =>
+      TextStats.codeRatio(Tables.documents(s, dir)).orderBy(col("doc_id")),
+      // code-ratio twin: identical character-class strips (RE2 classes
+      // match Java's here), double division, is_code on unrounded values
       """SELECT doc_id,
         | round((len(text) - len(regexp_replace(text, '[^A-Za-z0-9\s]', '', 'g')))
         |   / CAST(len(text) AS DOUBLE), 4) AS symbol_frac,
@@ -2882,28 +1904,30 @@ object SparkEntry {
         |  AND (len(text) - len(regexp_replace(text, '[{}()\[\];=<>]', '', 'g')))
         |   / CAST(len(text) AS DOUBLE) >= 0.01) AS is_code
         |FROM documents WHERE text IS NOT NULL AND len(text) > 0
-        |ORDER BY doc_id""".stripMargin,
-    // BPE twin: 10 unrolled pair-count/argmax/replace iterations over
-    // the same marker-wrapped symbol strings (Bpe.oracleSql)
-    "text_bpe_train" -> Bpe.oracleSql(10),
-    // apply twin: training CTEs + nested replace() chain over b1..b10
-    "text_bpe_apply" -> Bpe.applyOracleSql(10),
-    // skip-gram twin: per-position list slice pairs each token with
-    // its next 2 positions, integer counts, same tiebreaks
-    "text_skipgrams" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |                            x -> len(x) > 0) AS t
-        | FROM documents WHERE text IS NOT NULL),
-        |pos AS (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM toks),
-        |p AS (SELECT t[i] AS a, unnest(t[i+1 : i+2]) AS b FROM pos)
-        |SELECT a, b, count(*) AS n
-        |FROM p GROUP BY a, b
-        |ORDER BY n DESC, a, b LIMIT 20""".stripMargin,
-    // entropy twin: per-(doc, token) counts, H = ln n − Σ c·ln c / n;
-    // ln and the /n division agree across engines (BM25 precedent),
-    // summation-order wobble dies at round(4)
-    "text_entropy" ->
+        |ORDER BY doc_id""".stripMargin),
+    // BPE tokenizer training: 10 greedy merges learned on the
+    // distinct-word table; corpus is scanned exactly once
+    Entry("text_bpe_train", (s, dir) =>
+      Bpe.trainMerges(Tables.documents(s, dir), numMerges = 10)
+        .select(col("rank").cast("long").as("rank"), col("left_sym"),
+          col("right_sym"), col("merged"), col("pair_count"))
+        .orderBy(col("rank")),
+      // BPE twin: 10 unrolled pair-count/argmax/replace iterations over
+      // the same marker-wrapped symbol strings (Bpe.oracleSql)
+      Bpe.oracleSql(10)),
+    // tokenizer apply: the 10 learned merges re-encode the corpus as a
+    // literal replace() chain — per-doc whitespace vs BPE token counts
+    Entry("text_bpe_apply", (s, dir) =>
+      Bpe.trainAndEncode(Tables.documents(s, dir), numMerges = 10)
+        .orderBy(col("doc_id")),
+      // apply twin: training CTEs + nested replace() chain over b1..b10
+      Bpe.applyOracleSql(10)),
+    // token unigram entropy + type-token ratio, one fused scan pass
+    Entry("text_entropy", (s, dir) =>
+      TextStats.tokenEntropy(Tables.documents(s, dir)).orderBy(col("doc_id")),
+      // entropy twin: per-(doc, token) counts, H = ln n − Σ c·ln c / n;
+      // ln and the /n division agree across engines (BM25 precedent),
+      // summation-order wobble dies at round(4)
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -2917,11 +1941,15 @@ object SparkEntry {
         |SELECT doc_id, n_toks, n_types,
         | round(ln(CAST(n_toks AS DOUBLE)) - s / n_toks, 4) AS entropy,
         | round(CAST(n_types AS DOUBLE) / n_toks, 4) AS ttr
-        |FROM a ORDER BY doc_id""".stripMargin,
-    // TF-IDF twin: lowercased \s+ tokens, per-(doc,term) tf, doc
-    // frequency over tf, rational idf (N+1)/(df+1) — identical IEEE
-    // double sequence as the Spark side, so row_number ranking agrees
-    "text_tfidf" ->
+        |FROM a ORDER BY doc_id""".stripMargin),
+    // TF-IDF top-5 keywords per doc; log-free rational idf so the
+    // DuckDB twin reproduces the ranking doubles bit-exactly
+    Entry("text_tfidf", (s, dir) =>
+      TextStats.tfidfTopTerms(Tables.documents(s, dir), k = 5)
+        .orderBy(col("doc_id"), col("rank")),
+      // TF-IDF twin: lowercased \s+ tokens, per-(doc,term) tf, doc
+      // frequency over tf, rational idf (N+1)/(df+1) — identical IEEE
+      // double sequence as the Spark side, so row_number ranking agrees
       """WITH toks AS (
         | SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0)) AS term
         | FROM documents),
@@ -2936,9 +1964,27 @@ object SparkEntry {
         |FROM (SELECT doc_id, term, score,
         |       row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rn
         |      FROM scored)
-        |WHERE rn <= 5 ORDER BY doc_id, rank""".stripMargin,
-    // unigram-LM twin: corpus term counts, -ln(p) averaged per doc
-    "text_lm_score" ->
+        |WHERE rn <= 5 ORDER BY doc_id, rank""".stripMargin),
+    // word2vec-style skip-gram co-occurrence: window-2 pairs counted
+    // corpus-wide, top-20 by count with lexicographic tiebreaks
+    Entry("text_skipgrams", (s, dir) =>
+      TextStats.skipgrams(Tables.documents(s, dir), window = 2, k = 20),
+      // skip-gram twin: per-position list slice pairs each token with
+      // its next 2 positions, integer counts, same tiebreaks
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |                            x -> len(x) > 0) AS t
+        | FROM documents WHERE text IS NOT NULL),
+        |pos AS (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM toks),
+        |p AS (SELECT t[i] AS a, unnest(t[i+1 : i+2]) AS b FROM pos)
+        |SELECT a, b, count(*) AS n
+        |FROM p GROUP BY a, b
+        |ORDER BY n DESC, a, b LIMIT 20""".stripMargin),
+    // unigram-LM mean negative log-likelihood (perplexity stand-in)
+    Entry("text_lm_score", (s, dir) =>
+      TextStats.unigramLogLoss(Tables.documents(s, dir))
+        .orderBy(col("doc_id")),
+      // unigram-LM twin: corpus term counts, -ln(p) averaged per doc
       """WITH toks AS (
         | SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0)) AS term
         | FROM documents),
@@ -2947,10 +1993,13 @@ object SparkEntry {
         |SELECT doc_id, count(*) AS n_tokens,
         | round(avg(-ln(CAST(cnt AS DOUBLE) / t.t)), 4) AS avg_nll
         |FROM toks JOIN vocab USING (term) CROSS JOIN t
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // bigram-LM twin: MLE p(w2|w1) = bigram count / left-context
-    // count, -ln averaged per doc; docs without bigrams report 0/0.0
-    "text_lm_bigram" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    // bigram conditional LM: order-sensitive NLL under MLE p(w2|w1)
+    Entry("text_lm_bigram", (s, dir) =>
+      TextStats.bigramLogLoss(Tables.documents(s, dir))
+        .orderBy(col("doc_id")),
+      // bigram-LM twin: MLE p(w2|w1) = bigram count / left-context
+      // count, -ln averaged per doc; docs without bigrams report 0/0.0
       """WITH t AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS tk
         | FROM documents),
@@ -2968,10 +2017,13 @@ object SparkEntry {
         |SELECT t.doc_id, CAST(coalesce(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
         | coalesce(s.avg_nll, 0.0) AS avg_nll
         |FROM t LEFT JOIN scored s ON s.doc_id = t.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-    // PMI twin: bigram strings via the text_repetition comprehension,
-    // components re-split on the space, identical lift double sequence
-    "text_collocations" ->
+        |ORDER BY t.doc_id""".stripMargin),
+    // top-20 bigram collocations by PMI; ranking on the rational lift
+    // so the top-k SET is engine-exact, ln only on the reported value
+    Entry("text_collocations", (s, dir) =>
+      TextStats.collocations(Tables.documents(s, dir), minCount = 5, k = 20),
+      // PMI twin: bigram strings via the text_repetition comprehension,
+      // components re-split on the space, identical lift double sequence
       """WITH toks AS (
         | SELECT list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -2991,19 +2043,27 @@ object SparkEntry {
         |           JOIN ucnt u2 ON u2.w = string_split(bcnt.b, ' ')[2]
         | CROSS JOIN tot)
         |SELECT bigram, CAST(cb AS BIGINT) AS n, round(ln(lift), 4) AS pmi
-        |FROM scored ORDER BY lift DESC, bigram LIMIT 20""".stripMargin,
-    // reservoir twin: fixed-width hex md5 prefixes order identically
-    // as strings and as the numeric heap score
-    "sample_reservoir" ->
+        |FROM scored ORDER BY lift DESC, bigram LIMIT 20""".stripMargin),
+    // fixed-size deterministic per-group sample via bounded heap (the
+    // "k exemplars per class" contract; stratified = rate-based twin)
+    Entry("sample_reservoir", (s, dir) =>
+      Sampling.reservoirPerGroup(Tables.documents(s, dir), "lang", "doc_id", 10)
+        .orderBy(col("lang"), col("rank")),
+      // reservoir twin: fixed-width hex md5 prefixes order identically
+      // as strings and as the numeric heap score
       """SELECT lang, CAST(rn AS BIGINT) AS rank, doc_id FROM (
         | SELECT lang, doc_id,
         |  row_number() OVER (PARTITION BY lang
         |    ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id) AS rn
         | FROM documents)
-        |WHERE rn <= 10 ORDER BY lang, rank""".stripMargin,
-    // negative-sampling twin: same md5-chain candidate ranks (hex →
-    // int via the 0x cast), row_number-1 rank→id map, cosine verify
-    "sample_negative" ->
+        |WHERE rn <= 10 ORDER BY lang, rank""".stripMargin),
+    // contrastive negative mining: 4 md5-chain candidate draws per
+    // anchor, kept only when exact cosine < 0.5 (false-negative guard)
+    Entry("sample_negative", (s, dir) =>
+      Sampling.negativeSample(Tables.embeddings(s, dir))
+        .orderBy(col("vec_id"), col("j")),
+      // negative-sampling twin: same md5-chain candidate ranks (hex →
+      // int via the 0x cast), row_number-1 rank→id map, cosine verify
       """WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |r AS (SELECT id, row_number() OVER (ORDER BY id) - 1 AS rank FROM v),
         |n AS (SELECT count(*) AS cnt FROM v),
@@ -3020,12 +2080,28 @@ object SparkEntry {
         | round(list_cosine_similarity(a.e, b.e), 4) + 0 AS cos
         |FROM m JOIN v a ON a.id = m.vec_id JOIN v b ON b.id = m.neg_id
         |WHERE list_cosine_similarity(a.e, b.e) < 0.5
-        |ORDER BY vec_id, j""".stripMargin,
-    // incremental-SNM twin: dedup_snm's rank + auto window with a
-    // batch flag, cross-membership pairs only, oriented new→old;
-    // overlap from the co-shingle join keyed on the UNORDERED
-    // (least, greatest) pair since orientation is a projection
-    "dedup_snm_incremental" ->
+        |ORDER BY vec_id, j""".stripMargin),
+    // incremental text dedup: new batch (doc_id%7=0) ranked into the
+    // corpus order, only cross pairs verified — corpus x corpus never
+    // recomputed (the text twin of dedup_incremental). The split
+    // modulus is COPRIME with the amplifier's factor on purpose:
+    // ScaleUp remaps ids as id*factor+rep, so a %10 split at 10x put
+    // every rep-0 doc in the batch and every replica in the corpus —
+    // all cross pairs crossed replica sets, which share no shingles
+    // by construction, and the entry returned a true-but-vacuous zero
+    // (caught by the ratio guard, round 9)
+    Entry("dedup_snm_incremental", (s, dir) => {
+      val d = Tables.documents(s, dir)
+      Dedup.sortedNeighborhoodIncremental(
+          d.where(col("doc_id") % 7 =!= 0), d.where(col("doc_id") % 7 === 0),
+          sortCols = Seq("n_chars"), window = 0, minJaccard = 0.5)
+        .select(col("new_id"), col("old_id"), round(col("jaccard"), 4).as("jaccard"))
+        .orderBy(col("new_id"), col("old_id"))
+    },
+      // incremental-SNM twin: dedup_snm's rank + auto window with a
+      // batch flag, cross-membership pairs only, oriented new→old;
+      // overlap from the co-shingle join keyed on the UNORDERED
+      // (least, greatest) pair since orientation is a projection
       s"""WITH toks AS (
         | SELECT doc_id, n_chars, list_filter(regexp_split_to_array(text, '\\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -3058,12 +2134,19 @@ object SparkEntry {
         |        AND co.id2 = greatest(p.new_id, p.old_id)
         | JOIN sz x ON x.doc_id = p.new_id JOIN sz y ON y.doc_id = p.old_id)
         |SELECT new_id, old_id, round(j, 4) AS jaccard
-        |FROM scored WHERE j >= 0.5 ORDER BY new_id, old_id""".stripMargin,
-    // containment twin: the dedup_snm candidate window (auto width)
-    // scored with one-sided |∩|/|A| and |∩|/|B|, max-direction gate;
-    // same lossless co-shingle-join overlap as the dedup_snm twin
-    // (zero-overlap pairs have c1=c2=0 and can't clear the gate)
-    "dedup_containment" ->
+        |FROM scored WHERE j >= 0.5 ORDER BY new_id, old_id""".stripMargin),
+    // one-sided (containment) near-dup over the SNM candidate window:
+    // catches subsumption that symmetric Jaccard misses
+    Entry("dedup_containment", (s, dir) =>
+      Dedup.containmentPairs(Tables.documents(s, dir),
+          sortCols = Seq("n_chars"), window = 0, minContainment = 0.5)
+        .select(col("id1"), col("id2"),
+          round(col("c1"), 4).as("c1"), round(col("c2"), 4).as("c2"))
+        .orderBy(col("id1"), col("id2")),
+      // containment twin: the dedup_snm candidate window (auto width)
+      // scored with one-sided |∩|/|A| and |∩|/|B|, max-direction gate;
+      // same lossless co-shingle-join overlap as the dedup_snm twin
+      // (zero-overlap pairs have c1=c2=0 and can't clear the gate)
       s"""WITH toks AS (
         | SELECT doc_id, n_chars, list_filter(regexp_split_to_array(text, '\\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -3092,12 +2175,21 @@ object SparkEntry {
         | FROM pairs p JOIN co ON co.id1 = p.id1 AND co.id2 = p.id2
         | JOIN sz x ON x.doc_id = p.id1 JOIN sz y ON y.doc_id = p.id2)
         |SELECT id1, id2, round(c1, 4) AS c1, round(c2, 4) AS c2
-        |FROM scored WHERE greatest(c1, c2) >= 0.5 ORDER BY id1, id2""".stripMargin,
-    // multi-pass SNM twin: each pass derives ITS OWN window from ITS
-    // key set's density (pass 2 over distinct (lang, n_chars) tuples),
-    // windows union + dedup before the one co-shingle-join verify —
-    // the same lossless overlap rewrite as the dedup_snm twin
-    "dedup_snm_multipass" ->
+        |FROM scored WHERE greatest(c1, c2) >= 0.5 ORDER BY id1, id2""".stripMargin),
+    // X189: multi-pass SNM — union of the n_chars window and a
+    // (lang, n_chars) window, one shared Jaccard verify; the
+    // documented escape hatch when one key's density outgrows the
+    // window cap (a second key recovers what the first sort separates)
+    Entry("dedup_snm_multipass", (s, dir) =>
+      Dedup.sortedNeighborhoodMultiPass(Tables.documents(s, dir),
+          keySets = Seq(Seq("n_chars"), Seq("lang", "n_chars")),
+          window = 0, minJaccard = 0.5)
+        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
+        .orderBy(col("id1"), col("id2")),
+      // multi-pass SNM twin: each pass derives ITS OWN window from ITS
+      // key set's density (pass 2 over distinct (lang, n_chars) tuples),
+      // windows union + dedup before the one co-shingle-join verify —
+      // the same lossless overlap rewrite as the dedup_snm twin
       s"""WITH toks AS (
         | SELECT doc_id, lang, n_chars, list_filter(regexp_split_to_array(text, '\\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -3137,12 +2229,20 @@ object SparkEntry {
         | FROM pairs p JOIN co ON co.id1 = p.id1 AND co.id2 = p.id2
         | JOIN sz x ON x.doc_id = p.id1 JOIN sz y ON y.doc_id = p.id2)
         |SELECT id1, id2, round(j, 4) AS jaccard
-        |FROM scored WHERE j >= 0.5 ORDER BY id1, id2""".stripMargin,
-    // edit-distance twin: same auto-window candidate pairs, DuckDB's
-    // levenshtein == Spark's (plain Wagner-Fischer, no transposition),
-    // identical 64-char prefix and normalization; threshold on the
-    // unrounded similarity
-    "dedup_edit_distance" ->
+        |FROM scored WHERE j >= 0.5 ORDER BY id1, id2""".stripMargin),
+    // X182: char-level near-dup pairs — the SNM candidate window
+    // verified by normalized edit distance over 64-char prefixes;
+    // catches OCR/typo drift that shreds word shingles (the prefix
+    // bound keeps the O(|a|·|b|) DP a per-candidate constant)
+    Entry("dedup_edit_distance", (s, dir) =>
+      Dedup.editDistancePairs(Tables.documents(s, dir),
+          sortCols = Seq("n_chars"), window = 0, minSim = 0.6, prefixChars = 64)
+        .select(col("id1"), col("id2"), round(col("sim"), 4).as("sim"))
+        .orderBy(col("id1"), col("id2")),
+      // edit-distance twin: same auto-window candidate pairs, DuckDB's
+      // levenshtein == Spark's (plain Wagner-Fischer, no transposition),
+      // identical 64-char prefix and normalization; threshold on the
+      // unrounded similarity
       s"""WITH $snmWindowSql,
         |ranked AS (SELECT doc_id, row_number() OVER (ORDER BY n_chars, doc_id) - 1 AS rank
         |           FROM documents),
@@ -3158,12 +2258,16 @@ object SparkEntry {
         |  END AS sim
         | FROM pairs p JOIN t a ON a.doc_id = p.id1 JOIN t b ON b.doc_id = p.id2)
         |SELECT id1, id2, round(sim, 4) AS sim
-        |FROM scored WHERE sim >= 0.6 ORDER BY id1, id2""".stripMargin,
-    // semantic-dedup twin: the same fixed-centroid assignment as the
-    // ann_ivf_fixed oracle (ties to the HIGHEST cell), then a vector is
-    // dropped iff some lower-id vector in its cell clears the cosine
-    // threshold
-    "dedup_semantic" ->
+        |FROM scored WHERE sim >= 0.6 ORDER BY id1, id2""".stripMargin),
+    // SemDeDup-shape semantic dedup: fixed-centroid clustering, then
+    // keep-lowest-id within-cell cosine dedup
+    Entry("dedup_semantic", (s, dir) =>
+      Dedup.semanticDedup(Tables.embeddings(s, dir))
+        .orderBy(col("vec_id")),
+      // semantic-dedup twin: the same fixed-centroid assignment as the
+      // ann_ivf_fixed oracle (ties to the HIGHEST cell), then a vector is
+      // dropped iff some lower-id vector in its cell clears the cosine
+      // threshold
       s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |ctr AS (SELECT * FROM (VALUES
         |   ${ivfCentroidValuesSql(16, 64)}) t(cell, c)),
@@ -3181,12 +2285,18 @@ object SparkEntry {
         |SELECT a.id AS vec_id, CAST(a.cell AS BIGINT) AS cell,
         | (d.id IS NOT NULL) AS dropped
         |FROM assigned a LEFT JOIN dropped d ON d.id = a.id
-        |ORDER BY vec_id""".stripMargin,
-    // fixed-centroid IVF twin: the ±1 centroid literals come from the
-    // same splitmix64 chain as Similarity.fixedCentroids; assignment
-    // ties break to the HIGHEST cell (max struct order), probe ties to
-    // the LOWEST cell (TopKBuffer order: score DESC, id ASC)
-    "ann_ivf_fixed" ->
+        |ORDER BY vec_id""".stripMargin),
+    Entry("ann_ivf_fixed", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.ivfFixedTopK(e.where(col("vec_id") < 8), e, 10)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+                round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("rank"))
+    },
+      // fixed-centroid IVF twin: the ±1 centroid literals come from the
+      // same splitmix64 chain as Similarity.fixedCentroids; assignment
+      // ties break to the HIGHEST cell (max struct order), probe ties to
+      // the LOWEST cell (TopKBuffer order: score DESC, id ASC)
       s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |ctr AS (SELECT * FROM (VALUES
         |   ${ivfCentroidValuesSql(16, 64)}) t(cell, c)),
@@ -3211,23 +2321,31 @@ object SparkEntry {
         |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
         | FROM rescored)
         |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
-        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    // centroid twin: per-(label, pos) avg over zipped unnests, rounded
-    // to 6 like the operator's centroid (absorbing double-summation
-    // order), list reassembled in pos order, cosine rounded to 4
-    "embed_centroid" ->
+        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    // per-label centroid + each vector's cosine to its own centroid
+    // (semantic outlier score); centroid = ONE O(dim)-state aggregate
+    // (graft_vec_sum), broadcast back — embeddings never shuffle
+    Entry("embed_centroid", (s, dir) =>
+      EmbeddingStats.centroidCosine(Tables.embeddings(s, dir))
+        .orderBy(col("vec_id")),
+      // centroid twin: per-(label, pos) avg over zipped unnests, rounded
+      // to 6 like the operator's centroid (absorbing double-summation
+      // order), list reassembled in pos order, cosine rounded to 4
       """WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |u AS (SELECT label, unnest(e) AS x, unnest(range(1, len(e)+1)) AS pos FROM v),
         |c AS (SELECT label, pos, round(avg(x), 6) AS m FROM u GROUP BY 1, 2),
         |ctr AS (SELECT label, list(m ORDER BY pos) AS c FROM c GROUP BY label)
         |SELECT v.vec_id, v.label,
         | round(list_cosine_similarity(v.e, ctr.c), 4) + 0 AS c_cos
-        |FROM v JOIN ctr USING (label) ORDER BY vec_id""".stripMargin,
-    // covariance twin: identical round(x·1e6) integer quantization,
-    // exact DECIMAL sums, the same closed-form double formula; the
-    // trailing + 0 folds DuckDB's IEEE -0.0 into +0.0 (Spark's
-    // BigDecimal round never emits a signed zero)
-    "embed_cov" ->
+        |FROM v JOIN ctr USING (label) ORDER BY vec_id""".stripMargin),
+    // exact dim-covariance matrix: integer-quantized DECIMAL sums
+    // (order-independent), closed-form cov over exact sums
+    Entry("embed_cov", (s, dir) =>
+      EmbeddingStats.covarianceMatrix(Tables.embeddings(s, dir)),
+      // covariance twin: identical round(x·1e6) integer quantization,
+      // exact DECIMAL sums, the same closed-form double formula; the
+      // trailing + 0 folds DuckDB's IEEE -0.0 into +0.0 (Spark's
+      // BigDecimal round never emits a signed zero)
       """WITH dims AS (
         | SELECT id, CAST(pos AS BIGINT) - 1 AS i,
         |  CAST(round(CAST(x AS DOUBLE) * 1e6, 0) AS DECIMAL(38,0)) AS xq
@@ -3243,15 +2361,27 @@ object SparkEntry {
         |        CAST(ma.sx AS DOUBLE) * CAST(mb.sx AS DOUBLE)) /
         |       (CAST(ma.n AS DOUBLE) * CAST(ma.n AS DOUBLE) * 1e12), 6) + 0 AS cov
         |FROM p JOIN marg ma ON ma.i = p.i JOIN marg mb ON mb.i = p.j
-        |ORDER BY p.i, p.j""".stripMargin,
-    // PCA twin: 8 unrolled integer power-iteration rounds + the
-    // integer dot projection (pcaOracleSql)
-    "embed_pca" -> pcaOracleSql(8),
-    "embed_abtt" -> abttOracleSql(8),
-    // int8 twin: same max-abs half-up quantization (identical double
-    // op order: x/maxabs*127+0.5, then code·(maxabs/127)), then the
-    // exact-top-k pipeline over the dequantized vectors
-    "embed_quantize" ->
+        |ORDER BY p.i, p.j""".stripMargin),
+    // top-PC projection: integer power iteration on the d×d matrix
+    // (bounded metadata), per-row exact-long dot inside the scan
+    Entry("embed_pca", (s, dir) =>
+      EmbeddingStats.pcaProjection(Tables.embeddings(s, dir)),
+      // PCA twin: 8 unrolled integer power-iteration rounds + the
+      // integer dot projection (pcaOracleSql)
+      pcaOracleSql(8)),
+    // X196: all-but-the-top post-processing — removed top-PC
+    // coefficient + residual norm per vector (Mu & Viswanath 2018)
+    Entry("embed_abtt", (s, dir) =>
+      EmbeddingStats.allButTop(Tables.embeddings(s, dir)),
+      abttOracleSql(8)),
+    // scalar int8 quantization summary: codes pinned via saturation
+    // count + code sum, plus the original↔dequantized cosine retention
+    Entry("embed_quantize", (s, dir) =>
+      Quantization.quantizeSummary(Tables.embeddings(s, dir))
+        .orderBy(col("vec_id")),
+      // int8 twin: same max-abs half-up quantization (identical double
+      // op order: x/maxabs*127+0.5, then code·(maxabs/127)), then the
+      // exact-top-k pipeline over the dequantized vectors
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |m AS (SELECT vec_id, e, list_max([abs(x) for x in e]) AS maxabs FROM v),
         |q AS (
@@ -3265,8 +2395,19 @@ object SparkEntry {
         | round(maxabs / 127, 6) AS scale,
         | round(list_cosine_similarity(e,
         |   [CAST(x AS DOUBLE) * (maxabs / 127) for x in qv]), 4) AS cos_ret
-        |FROM q ORDER BY vec_id""".stripMargin,
-    "ann_int8" ->
+        |FROM q ORDER BY vec_id""".stripMargin),
+    // the ANN family running unchanged over the compressed store:
+    // exact top-k over dequantized int8 vectors (the 4×-less-memory
+    // scale path; recall vs float32 exact is pinned in the spec)
+    Entry("ann_int8", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.bruteForceTopK(
+          Quantization.dequantized(e.where(col("vec_id") < 8)),
+          Quantization.dequantized(e), 10)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+                round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("rank"))
+    },
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |m AS (SELECT vec_id, e, list_max([abs(x) for x in e]) AS maxabs FROM v),
         |dq AS (
@@ -3285,10 +2426,18 @@ object SparkEntry {
         |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
         | FROM scored)
         |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
-        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    // PQ twin: same ±1 codebooks as VALUES; assignment ties (s DESC,
-    // code DESC) match max(struct(s, code)); ADC = Σ_j lut[j, code_j]
-    "ann_pq" ->
+        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    // product quantization: 8 nibble codes per 64-dim vector (64× vs
+    // float32); ADC scoring via broadcast per-query LUTs + graft_topk
+    Entry("ann_pq", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      ProductQuantization.adcTopK(e.where(col("vec_id") < 8), e, 10)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+                round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("rank"))
+    },
+      // PQ twin: same ±1 codebooks as VALUES; assignment ties (s DESC,
+      // code DESC) match max(struct(s, code)); ADC = Σ_j lut[j, code_j]
       s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |cb AS (SELECT * FROM (VALUES
         |   ${pqCodebookValuesSql(8, 16, 8)}) t(j, code, cvec)),
@@ -3315,14 +2464,150 @@ object SparkEntry {
         |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
         | FROM adc)
         |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
-        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    "ann_mmr" -> mmrOracleSql(k = 8, m = 20, lambda = 0.7),
-    // data-adapted IVF twin — expressible because the entry's k-means
-    // is ONE deterministic Lloyd pass: seeds = 16 lowest-id vectors,
-    // assignment ties to the HIGHEST cell (max-struct), per-(cell,pos)
-    // means rounded to 6 (the operator's own run-to-run stabilizer),
-    // memberless cells keep their seed, probe ties to the LOWEST cell
-    "ann_ivf" ->
+        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    // MMR-diversified retrieval: top-20 pool re-ranked so each pick
+    // trades relevance against redundancy; greedy runs as the per-row
+    // graft_mmr kernel — zero shuffle beyond the m-row pool gather
+    Entry("ann_mmr", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.mmrTopK(e.where(col("vec_id") < 8), e, k = 8, m = 20, lambda = 0.7)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+                round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("rank"))
+    },
+      mmrOracleSql(k = 8, m = 20, lambda = 0.7)),
+    // IVF-PQ: probe-restricted ADC — cells bound WHICH candidates are
+    // scored, codes bound the BYTES per candidate; the composed index
+    // a billion-vector deployment actually runs
+    Entry("ann_ivf_pq", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      ProductQuantization.ivfPqTopK(e.where(col("vec_id") < 8), e, 10)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+                round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("rank"))
+    },
+      // IVF-PQ twin: the ann_ivf_fixed cell CTEs (assignment ties s
+      // DESC, cell DESC; probe ties s DESC, cell ASC) composed with the
+      // ann_pq code/LUT CTEs; candidates outside probed cells never
+      // reach the ADC sum
+      s"""$ivfPqAdcRankedSql
+        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
+        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    // two-stage retrieval: IVF-PQ nominates a top-30 pool per query,
+    // the pool alone re-scores exactly against the full vectors
+    Entry("ann_rerank", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      ProductQuantization.rerankTopK(e.where(col("vec_id") < 8), e, 10, poolSize = 30)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+                round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("rank"))
+    },
+      // two-stage twin: the ADC ranking above nominates the top-30 pool,
+      // the pool re-scores against the full vectors exactly
+      s"""$ivfPqAdcRankedSql,
+        |pool AS (SELECT q_id, c_id FROM ranked WHERE rank <= 30),
+        |ex AS (
+        | SELECT p.q_id, p.c_id, list_cosine_similarity(vq.e, vc.e) AS s
+        | FROM pool p JOIN v vq ON vq.vec_id = p.q_id
+        | JOIN v vc ON vc.vec_id = p.c_id),
+        |rr AS (
+        | SELECT q_id, c_id, s,
+        |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
+        | FROM ex)
+        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
+        |FROM rr WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    Entry("ann_bruteforce", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.bruteForceTopK(e.where(col("vec_id") < 8), e, 10)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+                round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("rank"))
+    },
+      // exact twin: all-pairs cosine + top-10 per query, ties broken
+      // (score DESC, c_id ASC) like the TopKBuffer total order
+      """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
+        |           FROM embeddings WHERE vec_id < 8),
+        |c AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+        |scored AS (
+        | SELECT q_id, c_id, list_cosine_similarity(qv, cv) AS s
+        | FROM q CROSS JOIN c WHERE q_id <> c_id),
+        |ranked AS (
+        | SELECT q_id, c_id, s,
+        |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
+        | FROM scored)
+        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
+        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    // filtered vector search: the metadata predicate applies BEFORE
+    // scoring (pre-filter), so top-k is exact within the filtered set
+    // — post-filtering a global top-k silently under-fills k; the
+    // label predicate reaches the parquet scan (PushedFilters)
+    Entry("ann_filtered", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.bruteForceTopK(e.where(col("vec_id") < 8), e.where(col("label") <= 2), 10)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+                round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("rank"))
+    },
+      """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
+        |           FROM embeddings WHERE vec_id < 8),
+        |c AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS cv
+        |      FROM embeddings WHERE label <= 2),
+        |scored AS (
+        | SELECT q_id, c_id, list_cosine_similarity(qv, cv) AS s
+        | FROM q CROSS JOIN c WHERE q_id <> c_id),
+        |ranked AS (
+        | SELECT q_id, c_id, s,
+        |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
+        | FROM scored)
+        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
+        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    Entry("ann_lsh", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.lshTopK(e.where(col("vec_id") < 8), e, 10)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+                round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("rank"))
+    },
+      // full-pipeline twin of Similarity.lshTopK: SRP banding + exact
+      // bucket + flip-one-bit multiprobe, distinct candidates, exact
+      // cosine, top-10 per query
+      s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        |bits AS (SELECT id, e, ${srpBitsSql(16, 64)} FROM v),
+        |banded AS (${srpBandedSql(16, 4)}),
+        |qb AS (SELECT id AS q_id, band, bhash FROM banded WHERE id < 8),
+        |qprobe AS (
+        | SELECT q_id, band, bhash FROM qb
+        | UNION ALL SELECT q_id, band, xor(bhash, 1) FROM qb
+        | UNION ALL SELECT q_id, band, xor(bhash, 2) FROM qb
+        | UNION ALL SELECT q_id, band, xor(bhash, 4) FROM qb
+        | UNION ALL SELECT q_id, band, xor(bhash, 8) FROM qb),
+        |cand AS (
+        | SELECT DISTINCT q_id, b.id AS c_id
+        | FROM qprobe p JOIN banded b ON p.band = b.band AND p.bhash = b.bhash
+        | WHERE p.q_id <> b.id),
+        |scored AS (
+        | SELECT q_id, c_id, list_cosine_similarity(v1.e, v2.e) AS s
+        | FROM cand JOIN v v1 ON v1.id = q_id JOIN v v2 ON v2.id = c_id),
+        |ranked AS (
+        | SELECT q_id, c_id, s,
+        |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
+        | FROM scored)
+        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
+        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    Entry("ann_ivf", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      // one Lloyd pass here: the entry rebuilds the index per call,
+      // whereas a real deployment amortizes the build over many queries
+      Similarity.ivfTopK(e.where(col("vec_id") < 8), e, 10, iters = 1)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+                round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("rank"))
+    },
+      // data-adapted IVF twin — expressible because the entry's k-means
+      // is ONE deterministic Lloyd pass: seeds = 16 lowest-id vectors,
+      // assignment ties to the HIGHEST cell (max-struct), per-(cell,pos)
+      // means rounded to 6 (the operator's own run-to-run stabilizer),
+      // memberless cells keep their seed, probe ties to the LOWEST cell
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |seeds AS (
         | SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, e AS c
@@ -3364,90 +2649,14 @@ object SparkEntry {
         |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
         | FROM rescored)
         |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
-        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    // IVF-PQ twin: the ann_ivf_fixed cell CTEs (assignment ties s
-    // DESC, cell DESC; probe ties s DESC, cell ASC) composed with the
-    // ann_pq code/LUT CTEs; candidates outside probed cells never
-    // reach the ADC sum
-    "ann_ivf_pq" ->
-      s"""$ivfPqAdcRankedSql
-        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
-        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    // two-stage twin: the ADC ranking above nominates the top-30 pool,
-    // the pool re-scores against the full vectors exactly
-    "ann_rerank" ->
-      s"""$ivfPqAdcRankedSql,
-        |pool AS (SELECT q_id, c_id FROM ranked WHERE rank <= 30),
-        |ex AS (
-        | SELECT p.q_id, p.c_id, list_cosine_similarity(vq.e, vc.e) AS s
-        | FROM pool p JOIN v vq ON vq.vec_id = p.q_id
-        | JOIN v vc ON vc.vec_id = p.c_id),
-        |rr AS (
-        | SELECT q_id, c_id, s,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
-        | FROM ex)
-        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
-        |FROM rr WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    // exact twin: all-pairs cosine + top-10 per query, ties broken
-    // (score DESC, c_id ASC) like the TopKBuffer total order
-    "ann_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |scored AS (
-        | SELECT q_id, c_id, list_cosine_similarity(qv, cv) AS s
-        | FROM q CROSS JOIN c WHERE q_id <> c_id),
-        |ranked AS (
-        | SELECT q_id, c_id, s,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
-        | FROM scored)
-        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
-        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    "ann_filtered" ->
-      """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS cv
-        |      FROM embeddings WHERE label <= 2),
-        |scored AS (
-        | SELECT q_id, c_id, list_cosine_similarity(qv, cv) AS s
-        | FROM q CROSS JOIN c WHERE q_id <> c_id),
-        |ranked AS (
-        | SELECT q_id, c_id, s,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
-        | FROM scored)
-        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
-        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    // full-pipeline twin of Similarity.lshTopK: SRP banding + exact
-    // bucket + flip-one-bit multiprobe, distinct candidates, exact
-    // cosine, top-10 per query
-    "ann_lsh" ->
-      s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |bits AS (SELECT id, e, ${srpBitsSql(16, 64)} FROM v),
-        |banded AS (${srpBandedSql(16, 4)}),
-        |qb AS (SELECT id AS q_id, band, bhash FROM banded WHERE id < 8),
-        |qprobe AS (
-        | SELECT q_id, band, bhash FROM qb
-        | UNION ALL SELECT q_id, band, xor(bhash, 1) FROM qb
-        | UNION ALL SELECT q_id, band, xor(bhash, 2) FROM qb
-        | UNION ALL SELECT q_id, band, xor(bhash, 4) FROM qb
-        | UNION ALL SELECT q_id, band, xor(bhash, 8) FROM qb),
-        |cand AS (
-        | SELECT DISTINCT q_id, b.id AS c_id
-        | FROM qprobe p JOIN banded b ON p.band = b.band AND p.bhash = b.bhash
-        | WHERE p.q_id <> b.id),
-        |scored AS (
-        | SELECT q_id, c_id, list_cosine_similarity(v1.e, v2.e) AS s
-        | FROM cand JOIN v v1 ON v1.id = q_id JOIN v v2 ON v2.id = c_id),
-        |ranked AS (
-        | SELECT q_id, c_id, s,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
-        | FROM scored)
-        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, round(s, 4) AS score
-        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    // stopword-profile scoring twin of the LangIdKernel: per-language
-    // hit counts over whitespace tokens, highest score wins, ties to
-    // the lexicographically greatest code, zero hits → 'und'
-    "text_langid" ->
+        |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    Entry("text_langid", (s, dir) =>
+      Tables.documents(s, dir)
+        .groupBy(TextFunctions.langIdText(col("text")).as("detected"))
+        .agg(count(lit(1)).as("n")).orderBy(col("detected")),
+      // stopword-profile scoring twin of the LangIdKernel: per-language
+      // hit counts over whitespace tokens, highest score wins, ties to
+      // the lexicographically greatest code, zero hits → 'und'
       s"""WITH t AS (
         | SELECT list_filter(regexp_split_to_array(text, '\\s+'), x -> len(x) > 0) AS toks
         | FROM documents),
@@ -3455,8 +2664,22 @@ object SparkEntry {
         |  $langidScoresSql
         | FROM t)
         |SELECT $langidWinnerSql AS detected, count(*) AS n
-        |FROM s GROUP BY 1 ORDER BY detected""".stripMargin,
-    "text_quality" ->
+        |FROM s GROUP BY 1 ORDER BY detected""".stripMargin),
+    Entry("text_quality", (s, dir) =>
+      Tables.documents(s, dir)
+        .select(col("lang"), col("text"), TextFunctions.tokens(col("text")).as("toks"))
+        .select(col("lang"),
+          TextFunctions.punctRatio(col("text")).as("pr"),
+          TextFunctions.stopwordRatioFromTokens(col("toks"), TextFunctions.Stopwords.en).as("sr"),
+          TextFunctions.repetitionRatioFromTokens(col("toks")).as("rr"),
+          size(col("toks")).as("tc"))
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          round(avg(col("pr")), 4).as("avg_punct"),
+          round(avg(col("sr")), 4).as("avg_stop"),
+          round(avg(col("rr")), 4).as("avg_rep"),
+          round(avg(col("tc")), 4).as("avg_tokens"))
+        .orderBy(col("lang")),
       """WITH t AS (
         | SELECT lang, text,
         |  list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS toks,
@@ -3467,10 +2690,24 @@ object SparkEntry {
         | round(avg(CASE WHEN len(toks) > 0 THEN CAST(len(list_filter(toks, tok -> list_contains(['the','a','an','and','of','to','in','is','that','it','for','was'], lower(tok)))) AS DOUBLE)/len(toks) ELSE 0 END), 4) AS avg_stop,
         | round(avg(CASE WHEN len(toks) > 0 THEN 1 - CAST(len(list_distinct(toks)) AS DOUBLE)/len(toks) ELSE 0 END), 4) AS avg_rep,
         | round(avg(len(toks)), 4) AS avg_tokens
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-    // quality-funnel twin: string 2-grams stand in for the kernel's
-    // hashed grams (identical multiplicities barring 64-bit collisions)
-    "quality_filter" ->
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
+    Entry("text_tokens", (s, dir) =>
+      Tables.documents(s, dir)
+        .select(col("doc_id"),
+          TextFunctions.tokenCount(col("text")).cast("long").as("n_ws"),
+          TextFunctions.bpeTokenCount(col("text")).cast("long").as("n_bpe"))
+        .orderBy(col("doc_id")),
+      """SELECT doc_id,
+        | CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0)) AS BIGINT) AS n_ws,
+        | CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]')) AS BIGINT) AS n_bpe
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // the composed Gopher-style quality GATE as a per-(lang, source)
+    // funnel: per-rule reject counts + survivors
+    Entry("quality_filter", (s, dir) =>
+      graft.operators.TextStats.qualityFunnel(Tables.documents(s, dir))
+        .orderBy(col("lang"), col("source")),
+      // quality-funnel twin: string 2-grams stand in for the kernel's
+      // hashed grams (identical multiplicities barring 64-bit collisions)
       """WITH t AS (
         | SELECT lang, source, text,
         |  list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS tk
@@ -3496,16 +2733,18 @@ object SparkEntry {
         | CAST(sum(CASE WHEN tg > 0.10 THEN 1 ELSE 0 END) AS BIGINT) AS n_rep,
         | CAST(sum(CASE WHEN sr < 0.03 THEN 1 ELSE 0 END) AS BIGINT) AS n_stop,
         | CAST(sum(CASE WHEN pr > 0.10 THEN 1 ELSE 0 END) AS BIGINT) AS n_punct
-        |FROM s GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "text_tokens" ->
-      """SELECT doc_id,
-        | CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0)) AS BIGINT) AS n_ws,
-        | CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]')) AS BIGINT) AS n_bpe
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // strlen = BYTE length (the Spark side derives features from the
-    // UTF-8 payload's byte count); DuckDB len() counts characters and
-    // only coincides on ASCII testdata
-    "mm_decode_stats" ->
+        |FROM s GROUP BY lang, source ORDER BY lang, source""".stripMargin),
+    Entry("text_fingerprint", (s, dir) =>
+      Tables.documents(s, dir)
+        .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
+        .select(col("doc_id"), size(col("fp")).cast("long").as("n_fp"),
+          array_min(col("fp")).as("fp_min"), array_max(col("fp")).as("fp_max"))
+        .orderBy(col("doc_id")),
+      OracleHashSql.fingerprintSql()),
+    Entry("mm_decode_stats", graft.multimodal.Multimodal.decodeStats _,
+      // strlen = BYTE length (the Spark side derives features from the
+      // UTF-8 payload's byte count); DuckDB len() counts characters and
+      // only coincides on ASCII testdata
       """SELECT CASE WHEN doc_id % 3 = 0 THEN 'image'
         |            WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
         | count(*) AS n,
@@ -3513,11 +2752,15 @@ object SparkEntry {
         | round(avg(16 + ((strlen(text) * 7) % 211)), 4) AS avg_h,
         | CAST(sum(CASE WHEN doc_id % 3 = 2 THEN 1 + (strlen(text) % 5) ELSE 1 END) AS BIGINT) AS sum_frames,
         | CAST(sum(strlen(text)) AS BIGINT) AS sum_bytes
-        |FROM documents GROUP BY 1 ORDER BY kind""".stripMargin,
-    // audio twin: payloads are the ASCII text bytes, so the stub PCM
-    // stats recompute from ascii() codes; exact-integer sums divide to
-    // the identical double before rounding
-    "mm_audio_stats" ->
+        |FROM documents GROUP BY 1 ORDER BY kind""".stripMargin),
+    // audio modality path: per-clip amplitude stats from the stub PCM
+    // decode (bytes as unsigned 8-bit samples)
+    Entry("mm_audio_stats", (s, dir) =>
+      graft.multimodal.Multimodal.audioStats(s, dir)
+        .orderBy(col("media_id")),
+      // audio twin: payloads are the ASCII text bytes, so the stub PCM
+      // stats recompute from ascii() codes; exact-integer sums divide to
+      // the identical double before rounding
       """WITH a AS (
         | SELECT doc_id AS media_id, text FROM documents WHERE doc_id % 3 = 1),
         |b AS (
@@ -3528,37 +2771,80 @@ object SparkEntry {
         | CAST(n * 1000 // 16000 AS BIGINT) AS duration_ms,
         | round(CASE WHEN n > 0 THEN list_sum(bs) * 1.0 / n ELSE 0.0 END, 4) AS mean_amp,
         | round(CASE WHEN n > 0 THEN len(list_filter(bs, x -> x >= 120)) * 1.0 / n ELSE 0.0 END, 4) AS clip_frac
-        |FROM b ORDER BY media_id""".stripMargin,
-    // frame-sample twin: stub frame count (videos: 1 + bytes%5, else
-    // 1), every-2nd-frame sampling → ceil(n/2) frames, last idx is the
-    // greatest even index below n
-    "mm_frame_sample" ->
+        |FROM b ORDER BY media_id""".stripMargin),
+    // frame-sample plumbing: every-2nd-frame fan-out per video inside
+    // mapPartitions batches; summarized per media row (the stub frame
+    // digest is 64-bit-hash-valued, so the oracle checks the fan-out
+    // structure — counts and last sampled index — not the digest)
+    Entry("mm_frame_sample", (s, dir) =>
+      graft.multimodal.Multimodal.sampleFrames(
+          graft.multimodal.Multimodal.mediaFromDocuments(s, dir)).toDF()
+        .groupBy(col("media_id"))
+        .agg(count(lit(1)).as("n_sampled"), max(col("frame_idx")).as("last_idx"))
+        .orderBy(col("media_id")),
+      // frame-sample twin: stub frame count (videos: 1 + bytes%5, else
+      // 1), every-2nd-frame sampling → ceil(n/2) frames, last idx is the
+      // greatest even index below n
       """WITH m AS (
         | SELECT doc_id AS media_id,
         |  CASE WHEN doc_id % 3 = 2 THEN 1 + (strlen(text) % 5) ELSE 1 END AS n_frames
         | FROM documents)
         |SELECT media_id, CAST((n_frames + 1) // 2 AS BIGINT) AS n_sampled,
         | CAST(((n_frames - 1) // 2) * 2 AS INTEGER) AS last_idx
-        |FROM m ORDER BY media_id""".stripMargin,
-    "q_asof_join" ->
+        |FROM m ORDER BY media_id""".stripMargin),
+    Entry("q_sessionize", (s, dir) =>
+      graft.streaming.Sessionize.batch(Tables.events(s, dir), gapMinutes = 480),
+      """WITH f AS (
+        | SELECT user_id, ts, value, epoch_us(ts) AS us,
+        |  CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+        |       OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) > 28800000000
+        |       THEN 1 ELSE 0 END AS brk
+        | FROM events),
+        |s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS session_id FROM f)
+        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events,
+        | round(sum(value), 2) AS total_value,
+        | (max(us) - min(us)) / 1e6 AS duration_secs
+        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin),
+    Entry("q_asof_join", (s, dir) => {
+      val ev = Tables.events(s, dir)
+      val purchases = ev.where(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"), col("value"))
+      AsOfJoin.lastValueAsOf(ev, purchases, "user_id", "ts", "value", "last_purchase")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+                round(col("last_purchase"), 2).as("last_purchase"))
+        .orderBy(col("event_id"))
+    },
       """SELECT l.event_id, l.user_id, l.event_type, round(r.value, 2) AS last_purchase
         |FROM events l ASOF LEFT JOIN
         | (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') r
         | ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-    // tolerance twin: the plain ASOF pick, voided by the same
-    // integer-microsecond staleness CASE the operator applies
-    "q_asof_tolerance" ->
+        |ORDER BY l.event_id""".stripMargin),
+    // X181: as-of with a 48 h staleness tolerance — the backward match
+    // voids when older than the tolerance (filter after the window,
+    // never a join predicate)
+    Entry("q_asof_tolerance", (s, dir) => {
+      val ev = Tables.events(s, dir)
+      val purchases = ev.where(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"), col("value"))
+      AsOfJoin.lastValueAsOfWithin(ev, purchases, "user_id", "ts", "value",
+          "recent_purchase", 172800000000L)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          round(col("recent_purchase"), 2).as("recent_purchase"))
+        .orderBy(col("event_id"))
+    },
+      // tolerance twin: the plain ASOF pick, voided by the same
+      // integer-microsecond staleness CASE the operator applies
       """SELECT l.event_id, l.user_id, l.event_type,
         | round(CASE WHEN epoch_us(l.ts) - epoch_us(r.ts) <= 172800000000
         |   THEN r.value END, 2) AS recent_purchase
         |FROM events l ASOF LEFT JOIN
         | (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') r
         | ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-    // TWAP twin: identical lead-duration weighting with the same
-    // DECIMAL-exact value×microseconds sum
-    "q_twap" ->
+        |ORDER BY l.event_id""".stripMargin),
+    // X180: per-user time-weighted average value
+    Entry("q_twap", graft.operators.TimeSeries.twapPerUser _,
+      // TWAP twin: identical lead-duration weighting with the same
+      // DECIMAL-exact value×microseconds sum
       """WITH e AS (
         | SELECT user_id, ts, event_id, CAST(value AS DECIMAL(18,2)) AS v,
         |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nts
@@ -3568,10 +2854,38 @@ object SparkEntry {
         |SELECT user_id,
         | round(CAST(sum(v * dur) AS DOUBLE) / CAST(sum(dur) AS DOUBLE), 6) AS twap,
         | CAST(sum(dur) AS BIGINT) AS span
-        |FROM d GROUP BY user_id HAVING sum(dur) > 0 ORDER BY user_id""".stripMargin,
-    // nearest twin: both ASOF directions chained, CASE on exact
-    // integer-microsecond distances, backward wins ties
-    "q_asof_nearest" ->
+        |FROM d GROUP BY user_id HAVING sum(dur) > 0 ORDER BY user_id""".stripMargin),
+    // forward as-of: next purchase at-or-after each event — the
+    // mirrored one-exchange union+window, inclusive at equal ts
+    Entry("q_asof_forward", (s, dir) => {
+      val ev = Tables.events(s, dir)
+      val purchases = ev.where(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"), col("value"))
+      AsOfJoin.firstValueAsOfForward(ev, purchases, "user_id", "ts", "value", "next_purchase")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+                round(col("next_purchase"), 2).as("next_purchase"))
+        .orderBy(col("event_id"))
+    },
+      // forward twin: DuckDB's native forward ASOF (l.ts <= r.ts picks
+      // the nearest following purchase), inclusive at equal ts
+      """SELECT l.event_id, l.user_id, l.event_type, round(r.value, 2) AS next_purchase
+        |FROM events l ASOF LEFT JOIN
+        | (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') r
+        | ON l.user_id = r.user_id AND l.ts <= r.ts
+        |ORDER BY l.event_id""".stripMargin),
+    // nearest as-of: closer of before/after purchase, backward ties —
+    // one sort serves both direction frames
+    Entry("q_asof_nearest", (s, dir) => {
+      val ev = Tables.events(s, dir)
+      val purchases = ev.where(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"), col("value"))
+      AsOfJoin.nearestValueAsOf(ev, purchases, "user_id", "ts", "value", "nearest_purchase")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+                round(col("nearest_purchase"), 2).as("nearest_purchase"))
+        .orderBy(col("event_id"))
+    },
+      // nearest twin: both ASOF directions chained, CASE on exact
+      // integer-microsecond distances, backward wins ties
       """SELECT l.event_id, l.user_id, l.event_type,
         | round(CASE
         |   WHEN b.ts IS NULL THEN f.value
@@ -3586,144 +2900,95 @@ object SparkEntry {
         | ASOF LEFT JOIN
         |  (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') f
         |  ON l.user_id = f.user_id AND l.ts <= f.ts
-        |ORDER BY l.event_id""".stripMargin,
-    // forward twin: DuckDB's native forward ASOF (l.ts <= r.ts picks
-    // the nearest following purchase), inclusive at equal ts
-    "q_asof_forward" ->
-      """SELECT l.event_id, l.user_id, l.event_type, round(r.value, 2) AS next_purchase
-        |FROM events l ASOF LEFT JOIN
-        | (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') r
-        | ON l.user_id = r.user_id AND l.ts <= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-    "q_range_join" ->
+        |ORDER BY l.event_id""".stripMargin),
+    Entry("q_range_join", (s, dir) => {
+      val intervals = Tables.nation(s, dir).select(
+        col("n_nationkey").cast("long").as("bucket"),
+        (col("n_nationkey") * 20.0).as("lo"),
+        (col("n_nationkey") * 20.0 + 25.0).as("hi"))
+      RangeJoin.pointInInterval(Tables.events(s, dir), "value", intervals, "lo", "hi",
+          binWidth = 25.0)
+        .groupBy(col("bucket"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+        .orderBy(col("bucket"))
+    },
       """SELECT CAST(n_nationkey AS BIGINT) AS bucket, count(*) AS n,
         | round(sum(value), 2) AS sum_value
         |FROM events e JOIN nation n
         | ON e.value >= n.n_nationkey * 20.0 AND e.value < n.n_nationkey * 20.0 + 25.0
-        |GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "q_skew_agg" ->
+        |GROUP BY 1 ORDER BY bucket""".stripMargin),
+    Entry("q_skew_agg", (s, dir) =>
+      Skew.saltedSumCount(Tables.lineitem(s, dir), "l_returnflag", "l_quantity")
+        .select(col("l_returnflag"), round(col("sum_value"), 2).as("sum_value"), col("n"))
+        .orderBy(col("l_returnflag")),
       """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_value, count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // large-IN twin: the literal list verbatim — the rewrite must be
-    // semantically invisible
-    "q_large_in" ->
-      s"""SELECT l_returnflag, count(*) AS n,
-        | round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem WHERE l_partkey IN (${largeInKeys.mkString(", ")})
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // bucketed-join twin: bucketing is a layout property, invisible to
-    // the result of the join + rollup
-    "q_bucketed_join" ->
-      """SELECT o_custkey, count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // skew-join twin: the salt is invisible to the result, so the
-    // oracle is the plain join + rational above-average count
-    "q_skew_join" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // salted shuffle join on a 3-value (maximally hot) key; the
+    // above-average predicate is the rational q*n > sum form so the
+    // threshold is FP-exact in both engines
+    Entry("q_skew_join", (s, dir) => {
+      val li = Tables.lineitem(s, dir).select("l_returnflag", "l_quantity")
+      val flagTotals = li.groupBy(col("l_returnflag"))
+        .agg(sum(col("l_quantity")).as("sum_q"), count(lit(1)).as("n_q"))
+      Skew.saltedJoin(li, flagTotals, "l_returnflag")
+        .groupBy(col("l_returnflag"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("l_quantity") * col("n_q") > col("sum_q"), 1L)
+            .otherwise(0L)).as("n_above"))
+        .orderBy(col("l_returnflag"))
+    },
+      // skew-join twin: the salt is invisible to the result, so the
+      // oracle is the plain join + rational above-average count
       """WITH ft AS (
         | SELECT l_returnflag, sum(l_quantity) AS sum_q, count(*) AS n_q
         | FROM lineitem GROUP BY l_returnflag)
         |SELECT l.l_returnflag, count(*) AS n,
         | CAST(sum(CASE WHEN l.l_quantity * ft.n_q > ft.sum_q THEN 1 ELSE 0 END) AS BIGINT) AS n_above
         |FROM lineitem l JOIN ft USING (l_returnflag)
-        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin,
-    "q_sessionize" ->
-      """WITH f AS (
-        | SELECT user_id, ts, value, epoch_us(ts) AS us,
-        |  CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |       OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) > 28800000000
-        |       THEN 1 ELSE 0 END AS brk
-        | FROM events),
-        |s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS session_id FROM f)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events,
-        | round(sum(value), 2) AS total_value,
-        | (max(us) - min(us)) / 1e6 AS duration_secs
-        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    "ii_nested_field_values" ->
-      """SELECT CASE WHEN user_id % 3 = 0 THEN 'us-east'
-        |            WHEN user_id % 3 = 1 THEN 'us-west'
-        |            ELSE 'eu-central' END AS value,
-        | count(*) AS n_docs,
-        | array_to_string(list_sort(list(event_id)), ',') AS doc_ids
-        |FROM events GROUP BY 1 ORDER BY value""".stripMargin,
-    // jsonl twin: the round trip is lossless for these columns (2-dp
-    // doubles print shortest-repr and parse back exact), so clean rows
-    // aggregate straight off the parquet; the 3 injected malformed
-    // lines appear as the __corrupt sentinel row
-    "ingest_jsonl" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY event_type
-        |UNION ALL
-        |SELECT '__corrupt', CAST(3 AS BIGINT), 0.0
-        |ORDER BY event_type""".stripMargin,
-    // csv twin: same shape — the quoted round trip is lossless for
-    // these columns, so clean rows aggregate straight off the parquet
-    // and the 3 injected un-typeable lines count under the sentinel
-    "ingest_csv" ->
-      """SELECT lang, source, count(*) AS n,
-        | CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        | CAST(sum(length(text)) AS BIGINT) AS sum_text_len
-        |FROM documents GROUP BY 1, 2
-        |UNION ALL
-        |SELECT '__corrupt', '__corrupt', CAST(3 AS BIGINT),
-        | CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-        |ORDER BY lang, source""".stripMargin,
-    // mv-merge twin: the FULL one-shot aggregation — the stored-MV +
-    // delta merge must land on exactly this (DECIMAL sums make the
-    // split point invisible)
-    "q_mv_merge" ->
-      """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
-        | count(*) AS n,
-        | round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*), 4) AS avg_value,
-        | round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    // as-of twin: the rebuild a reader at version 2 would see —
-    // batches 0..2 of the doc_id mod-4 replay
-    "ii_index_asof" ->
-      """SELECT lang AS value, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_docs,
-        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
-        |FROM documents WHERE doc_id % 4 <= 2
-        |GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin,
-    // corr twin: both engines' one-pass co-moment formulas agree to
-    // well past the reported 4 decimals
-    "stats_corr" ->
-      """SELECT l_returnflag, count(*) AS n,
-        | round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "ingest_nested_json" ->
-      """SELECT event_type AS level,
-        | CASE WHEN user_id % 3 = 0 THEN 'us-east'
-        |      WHEN user_id % 3 = 1 THEN 'us-west'
-        |      ELSE 'eu-central' END AS source_region,
-        | count(*) AS n,
-        | CAST(sum(event_id % 37) AS BIGINT) AS sum_clicks,
-        | round(avg(CAST(floor(value * 100) AS BIGINT)), 4) AS avg_payload,
-        | CAST(sum(CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_processed
-        |FROM events GROUP BY 1, 2 ORDER BY level, source_region""".stripMargin,
-    "clustered_write_scan" ->
-      s"""SELECT doc_id, lang, source, n_chars FROM documents
-        |WHERE doc_id IN ($iiDocIdsSql) ORDER BY doc_id""".stripMargin,
-    "zorder_scan" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_extendedprice
-        |FROM lineitem
-        |WHERE l_partkey BETWEEN 100 AND 299 AND l_orderkey BETWEEN 1000 AND 3999
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // hilbert twin: identical to the zorder twin — the curve is a
-    // physical layout, the query result is layout-invariant
-    "hilbert_scan" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_extendedprice
-        |FROM lineitem
-        |WHERE l_partkey BETWEEN 100 AND 299 AND l_orderkey BETWEEN 1000 AND 3999
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "partitioned_scan" ->
-      """SELECT source, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents WHERE lang = 'en'
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "q_scan_filter" ->
+        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin),
+    // the X10 optimizer rule driver-gated: a 1200-literal IN list
+    // (above the rewrite threshold) becomes range-prune + the
+    // graft_doc_id_in membership kernel
+    Entry("q_large_in", (s, dir) =>
+      Tables.lineitem(s, dir)
+        .where(col("l_partkey").isin(largeInKeys: _*))
+        .groupBy(col("l_returnflag"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("l_quantity")), 2).as("sum_qty"))
+        .orderBy(col("l_returnflag")),
+      // large-IN twin: the literal list verbatim — the rewrite must be
+      // semantically invisible
+      s"""SELECT l_returnflag, count(*) AS n,
+        | round(sum(l_quantity), 2) AS sum_qty
+        |FROM lineitem WHERE l_partkey IN (${largeInKeys.mkString(", ")})
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // the X11 bucketed layout driver-gated: both sides persisted
+    // bucketBy(8, k) + sortBy, joined with zero exchange (asserted in
+    // BucketedTablesSpec), then rolled up per customer
+    Entry("q_bucketed_join", (s, dir) => {
+      val li = Tables.lineitem(s, dir)
+        .select(col("l_orderkey").as("k"), col("l_quantity"))
+      val ord = Tables.orders(s, dir)
+        .select(col("o_orderkey").as("k"), col("o_custkey"))
+      graft.sources.BucketedTables.write(li, "graft_q_bli", "k", 8)
+      graft.sources.BucketedTables.write(ord, "graft_q_bord", "k", 8)
+      graft.sources.BucketedTables.join(s, "graft_q_bli", "graft_q_bord", "k")
+        .groupBy(col("o_custkey"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("l_quantity")), 2).as("sum_qty"))
+        .orderBy(col("o_custkey"))
+    },
+      // bucketed-join twin: bucketing is a layout property, invisible to
+      // the result of the join + rollup
+      """SELECT o_custkey, count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+    // §2.2 relational core
+    Entry("q_scan_filter", Relational.scanFilter _,
       """SELECT l_orderkey, l_linenumber, l_extendedprice, l_discount FROM lineitem
         |WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q1_agg" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Entry("q1_agg", Relational.q1Agg _,
       """SELECT l_returnflag, l_linestatus,
         | round(sum(l_quantity),2) AS sum_qty,
         | round(sum(l_extendedprice),2) AS sum_base_price,
@@ -3732,12 +2997,12 @@ object SparkEntry {
         | round(avg(l_discount),4) AS avg_disc,
         | count(*) AS count_order
         |FROM lineitem WHERE l_quantity > 0
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_join_broadcast" ->
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Entry("q_join_broadcast", Relational.joinBroadcast _,
       """SELECT c_mktsegment, round(sum(o_totalprice),2) AS revenue, count(*) AS n_orders
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q5_multijoin" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Entry("q5_multijoin", Relational.multiJoin _,
       """SELECT n_name, round(sum(l_extendedprice*(1-l_discount)),2) AS revenue, count(*) AS n_lines
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
@@ -3745,34 +3010,34 @@ object SparkEntry {
         |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
         |JOIN nation ON s_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA' GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q_semi_anti" ->
+        |WHERE r_name = 'ASIA' GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Entry("q_semi_anti", Relational.semiAnti _,
       """SELECT * FROM (
         |SELECT 'has_orders' AS kind, c_mktsegment, count(*) AS n FROM customer
         | WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) GROUP BY c_mktsegment
         |UNION ALL
         |SELECT 'no_orders' AS kind, c_mktsegment, count(*) AS n FROM customer
         | WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) GROUP BY c_mktsegment
-        |) ORDER BY kind, c_mktsegment""".stripMargin,
-    "q_distinct" ->
+        |) ORDER BY kind, c_mktsegment""".stripMargin),
+    Entry("q_distinct", Relational.distinctCounts _,
       """SELECT count(DISTINCT l_partkey) AS n_parts, count(DISTINCT l_suppkey) AS n_supps,
         | count(DISTINCT l_orderkey) AS n_orders, count(*) AS n_rows,
         | TRUE AS apx_parts_ok, TRUE AS apx_supps_ok, TRUE AS apx_orders_ok
-        |FROM lineitem""".stripMargin,
-    "q_topk" ->
+        |FROM lineitem""".stripMargin),
+    Entry("q_topk", Relational.topK _,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q_window" ->
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin),
+    Entry("q_window", Relational.windowFns _,
       """SELECT o_custkey, o_orderkey, rk, running FROM (
         | SELECT o_custkey, o_orderkey,
         |  rank() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk,
         |  round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |    ROWS UNBOUNDED PRECEDING),2) AS running
         | FROM orders)
-        |WHERE rk <= 2 ORDER BY o_custkey, rk, o_orderkey""".stripMargin,
-    // navigation-window twin: the custkey filter selects whole window
-    // partitions, so pre-window WHERE placement is equivalent
-    "q_window_nav" ->
+        |WHERE rk <= 2 ORDER BY o_custkey, rk, o_orderkey""".stripMargin),
+    Entry("q_window_nav", Relational.navWindow _,
+      // navigation-window twin: the custkey filter selects whole window
+      // partitions, so pre-window WHERE placement is equivalent
       """SELECT o_custkey, o_orderkey,
         | round(o_totalprice - lag(o_totalprice, 1)
         |   OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey), 2) AS prev_delta,
@@ -3783,29 +3048,8 @@ object SparkEntry {
         | round(cume_dist()
         |   OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey), 4) AS cdist
         |FROM orders WHERE o_custkey % 100 = 0
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q_full_outer" ->
-      """SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
-        | coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
-        |FROM (SELECT c_nationkey AS nationkey, count(*) AS n_cust
-        |      FROM customer WHERE c_nationkey >= 5 GROUP BY 1) c
-        |FULL OUTER JOIN
-        |     (SELECT s_nationkey AS nationkey, count(*) AS n_supp
-        |      FROM supplier WHERE s_nationkey < 10 GROUP BY 1) s
-        |ON c.nationkey = s.nationkey
-        |ORDER BY nationkey""".stripMargin,
-    "q_exists_subquery" ->
-      """SELECT c_custkey, c_mktsegment FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_scalar_subquery" ->
-      """SELECT o_orderkey,
-        | round(o_totalprice / (SELECT max(o_totalprice) FROM orders), 4) AS price_ratio
-        |FROM orders
-        |WHERE o_totalprice > 0.9 * (SELECT max(o_totalprice) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_intersect_except" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Entry("q_intersect_except", Relational.intersectExcept _,
       """SELECT 'both' AS rel, nationkey FROM (
         |  SELECT c_nationkey AS nationkey FROM customer
         |  INTERSECT
@@ -3815,29 +3059,50 @@ object SparkEntry {
         |  SELECT c_nationkey AS nationkey FROM customer
         |  EXCEPT
         |  SELECT s_nationkey FROM supplier)
-        |ORDER BY rel, nationkey""".stripMargin,
-    "q_time_window" ->
+        |ORDER BY rel, nationkey""".stripMargin),
+    Entry("q_full_outer", Relational.fullOuter _,
+      """SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
+        | coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
+        |FROM (SELECT c_nationkey AS nationkey, count(*) AS n_cust
+        |      FROM customer WHERE c_nationkey >= 5 GROUP BY 1) c
+        |FULL OUTER JOIN
+        |     (SELECT s_nationkey AS nationkey, count(*) AS n_supp
+        |      FROM supplier WHERE s_nationkey < 10 GROUP BY 1) s
+        |ON c.nationkey = s.nationkey
+        |ORDER BY nationkey""".stripMargin),
+    Entry("q_exists_subquery", Relational.existsSubquery _,
+      """SELECT c_custkey, c_mktsegment FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
+        |ORDER BY c_custkey""".stripMargin),
+    Entry("q_scalar_subquery", Relational.scalarSubquery _,
+      """SELECT o_orderkey,
+        | round(o_totalprice / (SELECT max(o_totalprice) FROM orders), 4) AS price_ratio
+        |FROM orders
+        |WHERE o_totalprice > 0.9 * (SELECT max(o_totalprice) FROM orders)
+        |ORDER BY o_orderkey""".stripMargin),
+    Entry("q_time_window", Relational.timeWindow _,
       """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
         | count(*) AS n, round(sum(value),2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    // sliding twin: the 4 window starts covering an event are the 6h
-    // bucket floor minus i·6h for i in 0..3 (epoch-aligned like Spark)
-    "q_sliding_window" ->
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
+    Entry("q_sliding_window", Relational.slidingWindow _,
+      // sliding twin: the 4 window starts covering an event are the 6h
+      // bucket floor minus i·6h for i in 0..3 (epoch-aligned like Spark)
       """SELECT strftime(to_timestamp((epoch_us(ts) // 21600000000 - i) * 21600),
         |        '%Y-%m-%d %H') AS win_start,
         | event_type, count(*) AS n, round(sum(value), 2) AS sum_value
         |FROM events CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS i) s
-        |GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin,
-    "q_json_extract" ->
+        |GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin),
+    Entry("q_json_extract", Relational.jsonExtract _,
       """SELECT event_type, count(*) AS n,
         | round(avg(CAST(json_extract_string(props,'$.k') AS BIGINT)),4) AS avg_k,
         | CAST(sum(CAST(json_extract_string(props,'$.k') AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_explode_tokens" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Entry("q_explode_tokens", Relational.explodeTokens _,
       """SELECT token, count(*) AS n FROM (
         | SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-        |WHERE length(token) > 0 GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin,
-    "q_union_case" ->
+        |WHERE length(token) > 0 GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin),
+    Entry("q_union_case", Relational.unionCase _,
       """SELECT src, bucket, count(*) AS n FROM (
         | SELECT 'orders' AS src,
         |  CASE WHEN o_totalprice > 300000 THEN 'hi' WHEN o_totalprice > 100000 THEN 'mid'
@@ -3846,10 +3111,18 @@ object SparkEntry {
         | SELECT 'lineitem' AS src,
         |  CASE WHEN l_quantity >= 40 THEN 'hi' WHEN l_quantity >= 15 THEN 'mid'
         |   ELSE 'lo' END AS bucket FROM lineitem)
-        |GROUP BY src, bucket ORDER BY src, bucket""".stripMargin,
-    // window row_number twin of the bounded-heap aggregate; identical
-    // (score DESC, id ASC) total order as TopKBuffer
-    "q_grouped_topk" ->
+        |GROUP BY src, bucket ORDER BY src, bucket""".stripMargin),
+    Entry("q_rollup", Relational.rollupAgg _,
+      """SELECT CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL' ELSE l_returnflag END AS rf,
+        | CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL' ELSE l_linestatus END AS ls,
+        | round(sum(l_quantity), 2) AS sum_qty,
+        | round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n
+        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
+        |ORDER BY rf, ls""".stripMargin),
+    Entry("q_grouped_topk", (s, dir) =>
+      Relational.groupedTopK(s, dir).orderBy(col("c_mktsegment"), col("rank")),
+      // window row_number twin of the bounded-heap aggregate; identical
+      // (score DESC, id ASC) total order as TopKBuffer
       """SELECT c_mktsegment, CAST(rn AS BIGINT) AS rank, o_orderkey,
         | round(o_totalprice, 2) AS o_totalprice
         |FROM (
@@ -3857,41 +3130,48 @@ object SparkEntry {
         |  row_number() OVER (PARTITION BY c_mktsegment
         |   ORDER BY o_totalprice DESC, o_orderkey) AS rn
         | FROM orders JOIN customer ON o_custkey = c_custkey)
-        |WHERE rn <= 3 ORDER BY c_mktsegment, rank""".stripMargin,
-    "q_rollup" ->
-      """SELECT CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL' ELSE l_returnflag END AS rf,
-        | CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL' ELSE l_linestatus END AS ls,
-        | round(sum(l_quantity), 2) AS sum_qty,
-        | round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin,
-    "q_cube" ->
+        |WHERE rn <= 3 ORDER BY c_mktsegment, rank""".stripMargin),
+    Entry("q_cube", Relational.cubeAgg _,
       """SELECT CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL' ELSE l_returnflag END AS rf,
         | CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL' ELSE l_linestatus END AS ls,
         | round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
         |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin,
-    "q_pivot" ->
+        |ORDER BY rf, ls""".stripMargin),
+    Entry("q_pivot", Relational.pivotLangCounts _,
       """SELECT source,
         | count(*) FILTER (WHERE lang = 'de') AS de,
         | count(*) FILTER (WHERE lang = 'en') AS en,
         | count(*) FILTER (WHERE lang = 'es') AS es,
         | count(*) FILTER (WHERE lang = 'fr') AS fr,
         | count(*) FILTER (WHERE lang = 'zh') AS zh
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    // unpivot twin: the melt preserves the dense grid, so absent
-    // (source, lang) combos come back as explicit n=0 rows via the
-    // source × value-list cross join
-    "q_unpivot" ->
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+    Entry("q_unpivot", Relational.unpivotLangCounts _,
+      // unpivot twin: the melt preserves the dense grid, so absent
+      // (source, lang) combos come back as explicit n=0 rows via the
+      // source × value-list cross join
       """WITH s AS (SELECT DISTINCT source FROM documents),
         |l AS (SELECT unnest(['de', 'en', 'es', 'fr', 'zh']) AS lang),
         |c AS (SELECT source, lang, count(*) AS n FROM documents GROUP BY 1, 2)
         |SELECT s.source, l.lang, CAST(coalesce(c.n, 0) AS BIGINT) AS n
         |FROM s CROSS JOIN l LEFT JOIN c USING (source, lang)
-        |ORDER BY source, lang""".stripMargin,
-    // upsert twin: same derived batch; batch-wins = column coalesce
-    // (batch payloads are never null, so struct coalesce == per-column)
-    "q_upsert" ->
+        |ORDER BY source, lang""".stripMargin),
+    // keyed upsert: +100 balance on keys %10=3 (updates), re-keyed
+    // copies of keys %50=0 (inserts); everything else carries over
+    Entry("q_upsert", (s, dir) => {
+      val c = Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
+      val updates = c.where(col("c_custkey") % 10 === 3)
+        .withColumn("c_acctbal", round(col("c_acctbal") + 100.0, 2))
+      val inserts = c.where(col("c_custkey") % 50 === 0)
+        .withColumn("c_custkey", col("c_custkey") + 1000000L)
+      Relational.upsert(c, updates.unionByName(inserts), "c_custkey")
+        .select(col("c_custkey"), col("row.c_name").as("c_name"),
+          col("row.c_acctbal").as("c_acctbal"),
+          col("row.c_mktsegment").as("c_mktsegment"), col("status"))
+        .orderBy(col("c_custkey"))
+    },
+      // upsert twin: same derived batch; batch-wins = column coalesce
+      // (batch payloads are never null, so struct coalesce == per-column)
       """WITH base AS (
         | SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer),
         |up AS (
@@ -3909,10 +3189,10 @@ object SparkEntry {
         |      WHEN b.c_custkey IS NULL THEN 'inserted'
         |      ELSE 'kept' END AS status
         |FROM base b FULL OUTER JOIN batch t ON b.c_custkey = t.c_custkey
-        |ORDER BY c_custkey""".stripMargin,
-    // RANGE frame twin: identical micros order key and 7-day bound;
-    // value through DECIMAL so the frame sum is exact in both engines
-    "q_range_frame" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Entry("q_range_frame", Relational.rangeFrameWindow _,
+      // RANGE frame twin: identical micros order key and 7-day bound;
+      // value through DECIMAL so the frame sum is exact in both engines
       """SELECT user_id, event_id,
         | CAST(count(*) OVER w AS BIGINT) AS n_7d,
         | CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_7d
@@ -3920,35 +3200,22 @@ object SparkEntry {
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
         | RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)
         |QUALIFY user_id % 10 = 0
-        |ORDER BY user_id, event_id""".stripMargin,
-    // profile twin: TRY_CAST mirrors Spark's null-on-failure string→
-    // double cast for the non-numeric column's min/max
-    "stats_profile" ->
-      Seq("l_discount", "l_extendedprice", "l_quantity", "l_returnflag").map { c =>
-        s"""SELECT '$c' AS col_name, count(*) AS n_rows,
-           | CAST(count(*) - count($c) AS BIGINT) AS n_nulls,
-           | TRY_CAST(min($c) AS DOUBLE) AS min_v,
-           | TRY_CAST(max($c) AS DOUBLE) AS max_v,
-           | CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct
-           |FROM lineitem""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY col_name"),
-    // quantile_cont = the same (1-f)·lower + f·upper linear
-    // interpolation at rank p·(n-1) Spark's exact `percentile` uses
-    "q_quantiles" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Entry("q_quantiles", Relational.quantiles _,
+      // quantile_cont = the same (1-f)·lower + f·upper linear
+      // interpolation at rank p·(n-1) Spark's exact `percentile` uses
       """SELECT l_returnflag,
         | round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
         | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
         | round(quantile_cont(l_extendedprice, 0.75), 4) AS p75,
         | round(quantile_cont(l_extendedprice, 0.95), 4) AS p95,
         | count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_histogram" ->
-      """SELECT CAST(floor(l_extendedprice / 5000.0) * 5000.0 AS BIGINT) AS bin,
-        | count(*) AS n, round(avg(l_discount), 4) AS avg_disc
-        |FROM lineitem GROUP BY bin ORDER BY bin""".stripMargin,
-    // trimmed-mean twin: same exact [p10, p90] band (quantile_cont ==
-    // Spark percentile interpolation), DECIMAL sum for the mean
-    "q_trimmed_mean" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // X183: robust location — exact [p10, p90] band, DECIMAL-exact
+    // filtered mean; the bounds broadcast back (|groups| rows)
+    Entry("q_trimmed_mean", Relational.trimmedMeanPerGroup _,
+      // trimmed-mean twin: same exact [p10, p90] band (quantile_cont ==
+      // Spark percentile interpolation), DECIMAL sum for the mean
       """WITH b AS (
         | SELECT l_returnflag, quantile_cont(l_extendedprice, 0.1) AS lo,
         |        quantile_cont(l_extendedprice, 0.9) AS hi
@@ -3958,9 +3225,41 @@ object SparkEntry {
         |   / count(*), 4) AS trimmed_mean
         |FROM lineitem l JOIN b USING (l_returnflag)
         |WHERE l.l_extendedprice >= b.lo AND l.l_extendedprice <= b.hi
-        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin,
-    // gaps-and-islands twin: same day − row_number anchor construction
-    "q_streaks" ->
+        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin),
+    // ANALYZE-style per-column profile; exact distincts WITHOUT the
+    // count(DISTINCT) Expand — two chained aggregations per column
+    Entry("stats_profile", (s, dir) =>
+      Relational.profileColumns(Tables.lineitem(s, dir),
+          Seq("l_discount", "l_extendedprice", "l_quantity", "l_returnflag"))
+        .orderBy(col("col_name")),
+      // profile twin: TRY_CAST mirrors Spark's null-on-failure string→
+      // double cast for the non-numeric column's min/max
+      Seq("l_discount", "l_extendedprice", "l_quantity", "l_returnflag").map { c =>
+        s"""SELECT '$c' AS col_name, count(*) AS n_rows,
+           | CAST(count(*) - count($c) AS BIGINT) AS n_nulls,
+           | TRY_CAST(min($c) AS DOUBLE) AS min_v,
+           | TRY_CAST(max($c) AS DOUBLE) AS max_v,
+           | CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct
+           |FROM lineitem""".stripMargin
+      }.mkString("", "\nUNION ALL\n", "\nORDER BY col_name")),
+    Entry("q_histogram", (s, dir) => Relational.histogram(s, dir),
+      """SELECT CAST(floor(l_extendedprice / 5000.0) * 5000.0 AS BIGINT) AS bin,
+        | count(*) AS n, round(avg(l_discount), 4) AS avg_disc
+        |FROM lineitem GROUP BY bin ORDER BY bin""".stripMargin),
+    Entry("q_equidepth", (s, dir) => Relational.equiDepthHistogram(s, dir),
+      // equi-depth twin: same rounded quantile_cont boundaries, bucket =
+      // count of boundaries strictly below the value
+      s"""WITH bs AS (
+        | SELECT [${(1 until 8).map(i => s"round(quantile_cont(l_extendedprice, ${i}.0/8), 4)").mkString(",\n   ")}] AS b
+        | FROM lineitem),
+        |bucketed AS (
+        | SELECT len(list_filter(bs.b, x -> l_extendedprice > x)) AS bucket, l_extendedprice
+        | FROM lineitem CROSS JOIN bs)
+        |SELECT CAST(bucket AS BIGINT) AS bucket, count(*) AS n,
+        | round(min(l_extendedprice), 2) AS lo, round(max(l_extendedprice), 2) AS hi
+        |FROM bucketed GROUP BY bucket ORDER BY bucket""".stripMargin),
+    Entry("q_streaks", Relational.activityStreaks _,
+      // gaps-and-islands twin: same day − row_number anchor construction
       """WITH days AS (
         | SELECT DISTINCT user_id, datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day
         | FROM events),
@@ -3973,25 +3272,18 @@ object SparkEntry {
         | FROM anch GROUP BY user_id, anchor)
         |SELECT user_id, CAST(start_day AS BIGINT) AS start_day,
         | CAST(end_day AS BIGINT) AS end_day, len
-        |FROM streaks WHERE len >= 3 ORDER BY user_id, start_day""".stripMargin,
-    // equi-depth twin: same rounded quantile_cont boundaries, bucket =
-    // count of boundaries strictly below the value
-    "q_equidepth" ->
-      s"""WITH bs AS (
-        | SELECT [${(1 until 8).map(i => s"round(quantile_cont(l_extendedprice, ${i}.0/8), 4)").mkString(",\n   ")}] AS b
-        | FROM lineitem),
-        |bucketed AS (
-        | SELECT len(list_filter(bs.b, x -> l_extendedprice > x)) AS bucket, l_extendedprice
-        | FROM lineitem CROSS JOIN bs)
-        |SELECT CAST(bucket AS BIGINT) AS bucket, count(*) AS n,
-        | round(min(l_extendedprice), 2) AS lo, round(max(l_extendedprice), 2) AS hi
-        |FROM bucketed GROUP BY bucket ORDER BY bucket""".stripMargin,
-    // PPJoin twin: same shingle universe as the snm twin, global
-    // df-ascending prefix (|S| - ceil(t|S|) + 1), prefix-token
-    // candidates, exact-Jaccard verify — prefix principle makes the
-    // candidate set a superset of every j >= t pair, so the verified
-    // output is the EXACT threshold join
-    "dedup_ppjoin" ->
+        |FROM streaks WHERE len >= 3 ORDER BY user_id, start_day""".stripMargin),
+    // X93: exact Jaccard-threshold pairs via prefix filtering (PPJoin)
+    // — no LSH false negatives, no SNM sort-key assumption
+    Entry("dedup_ppjoin", (s, dir) =>
+      Dedup.ppjoinPairs(Tables.documents(s, dir), threshold = 0.5)
+        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
+        .orderBy(col("id1"), col("id2")),
+      // PPJoin twin: same shingle universe as the snm twin, global
+      // df-ascending prefix (|S| - ceil(t|S|) + 1), prefix-token
+      // candidates, exact-Jaccard verify — prefix principle makes the
+      // candidate set a superset of every j >= t pair, so the verified
+      // output is the EXACT threshold join
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS t
         | FROM documents),
@@ -4018,10 +3310,11 @@ object SparkEntry {
         |   (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))) AS j
         | FROM cand c JOIN sh x ON x.doc_id = c.id1 JOIN sh y ON y.doc_id = c.id2)
         |SELECT id1, id2, round(j, 4) AS jaccard
-        |FROM scored WHERE j >= 0.5 ORDER BY id1, id2""".stripMargin,
-    // OLS twin: identical DECIMAL-exact co-moment sums cast to double,
-    // identical closed-form arithmetic — bit-equal before rounding
-    "stats_regression" ->
+        |FROM scored WHERE j >= 0.5 ORDER BY id1, id2""".stripMargin),
+    // X94: per-group OLS regression from DECIMAL-exact co-moments
+    Entry("stats_regression", Relational.regressionByType _,
+      // OLS twin: identical DECIMAL-exact co-moment sums cast to double,
+      // identical closed-form arithmetic — bit-equal before rounding
       """WITH b AS (
         | SELECT event_type,
         |  datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
@@ -4044,10 +3337,11 @@ object SparkEntry {
         | round(cov_n / var_x, 6) AS slope,
         | round((syd - (cov_n / var_x) * sxd) / nd, 6) AS intercept,
         | round(cov_n * cov_n / (var_x * var_y), 6) AS r2
-        |FROM d ORDER BY event_type""".stripMargin,
-    // resample twin: per-type generate_series calendar, DECIMAL-exact
-    // daily means, IGNORE NULLS last_value forward fill
-    "q_resample" ->
+        |FROM d ORDER BY event_type""".stripMargin),
+    // X95: daily calendar resample with forward fill
+    Entry("q_resample", TimeSeries.resampleDaily _,
+      // resample twin: per-type generate_series calendar, DECIMAL-exact
+      // daily means, IGNORE NULLS last_value forward fill
       """WITH daily AS (
         | SELECT event_type, datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
         |  count(*) AS n,
@@ -4061,34 +3355,83 @@ object SparkEntry {
         |SELECT event_type, CAST(day AS BIGINT) AS day, CAST(n AS BIGINT) AS n,
         | last_value(avg_v IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY day
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS avg_filled
-        |FROM j ORDER BY event_type, day""".stripMargin,
-    // EWMA twin: same integer weights 7^j*10^(15-j) (HUGEINT products
-    // mirror the engine's DECIMAL sums; only the final divide floats)
-    "q_ewma" -> ewmaOracleSql(16),
-    // autocorr twin: mean-scaled integer deviations d = n*x - S; the
-    // n^2 factor cancels in each num/den ratio
-    "q_autocorr" -> {
-      val lags = (1 to 7).map(k => s"lag(dv, $k) OVER w AS d$k").mkString(", ")
-      val rs = (1 to 7).map(k =>
-        s"round(CAST(sum(dv * d$k) AS DOUBLE) / CAST(sum(dv * dv) AS DOUBLE), 6) AS r$k")
-        .mkString(",\n        | ")
-      s"""WITH daily AS (
-        | SELECT event_type, datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-        |  count(*) AS cnt
-        | FROM events GROUP BY 1, 2),
-        |tot AS (SELECT event_type, sum(cnt) AS s, count(*) AS n FROM daily GROUP BY 1),
-        |dev AS (
-        | SELECT d.event_type, d.day, CAST(t.n * d.cnt - t.s AS HUGEINT) AS dv
-        | FROM daily d JOIN tot t USING (event_type)),
-        |l AS (SELECT event_type, dv, $lags
-        |      FROM dev WINDOW w AS (PARTITION BY event_type ORDER BY day))
-        |SELECT event_type,
-        | $rs
-        |FROM l GROUP BY event_type ORDER BY event_type""".stripMargin
-    },
-    // OHLC twin: first/last by the (date, key) total order via two
-    // row_numbers; DECIMAL-exact mean
-    "q_ohlc" ->
+        |FROM j ORDER BY event_type, day""".stripMargin),
+    // X96: rolling z-score anomaly flags over a 20-row trailing frame
+    Entry("q_rolling_anomaly", (s, dir) => TimeSeries.rollingAnomalies(s, dir),
+      // rolling twin: identical 20-row frame on (epoch micros, event_id),
+      // DECIMAL frame sums, identical double mean/variance arithmetic
+      """WITH b AS (
+        | SELECT event_type, event_id, CAST(value AS DECIMAL(18,2)) AS y, epoch_us(ts) AS tus
+        | FROM events),
+        |w AS (
+        | SELECT event_type, event_id, y,
+        |  count(*) OVER fr AS c,
+        |  CAST(sum(y) OVER fr AS DOUBLE) AS s,
+        |  CAST(sum(y * y) OVER fr AS DOUBLE) AS q
+        | FROM b
+        | WINDOW fr AS (PARTITION BY event_type ORDER BY tus, event_id
+        |  ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)),
+        |z AS (
+        | SELECT event_type, event_id, y,
+        |  (CAST(y AS DOUBLE) - s / c) / sqrt(q / c - (s / c) * (s / c)) AS z
+        | FROM w
+        | -- zero-variance frame => z undefined => not an anomaly (the
+        | -- operator's `when(q > m*m)` guard; without it a constant run
+        | -- at scale makes the double variance go 0-or-negative here)
+        | WHERE c >= 15 AND q / c > (s / c) * (s / c))
+        |SELECT event_type, event_id, round(CAST(y AS DOUBLE), 2) AS value, round(z, 4) AS z
+        |FROM z WHERE abs(z) > 2.5 ORDER BY event_type, event_id""".stripMargin),
+    // X97: first-touch ordered funnel view -> click -> purchase
+    Entry("q_event_funnel", (s, dir) => TimeSeries.funnel(s, dir),
+      // funnel twin: per-user first-touch timestamps, ordered-stage counts
+      """WITH pu AS (
+        | SELECT user_id,
+        |  min(CASE WHEN event_type = 'view' THEN ts END) AS t1,
+        |  min(CASE WHEN event_type = 'click' THEN ts END) AS t2,
+        |  min(CASE WHEN event_type = 'purchase' THEN ts END) AS t3
+        | FROM events GROUP BY user_id),
+        |c AS (
+        | SELECT count(t1) AS u1,
+        |  count(CASE WHEN t1 <= t2 THEN 1 END) AS u2,
+        |  count(CASE WHEN t1 <= t2 AND t2 <= t3 THEN 1 END) AS u3
+        | FROM pu)
+        |SELECT * FROM (
+        | SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type, u1 AS users FROM c
+        | UNION ALL SELECT 2, 'click', u2 FROM c
+        | UNION ALL SELECT 3, 'purchase', u3 FROM c)
+        |ORDER BY step""".stripMargin),
+    // X190: finite-horizon EWMA of daily counts, integer-exact weights
+    Entry("q_ewma", TimeSeries.ewmaDaily(_, _),
+      // EWMA twin: same integer weights 7^j*10^(15-j) (HUGEINT products
+      // mirror the engine's DECIMAL sums; only the final divide floats)
+      ewmaOracleSql(16)),
+    // X191: lag-1..7 autocorrelation of the daily count series
+    Entry("q_autocorr", TimeSeries.autocorrDaily(_, _),
+      // autocorr twin: mean-scaled integer deviations d = n*x - S; the
+      // n^2 factor cancels in each num/den ratio
+      {
+        val lags = (1 to 7).map(k => s"lag(dv, $k) OVER w AS d$k").mkString(", ")
+        val rs = (1 to 7).map(k =>
+          s"round(CAST(sum(dv * d$k) AS DOUBLE) / CAST(sum(dv * dv) AS DOUBLE), 6) AS r$k")
+          .mkString(",\n        | ")
+        s"""WITH daily AS (
+          | SELECT event_type, datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
+          |  count(*) AS cnt
+          | FROM events GROUP BY 1, 2),
+          |tot AS (SELECT event_type, sum(cnt) AS s, count(*) AS n FROM daily GROUP BY 1),
+          |dev AS (
+          | SELECT d.event_type, d.day, CAST(t.n * d.cnt - t.s AS HUGEINT) AS dv
+          | FROM daily d JOIN tot t USING (event_type)),
+          |l AS (SELECT event_type, dv, $lags
+          |      FROM dev WINDOW w AS (PARTITION BY event_type ORDER BY day))
+          |SELECT event_type,
+          | $rs
+          |FROM l GROUP BY event_type ORDER BY event_type""".stripMargin
+      }),
+    // X192: monthly OHLC bars over the order-value series
+    Entry("q_ohlc", TimeSeries.ohlcMonthly _,
+      // OHLC twin: first/last by the (date, key) total order via two
+      // row_numbers; DECIMAL-exact mean
       """WITH o AS (
         | SELECT strftime(CAST(o_orderdate AS TIMESTAMP), '%Y-%m') AS month,
         |  o_orderdate, o_orderkey, CAST(o_totalprice AS DECIMAL(18,2)) AS p
@@ -4105,10 +3448,11 @@ object SparkEntry {
         | count(*) AS n,
         | CAST((CAST(sum(p) * 10000 AS BIGINT) * 2 + count(*)) // (count(*) * 2)
         |   AS DOUBLE) / 10000.0 AS avg_price
-        |FROM r GROUP BY month ORDER BY month""".stripMargin,
-    // AUC twin: identical distinct-cents cells, strictly-below running
-    // negatives, HUGEINT numerator, one floating divide
-    "stats_auc" ->
+        |FROM r GROUP BY month ORDER BY month""".stripMargin),
+    // X195: per-day tie-aware Mann-Whitney AUC, purchase vs rest
+    Entry("stats_auc", EventAnalytics.aucDaily(_, _),
+      // AUC twin: identical distinct-cents cells, strictly-below running
+      // negatives, HUGEINT numerator, one floating divide
       """WITH cells AS (
         | SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
         |  CAST(round(value * 100, 0) AS BIGINT) AS cents,
@@ -4124,10 +3468,12 @@ object SparkEntry {
         |SELECT CAST(nm.day AS BIGINT) AS day,
         | CAST(np AS BIGINT) AS n_pos, CAST(nq AS BIGINT) AS n_neg,
         | round(CAST(num2 AS DOUBLE) / (2.0 * np * nq), 6) AS auc
-        |FROM nm JOIN t USING (day) WHERE np > 0 AND nq > 0 ORDER BY day""".stripMargin,
-    // Gopher twin: the identical seven rules over the same token/line
-    // splits; every ratio derived from integer counts
-    "quality_gopher" ->
+        |FROM nm JOIN t USING (day) WHERE np > 0 AND nq > 0 ORDER BY day""".stripMargin),
+    // X193: published Gopher quality ruleset, per-doc signals + verdict
+    Entry("quality_gopher", (s, dir) =>
+      TextStats.gopherRules(Tables.documents(s, dir)),
+      // Gopher twin: the identical seven rules over the same token/line
+      // splits; every ratio derived from integer counts
       """WITH t AS (
         | SELECT doc_id, text,
         |  list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS tk,
@@ -4160,9 +3506,11 @@ object SparkEntry {
         |   AND CAST(bull AS DOUBLE) <= nl * 0.9
         |   AND CAST(ell AS DOUBLE) <= nl * 0.3
         |  THEN 1 ELSE 0 END AS BIGINT) AS pass
-        |FROM m ORDER BY doc_id""".stripMargin,
-    // coverage twin: same (n DESC, tok) type ranking, same ladder
-    "text_coverage" ->
+        |FROM m ORDER BY doc_id""".stripMargin),
+    // X194: token-coverage curve (vocab concentration ladder)
+    Entry("text_coverage", (s, dir) =>
+      TextStats.tokenCoverage(Tables.documents(s, dir)),
+      // coverage twin: same (n DESC, tok) type ranking, same ladder
       """WITH tok AS (
         | SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
         |   x -> len(x) > 0)) AS tok
@@ -4178,60 +3526,25 @@ object SparkEntry {
         |SELECT CAST(k AS BIGINT) AS k,
         | least(cum_tokens, total) AS cum_tokens, n_types,
         | round(CAST(cum_tokens AS DOUBLE) / total, 6) AS coverage
-        |FROM lad CROSS JOIN tot ORDER BY k""".stripMargin,
-    // rolling twin: identical 20-row frame on (epoch micros, event_id),
-    // DECIMAL frame sums, identical double mean/variance arithmetic
-    "q_rolling_anomaly" ->
-      """WITH b AS (
-        | SELECT event_type, event_id, CAST(value AS DECIMAL(18,2)) AS y, epoch_us(ts) AS tus
-        | FROM events),
-        |w AS (
-        | SELECT event_type, event_id, y,
-        |  count(*) OVER fr AS c,
-        |  CAST(sum(y) OVER fr AS DOUBLE) AS s,
-        |  CAST(sum(y * y) OVER fr AS DOUBLE) AS q
-        | FROM b
-        | WINDOW fr AS (PARTITION BY event_type ORDER BY tus, event_id
-        |  ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)),
-        |z AS (
-        | SELECT event_type, event_id, y,
-        |  (CAST(y AS DOUBLE) - s / c) / sqrt(q / c - (s / c) * (s / c)) AS z
-        | FROM w
-        | -- zero-variance frame => z undefined => not an anomaly (the
-        | -- operator's `when(q > m*m)` guard; without it a constant run
-        | -- at scale makes the double variance go 0-or-negative here)
-        | WHERE c >= 15 AND q / c > (s / c) * (s / c))
-        |SELECT event_type, event_id, round(CAST(y AS DOUBLE), 2) AS value, round(z, 4) AS z
-        |FROM z WHERE abs(z) > 2.5 ORDER BY event_type, event_id""".stripMargin,
-    // funnel twin: per-user first-touch timestamps, ordered-stage counts
-    "q_event_funnel" ->
-      """WITH pu AS (
-        | SELECT user_id,
-        |  min(CASE WHEN event_type = 'view' THEN ts END) AS t1,
-        |  min(CASE WHEN event_type = 'click' THEN ts END) AS t2,
-        |  min(CASE WHEN event_type = 'purchase' THEN ts END) AS t3
-        | FROM events GROUP BY user_id),
-        |c AS (
-        | SELECT count(t1) AS u1,
-        |  count(CASE WHEN t1 <= t2 THEN 1 END) AS u2,
-        |  count(CASE WHEN t1 <= t2 AND t2 <= t3 THEN 1 END) AS u3
-        | FROM pu)
-        |SELECT * FROM (
-        | SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type, u1 AS users FROM c
-        | UNION ALL SELECT 2, 'click', u2 FROM c
-        | UNION ALL SELECT 3, 'purchase', u3 FROM c)
-        |ORDER BY step""".stripMargin,
-    // grouping-sets twin: same three sets, same 'ALL' labels
-    "q_grouping_sets" ->
+        |FROM lad CROSS JOIN tot ORDER BY k""".stripMargin),
+    // X98: explicit GROUPING SETS ((lang, source), (lang), ())
+    Entry("q_grouping_sets", Relational.groupingSetsAgg _,
+      // grouping-sets twin: same three sets, same 'ALL' labels
       """SELECT CASE WHEN GROUPING(lang) = 1 THEN 'ALL' ELSE lang END AS lang,
         | CASE WHEN GROUPING(source) = 1 THEN 'ALL' ELSE source END AS source,
         | count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM documents
         |GROUP BY GROUPING SETS ((lang, source), (lang), ())
-        |ORDER BY lang, source""".stripMargin,
-    // range-search twin: threshold on the UNROUNDED cosine, rounded
-    // score only in the projection
-    "ann_range" ->
+        |ORDER BY lang, source""".stripMargin),
+    // X99: threshold (range) vector search — the ε-neighborhood query
+    Entry("ann_range", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      graft.operators.Similarity.rangeSearch(e.where(col("vec_id") < 8), e, 0.3)
+        .select(col("q_id"), col("c_id"), round(col("score"), 4).as("score"))
+        .orderBy(col("q_id"), col("c_id"))
+    },
+      // range-search twin: threshold on the UNROUNDED cosine, rounded
+      // score only in the projection
       """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
         |           FROM embeddings WHERE vec_id < 8),
         |c AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
@@ -4239,21 +3552,26 @@ object SparkEntry {
         | SELECT q_id, c_id, list_cosine_similarity(qv, cv) AS s
         | FROM q CROSS JOIN c WHERE q_id <> c_id)
         |SELECT q_id, c_id, round(s, 4) AS score
-        |FROM scored WHERE s >= 0.3 ORDER BY q_id, c_id""".stripMargin,
-    // streaming-replay twin: the BATCH aggregation — the entry's
-    // micro-batched incremental execution must converge to exactly
-    // this (DECIMAL sums make the state merges split-invariant)
-    "q_stream_window" ->
+        |FROM scored WHERE s >= 0.3 ORDER BY q_id, c_id""".stripMargin),
+    // X100: L13 driver-gated — the events stream replayed through the
+    // real Structured Streaming engine (4 file-per-trigger
+    // micro-batches, complete-mode memory sink) must equal the batch
+    // aggregation the oracle computes
+    Entry("q_stream_window", (s, dir) =>
+      graft.streaming.EventStream.replayWindowedCounts(s, dir, batches = 4),
+      // streaming-replay twin: the BATCH aggregation — the entry's
+      // micro-batched incremental execution must converge to exactly
+      // this (DECIMAL sums make the state merges split-invariant)
       """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
         | count(*) AS n,
         | round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    // streaming-sessionize twin: the BATCH running-break sessionization
-    // — the replayed flatMapGroupsWithState state machine must converge
-    // to exactly these sessions (same 480-min gap as q_sessionize)
-    // RocksDB-provider twin: the state store backend must be
-    // result-invisible — same batch oracle as q_stream_sessionize
-    "q_stream_sessionize_rocksdb" ->
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
+    // X101: X2 driver-gated — sessionization replayed through
+    // flatMapGroupsWithState as 4 time-ranged micro-batches; open
+    // sessions flushed via sentinel-advanced event-time timeouts; must
+    // hash-match the batch running-break oracle
+    Entry("q_stream_sessionize", (s, dir) =>
+      graft.streaming.Replay.replaySessionize(s, dir, gapMinutes = 480, batches = 4),
       """WITH f AS (
         | SELECT user_id, ts, value, epoch_us(ts) AS us,
         |  CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
@@ -4264,28 +3582,56 @@ object SparkEntry {
         |SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events,
         | round(sum(value), 2) AS total_value,
         | (max(us) - min(us)) / 1e6 AS duration_secs
-        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    "q_stream_sessionize" ->
-      """WITH f AS (
-        | SELECT user_id, ts, value, epoch_us(ts) AS us,
-        |  CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |       OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) > 28800000000
-        |       THEN 1 ELSE 0 END AS brk
-        | FROM events),
-        |s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS session_id FROM f)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events,
-        | round(sum(value), 2) AS total_value,
-        | (max(us) - min(us)) / 1e6 AS duration_secs
-        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    // streaming-dedup twin: first sighting of each content hash keeps
-    // the min doc_id — with doc_id-ranged ascending batches the
-    // first-seen batch holds the global min, so the batch form is exact
-    "dedup_stream_exact" ->
+        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin),
+    // X102: X9 driver-gated — exact streaming dedup as a first-seen
+    // stateful operator over 4 doc_id-ranged micro-batches; cross-batch
+    // state suppression must reproduce the batch min-id-per-hash
+    Entry("dedup_stream_exact", (s, dir) =>
+      graft.streaming.Replay.replayExactDedup(s, dir, batches = 4),
+      // streaming-dedup twin: first sighting of each content hash keeps
+      // the min doc_id — with doc_id-ranged ascending batches the
+      // first-seen batch holds the global min, so the batch form is exact
       """SELECT md5(text) AS h, min(doc_id) AS keeper_id
-        |FROM documents GROUP BY md5(text) ORDER BY h""".stripMargin,
-    // scd2 twin: identical change-scan/version/interval build; status
-    // via min() since a version's rows share one status by construction
-    "q_scd2" ->
+        |FROM documents GROUP BY md5(text) ORDER BY h""".stripMargin),
+    // X174: the X101 sessionize replay with its state in the RocksDB
+    // state store provider — the 100 TB configuration (state spills to
+    // disk instead of growing the executor heap); must hash-match the
+    // SAME batch oracle as the default-provider run, proving the
+    // provider changes where state lives, never what it computes
+    Entry("q_stream_sessionize_rocksdb", (s, dir) => {
+      val key = "spark.sql.streaming.stateStore.providerClass"
+      val prev = s.conf.getOption(key)
+      s.conf.set(key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // replaySessionize runs the stream to completion eagerly, so the
+      // finally runs after every micro-batch has committed
+      try graft.streaming.Replay.replaySessionize(s, dir, gapMinutes = 480, batches = 4)
+      finally prev match {
+        case Some(v) => s.conf.set(key, v)
+        case None => s.conf.unset(key)
+      }
+    },
+      // streaming-sessionize twin: the BATCH running-break sessionization
+      // — the replayed flatMapGroupsWithState state machine must converge
+      // to exactly these sessions (same 480-min gap as q_sessionize)
+      // RocksDB-provider twin: the state store backend must be
+      // result-invisible — same batch oracle as q_stream_sessionize
+      """WITH f AS (
+        | SELECT user_id, ts, value, epoch_us(ts) AS us,
+        |  CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+        |       OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) > 28800000000
+        |       THEN 1 ELSE 0 END AS brk
+        | FROM events),
+        |s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS session_id FROM f)
+        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events,
+        | round(sum(value), 2) AS total_value,
+        | (max(us) - min(us)) / 1e6 AS duration_secs
+        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin),
+    // X103: SCD type-2 history build (validity intervals from an
+    // attribute-observation log; open versions close with a sentinel)
+    Entry("q_scd2", Relational.scdType2 _,
+      // scd2 twin: identical change-scan/version/interval build; status
+      // via min() since a version's rows share one status by construction
       """WITH o AS (
         | SELECT o_custkey, o_orderkey, o_orderdate, o_orderstatus,
         |  CASE WHEN lag(o_orderstatus) OVER w IS NULL
@@ -4302,11 +3648,13 @@ object SparkEntry {
         | strftime(coalesce(lead(valid_from) OVER (PARTITION BY o_custkey ORDER BY version),
         |                   DATE '9999-12-31'), '%Y-%m-%d') AS valid_to,
         | n_orders
-        |FROM g ORDER BY o_custkey, version""".stripMargin,
-    // point-in-time twin: the covering interval re-derived as the
-    // max version starting at-or-before each order's date (validity
-    // ranges are gapless, so the two definitions coincide)
-    "q_scd2_join" ->
+        |FROM g ORDER BY o_custkey, version""".stripMargin),
+    // X177: point-in-time join — orders matched to the SCD2 version
+    // covering their date, via the as-of machinery (no range join)
+    Entry("q_scd2_join", Relational.scd2PointInTime _,
+      // point-in-time twin: the covering interval re-derived as the
+      // max version starting at-or-before each order's date (validity
+      // ranges are gapless, so the two definitions coincide)
       """WITH o AS (
         | SELECT o_custkey, o_orderkey, o_orderdate, o_orderstatus,
         |  CASE WHEN lag(o_orderstatus) OVER w IS NULL
@@ -4326,9 +3674,11 @@ object SparkEntry {
         |SELECT o_orderkey, o_custkey,
         | strftime(o_orderdate, '%Y-%m-%d') AS order_date,
         | CAST(version AS BIGINT) AS version, status
-        |FROM j WHERE rr = 1 ORDER BY o_orderkey""".stripMargin,
-    // cumulative-distinct twin: identical first-seen reformulation
-    "q_cum_distinct" ->
+        |FROM j WHERE rr = 1 ORDER BY o_orderkey""".stripMargin),
+    // X178: cumulative distinct users per day via the first-seen
+    // reformulation (running sum over a |days|-bounded table)
+    Entry("q_cum_distinct", EventAnalytics.cumulativeDistinctUsers _,
+      // cumulative-distinct twin: identical first-seen reformulation
       """WITH d AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events),
         |f AS (SELECT user_id, min(CAST(ts AS DATE)) AS day FROM events GROUP BY 1),
         |nu AS (SELECT day, count(*) AS new_users FROM f GROUP BY 1)
@@ -4336,10 +3686,25 @@ object SparkEntry {
         | CAST(coalesce(nu.new_users, 0) AS BIGINT) AS new_users,
         | CAST(sum(coalesce(nu.new_users, 0)) OVER (ORDER BY d.day
         |   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_users
-        |FROM d LEFT JOIN nu USING (day) ORDER BY day""".stripMargin,
-    // skyline twin: the quadratic NOT EXISTS dominance definition —
-    // deliberately naive, it IS the semantics the sweep must reproduce
-    "q_skyline" ->
+        |FROM d LEFT JOIN nu USING (day) ORDER BY day""".stripMargin),
+    // X179: cross-source near-dup contamination matrix over the LSH
+    // pair stream
+    Entry("dedup_cross_source", (s, dir) =>
+      Dedup.crossSourcePairs(Tables.documents(s, dir)),
+      // cross-source matrix twin: the same HUGEINT minhash pair chain,
+      // nested as a subquery, rolled up by (least, greatest) source pair
+      s"""WITH pairs AS (SELECT id1, id2 FROM (${OracleHashSql.minhashSql()}))
+         |SELECT least(da.source, db.source) AS source_a,
+         | greatest(da.source, db.source) AS source_b,
+         | CAST(count(*) AS BIGINT) AS n_pairs
+         |FROM pairs JOIN documents da ON da.doc_id = pairs.id1
+         | JOIN documents db ON db.doc_id = pairs.id2
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // X104: 2-D Pareto frontier via distributive local-sweep +
+    // tiny-global-merge; oracle is the NOT EXISTS dominance definition
+    Entry("q_skyline", (s, dir) => graft.operators.Skyline.partFrontier(s, dir),
+      // skyline twin: the quadratic NOT EXISTS dominance definition —
+      // deliberately naive, it IS the semantics the sweep must reproduce
       """SELECT p_partkey, round(p_retailprice, 2) AS price,
         | CAST(p_size AS BIGINT) AS size
         |FROM part a
@@ -4347,24 +3712,27 @@ object SparkEntry {
         |  SELECT 1 FROM part b
         |  WHERE b.p_retailprice <= a.p_retailprice AND b.p_size >= a.p_size
         |    AND (b.p_retailprice < a.p_retailprice OR b.p_size > a.p_size))
-        |ORDER BY p_partkey""".stripMargin,
-    // mode twin: same two-level aggregate with the same tie-break
-    "q_mode" ->
+        |ORDER BY p_partkey""".stripMargin),
+    // X105: per-group mode, smallest-value tie-break
+    Entry("q_mode", Relational.modePerGroup _,
+      // mode twin: same two-level aggregate with the same tie-break
       """WITH c AS (SELECT l_returnflag, l_quantity, count(*) AS n
         |           FROM lineitem GROUP BY 1, 2),
         |r AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag
         |        ORDER BY n DESC, l_quantity ASC) AS rr FROM c)
         |SELECT l_returnflag, CAST(l_quantity AS DOUBLE) AS mode_qty, n
-        |FROM r WHERE rr = 1 ORDER BY l_returnflag""".stripMargin,
-    // sequence-count twin: the same greedy automaton stepped one
-    // event-index per recursive-CTE iteration (iterations = max events
-    // per user, rows per iteration = users). NOT list_reduce: DuckDB
-    // 1.0.0's list_reduce returns wrong results for this
-    // sequentially-dependent lambda when evaluated over many rows at
-    // once (full-table and single-row plans disagree on identical
-    // input lists), so the oracle avoids it entirely. Same order key
-    // (epoch_us, event_id) as the Spark sort_array.
-    "q_sequence_count" ->
+        |FROM r WHERE rr = 1 ORDER BY l_returnflag""".stripMargin),
+    // X106: greedy non-overlapping view->click->purchase subsequence
+    // automaton per user (MATCH_RECOGNIZE-lite), histogram output
+    Entry("q_sequence_count", (s, dir) => TimeSeries.sequenceCount(s, dir),
+      // sequence-count twin: the same greedy automaton stepped one
+      // event-index per recursive-CTE iteration (iterations = max events
+      // per user, rows per iteration = users). NOT list_reduce: DuckDB
+      // 1.0.0's list_reduce returns wrong results for this
+      // sequentially-dependent lambda when evaluated over many rows at
+      // once (full-table and single-row plans disagree on identical
+      // input lists), so the oracle avoids it entirely. Same order key
+      // (epoch_us, event_id) as the Spark sort_array.
       """WITH RECURSIVE ev AS (
         | SELECT user_id,
         |  row_number() OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS i,
@@ -4383,21 +3751,72 @@ object SparkEntry {
         | FROM st JOIN ev e ON e.user_id = st.user_id AND e.i = st.i + 1),
         |fin AS (SELECT st.user_id, st.cnt FROM st JOIN n USING (user_id) WHERE st.i = n.m)
         |SELECT CAST(cnt AS BIGINT) AS conversions, count(*) AS n_users
-        |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin,
-    // distribution-window twin: the (acctbal, custkey) tiebreak makes
-    // every rank unique, so percent_rank/cume_dist are tie-free pure
-    // position arithmetic — identical doubles in both engines
-    "q_ntile" ->
+        |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin),
+    // X107: CSV round trip with explicit schema + PERMISSIVE corrupt
+    // quarantine (the delimited-text half of the raw ingest surface)
+    Entry("ingest_csv", graft.sources.CsvIngest.ingestEntry _,
+      // csv twin: same shape — the quoted round trip is lossless for
+      // these columns, so clean rows aggregate straight off the parquet
+      // and the 3 injected un-typeable lines count under the sentinel
+      """SELECT lang, source, count(*) AS n,
+        | CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        | CAST(sum(length(text)) AS BIGINT) AS sum_text_len
+        |FROM documents GROUP BY 1, 2
+        |UNION ALL
+        |SELECT '__corrupt', '__corrupt', CAST(3 AS BIGINT),
+        | CAST(0 AS BIGINT), CAST(0 AS BIGINT)
+        |ORDER BY lang, source""".stripMargin),
+    // X108: incremental MV maintenance — stored base MV + delta
+    // partial agg merged by addition must equal the full recompute
+    Entry("q_mv_merge", (s, dir) => graft.operators.MaterializedView.mvMerge(s, dir),
+      // mv-merge twin: the FULL one-shot aggregation — the stored-MV +
+      // delta merge must land on exactly this (DECIMAL sums make the
+      // split point invisible)
+      """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
+        | count(*) AS n,
+        | round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*), 4) AS avg_value,
+        | round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
+    // X109: index time travel — after 4 committed batches, the AS OF
+    // version-2 read must equal the one-shot rebuild over batches 0..2
+    Entry("ii_index_asof", (s, dir) => {
+      val stateDir = java.nio.file.Files
+        .createTempDirectory("graft-ii-asof").toString
+      val docs = Tables.documents(s, dir)
+      (0 until 4).foreach { b =>
+        graft.streaming.StreamingIndex.processBatch(
+          docs.where(pmod(col("doc_id"), lit(4)) === b), b.toLong,
+          stateDir, "lang", chunkSize = 100, docIdCol = "doc_id", None)
+      }
+      graft.streaming.StreamingIndex.indexAsOf(s, stateDir, version = 2)
+        .select(col("value"), col("chunk"), col("n_docs"),
+          array_join(col("doc_ids"), ",").as("doc_ids"))
+        .orderBy(col("value"), col("chunk"))
+    },
+      // as-of twin: the rebuild a reader at version 2 would see —
+      // batches 0..2 of the doc_id mod-4 replay
+      """SELECT lang AS value, CAST(doc_id // 100 AS BIGINT) AS chunk, count(*) AS n_docs,
+        | array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
+        |FROM documents WHERE doc_id % 4 <= 2
+        |GROUP BY 1, 2 ORDER BY value, chunk""".stripMargin),
+    // X110: distribution-position windows (ntile/percent_rank/
+    // cume_dist) — one segment-keyed WindowExec for all three
+    Entry("q_ntile", Relational.distributionWindows _,
+      // distribution-window twin: the (acctbal, custkey) tiebreak makes
+      // every rank unique, so percent_rank/cume_dist are tie-free pure
+      // position arithmetic — identical doubles in both engines
       """SELECT c_mktsegment, c_custkey, round(c_acctbal, 2) AS acctbal,
         | CAST(ntile(4) OVER w AS BIGINT) AS quartile,
         | round(percent_rank() OVER w, 6) AS pct_rank,
         | round(cume_dist() OVER w, 6) AS cume
         |FROM customer
         |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
-        |ORDER BY c_mktsegment, c_custkey""".stripMargin,
-    // MAD twin: quantile_cont interpolates exactly like Spark's exact
-    // percentile; med/mad are per-group constants so min() == first()
-    "q_mad" ->
+        |ORDER BY c_mktsegment, c_custkey""".stripMargin),
+    // X111: robust per-group outliers by median absolute deviation —
+    // the heavy-tail-safe complement of the z-score entries
+    Entry("q_mad", (s, dir) => Relational.madOutliers(s, dir),
+      // MAD twin: quantile_cont interpolates exactly like Spark's exact
+      // percentile; med/mad are per-group constants so min() == first()
       """WITH ev AS (SELECT event_type, CAST(value AS DOUBLE) AS v FROM events),
         |med AS (SELECT event_type, quantile_cont(v, 0.5) AS med FROM ev GROUP BY 1),
         |dev AS (SELECT ev.event_type, v, med, abs(v - med) AS adev
@@ -4407,10 +3826,14 @@ object SparkEntry {
         | round(min(med), 4) AS med, round(min(mad), 4) AS mad,
         | CAST(sum(CASE WHEN adev > 3.0 * mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         |FROM dev JOIN mad USING (event_type)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // epoch-reshuffle twin: same md5(seed:epoch:id) sort key, dense
-    // rank from row_number per epoch partition
-    "order_epoch" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // X112: multi-epoch training reshuffle — nEpochs independent
+    // seeded permutations from ONE epoch-keyed two-phase rank
+    Entry("order_epoch", (s, dir) =>
+      graft.operators.TrainingOrder.epochs(Tables.documents(s, dir), 3, "ep7")
+        .orderBy(col("epoch"), col("pos")),
+      // epoch-reshuffle twin: same md5(seed:epoch:id) sort key, dense
+      // rank from row_number per epoch partition
       """WITH e AS (SELECT d.doc_id, CAST(t.epoch AS BIGINT) AS epoch
         |           FROM documents d CROSS JOIN range(3) t(epoch)),
         |k AS (SELECT epoch, doc_id,
@@ -4420,11 +3843,13 @@ object SparkEntry {
         | CAST(row_number() OVER (PARTITION BY epoch ORDER BY h, doc_id) - 1
         |      AS BIGINT) AS pos,
         | doc_id AS id
-        |FROM k ORDER BY epoch, pos""".stripMargin,
-    // CDC twin: identical three-generation feed, DECIMAL price
-    // arithmetic end-to-end (the only double cast is at output), the
-    // same last-writer-wins window
-    "q_cdc_apply" ->
+        |FROM k ORDER BY epoch, pos""".stripMargin),
+    // X113: CDC change-feed apply — last-writer-wins snapshot from an
+    // insert/update/delete feed, one key-hashed window
+    Entry("q_cdc_apply", graft.operators.ChangeFeed.applyEntry _,
+      // CDC twin: identical three-generation feed, DECIMAL price
+      // arithmetic end-to-end (the only double cast is at output), the
+      // same last-writer-wins window
       """WITH feed AS (
         | SELECT o_orderkey AS k, 1 AS seq, 'I' AS op,
         |        CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DECIMAL(21,3)) AS price
@@ -4441,51 +3866,95 @@ object SparkEntry {
         |           FROM feed)
         |SELECT k AS o_orderkey, op AS last_op, CAST(price AS DOUBLE) AS price
         |FROM latest WHERE r = 1 AND op <> 'D'
-        |ORDER BY o_orderkey""".stripMargin,
-    // suffix twin: LIKE '%ow' over the distinct-per-doc token lists —
-    // same df definition as the prefix twin
-    "search_suffix" ->
-      """WITH toks AS (
-        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |                            x -> len(x) > 0) AS t
-        | FROM documents)
-        |SELECT term, count(*) AS df
-        |FROM (SELECT doc_id,
-        |       unnest(list_filter(list_distinct(t), x -> x LIKE '%ow')) AS term
-        |      FROM toks)
-        |GROUP BY term ORDER BY term""".stripMargin,
-    // lateral twin: identical correlated top-1 subquery
-    "q_lateral" ->
-      """SELECT c.c_custkey, t.o_orderkey, round(t.o_totalprice, 2) AS top_price
-        |FROM customer c, LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
-        |ORDER BY c.c_custkey""".stripMargin,
-    // recursive twin: same anchor/step, DuckDB's // is Spark's DIV
-    "q_recursive_depth" ->
-      """WITH RECURSIVE t(doc_id, depth) AS (
-        |  SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-        |  UNION ALL
-        |  SELECT d.doc_id, t.depth + 1
-        |  FROM documents d JOIN t ON d.doc_id // 2 = t.doc_id
-        |   AND d.doc_id > t.doc_id)
-        |SELECT depth, CAST(count(*) AS BIGINT) AS n, min(doc_id) AS min_id,
-        | max(doc_id) AS max_id
-        |FROM t GROUP BY depth ORDER BY depth""".stripMargin,
-    // regex twin: same literal/alternation pattern — the subset Java
-    // regex and DuckDB's RE2 interpret identically
-    "search_regex" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    // X114: ORC round trip — value fidelity (µs timestamps, DECIMAL
+    // sums) across the format hop, proven against the parquet original
+    Entry("ingest_orc", graft.sources.OrcIngest.ingestEntry _,
+      // ORC twin reads the ORIGINAL parquet: any drift the ORC hop
+      // introduces (timestamp truncation, double mangling) breaks the
+      // hash; epoch_us matches Spark's micros-normalized ts
+      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+        | min(epoch_us(ts)) AS min_us, max(epoch_us(ts)) AS max_us,
+        | min(event_id) AS min_id, max(event_id) AS max_id
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // X115: dynamic partition pruning — a runtime aggregate-derived
+    // dim key set prunes whole hive partitions off the fact scan;
+    // oracle joins without any pruning, proving it pure I/O
+    Entry("q_dpp_scan", graft.sources.RuntimeFilters.dppQuery _,
+      // DPP twin: the same join with NO pruning anywhere — the pruned
+      // fact scan must be result-invisible; exact-DECIMAL HAVING keeps
+      // the dim key set identical across engines
+      """WITH dim AS (
+        | SELECT event_type FROM events GROUP BY event_type
+        | HAVING sum(CAST(value AS DECIMAL(18,2))) > 50 * count(*))
+        |SELECT e.event_type, CAST(count(*) AS BIGINT) AS n,
+        | CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM events e JOIN dim USING (event_type)
+        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin),
+    // X116: runtime bloom-filter join — filtered dim keys reach the
+    // shuffle-hash fact scan as a might_contain row predicate
+    Entry("q_bloom_join", graft.sources.RuntimeFilters.bloomJoin _,
+      // bloom twin: plain join, no runtime filter — might_contain must
+      // be result-invisible (false positives die in the join)
+      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
+        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_totalprice > 400000
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // X117: stream-stream interval join through the REAL engine (two
+    // independent file streams, symmetric-hash join state + watermark
+    // eviction) must reproduce the batch interval self-join
+    Entry("q_stream_join", (s, dir) =>
+      graft.streaming.Replay.replayStreamJoin(s, dir),
+      // stream-join twin: the batch interval self-join the streaming
+      // symmetric-hash state must converge to; epoch_us matches Spark's
+      // micros-normalized ts
+      """SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
+        | CAST((epoch_us(p.ts) - epoch_us(v.ts)) // 1000000 AS BIGINT) AS lag_secs
+        |FROM events v JOIN events p ON v.user_id = p.user_id
+        | AND v.event_type = 'view' AND p.event_type = 'purchase'
+        | AND epoch_us(p.ts) >= epoch_us(v.ts)
+        | AND epoch_us(p.ts) <= epoch_us(v.ts) + 3600000000
+        |ORDER BY v.user_id, view_id, purchase_id""".stripMargin),
+    // X118: perceptual image-hash dedup — aHash per payload inside the
+    // batched decode mapPartitions, exact-phash dup groups
+    Entry("mm_image_phash", (s, dir) =>
+      graft.multimodal.Multimodal.imagePHash(s, dir),
+      // phash twin: recompute the aHash from the first 64 payload bytes
+      // (text is ASCII, so ascii(substr) IS the byte); the /64 mean is a
+      // power-of-two division — exact in double in both engines
+      """WITH img AS (SELECT doc_id, text FROM documents
+        |             WHERE doc_id % 3 = 0 AND length(text) >= 64),
+        |px AS (SELECT doc_id, t.i,
+        |        ascii(substr(text, CAST(t.i AS INTEGER), 1)) AS v
+        |       FROM img CROSS JOIN range(1, 65) t(i)),
+        |m AS (SELECT doc_id, sum(v) / 64.0 AS mean FROM px GROUP BY doc_id),
+        |h AS (SELECT px.doc_id,
+        |        string_agg(CASE WHEN v >= mean THEN '1' ELSE '0' END,
+        |                   '' ORDER BY px.i) AS phash
+        |      FROM px JOIN m USING (doc_id) GROUP BY px.doc_id)
+        |SELECT phash, CAST(count(*) AS BIGINT) AS n, min(doc_id) AS keeper_id
+        |FROM h GROUP BY phash ORDER BY phash""".stripMargin),
+    // X119: regex search — the grep layer under the term family, a
+    // pure scan-stage predicate (dialect kept engine-portable)
+    Entry("search_regex", (s, dir) =>
+      Search.regexSearch(Tables.documents(s, dir), "(spark|vector) (join|index)"),
+      // regex twin: same literal/alternation pattern — the subset Java
+      // regex and DuckDB's RE2 interpret identically
       """SELECT doc_id,
         | CAST(len(regexp_extract_all(text, '(spark|vector) (join|index)'))
         |      AS BIGINT) AS n_matches,
         | regexp_extract(text, '(spark|vector) (join|index)', 0) AS first_match
         |FROM documents
         |WHERE regexp_matches(text, '(spark|vector) (join|index)')
-        |ORDER BY doc_id""".stripMargin,
-    // snippet twin: same 1-based first-occurrence position and
-    // [max(pos-3,1), min(pos+3, len)] token window
-    "search_snippet" ->
+        |ORDER BY doc_id""".stripMargin),
+    // X120: keyword-in-context snippets — ±3 tokens around the first
+    // match, array-position arithmetic inside the scan
+    Entry("search_snippet", (s, dir) =>
+      Search.snippets(Tables.documents(s, dir), "vector"),
+      // snippet twin: same 1-based first-occurrence position and
+      // [max(pos-3,1), min(pos+3, len)] token window
       """WITH t AS (
         | SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
         |p AS (SELECT doc_id, toks, list_position(toks, 'vector') AS pos FROM t)
@@ -4493,10 +3962,12 @@ object SparkEntry {
         | array_to_string(
         |   toks[greatest(pos - 3, 1):least(pos + 3, len(toks))], ' ') AS snippet
         |FROM p WHERE pos IS NOT NULL AND pos > 0
-        |ORDER BY doc_id""".stripMargin,
-    // KS twin: same pooled RANGE-frame running CDFs; integer counts
-    // divide as identical doubles in both engines
-    "stats_ks" ->
+        |ORDER BY doc_id""".stripMargin),
+    // X121: exact two-sample KS distance between every event-type
+    // pair's value distribution — the snapshot drift detector
+    Entry("stats_ks", Relational.ksTest _,
+      // KS twin: same pooled RANGE-frame running CDFs; integer counts
+      // divide as identical doubles in both engines
       """WITH ev AS (SELECT event_type, CAST(value AS DOUBLE) AS v FROM events),
         |ty AS (SELECT DISTINCT event_type FROM ev),
         |pairs AS (SELECT a.event_type AS ta, b.event_type AS tb
@@ -4515,11 +3986,78 @@ object SparkEntry {
         |SELECT ta, tb, CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
         | round(max(abs(ca / na - cb / nb)), 6) AS ks_d
         |FROM cum JOIN n USING (ta, tb)
-        |GROUP BY ta, tb, na, nb ORDER BY ta, tb""".stripMargin,
-    // funnel twin: stagewise min-qualifying-time joins — step k exists
-    // iff an event of stage k is STRICTLY later than step k-1's
-    // earliest qualifying time
-    "q_funnel_seq" ->
+        |GROUP BY ta, tb, na, nb ORDER BY ta, tb""".stripMargin),
+    // X122: recursive CTE (Spark 4 native WITH RECURSIVE) — per-level
+    // rollup of the implicit doc-id binary tree (parent = id DIV 2);
+    // the d > parent guard is the monotone step that bounds recursion
+    // at log2(max_id) iterations
+    Entry("q_recursive_depth", (s, dir) => {
+      Tables.documents(s, dir).createOrReplaceTempView("graft_docs_rec")
+      s.sql(
+        """WITH RECURSIVE t(doc_id, depth) AS (
+          |  SELECT CAST(0 AS BIGINT) AS doc_id, CAST(0 AS BIGINT) AS depth
+          |  UNION ALL
+          |  SELECT d.doc_id, t.depth + 1
+          |  FROM graft_docs_rec d JOIN t
+          |    ON d.doc_id DIV 2 = t.doc_id AND d.doc_id > t.doc_id)
+          |SELECT depth, count(*) AS n, min(doc_id) AS min_id,
+          |       max(doc_id) AS max_id
+          |FROM t GROUP BY depth ORDER BY depth""".stripMargin)
+    },
+      // recursive twin: same anchor/step, DuckDB's // is Spark's DIV
+      """WITH RECURSIVE t(doc_id, depth) AS (
+        |  SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT)
+        |  UNION ALL
+        |  SELECT d.doc_id, t.depth + 1
+        |  FROM documents d JOIN t ON d.doc_id // 2 = t.doc_id
+        |   AND d.doc_id > t.doc_id)
+        |SELECT depth, CAST(count(*) AS BIGINT) AS n, min(doc_id) AS min_id,
+        | max(doc_id) AS max_id
+        |FROM t GROUP BY depth ORDER BY depth""".stripMargin),
+    // X123: suffix wildcard via the reversed-term dictionary trick —
+    // the suffix query becomes a sargable prefix query
+    Entry("search_suffix", (s, dir) =>
+      Search.suffixSearch(Tables.documents(s, dir), "ow")
+        .orderBy(col("term")),
+      // suffix twin: LIKE '%ow' over the distinct-per-doc token lists —
+      // same df definition as the prefix twin
+      """WITH toks AS (
+        | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |                            x -> len(x) > 0) AS t
+        | FROM documents)
+        |SELECT term, count(*) AS df
+        |FROM (SELECT doc_id,
+        |       unnest(list_filter(list_distinct(t), x -> x LIKE '%ow')) AS term
+        |      FROM toks)
+        |GROUP BY term ORDER BY term""".stripMargin),
+    // X124: correlated LATERAL subquery (per-customer top order) —
+    // the decorrelation surface grouped_topk's window form avoids
+    Entry("q_lateral", (s, dir) => {
+      Tables.customer(s, dir).createOrReplaceTempView("graft_cust_lat")
+      Tables.orders(s, dir).createOrReplaceTempView("graft_ord_lat")
+      s.sql(
+        """SELECT c.c_custkey, t.o_orderkey,
+          |       round(t.o_totalprice, 2) AS top_price
+          |FROM graft_cust_lat c, LATERAL (
+          |  SELECT o_orderkey, o_totalprice FROM graft_ord_lat o
+          |  WHERE o.o_custkey = c.c_custkey
+          |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
+          |ORDER BY c.c_custkey""".stripMargin)
+    },
+      // lateral twin: identical correlated top-1 subquery
+      """SELECT c.c_custkey, t.o_orderkey, round(t.o_totalprice, 2) AS top_price
+        |FROM customer c, LATERAL (
+        |  SELECT o_orderkey, o_totalprice FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey
+        |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
+        |ORDER BY c.c_custkey""".stripMargin),
+    // X125: re-touch sequencing funnel view→click→purchase (any later
+    // click counts, unlike X97's first-touch form) — per-step user
+    // counts from one (user_id, ts) window sort
+    Entry("q_funnel_seq", EventAnalytics.funnel(_, _),
+      // funnel twin: stagewise min-qualifying-time joins — step k exists
+      // iff an event of stage k is STRICTLY later than step k-1's
+      // earliest qualifying time
       """WITH t1 AS (SELECT user_id, min(ts) AS t1 FROM events
         |            WHERE event_type = 'view' GROUP BY user_id),
         |t2 AS (SELECT e.user_id, min(e.ts) AS t2
@@ -4537,10 +4075,12 @@ object SparkEntry {
         | SELECT CAST(2 AS BIGINT), 'click', CAST(count(*) AS BIGINT) FROM t2
         | UNION ALL
         | SELECT CAST(3 AS BIGINT), 'purchase', CAST(count(*) AS BIGINT) FROM t3)
-        |ORDER BY step""".stripMargin,
-    // retention twin: same integer week arithmetic from the corpus
-    // epoch (datediff arg order differs between engines)
-    "q_retention" ->
+        |ORDER BY step""".stripMargin),
+    // X126: weekly cohort retention — integer week arithmetic from the
+    // corpus epoch, distinct users per (cohort, offset) cell
+    Entry("q_retention", EventAnalytics.retention _,
+      // retention twin: same integer week arithmetic from the corpus
+      // epoch (datediff arg order differs between engines)
       """WITH ev AS (SELECT user_id,
         |             datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS wk
         |            FROM events),
@@ -4550,10 +4090,12 @@ object SparkEntry {
         |       CAST(count(DISTINCT ev.user_id) AS BIGINT) AS users
         |FROM ev JOIN fst ON ev.user_id = fst.user_id
         |GROUP BY cohort_week, wk - cohort_week
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-    // A/B twin: same md5 coin, exact DECIMAL moments, identical
-    // closed-form mean/population-variance/Welch-z double sequence
-    "q_ab_test" ->
+        |ORDER BY cohort_week, week_offset""".stripMargin),
+    // deterministic md5-coin A/B readout: exact-DECIMAL moments,
+    // closed-form Welch z per event type
+    Entry("q_ab_test", EventAnalytics.abTest _,
+      // A/B twin: same md5 coin, exact DECIMAL moments, identical
+      // closed-form mean/population-variance/Welch-z double sequence
       """WITH ev AS (
         | SELECT event_type,
         |  CASE WHEN substr(md5('ab:' || CAST(user_id AS VARCHAR)), 1, 8) < '80000000'
@@ -4571,10 +4113,12 @@ object SparkEntry {
         | round((a.mean - b.mean) / sqrt(a.pvar / a.nd + b.pvar / b.nd), 4) AS z
         |FROM m a JOIN m b ON a.event_type = b.event_type
         | AND a.arm = 'A' AND b.arm = 'B'
-        |ORDER BY a.event_type""".stripMargin,
-    // LTV twin: retention's cohort grid + exact DECIMAL revenue,
-    // running total over the (cohort, offset) frame, /users at the end
-    "q_cohort_ltv" ->
+        |ORDER BY a.event_type""".stripMargin),
+    // cohort LTV: cumulative purchase revenue per signup cohort /
+    // week offset, per-user normalized
+    Entry("q_cohort_ltv", EventAnalytics.cohortLtv _,
+      // LTV twin: retention's cohort grid + exact DECIMAL revenue,
+      // running total over the (cohort, offset) frame, /users at the end
       """WITH ev AS (
         | SELECT user_id, event_type, value,
         |  datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS wk
@@ -4593,11 +4137,13 @@ object SparkEntry {
         | round(CAST(sum(r.rev) OVER (PARTITION BY r.cohort_week ORDER BY r.week_offset)
         |   AS DOUBLE) / sz.n_users, 4) AS ltv_per_user
         |FROM rev r JOIN sz ON sz.cohort_week = r.cohort_week
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-    // markov twin: same lag window with the event_id tiebreak (order
-    // by epoch micros, not raw ns ts); BIGINT / BIGINT is float
-    // division in DuckDB, same as Spark
-    "q_markov" ->
+        |ORDER BY cohort_week, week_offset""".stripMargin),
+    // X127: first-order Markov transition matrix over per-user event
+    // sequences; probabilities are integer-count divisions
+    Entry("q_markov", EventAnalytics.markovTransitions _,
+      // markov twin: same lag window with the event_id tiebreak (order
+      // by epoch micros, not raw ns ts); BIGINT / BIGINT is float
+      // division in DuckDB, same as Spark
       """WITH trans AS (
         | SELECT event_type AS from_type,
         |        lead(event_type) OVER (PARTITION BY user_id
@@ -4607,11 +4153,13 @@ object SparkEntry {
         |        WHERE to_type IS NOT NULL GROUP BY from_type, to_type)
         |SELECT from_type, to_type, CAST(n AS BIGINT) AS n,
         |       round(n / sum(n) OVER (PARTITION BY from_type), 6) AS p
-        |FROM cnt ORDER BY from_type, to_type""".stripMargin,
-    // chi2 twin: identical per-cell double expression from integer
-    // marginals (cast to DOUBLE before the product, mirroring the
-    // Spark side's overflow-safe order of operations)
-    "stats_chi2_cells" ->
+        |FROM cnt ORDER BY from_type, to_type""".stripMargin),
+    // X128: chi-squared contingency cells (event_type × value bucket),
+    // reported per cell — cross-cell double sums are engine-dependent
+    Entry("stats_chi2_cells", EventAnalytics.contingency _,
+      // chi2 twin: identical per-cell double expression from integer
+      // marginals (cast to DOUBLE before the product, mirroring the
+      // Spark side's overflow-safe order of operations)
       """WITH cells AS (
         | SELECT event_type, CAST(floor(value / 25.0) AS BIGINT) AS bucket,
         |        count(*) AS o
@@ -4625,10 +4173,14 @@ object SparkEntry {
         |       round(CAST(row_tot AS DOUBLE) * col_tot / n, 6) AS e,
         |       round(pow(o - CAST(row_tot AS DOUBLE) * col_tot / n, 2)
         |             / (CAST(row_tot AS DOUBLE) * col_tot / n), 6) AS contrib
-        |FROM m ORDER BY event_type, bucket""".stripMargin,
-    // mlt twin: same tf·ln(N/df) weights rounded to 9 dp, DECIMAL
-    // accumulation for dots and norms, one double expression per row
-    "search_mlt" ->
+        |FROM m ORDER BY event_type, bucket""".stripMargin),
+    // X129: more-like-this — TF-IDF cosine ranking against one query
+    // document via a posting-list join; DECIMAL accumulation makes
+    // float-sum order invisible cross-engine
+    Entry("search_mlt", (s, dir) =>
+      Search.moreLikeThis(Tables.documents(s, dir), queryDocId = 7L, k = 10),
+      // mlt twin: same tf·ln(N/df) weights rounded to 9 dp, DECIMAL
+      // accumulation for dots and norms, one double expression per row
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
         |                            x -> len(x) > 0) AS t
@@ -4651,10 +4203,13 @@ object SparkEntry {
         |SELECT d.doc_id, round(CAST(dot AS DOUBLE) /
         |        (sqrt(CAST(nsq AS DOUBLE)) * sqrt(CAST(qnsq AS DOUBLE))), 6) AS score
         |FROM dots d JOIN norms USING (doc_id) CROSS JOIN qn
-        |ORDER BY score DESC, d.doc_id LIMIT 10""".stripMargin,
-    // batches twin: same descending-length global order and integer
-    // batch arithmetic (// = Spark's DIV)
-    "order_batches" ->
+        |ORDER BY score DESC, d.doc_id LIMIT 10""".stripMargin),
+    // X130: length-grouped batching with per-batch padding waste —
+    // two-phase distributed rank, all-integer output
+    Entry("order_batches", (s, dir) =>
+      TrainingOrder.lengthBatches(Tables.documents(s, dir), batchSize = 32),
+      // batches twin: same descending-length global order and integer
+      // batch arithmetic (// = Spark's DIV)
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
         |                            x -> len(x) > 0) AS t
@@ -4668,10 +4223,11 @@ object SparkEntry {
         |       CAST(max(len) AS BIGINT) AS max_len,
         |       CAST(sum(len) AS BIGINT) AS sum_len,
         |       CAST(count(*) * max(len) - sum(len) AS BIGINT) AS padding_waste
-        |FROM r GROUP BY rank0 // 32 ORDER BY batch""".stripMargin,
-    // psi twin: identical conditional counts, shares, and ln terms —
-    // per-type rows, no cross-row double sums
-    "stats_psi" ->
+        |FROM r GROUP BY rank0 // 32 ORDER BY batch""".stripMargin),
+    // X131: KL/PSI drift between the event-type mix of two time halves
+    Entry("stats_psi", EventAnalytics.klDrift(_, _),
+      // psi twin: identical conditional counts, shares, and ln terms —
+      // per-type rows, no cross-row double sums
       """WITH cnt AS (
         | SELECT event_type,
         |  sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00' THEN 1 ELSE 0 END) AS a,
@@ -4683,9 +4239,33 @@ object SparkEntry {
         | round(a / na, 6) AS p_early, round(b / nb, 6) AS p_late,
         | round((a / na) * ln((a / na) / (b / nb)), 6) AS kl_term,
         | round((a / na - b / nb) * ln((a / na) / (b / nb)), 6) AS psi_term
-        |FROM m ORDER BY event_type""".stripMargin,
-    // facets twin: same scan predicate, facet expansion as UNION ALL
-    "search_facets" ->
+        |FROM m ORDER BY event_type""".stripMargin),
+    // X132+X157: mutual-kNN graph on the SCALE route — SRP-banded
+    // candidate generation at AUTO width (integer ⌊log₂(n/100)⌋ bits
+    // per band, which the oracle recomputes from count(*) — a pinned
+    // width loses every bucket past the cap at 10×: recall 0) with
+    // exact-cosine rerank; the all-pairs exact scorer
+    // (Similarity.knnGraphExact) is spec-tested, never gated
+    Entry("knn_graph", (s, dir) => {
+      Similarity.knnGraphBanded(Tables.embeddings(s, dir), 10,
+          numPlanes = 0, bands = 4, maxBucket = 500)
+        .select(col("q_id"), col("rank").cast("long").as("rank"), col("c_id"),
+          round(col("score"), 4).as("score"), col("mutual"))
+        .orderBy(col("q_id"), col("rank"))
+    },
+      // knn-graph twin: the BANDED pipeline (SRP banding at the entry's
+      // pinned geometry, bucket-capped pairs, exact rerank) plus the
+      // reverse-edge mutual flag via a self-join of the top-k set
+      s"""WITH ${bandedKnnTopSql(4, 500, 10)}
+        |SELECT t.q_id, CAST(t.rank AS BIGINT) AS rank, t.c_id,
+        |       round(t.s, 4) AS score, (r.q_id IS NOT NULL) AS mutual
+        |FROM top t LEFT JOIN top r ON r.q_id = t.c_id AND r.c_id = t.q_id
+        |ORDER BY t.q_id, t.rank""".stripMargin),
+    // X133: faceted search — conjunctive query + per-facet rollup
+    Entry("search_facets", (s, dir) =>
+      Search.facetedSearch(Tables.documents(s, dir), Seq("spark"),
+        Seq("lang", "source")),
+      // facets twin: same scan predicate, facet expansion as UNION ALL
       """WITH toks AS (
         | SELECT doc_id, lang, source,
         |  list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0) AS t
@@ -4694,10 +4274,12 @@ object SparkEntry {
         |f AS (SELECT 'lang' AS facet, lang AS value FROM m
         |      UNION ALL SELECT 'source', source FROM m)
         |SELECT facet, value, CAST(count(*) AS BIGINT) AS n
-        |FROM f GROUP BY facet, value ORDER BY facet, value""".stripMargin,
-    // delta twin: same per-term lag gaps; bin() is unpadded in both
-    // engines, so gap_bits agree
-    "ii_postings_delta" ->
+        |FROM f GROUP BY facet, value ORDER BY facet, value""".stripMargin),
+    // X134: posting-list delta-gap compression sizing
+    Entry("ii_postings_delta", (s, dir) =>
+      Search.postingsDeltaStats(Tables.documents(s, dir)),
+      // delta twin: same per-term lag gaps; bin() is unpadded in both
+      // engines, so gap_bits agree
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
         |                            x -> len(x) > 0) AS t
@@ -4711,10 +4293,14 @@ object SparkEntry {
         | CAST(max(doc_id) AS BIGINT) AS last_id,
         | CAST(max(gap) AS BIGINT) AS max_gap,
         | CAST(length(bin(max(gap))) AS BIGINT) AS gap_bits
-        |FROM g GROUP BY term HAVING count(*) >= 2 ORDER BY term""".stripMargin,
-    // keeper twin: the dedup_clusters reachability closure, then the
-    // longest-doc-wins window per component
-    "dedup_keeper" ->
+        |FROM g GROUP BY term HAVING count(*) >= 2 ORDER BY term""".stripMargin),
+    // X135: canonical-keeper selection over the embedding near-dup
+    // clusters (longest doc wins, id tiebreak)
+    Entry("dedup_keeper", (s, dir) =>
+      ConnectedComponents.canonicalKeepers(Tables.documents(s, dir),
+        Dedup.embeddingPairs(Tables.embeddings(s, dir))),
+      // keeper twin: the dedup_clusters reachability closure, then the
+      // longest-doc-wins window per component
       s"""WITH RECURSIVE v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |${autoSrpBandedSql(4)},
         |ok AS (SELECT band, bhash FROM banded GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 200),
@@ -4741,10 +4327,13 @@ object SparkEntry {
         |       FROM k)
         |SELECT component, id AS keeper_id, CAST(nm AS BIGINT) AS n_members,
         | CAST(nm - 1 AS BIGINT) AS n_removed
-        |FROM rr WHERE rn = 1 AND nm > 1 ORDER BY component""".stripMargin,
-    // pair twin: same join/gate; norms are one left-to-right fold in
-    // both engines, cohort averages accumulate as DECIMAL
-    "mm_pair_stats" ->
+        |FROM rr WHERE rn = 1 AND nm > 1 ORDER BY component""".stripMargin),
+    // X136: text-embedding pair curation with per-cohort stats
+    Entry("mm_pair_stats", (s, dir) =>
+      graft.multimodal.Multimodal.pairStats(Tables.documents(s, dir),
+        Tables.embeddings(s, dir)),
+      // pair twin: same join/gate; norms are one left-to-right fold in
+      // both engines, cohort averages accumulate as DECIMAL
       """WITH p AS (
         | SELECT d.lang, e.label,
         |  CAST(len(list_filter(regexp_split_to_array(lower(d.text), '\s+'),
@@ -4759,10 +4348,12 @@ object SparkEntry {
         | CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
         | CAST(max(n_tokens) AS BIGINT) AS max_tokens,
         | round(CAST(sum(CAST(norm AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS avg_norm
-        |FROM n GROUP BY lang, label ORDER BY lang, label""".stripMargin,
-    // gini twin: identical rank formula over exact DECIMAL sums; the
-    // ratio is the only double arithmetic, one expression per group
-    "stats_gini" ->
+        |FROM n GROUP BY lang, label ORDER BY lang, label""".stripMargin),
+    // X137: per-type Gini inequality over event values via the
+    // distributed grouped rank
+    Entry("stats_gini", EventAnalytics.gini _,
+      // gini twin: identical rank formula over exact DECIMAL sums; the
+      // ratio is the only double arithmetic, one expression per group
       """WITH ev AS (SELECT event_type, CAST(value AS DECIMAL(18,2)) AS x, event_id
         |            FROM events),
         |r AS (SELECT event_type, x,
@@ -4774,10 +4365,12 @@ object SparkEntry {
         |SELECT event_type, CAST(n AS BIGINT) AS n,
         | round((2.0 * CAST(s1 AS DOUBLE) - (n + 1) * CAST(s0 AS DOUBLE))
         |       / (n * CAST(s0 AS DOUBLE)), 6) AS gini
-        |FROM a ORDER BY event_type""".stripMargin,
-    // Benford twin: identical floor/log10 digit extraction, per-digit
-    // rows so no cross-digit float summation exists
-    "stats_benford" ->
+        |FROM a ORDER BY event_type""".stripMargin),
+    // Benford first-digit profile per event type: per-digit observed
+    // vs log10(1+1/d) expectation — the unit-mixing detector
+    Entry("stats_benford", EventAnalytics.benford _,
+      // Benford twin: identical floor/log10 digit extraction, per-digit
+      // rows so no cross-digit float summation exists
       """WITH pos AS (SELECT event_type, value FROM events WHERE value > 0),
         |d AS (SELECT event_type,
         |       CAST(floor(value / power(10, floor(log10(value)))) AS BIGINT) AS digit
@@ -4789,115 +4382,132 @@ object SparkEntry {
         |   AS exp_n,
         | round(c.n / (CAST(t.total AS DOUBLE) * log10(1 + CAST(1 AS DOUBLE) / c.digit)), 4)
         |   AS ratio
-        |FROM c JOIN t USING (event_type) ORDER BY event_type, digit""".stripMargin,
-    "graph_pagerank" -> pageRankOracleSql(5),
-    // link-pred twin: banded kNN edge substrate, then wedge count =
-    // |N(a) ∩ N(c)|, anti-join edges, Jaccard on the rounded column
-    // with (x, y) tiebreaks
-    "graph_link_pred" ->
-      s"""WITH ${bandedKnnTopSql(4, 500, 10)},
-        |me AS (SELECT t.q_id AS a, t.c_id AS b
-        |       FROM top t JOIN top r ON r.q_id = t.c_id AND r.c_id = t.q_id
-        |       WHERE t.q_id < t.c_id),
-        |sym AS (SELECT a, b FROM me UNION ALL SELECT b, a FROM me),
-        |deg AS (SELECT a AS vtx, count(*) AS d FROM sym GROUP BY a),
-        |w AS (SELECT l.a AS x, r.b AS y, count(*) AS common
-        |      FROM sym l JOIN sym r ON l.b = r.a AND l.a < r.b
-        |      GROUP BY x, y),
-        |nc AS (SELECT w.x, w.y, w.common
-        |       FROM w LEFT JOIN me ON w.x = me.a AND w.y = me.b
-        |       WHERE me.a IS NULL)
-        |SELECT x, y, CAST(common AS BIGINT) AS common,
-        | round(common / (dx.d + dy.d - common), 6) AS jaccard
-        |FROM nc JOIN deg dx ON nc.x = dx.vtx JOIN deg dy ON nc.y = dy.vtx
-        |ORDER BY jaccard DESC, x, y LIMIT 50""".stripMargin,
-    // triangle twin: the banded knn_graph top-k closure, mutual
-    // undirected edges, oriented wedge join + closing edge, per-corner
-    // explode
-    "graph_triangles" ->
-      s"""WITH ${bandedKnnTopSql(4, 500, 10)},
-        |me AS (SELECT t.q_id AS a, t.c_id AS b
-        |       FROM top t JOIN top r ON r.q_id = t.c_id AND r.c_id = t.q_id
-        |       WHERE t.q_id < t.c_id),
-        |deg AS (SELECT vtx, count(*) AS degree
-        |        FROM (SELECT a AS vtx FROM me UNION ALL SELECT b FROM me)
-        |        GROUP BY vtx),
-        |tri AS (SELECT ab.a AS ta, ab.b AS tb, bc.b AS tc
-        |        FROM me ab JOIN me bc ON ab.b = bc.a
-        |        JOIN me ac ON ac.a = ab.a AND ac.b = bc.b),
-        |pn AS (SELECT vtx, count(*) AS n_triangles
-        |       FROM (SELECT ta AS vtx FROM tri UNION ALL
-        |             SELECT tb FROM tri UNION ALL SELECT tc FROM tri)
-        |       GROUP BY vtx)
-        |SELECT deg.vtx AS vec_id, CAST(degree AS BIGINT) AS degree,
-        | CAST(coalesce(n_triangles, 0) AS BIGINT) AS n_triangles,
-        | CASE WHEN degree >= 2
-        |  THEN round(2.0 * coalesce(n_triangles, 0) / (degree * (degree - 1)), 6)
-        |  ELSE 0.0 END AS cc
-        |FROM deg LEFT JOIN pn ON deg.vtx = pn.vtx ORDER BY vec_id""".stripMargin,
-    // knn-graph twin: the BANDED pipeline (SRP banding at the entry's
-    // pinned geometry, bucket-capped pairs, exact rerank) plus the
-    // reverse-edge mutual flag via a self-join of the top-k set
-    "knn_graph" ->
-      s"""WITH ${bandedKnnTopSql(4, 500, 10)}
-        |SELECT t.q_id, CAST(t.rank AS BIGINT) AS rank, t.c_id,
-        |       round(t.s, 4) AS score, (r.q_id IS NOT NULL) AS mutual
-        |FROM top t LEFT JOIN top r ON r.q_id = t.c_id AND r.c_id = t.q_id
-        |ORDER BY t.q_id, t.rank""".stripMargin,
-    // DPP twin: the same join with NO pruning anywhere — the pruned
-    // fact scan must be result-invisible; exact-DECIMAL HAVING keeps
-    // the dim key set identical across engines
-    "q_dpp_scan" ->
-      """WITH dim AS (
-        | SELECT event_type FROM events GROUP BY event_type
-        | HAVING sum(CAST(value AS DECIMAL(18,2))) > 50 * count(*))
-        |SELECT e.event_type, CAST(count(*) AS BIGINT) AS n,
-        | CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events e JOIN dim USING (event_type)
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
-    // bloom twin: plain join, no runtime filter — might_contain must
-    // be result-invisible (false positives die in the join)
-    "q_bloom_join" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_totalprice > 400000
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    // stream-join twin: the batch interval self-join the streaming
-    // symmetric-hash state must converge to; epoch_us matches Spark's
-    // micros-normalized ts
-    "q_stream_join" ->
-      """SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
-        | CAST((epoch_us(p.ts) - epoch_us(v.ts)) // 1000000 AS BIGINT) AS lag_secs
-        |FROM events v JOIN events p ON v.user_id = p.user_id
-        | AND v.event_type = 'view' AND p.event_type = 'purchase'
-        | AND epoch_us(p.ts) >= epoch_us(v.ts)
-        | AND epoch_us(p.ts) <= epoch_us(v.ts) + 3600000000
-        |ORDER BY v.user_id, view_id, purchase_id""".stripMargin,
-    // phash twin: recompute the aHash from the first 64 payload bytes
-    // (text is ASCII, so ascii(substr) IS the byte); the /64 mean is a
-    // power-of-two division — exact in double in both engines
-    "mm_image_phash" ->
-      """WITH img AS (SELECT doc_id, text FROM documents
-        |             WHERE doc_id % 3 = 0 AND length(text) >= 64),
-        |px AS (SELECT doc_id, t.i,
-        |        ascii(substr(text, CAST(t.i AS INTEGER), 1)) AS v
-        |       FROM img CROSS JOIN range(1, 65) t(i)),
-        |m AS (SELECT doc_id, sum(v) / 64.0 AS mean FROM px GROUP BY doc_id),
-        |h AS (SELECT px.doc_id,
-        |        string_agg(CASE WHEN v >= mean THEN '1' ELSE '0' END,
-        |                   '' ORDER BY px.i) AS phash
-        |      FROM px JOIN m USING (doc_id) GROUP BY px.doc_id)
-        |SELECT phash, CAST(count(*) AS BIGINT) AS n, min(doc_id) AS keeper_id
-        |FROM h GROUP BY phash ORDER BY phash""".stripMargin,
-    // near-dup phash twin: the X118 aHash derivation, then per-char
-    // Hamming over all pairs (the oracle may be quadratic; the ENGINE
-    // may not) — band recall is exact for d ≤ bands − 1 by pigeonhole
-    // phash near-dup twin: same 16-bit banding + the 2..200 bucket
-    // size gate of the engine's bucketPairs cap, exact Hamming verify
-    // on candidates only (the previous all-pairs twin was itself the
-    // quadratic plan the operator exists to avoid)
-    "mm_phash_neardup" ->
+        |FROM c JOIN t USING (event_type) ORDER BY event_type, digit""".stripMargin),
+    // X138: WAND/MaxScore-pruned BM25 — result-identical to
+    // search_bm25 (same oracle), but the scoring exchange only
+    // carries docs passing the scan-stage upper-bound gate
+    Entry("search_wand", (s, dir) =>
+      Search.wandTopK(Tables.documents(s, dir), Seq("spark", "vector", "slow"), 20)
+        .select(col("doc_id"), round(col("score"), 4).as("score")),
+      // wand twin: the UNPRUNED bm25 oracle — pruning must be
+      // result-invisible, which is the entire correctness claim
+      bm25OracleSql(Seq("spark", "vector", "slow"), 20)),
+    // X139: entry-path analysis — first-3-event paths per user
+    Entry("q_entry_paths", EventAnalytics.entryPaths(_, _),
+      // entry-path twin: same rank window (epoch-µs order, event_id
+      // tiebreak) and NULL-skipping concat_ws
+      """WITH r AS (
+        | SELECT user_id, event_type,
+        |  row_number() OVER (PARTITION BY user_id
+        |                     ORDER BY epoch_us(ts), event_id) AS rn
+        | FROM events),
+        |p AS (SELECT user_id,
+        |       min(CASE WHEN rn = 1 THEN event_type END) AS p1,
+        |       min(CASE WHEN rn = 2 THEN event_type END) AS p2,
+        |       min(CASE WHEN rn = 3 THEN event_type END) AS p3
+        |      FROM r WHERE rn <= 3 GROUP BY user_id)
+        |SELECT concat_ws('->', p1, p2, p3) AS path,
+        | CAST(count(*) AS BIGINT) AS n_users
+        |FROM p GROUP BY path ORDER BY path""".stripMargin),
+    // X140: RFM segmentation — quintile grid via the distributed rank
+    Entry("q_rfm", EventAnalytics.rfm(_, _),
+      // rfm twin: same per-user metrics and integer rank·5 DIV n
+      // quintiles (row_number − 1 ≡ the two-phase rank; DuckDB // ≡ DIV)
+      """WITH u AS (
+        | SELECT user_id,
+        |  min(datediff('day', CAST(ts AS DATE), DATE '2024-01-31')) AS rec,
+        |  count(*) AS freq,
+        |  sum(CAST(value AS DECIMAL(18,2))) AS mon
+        | FROM events GROUP BY user_id),
+        |n AS (SELECT count(*) AS n_users FROM u),
+        |s AS (SELECT user_id,
+        |       (row_number() OVER (ORDER BY rec DESC, user_id) - 1) * 5 // n_users + 1 AS r_score,
+        |       (row_number() OVER (ORDER BY freq, user_id) - 1) * 5 // n_users + 1 AS f_score,
+        |       (row_number() OVER (ORDER BY mon, user_id) - 1) * 5 // n_users + 1 AS m_score
+        |      FROM u CROSS JOIN n)
+        |SELECT CAST(r_score AS BIGINT) AS r_score, CAST(f_score AS BIGINT) AS f_score,
+        | CAST(m_score AS BIGINT) AS m_score, CAST(count(*) AS BIGINT) AS n_users
+        |FROM s GROUP BY r_score, f_score, m_score
+        |ORDER BY r_score, f_score, m_score""".stripMargin),
+    // X141: schema-evolution ingest — two-generation mergeSchema read
+    Entry("ingest_evolve", graft.sources.SchemaEvolution.ingestEvolved _,
+      // evolve twin: the merged two-generation read must be
+      // result-invisible vs the original table's slices
+      """WITH m AS (
+        | SELECT 1 AS gen, l_quantity AS qty, CAST(NULL AS DOUBLE) AS price
+        | FROM lineitem WHERE l_linenumber = 1
+        | UNION ALL
+        | SELECT 2, l_quantity, l_extendedprice FROM lineitem WHERE l_linenumber = 2)
+        |SELECT CAST(gen AS BIGINT) AS gen, CAST(count(*) AS BIGINT) AS n_rows,
+        | CAST(count(price) AS BIGINT) AS n_price,
+        | CAST(sum(CAST(qty AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        | coalesce(CAST(sum(CAST(price AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS sum_price
+        |FROM m GROUP BY gen ORDER BY gen""".stripMargin),
+    // X142: view→purchase conversion-latency deciles via the
+    // distributed rank (exact percentiles, no percentile buffer)
+    Entry("q_conv_latency", EventAnalytics.conversionLatency _,
+      // latency twin: same first-touch pair, integer µs latency, rank
+      // deciles (// ≡ DIV), all-integer output
+      """WITH u AS (
+        | SELECT user_id,
+        |  min(CASE WHEN event_type = 'view' THEN ts END) AS t1,
+        |  min(CASE WHEN event_type = 'purchase' THEN ts END) AS t2
+        | FROM events GROUP BY user_id),
+        |l AS (SELECT user_id, epoch_us(t2) - epoch_us(t1) AS lat_us
+        |      FROM u WHERE t1 IS NOT NULL AND t2 IS NOT NULL AND t1 < t2),
+        |n AS (SELECT count(*) AS n FROM l),
+        |r AS (SELECT lat_us,
+        |       (row_number() OVER (ORDER BY lat_us, user_id) - 1) * 10 // n + 1 AS decile
+        |      FROM l CROSS JOIN n)
+        |SELECT CAST(decile AS BIGINT) AS decile, CAST(count(*) AS BIGINT) AS n_users,
+        | CAST(min(lat_us) // 60000000 AS BIGINT) AS min_minutes,
+        | CAST(max(lat_us) // 60000000 AS BIGINT) AS max_minutes
+        |FROM r GROUP BY decile ORDER BY decile""".stripMargin),
+    // X143: DAU / trailing-7-day WAU / stickiness from one user-day
+    // dedup + a bounded day expansion
+    Entry("q_dau_wau", EventAnalytics.dauWau _,
+      // dau/wau twin: same user-day dedup and bounded day expansion
+      """WITH ud AS (
+        | SELECT DISTINCT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
+        |        user_id
+        | FROM events),
+        |dau AS (SELECT day, count(*) AS dau FROM ud GROUP BY day),
+        |w AS (SELECT DISTINCT day + g AS rday, user_id
+        |      FROM ud CROSS JOIN (SELECT unnest([0,1,2,3,4,5,6]) AS g) t),
+        |wau AS (SELECT rday, count(*) AS wau FROM w GROUP BY rday)
+        |SELECT CAST(day AS BIGINT) AS day, CAST(dau AS BIGINT) AS dau,
+        | CAST(wau AS BIGINT) AS wau, round(dau / wau, 6) AS stickiness
+        |FROM dau JOIN wau ON day = rday ORDER BY day""".stripMargin),
+    // X144: per-label embedding drift — half-centroid cosine agreement
+    Entry("embed_drift", (s, dir) =>
+      EmbeddingStats.centroidDrift(Tables.embeddings(s, dir)),
+      // drift twin: the embed_centroid per-dim round-6 average, computed
+      // per half, then one list cosine per label
+      """WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        |ua AS (SELECT label, unnest(e) AS x, unnest(range(1, len(e)+1)) AS pos
+        |       FROM v WHERE vec_id % 2 = 0),
+        |ca AS (SELECT label, pos, round(avg(x), 6) AS m FROM ua GROUP BY 1, 2),
+        |la AS (SELECT label, list(m ORDER BY pos) AS cva FROM ca GROUP BY label),
+        |na AS (SELECT label, count(*) AS n_a FROM v WHERE vec_id % 2 = 0 GROUP BY label),
+        |ub AS (SELECT label, unnest(e) AS x, unnest(range(1, len(e)+1)) AS pos
+        |       FROM v WHERE vec_id % 2 = 1),
+        |cb AS (SELECT label, pos, round(avg(x), 6) AS m FROM ub GROUP BY 1, 2),
+        |lb AS (SELECT label, list(m ORDER BY pos) AS cvb FROM cb GROUP BY label),
+        |nb AS (SELECT label, count(*) AS n_b FROM v WHERE vec_id % 2 = 1 GROUP BY label)
+        |SELECT label, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+        | round(list_cosine_similarity(la.cva, lb.cvb), 4) AS drift_cos
+        |FROM la JOIN lb USING (label) JOIN na USING (label) JOIN nb USING (label)
+        |ORDER BY label""".stripMargin),
+    // X145: perceptual near-dup image pairs within Hamming ≤ 3 via
+    // banded signature join + exact bit_count verify
+    Entry("mm_phash_neardup", graft.multimodal.Multimodal.phashNearDupPairs(_, _),
+      // near-dup phash twin: the X118 aHash derivation, then per-char
+      // Hamming over all pairs (the oracle may be quadratic; the ENGINE
+      // may not) — band recall is exact for d ≤ bands − 1 by pigeonhole
+      // phash near-dup twin: same 16-bit banding + the 2..200 bucket
+      // size gate of the engine's bucketPairs cap, exact Hamming verify
+      // on candidates only (the previous all-pairs twin was itself the
+      // quadratic plan the operator exists to avoid)
       """WITH img AS (SELECT doc_id, text FROM documents
         |             WHERE doc_id % 3 = 0 AND length(text) >= 64),
         |px AS (SELECT doc_id, t.i,
@@ -4925,9 +4535,10 @@ object SparkEntry {
         |WHERE len([i for i in range(1, 65)
         |           if substr(a.phash, CAST(i AS INTEGER), 1) <>
         |              substr(b.phash, CAST(i AS INTEGER), 1)]) <= 3
-        |ORDER BY id1, id2""".stripMargin,
-    // churn twin: same (week, user) dedup and user-keyed self-joins
-    "q_churn" ->
+        |ORDER BY id1, id2""".stripMargin),
+    // X146: weekly churn accounting (new/retained/resurrected/churned)
+    Entry("q_churn", EventAnalytics.churn _,
+      // churn twin: same (week, user) dedup and user-keyed self-joins
       """WITH uw AS (
         | SELECT DISTINCT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS wk,
         |        user_id
@@ -4947,10 +4558,12 @@ object SparkEntry {
         | WHERE c.user_id IS NULL GROUP BY p.wk + 1)
         |SELECT CAST(cur.wk AS BIGINT) AS wk, active, new_users, retained,
         | resurrected, coalesce(ch.churned, 0) AS churned
-        |FROM cur LEFT JOIN ch ON cur.wk = ch.wk ORDER BY wk""".stripMargin,
-    // attribution twin: same strictly-before IGNORE NULLS last_value
-    // window on the (epoch-µs, event_id) order
-    "q_attribution" ->
+        |FROM cur LEFT JOIN ch ON cur.wk = ch.wk ORDER BY wk""".stripMargin),
+    // X147: last-touch revenue attribution with an explicit 'none'
+    // bucket; exact DECIMAL revenue sums
+    Entry("q_attribution", EventAnalytics.lastTouchAttribution _,
+      // attribution twin: same strictly-before IGNORE NULLS last_value
+      // window on the (epoch-µs, event_id) order
       """WITH t AS (
         | SELECT event_type, CAST(value AS DECIMAL(18,2)) AS v,
         |  last_value(CASE WHEN event_type IN ('view', 'click')
@@ -4962,10 +4575,15 @@ object SparkEntry {
         | CAST(count(*) AS BIGINT) AS n_purchases,
         | CAST(sum(v) AS DOUBLE) AS revenue
         |FROM t WHERE event_type = 'purchase'
-        |GROUP BY coalesce(touch, 'none') ORDER BY touch""".stripMargin,
-    // synonym twin: same variant→canonical VALUES (canonical maps to
-    // itself), distinct-token join, distinct-doc reach
-    "ii_synonym_search" ->
+        |GROUP BY coalesce(touch, 'none') ORDER BY touch""".stripMargin),
+    // X148: synonym-expanded search — canonical reach + variant hits
+    Entry("ii_synonym_search", (s, dir) =>
+      Search.synonymSearch(Tables.documents(s, dir), Map(
+        "fast" -> Seq("quick", "rapid"),
+        "index" -> Seq("lookup", "catalog"),
+        "spark" -> Seq("flame"))),
+      // synonym twin: same variant→canonical VALUES (canonical maps to
+      // itself), distinct-token join, distinct-doc reach
       """WITH toks AS (
         | SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
         |                            x -> len(x) > 0) AS t
@@ -4980,18 +4598,20 @@ object SparkEntry {
         | JOIN syn USING (term))
         |SELECT canonical, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
         | CAST(count(*) AS BIGINT) AS n_variant_hits
-        |FROM hits GROUP BY canonical ORDER BY canonical""".stripMargin,
-    // seasonality twin: integer days-since-Monday-epoch mod 7
-    "q_seasonality" ->
+        |FROM hits GROUP BY canonical ORDER BY canonical""".stripMargin),
+    // X149: day-of-week seasonality profile with per-type shares
+    Entry("q_seasonality", EventAnalytics.seasonality _,
+      // seasonality twin: integer days-since-Monday-epoch mod 7
       """WITH c AS (
         | SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7 AS dow,
         |        event_type, count(*) AS n
         | FROM events GROUP BY dow, event_type)
         |SELECT CAST(dow AS BIGINT) AS dow, event_type, CAST(n AS BIGINT) AS n,
         | round(n / sum(n) OVER (PARTITION BY event_type), 6) AS share
-        |FROM c ORDER BY dow, event_type""".stripMargin,
-    // movers twin: same weekly counts, lag deltas, |Δ|-desc rank
-    "q_top_movers" ->
+        |FROM c ORDER BY dow, event_type""".stripMargin),
+    // X150: week-over-week movers with per-week |Δ| rank
+    Entry("q_top_movers", EventAnalytics.topMovers _,
+      // movers twin: same weekly counts, lag deltas, |Δ|-desc rank
       """WITH wk AS (
         | SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS wk,
         |        event_type, count(*) AS n
@@ -5005,10 +4625,11 @@ object SparkEntry {
         | round((n - prev) / prev, 6) AS pct,
         | CAST(row_number() OVER (PARTITION BY wk
         |        ORDER BY abs(n - prev) DESC, event_type) AS BIGINT) AS mover_rank
-        |FROM d WHERE prev IS NOT NULL ORDER BY wk, event_type""".stripMargin,
-    // overlap twin: same (type,user) dedup, pairwise intersection,
-    // Jaccard from integer counts
-    "q_overlap_users" ->
+        |FROM d WHERE prev IS NOT NULL ORDER BY wk, event_type""".stripMargin),
+    // X151: audience-overlap Jaccard matrix between event types
+    Entry("q_overlap_users", EventAnalytics.audienceOverlap _,
+      // overlap twin: same (type,user) dedup, pairwise intersection,
+      // Jaccard from integer counts
       """WITH tu AS (SELECT DISTINCT event_type, user_id FROM events),
         |sz AS (SELECT event_type, count(*) AS sz FROM tu GROUP BY event_type),
         |i AS (
@@ -5021,20 +4642,71 @@ object SparkEntry {
         | round(n_both / (na.sz + nb.sz - n_both), 6) AS jaccard
         |FROM i JOIN sz na ON i.ta = na.event_type
         |       JOIN sz nb ON i.tb = nb.event_type
-        |ORDER BY ta, tb""".stripMargin,
-    // ORC twin reads the ORIGINAL parquet: any drift the ORC hop
-    // introduces (timestamp truncation, double mangling) breaks the
-    // hash; epoch_us matches Spark's micros-normalized ts
-    "ingest_orc" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        | min(epoch_us(ts)) AS min_us, max(epoch_us(ts)) AS max_us,
-        | min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // Mann–Kendall twin: the identical pair self-join over the daily
-    // table, ×18 tie-corrected variance and ×2 tau denominators in
-    // integers, the same final z/tau double sequence
-    "stats_mann_kendall" ->
+        |ORDER BY ta, tb""".stripMargin),
+    // X152: triangle counts + clustering coefficients over the
+    // mutual-kNN graph — structure as a data-quality signal; the edge
+    // substrate is the BANDED kNN route (same pinned geometry as
+    // knn_graph), so no all-pairs scorer anywhere in the graph family
+    Entry("graph_triangles", (s, dir) =>
+      Graph.triangleStatsEdges(bandedGraphEdges(s, dir)),
+      // triangle twin: the banded knn_graph top-k closure, mutual
+      // undirected edges, oriented wedge join + closing edge, per-corner
+      // explode
+      s"""WITH ${bandedKnnTopSql(4, 500, 10)},
+        |me AS (SELECT t.q_id AS a, t.c_id AS b
+        |       FROM top t JOIN top r ON r.q_id = t.c_id AND r.c_id = t.q_id
+        |       WHERE t.q_id < t.c_id),
+        |deg AS (SELECT vtx, count(*) AS degree
+        |        FROM (SELECT a AS vtx FROM me UNION ALL SELECT b FROM me)
+        |        GROUP BY vtx),
+        |tri AS (SELECT ab.a AS ta, ab.b AS tb, bc.b AS tc
+        |        FROM me ab JOIN me bc ON ab.b = bc.a
+        |        JOIN me ac ON ac.a = ab.a AND ac.b = bc.b),
+        |pn AS (SELECT vtx, count(*) AS n_triangles
+        |       FROM (SELECT ta AS vtx FROM tri UNION ALL
+        |             SELECT tb FROM tri UNION ALL SELECT tc FROM tri)
+        |       GROUP BY vtx)
+        |SELECT deg.vtx AS vec_id, CAST(degree AS BIGINT) AS degree,
+        | CAST(coalesce(n_triangles, 0) AS BIGINT) AS n_triangles,
+        | CASE WHEN degree >= 2
+        |  THEN round(2.0 * coalesce(n_triangles, 0) / (degree * (degree - 1)), 6)
+        |  ELSE 0.0 END AS cc
+        |FROM deg LEFT JOIN pn ON deg.vtx = pn.vtx ORDER BY vec_id""".stripMargin),
+    // X153: PageRank centrality over the mutual-kNN graph — canonical
+    // exemplars rank high; per-iteration round(9) pins both engines
+    // to identical doubles
+    Entry("graph_pagerank", (s, dir) =>
+      Graph.pageRankEdges(bandedGraphEdges(s, dir), iters = 5),
+      pageRankOracleSql(5)),
+    // X154: common-neighbor link prediction over the mutual-kNN graph
+    Entry("graph_link_pred", (s, dir) =>
+      Graph.linkPredictionEdges(bandedGraphEdges(s, dir)),
+      // link-pred twin: banded kNN edge substrate, then wedge count =
+      // |N(a) ∩ N(c)|, anti-join edges, Jaccard on the rounded column
+      // with (x, y) tiebreaks
+      s"""WITH ${bandedKnnTopSql(4, 500, 10)},
+        |me AS (SELECT t.q_id AS a, t.c_id AS b
+        |       FROM top t JOIN top r ON r.q_id = t.c_id AND r.c_id = t.q_id
+        |       WHERE t.q_id < t.c_id),
+        |sym AS (SELECT a, b FROM me UNION ALL SELECT b, a FROM me),
+        |deg AS (SELECT a AS vtx, count(*) AS d FROM sym GROUP BY a),
+        |w AS (SELECT l.a AS x, r.b AS y, count(*) AS common
+        |      FROM sym l JOIN sym r ON l.b = r.a AND l.a < r.b
+        |      GROUP BY x, y),
+        |nc AS (SELECT w.x, w.y, w.common
+        |       FROM w LEFT JOIN me ON w.x = me.a AND w.y = me.b
+        |       WHERE me.a IS NULL)
+        |SELECT x, y, CAST(common AS BIGINT) AS common,
+        | round(common / (dx.d + dy.d - common), 6) AS jaccard
+        |FROM nc JOIN deg dx ON nc.x = dx.vtx JOIN deg dy ON nc.y = dy.vtx
+        |ORDER BY jaccard DESC, x, y LIMIT 50""".stripMargin),
+    // X197: Mann–Kendall monotonic-trend test on each type's daily
+    // count series — integer S + ×18 tie-corrected variance, doubles
+    // only in the final z/tau sequence
+    Entry("stats_mann_kendall", Inference.mannKendallDaily _,
+      // Mann–Kendall twin: the identical pair self-join over the daily
+      // table, ×18 tie-corrected variance and ×2 tau denominators in
+      // integers, the same final z/tau double sequence
       """WITH daily AS (
         | SELECT event_type, datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
         |  count(*) AS cnt
@@ -5063,11 +4735,14 @@ object SparkEntry {
         |  WHEN s_stat < 0 THEN CAST(s_stat + 1 AS DOUBLE) / sqrt(CAST(var18 AS DOUBLE) / 18.0)
         |  ELSE 0.0 END, 4) AS z,
         | round(CAST(s_stat AS DOUBLE) / sqrt(CAST((d0 - tx) * d0 AS DOUBLE)), 4) AS tau
-        |FROM j ORDER BY event_type""".stripMargin,
-    // Spearman twin: identical doubled average ranks (2·rank_min +
-    // ties − 1) in HUGEINT, identical Pearson-on-ranks sequence with
-    // sqrt-before-product
-    "stats_spearman" ->
+        |FROM j ORDER BY event_type""".stripMargin),
+    // X198: tie-aware Spearman rank correlation (n_chars vs token
+    // count) per language — doubled ranks keep the tie averages in
+    // integer space
+    Entry("stats_spearman", Inference.spearmanByLang _,
+      // Spearman twin: identical doubled average ranks (2·rank_min +
+      // ties − 1) in HUGEINT, identical Pearson-on-ranks sequence with
+      // sqrt-before-product
       """WITH base AS (
         | SELECT lang, CAST(n_chars AS BIGINT) AS x,
         |  CAST(len(list_filter(regexp_split_to_array(text, '\s+'), t -> len(t) > 0)) AS BIGINT) AS y
@@ -5087,11 +4762,13 @@ object SparkEntry {
         |SELECT lang, CAST(n AS BIGINT) AS n,
         | round(CAST(n*sxy - sx*sy AS DOUBLE) /
         |  (sqrt(CAST(n*sxx - sx*sx AS DOUBLE)) * sqrt(CAST(n*syy - sy*sy AS DOUBLE))), 6) AS rho
-        |FROM a ORDER BY lang""".stripMargin,
-    // ANOVA twin: exact HUGEINT group sums, then the SAME left-assoc
-    // priority-ordered double fold ((((t1+t2)+t3)+t4)+t5 — the
-    // aggregate() order on the Spark side) for SSW and ΣS²/n
-    "q_anova" ->
+        |FROM a ORDER BY lang""".stripMargin),
+    // X199: one-way ANOVA F of order value across order priorities —
+    // exact DECIMAL group sums, fixed left-assoc cross-group fold
+    Entry("q_anova", Inference.anovaPriority _,
+      // ANOVA twin: exact HUGEINT group sums, then the SAME left-assoc
+      // priority-ordered double fold ((((t1+t2)+t3)+t4)+t5 — the
+      // aggregate() order on the Spark side) for SSW and ΣS²/n
       """WITH g AS (
         | SELECT o_orderpriority AS prio, CAST(count(*) AS HUGEINT) AS ng,
         |  CAST(sum(c) AS HUGEINT) AS sg, CAST(sum(c*c) AS HUGEINT) AS qg
@@ -5129,12 +4806,14 @@ object SparkEntry {
         |SELECT k, n, round(ssb, 4) AS ssb, round(ssw, 4) AS ssw,
         | round((ssb / CAST(k - 1 AS DOUBLE)) / (ssw / CAST(n - k AS DOUBLE)), 4) AS f_stat,
         | round(ssb / (ssb + ssw), 6) AS eta_sq
-        |FROM f""".stripMargin,
-    // PMI twin: marginals as window sums over the bounded cell table,
-    // per-cell ln from exact-integer operands — no cross-cell float
-    // accumulation anywhere, so round(4) has nothing to absorb but
-    // the engines' shared ln
-    "stats_mutual_info" ->
+        |FROM f""".stripMargin),
+    // X200: lang × source pointwise mutual information cells — exact
+    // marginals over the bounded cell table, per-cell ln only
+    Entry("stats_mutual_info", Inference.mutualInfoCells _,
+      // PMI twin: marginals as window sums over the bounded cell table,
+      // per-cell ln from exact-integer operands — no cross-cell float
+      // accumulation anywhere, so round(4) has nothing to absorb but
+      // the engines' shared ln
       """WITH cells AS (
         | SELECT lang, source, CAST(count(*) AS BIGINT) AS c_xy
         | FROM documents GROUP BY 1, 2),
@@ -5148,10 +4827,12 @@ object SparkEntry {
         | round(ln(CAST(n * c_xy AS DOUBLE) / CAST(c_x * c_y AS DOUBLE)), 4) AS pmi,
         | round(1000.0 * (CAST(c_xy AS DOUBLE) / CAST(n AS DOUBLE))
         |       * ln(CAST(n * c_xy AS DOUBLE) / CAST(c_x * c_y AS DOUBLE)), 4) AS mi_millinat
-        |FROM m ORDER BY lang, source""".stripMargin,
-    // CUSUM twin: the identical 100n-scaled integer recurrence as a
-    // recursive CTE stepping rn → rn+1 per type
-    "q_cusum" ->
+        |FROM m ORDER BY lang, source""".stripMargin),
+    // X201: two-sided CUSUM changepoint walk over daily counts —
+    // the max(0, ·) recurrence in 100n-scaled exact integers
+    Entry("q_cusum", TimeSeries.cusumDaily _,
+      // CUSUM twin: the identical 100n-scaled integer recurrence as a
+      // recursive CTE stepping rn → rn+1 per type
       """WITH RECURSIVE daily AS (
         | SELECT event_type, datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
         |  count(*) AS cnt
@@ -5176,16 +4857,32 @@ object SparkEntry {
         | CAST(up AS BIGINT) AS cusum_up, CAST(dn AS BIGINT) AS cusum_dn,
         | CAST(CASE WHEN up > 500*s THEN 1 ELSE 0 END AS BIGINT) AS alarm_up,
         | CAST(CASE WHEN dn > 500*s THEN 1 ELSE 0 END AS BIGINT) AS alarm_dn
-        |FROM walk ORDER BY event_type, day""".stripMargin,
-    // label-propagation twin: banded mutual edges + 4 unrolled
-    // synchronous rounds, (count DESC, label) argmax per node
-    "graph_label_prop" -> labelPropOracleSql(4),
-    // Matryoshka twin: per-width exact-cosine top-10 arms over sliced
-    // lists, overlap vs the materialized full-width answer
-    "embed_matryoshka" -> matryoshkaOracleSql(Seq(8, 16, 32, 64), 10, 8),
-    // kNN-classify twin: the banded top-k substrate, neighbor label
-    // votes, (count DESC, label) argmax
-    "embed_knn_classify" ->
+        |FROM walk ORDER BY event_type, day""".stripMargin),
+    // X202: label-propagation communities over the mutual-kNN graph —
+    // synchronous rounds, most-frequent-then-smallest label, all
+    // integer
+    Entry("graph_label_prop", (s, dir) =>
+      Graph.labelPropagationEdges(
+        Tables.embeddings(s, dir), bandedGraphEdges(s, dir), iters = 4),
+      // label-propagation twin: banded mutual edges + 4 unrolled
+      // synchronous rounds, (count DESC, label) argmax per node
+      labelPropOracleSql(4)),
+    // X203: Matryoshka truncation eval — top-10 overlap of
+    // prefix-truncated cosine search vs the full 64-dim answer
+    Entry("embed_matryoshka", (s, dir) =>
+      Similarity.matryoshkaRecall(Tables.embeddings(s, dir)),
+      // Matryoshka twin: per-width exact-cosine top-10 arms over sliced
+      // lists, overlap vs the materialized full-width answer
+      matryoshkaOracleSql(Seq(8, 16, 32, 64), 10, 8)),
+    // X204: leave-one-out kNN label classification over the banded
+    // kNN graph — most-frequent-then-smallest neighbor vote
+    Entry("embed_knn_classify", (s, dir) =>
+      EmbeddingStats.knnClassify(
+        Similarity.knnGraphBanded(Tables.embeddings(s, dir), 10,
+          numPlanes = 0, bands = 4, maxBucket = 500),
+        Tables.embeddings(s, dir)),
+      // kNN-classify twin: the banded top-k substrate, neighbor label
+      // votes, (count DESC, label) argmax
       s"""WITH ${bandedKnnTopSql(4, 500, 10)},
          |lab AS (SELECT vec_id AS id, CAST(label AS BIGINT) AS lab FROM embeddings),
          |votes AS (
@@ -5199,12 +4896,15 @@ object SparkEntry {
          |  FROM votes) WHERE rn = 1)
          |SELECT p.q_id AS vec_id, o.lab AS label, p.predicted,
          | CAST(CASE WHEN o.lab = p.predicted THEN 1 ELSE 0 END AS BIGINT) AS correct
-         |FROM pred p JOIN lab o ON o.id = p.q_id ORDER BY vec_id""".stripMargin,
-    // silhouette twin: identical normalization (sequential
-    // square-fold norm), per-label normalized sums rounded at 6 dp
-    // rebuilt as ordered lists, the same dot/mean/argmin sequence;
-    // + 0 folds DuckDB's -0.0
-    "embed_silhouette" ->
+         |FROM pred p JOIN lab o ON o.id = p.q_id ORDER BY vec_id""".stripMargin),
+    // X205: per-vector silhouette via normalized-sum linearity — no
+    // pairwise join, one label-sum broadcast
+    Entry("embed_silhouette", (s, dir) =>
+      EmbeddingStats.silhouette(Tables.embeddings(s, dir)),
+      // silhouette twin: identical normalization (sequential
+      // square-fold norm), per-label normalized sums rounded at 6 dp
+      // rebuilt as ordered lists, the same dot/mean/argmin sequence;
+      // + 0 folds DuckDB's -0.0
       """WITH v AS (SELECT vec_id AS id, CAST(label AS BIGINT) AS g,
         |            CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |nv AS MATERIALIZED (
@@ -5228,10 +4928,13 @@ object SparkEntry {
         | round(a_dist, 4) + 0 AS a_dist, round(b_dist, 4) + 0 AS b_dist,
         | nearest_other,
         | round((b_dist - a_dist) / greatest(a_dist, b_dist), 4) + 0 AS sil
-        |FROM own JOIN oth USING (id) ORDER BY vec_id""".stripMargin,
-    // Zipf twin: same vocabulary cut and (n DESC, tok) ranking, same
-    // OLS closed forms over the 64-row ln table
-    "stats_zipf" ->
+        |FROM own JOIN oth USING (id) ORDER BY vec_id""".stripMargin),
+    // X206: Zipf power-law fit over the top-64 token frequency
+    // spectrum
+    Entry("stats_zipf", (s, dir) =>
+      TextStats.zipfFit(Tables.documents(s, dir)),
+      // Zipf twin: same vocabulary cut and (n DESC, tok) ranking, same
+      // OLS closed forms over the 64-row ln table
       """WITH toks AS (
         | SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
         |        x -> len(x) > 0)) AS tok
@@ -5248,10 +4951,13 @@ object SparkEntry {
         | round((sy - ((k*sxy - sx*sy) / (k*sxx - sx*sx)) * sx) / k, 4) + 0 AS intercept,
         | round(((k*sxy - sx*sy) * (k*sxy - sx*sy)) /
         |       ((k*sxx - sx*sx) * (k*syy - sy*sy)), 4) AS r2
-        |FROM a""".stripMargin,
-    // feature-hashing twin: the same md5-digit bucket via strpos
-    // arithmetic, grouped instead of row-folded — same counts
-    "text_feature_hash" ->
+        |FROM a""".stripMargin),
+    // X207: feature-hashing vectorizer — per-row bucket histogram
+    // inside the scan, zero vocabulary pass
+    Entry("text_feature_hash", (s, dir) =>
+      TextStats.featureHashing(Tables.documents(s, dir)),
+      // feature-hashing twin: the same md5-digit bucket via strpos
+      // arithmetic, grouped instead of row-folded — same counts
       """WITH toks AS (
         | SELECT doc_id,
         |  unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
@@ -5260,39 +4966,50 @@ object SparkEntry {
         |SELECT doc_id,
         | CAST((strpos('0123456789abcdef', substr(md5(tok), 8, 1)) - 1) % 16 AS BIGINT) AS bucket,
         | CAST(count(*) AS BIGINT) AS cnt
-        |FROM toks GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin,
-    // text-ingest twin reads the ORIGINAL parquet: any tab-splitting
-    // or encoding drift in the text round trip breaks the hash
-    "ingest_text" ->
+        |FROM toks GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin),
+    // X208: plain-text line ingest round trip — tab-delimited stage,
+    // parse-back, per-lang rollup vs the original parquet
+    Entry("ingest_text", graft.sources.TextIngest.ingestEntry _,
+      // text-ingest twin reads the ORIGINAL parquet: any tab-splitting
+      // or encoding drift in the text round trip breaks the hash
       """SELECT lang, CAST(count(*) AS BIGINT) AS n,
         | CAST(sum(len(text)) AS BIGINT) AS n_chars,
         | CAST(sum(len(list_filter(regexp_split_to_array(text, '\s+'),
         |      t -> len(t) > 0))) AS BIGINT) AS n_tokens,
         | min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    // k-core twin: 8 unrolled peeling rounds over the banded mutual
-    // edges
-    "graph_kcore" -> kCoreOracleSql(3, 8),
-    // decay twin: the same integer weight ladder indexed by capped
-    // elapsed half-lives, HUGEINT sum, one display divide
-    "q_decay_score" -> {
-      val w = EventAnalytics.decayWeights(16).mkString("[", ", ", "]")
-      s"""WITH ev AS (
-         | SELECT user_id, datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-         |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS HUGEINT) AS cents
-         | FROM events),
-         |r AS (SELECT max(day) AS ref FROM ev),
-         |k AS (SELECT user_id, cents,
-         |       least(CAST(floor((ref - day) / 7) AS INT), 16) AS kk
-         |      FROM ev CROSS JOIN r),
-         |w AS (SELECT user_id, cents * ($w)[kk + 1] AS num FROM k)
-         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-         | round(CAST(sum(num) AS DOUBLE) / 1.0e16, 6) AS decay_score
-         |FROM w GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    // Welch twin: identical exact cent sums, identical fixed IEEE
-    // combine (explicit x*x, never pow)
-    "stats_welch_ttest" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+    // X209: 3-core degree peeling over the mutual-kNN graph (8
+    // unrolled rounds)
+    Entry("graph_kcore", (s, dir) =>
+      Graph.kCoreEdges(bandedGraphEdges(s, dir)),
+      // k-core twin: 8 unrolled peeling rounds over the banded mutual
+      // edges
+      kCoreOracleSql(3, 8)),
+    // X210: per-user time-decayed engagement — exact integer
+    // half-life weights over a fixed 10^16 denominator
+    Entry("q_decay_score", (s, dir) => EventAnalytics.decayScore(s, dir),
+      // decay twin: the same integer weight ladder indexed by capped
+      // elapsed half-lives, HUGEINT sum, one display divide
+      {
+        val w = EventAnalytics.decayWeights(16).mkString("[", ", ", "]")
+        s"""WITH ev AS (
+           | SELECT user_id, datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
+           |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS HUGEINT) AS cents
+           | FROM events),
+           |r AS (SELECT max(day) AS ref FROM ev),
+           |k AS (SELECT user_id, cents,
+           |       least(CAST(floor((ref - day) / 7) AS INT), 16) AS kk
+           |      FROM ev CROSS JOIN r),
+           |w AS (SELECT user_id, cents * ($w)[kk + 1] AS num FROM k)
+           |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+           | round(CAST(sum(num) AS DOUBLE) / 1.0e16, 6) AS decay_score
+           |FROM w GROUP BY 1 ORDER BY 1""".stripMargin
+      }),
+    // X211: Welch's unequal-variance t-test of event value, purchase
+    // vs click — exact cent sums, fixed IEEE combine
+    Entry("stats_welch_ttest", (s, dir) => Inference.welchTTest(s, dir),
+      // Welch twin: identical exact cent sums, identical fixed IEEE
+      // combine (explicit x*x, never pow)
       """WITH g AS (
         | SELECT event_type, CAST(count(*) AS DECIMAL(38,0)) AS n,
         |  sum(c) AS s, sum(c * c) AS q
@@ -5323,10 +5040,12 @@ object SparkEntry {
         | round(((se1 + se2) * (se1 + se2)) /
         |   ((se1 * se1) / CAST(n1 - 1 AS DOUBLE) +
         |    (se2 * se2) / CAST(n2 - 1 AS DOUBLE)), 4) AS df
-        |FROM f""".stripMargin,
-    // Cramér's V twin: the same 10⁻⁶-quantized per-cell χ² terms
-    // summed as exact integers
-    "stats_cramers_v" ->
+        |FROM f""".stripMargin),
+    // X212: Cramér's V for lang×source — per-cell χ² terms quantized
+    // to 10⁻⁶ and summed as exact longs, no float accumulation
+    Entry("stats_cramers_v", (s, dir) => Inference.cramersV(s, dir),
+      // Cramér's V twin: the same 10⁻⁶-quantized per-cell χ² terms
+      // summed as exact integers
       """WITH cells AS (
         | SELECT lang, source, CAST(count(*) AS DECIMAL(38,0)) AS c_xy
         | FROM documents GROUP BY 1, 2),
@@ -5347,13 +5066,20 @@ object SparkEntry {
         | round(CAST(chi2_6 AS DOUBLE) / 1e6, 4) AS chi2,
         | round(sqrt((CAST(chi2_6 AS DOUBLE) / 1e6) /
         |   (CAST(n AS DOUBLE) * (CAST(least(r, c) AS DOUBLE) - 1.0))), 4) AS v
-        |FROM f""".stripMargin,
-    // assortativity twin: same banded mutual edges, exact DECIMAL
-    // moment sums, sqrt-before-product
-    "graph_assortativity" -> assortativityOracleSql,
-    // gaps twin: the same minute bucketing (floor of an exact-integer
-    // microsecond difference) and lead comparison
-    "q_gaps" ->
+        |FROM f""".stripMargin),
+    // X213: degree assortativity of the mutual-kNN graph — Pearson of
+    // endpoint degrees from exact integer sums over symmetric edges
+    Entry("graph_assortativity", (s, dir) =>
+      Graph.assortativityEdges(bandedGraphEdges(s, dir)),
+      // assortativity twin: same banded mutual edges, exact DECIMAL
+      // moment sums, sqrt-before-product
+      assortativityOracleSql),
+    // X214: gaps-and-islands outage report over each type's minute
+    // clock — one calendar-bounded lead window after the map-side
+    // per-minute rollup
+    Entry("q_gaps", TimeSeries.minuteGaps _,
+      // gaps twin: the same minute bucketing (floor of an exact-integer
+      // microsecond difference) and lead comparison
       """WITH h AS (
         | SELECT DISTINCT event_type,
         |  CAST(floor((epoch_us(ts) -
@@ -5365,10 +5091,13 @@ object SparkEntry {
         | FROM h)
         |SELECT event_type, mn + 1 AS gap_start_min, nxt - 1 AS gap_end_min,
         | nxt - mn - 1 AS gap_minutes
-        |FROM g WHERE nxt > mn + 1 ORDER BY event_type, gap_start_min""".stripMargin,
-    // KM twin: identical durations, then the identical left-assoc
-    // product walk as a recursive CTE (the cusum pattern)
-    "q_survival" ->
+        |FROM g WHERE nxt > mn + 1 ORDER BY event_type, gap_start_min""".stripMargin),
+    // X215: Kaplan–Meier survival of purchase inter-arrival times —
+    // censored tails from each user's last gap; the KM product walks
+    // a bounded left-assoc fold (the cusum move)
+    Entry("q_survival", (s, dir) => EventAnalytics.kmSurvival(s, dir),
+      // KM twin: identical durations, then the identical left-assoc
+      // product walk as a recursive CTE (the cusum pattern)
       """WITH RECURSIVE p AS (
         | SELECT user_id, CAST(floor(epoch_us(ts) / 1000000.0) AS BIGINT) AS s
         | FROM events WHERE event_type = 'purchase'),
@@ -5398,11 +5127,14 @@ object SparkEntry {
         | FROM w JOIN ord o ON o.rn = w.rn + 1)
         |SELECT t AS t_hours, d AS events, c AS censored, n_risk,
         | round(surv, 6) AS survival
-        |FROM w WHERE rn > 0 ORDER BY t_hours""".stripMargin,
-    // readability twin: the SAME two regexes and the same exact
-    // integer half-up divisions (never round(double) — engine
-    // double-rounding diverges on the W/S half-grid)
-    "text_readability" ->
+        |FROM w WHERE rn > 0 ORDER BY t_hours""".stripMargin),
+    // X216: Flesch reading-ease per document — three regex-counted
+    // integers per row inside the scan, one fixed formula
+    Entry("text_readability", (s, dir) =>
+      TextStats.readability(Tables.documents(s, dir)),
+      // readability twin: the SAME two regexes and the same exact
+      // integer half-up divisions (never round(double) — engine
+      // double-rounding diverges on the W/S half-grid)
       """WITH b AS (SELECT doc_id,
         | CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
         |      x -> len(x) > 0)) AS BIGINT) AS n_words,
@@ -5429,16 +5161,29 @@ object SparkEntry {
         |   -(((-fn) * 100 * 2 + fd - ((-fn) * 100 * 2 + fd) % (fd * 2))
         |     / (fd * 2))
         |  END) / 100.0 AS flesch
-        |FROM f ORDER BY doc_id""".stripMargin,
-    // Dirichlet QL twin: per-term tf columns, one stats row, the same
-    // literal left-assoc term sum
-    "search_lm_dirichlet" -> lmDirichletOracleSql(
-      Seq("spark", "vector", "slow"), 20, 2000.0),
-    // k-means twin: the identical unrolled Lloyd walk (see builder)
-    "embed_kmeans" -> kmeansOracleSql(8, 3),
-    // basket twin: same bounded pair join, same exact half-up lift /
-    // confidence divisions
-    "q_basket_lift" ->
+        |FROM f ORDER BY doc_id""".stripMargin),
+    // X217: Dirichlet-smoothed query likelihood top-20 — per-term tf
+    // inside the scan, one broadcast stats row, literal term-order sum
+    Entry("search_lm_dirichlet", (s, dir) =>
+      Search.lmDirichletTopK(Tables.documents(s, dir),
+        Seq("spark", "vector", "slow"), 20)
+        .select(col("doc_id"), round(col("score"), 4).as("score")),
+      // Dirichlet QL twin: per-term tf columns, one stats row, the same
+      // literal left-assoc term sum
+      lmDirichletOracleSql(
+      Seq("spark", "vector", "slow"), 20, 2000.0)),
+    // X218: Lloyd k-means (k=8, 3 iterations, smallest-id seeds) on
+    // the 10⁻⁶ integer grid — broadcast-literal assignment, one
+    // graft_vec_sum update per round
+    Entry("embed_kmeans", (s, dir) =>
+      Clustering.kmeans(Tables.embeddings(s, dir)),
+      // k-means twin: the identical unrolled Lloyd walk (see builder)
+      kmeansOracleSql(8, 3)),
+    // X219: market-basket support/confidence/lift over order line
+    // items — bounded per-order pair join, exact half-up ratios
+    Entry("q_basket_lift", (s, dir) => EventAnalytics.basketLift(s, dir),
+      // basket twin: same bounded pair join, same exact half-up lift /
+      // confidence divisions
       """WITH it AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |            FROM lineitem),
         |n AS (SELECT CAST(count(DISTINCT o) AS BIGINT) AS n_orders FROM it),
@@ -5455,10 +5200,12 @@ object SparkEntry {
         |  / (c_a*c_b*2)) / 1e4 AS lift,
         | ((c_ab*10000*2 + c_a - (c_ab*10000*2 + c_a) % (c_a*2))
         |  / (c_a*2)) / 1e4 AS confidence
-        |FROM j ORDER BY lift DESC, pa, pb LIMIT 50""".stripMargin,
-    // snaive twin: same daily rollup, same lag errors, same exact
-    // half-up MAE and MASE divisions
-    "q_snaive" ->
+        |FROM j ORDER BY lift DESC, pa, pb LIMIT 50""".stripMargin),
+    // X220: seasonal-naive forecast error + MASE per event type —
+    // lag-7 vs lag-1 integer error sums on the daily table
+    Entry("q_snaive", (s, dir) => TimeSeries.snaiveDaily(s, dir),
+      // snaive twin: same daily rollup, same lag errors, same exact
+      // half-up MAE and MASE divisions
       """WITH daily AS (
         | SELECT event_type,
         |  datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
@@ -5481,20 +5228,26 @@ object SparkEntry {
         |   AS mae_naive,
         | ((s7*n1*10000*2 + n7*s1 - (s7*n1*10000*2 + n7*s1) % (n7*s1*2))
         |  / (n7*s1*2)) / 1e4 AS mase
-        |FROM a ORDER BY event_type""".stripMargin,
-    // split twin: the identical salted-md5 cut points (thresholds
-    // interpolated from the SAME Scala doubles the engine uses)
-    "sample_split" ->
+        |FROM a ORDER BY event_type""".stripMargin),
+    // X221: deterministic hash train/val/test split — pure function
+    // of doc_id, scan-stage, rerun- and growth-stable
+    Entry("sample_split", (s, dir) =>
+      Sampling.splitAssign(Tables.documents(s, dir)),
+      // split twin: the identical salted-md5 cut points (thresholds
+      // interpolated from the SAME Scala doubles the engine uses)
       s"""SELECT doc_id, lang,
          | CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8)
          |        < '${Sampling.rateThresholdHex(0.8)}' THEN 'train'
          |      WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8)
          |        < '${Sampling.rateThresholdHex(0.8 + 0.1)}' THEN 'val'
          |      ELSE 'test' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    // constraint-audit twin: the same rule set — domain rules as one
-    // CASE-sum per table, FK rules as NOT EXISTS anti counts
-    "q_constraint_audit" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    // X222: declarative constraint audit — per-table domain rules
+    // fused into one scan each, FK rules as unhinted anti-joins
+    Entry("q_constraint_audit", (s, dir) =>
+      DataQuality.constraintAudit(s, dir),
+      // constraint-audit twin: the same rule set — domain rules as one
+      // CASE-sum per table, FK rules as NOT EXISTS anti counts
       """SELECT * FROM (
         | SELECT 'lineitem_qty_range' AS rule,
         |  CAST(sum(CASE WHEN l_quantity <= 0 OR l_quantity > 50
@@ -5548,10 +5301,13 @@ object SparkEntry {
         |    (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
         |    AS BIGINT),
         |  CAST((SELECT count(*) FROM orders) AS BIGINT)
-        |) ORDER BY rule""".stripMargin,
-    // snapshot-diff twin: the same two per-user states, one null-safe
-    // full outer join, the same 4-way classification
-    "q_snapshot_diff" ->
+        |) ORDER BY rule""".stripMargin),
+    // X223: snapshot reconciliation diff — per-user event state as of
+    // day 8 vs day 31 through ONE null-safe full outer join
+    Entry("q_snapshot_diff", (s, dir) =>
+      DataQuality.snapshotDiffEvents(s, dir),
+      // snapshot-diff twin: the same two per-user states, one null-safe
+      // full outer join, the same 4-way classification
       """WITH a AS (SELECT coalesce(user_id::VARCHAR, chr(1)) || '|' ||
         |    coalesce(event_type, chr(1)) AS k,
         |  CAST(max(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
@@ -5570,13 +5326,16 @@ object SparkEntry {
         |    ELSE 'changed' END AS change_type
         |  FROM a FULL OUTER JOIN b ON a.k = b.k)
         |SELECT change_type, CAST(count(*) AS BIGINT) AS n
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    // checksum twin: identical canonical rendering (every column
-    // through the same coalesce-to-U+0001 NULL sentinel as the Spark
-    // side, so NULL rows hash deterministically instead of nulling
-    // the '||' chain) and 60-bit md5 prefix, summed exactly (HUGEINT)
-    // and rendered as digits
-    "stats_checksum" ->
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin),
+    // X224: order-invariant dataset checksum per lang — commutative
+    // 60-bit md5-prefix sum, partitioning/retry-invariant
+    Entry("stats_checksum", (s, dir) =>
+      DataQuality.datasetChecksum(Tables.documents(s, dir)),
+      // checksum twin: identical canonical rendering (every column
+      // through the same coalesce-to-U+0001 NULL sentinel as the Spark
+      // side, so NULL rows hash deterministically instead of nulling
+      // the '||' chain) and 60-bit md5 prefix, summed exactly (HUGEINT)
+      // and rendered as digits
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_rows,
         | CAST(sum(CAST('0x' || substr(md5(
         |   coalesce(doc_id::VARCHAR, chr(1)) || '|' ||
@@ -5585,10 +5344,12 @@ object SparkEntry {
         |   coalesce(n_chars::VARCHAR, chr(1)) || '|' ||
         |   coalesce(text, chr(1))), 1, 15) AS BIGINT))
         |  AS VARCHAR) AS checksum
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    // theil-sen twin: same daily rollup, same pair join, same
-    // two-middle exact median selection
-    "q_theil_sen" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    // X225: Theil–Sen robust trend per event type — median pairwise
+    // slope over the calendar-bounded daily table
+    Entry("q_theil_sen", (s, dir) => TimeSeries.theilSenDaily(s, dir),
+      // theil-sen twin: same daily rollup, same pair join, same
+      // two-middle exact median selection
       """WITH daily AS (
         | SELECT event_type,
         |  datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
@@ -5608,11 +5369,15 @@ object SparkEntry {
         |SELECT event_type, CAST(max(n) AS BIGINT) AS n_pairs,
         | round(avg(slope), 4) AS slope
         |FROM r WHERE rn = (n + 1) // 2 OR rn = (n + 2) // 2
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // dbscan twin: the identical banded candidate graph, core =
-    // degree >= 3, min-label closure over core-core edges, min-core
-    // border assignment
-    "embed_dbscan" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // X226: DBSCAN density clustering over the banded candidate
+    // graph — deterministic core/border/noise roles, min-label
+    // clusters over core-core edges
+    Entry("embed_dbscan", (s, dir) =>
+      Clustering.dbscan(Tables.embeddings(s, dir)),
+      // dbscan twin: the identical banded candidate graph, core =
+      // degree >= 3, min-label closure over core-core edges, min-core
+      // border assignment
       s"""WITH RECURSIVE v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |${autoSrpBandedSql(4)},
         |ok AS (SELECT band, bhash FROM banded GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 200),
@@ -5649,10 +5414,12 @@ object SparkEntry {
         |        UNION ALL SELECT id, cluster, 'border' FROM borderc)
         |SELECT v.id AS vec_id, coalesce(lab.role, 'noise') AS role,
         | coalesce(lab.cluster, -1) AS cluster
-        |FROM v LEFT JOIN lab ON lab.id = v.id ORDER BY vec_id""".stripMargin,
-    // woe/iv twin: identical exact bin counts, retained-bin totals,
-    // and the identical ln/multiply/round tail
-    "stats_woe_iv" ->
+        |FROM v LEFT JOIN lab ON lab.id = v.id ORDER BY vec_id""".stripMargin),
+    // X227: WOE / information value of order priority predicting
+    // high-value orders — exact bin counts, fixed IEEE tail
+    Entry("stats_woe_iv", (s, dir) => Inference.woeIv(s, dir),
+      // woe/iv twin: identical exact bin counts, retained-bin totals,
+      // and the identical ln/multiply/round tail
       """WITH bins AS (
         | SELECT o_orderpriority AS priority,
         |  CAST(sum(CASE WHEN o_totalprice >= 250000.0 THEN 1 ELSE 0 END)
@@ -5671,10 +5438,13 @@ object SparkEntry {
         |        (CAST(neg AS DOUBLE) / CAST(tn AS DOUBLE))) *
         |   ln((CAST(pos AS DOUBLE) / CAST(tp AS DOUBLE)) /
         |      (CAST(neg AS DOUBLE) / CAST(tn AS DOUBLE))), 6) AS iv_term
-        |FROM bins CROSS JOIN tot ORDER BY priority""".stripMargin,
-    // interp-resample twin: identical minute bucketing, spine,
-    // bracket windows, half-up rational fill, and rollup sums
-    "q_interp_resample" ->
+        |FROM bins CROSS JOIN tot ORDER BY priority""".stripMargin),
+    // X228: linear-interpolation resample of the per-minute peak-value
+    // series, hash-verified through exact per-type rollup sums
+    Entry("q_interp_resample", (s, dir) =>
+      TimeSeries.interpResampleSummary(s, dir),
+      // interp-resample twin: identical minute bucketing, spine,
+      // bracket windows, half-up rational fill, and rollup sums
       """WITH pm AS (
         | SELECT event_type,
         |  CAST(floor((epoch_us(ts) -
@@ -5723,12 +5493,16 @@ object SparkEntry {
         |   AS BIGINT) AS actual_cents,
         | CAST(sum(CASE WHEN src = 'interp' THEN cents_f ELSE 0 END)
         |   AS BIGINT) AS interp_cents
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
-    // nearest-bracket twin: the SAME per-minute pm CTE (incl. the
-    // all-NULL-minute gap filter) paired by lead(); each gap minute
-    // takes the nearer bracket, previous wins ties — one integer
-    // distance compare, no arithmetic to diverge on
-    "q_interp_nearest" ->
+        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin),
+    // X229: nearest-bracket resample — step-fill sibling of X228 for
+    // quantized signals where a linear blend is meaningless; each gap
+    // minute takes the nearer observed bracket, previous wins ties
+    Entry("q_interp_nearest", (s, dir) =>
+      TimeSeries.nearestResampleSummary(s, dir),
+      // nearest-bracket twin: the SAME per-minute pm CTE (incl. the
+      // all-NULL-minute gap filter) paired by lead(); each gap minute
+      // takes the nearer bracket, previous wins ties — one integer
+      // distance compare, no arithmetic to diverge on
       """WITH pm AS (
         | SELECT event_type,
         |  CAST(floor((epoch_us(ts) -
@@ -5762,6 +5536,34 @@ object SparkEntry {
         |   AS BIGINT) AS actual_cents,
         | CAST(sum(CASE WHEN src = 'nearest' THEN cents ELSE 0 END)
         |   AS BIGINT) AS nearest_cents
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
-  )
+        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin),
+  ))
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.build).toMap
+
+  lazy val oracleSql: Map[String, String] = entries.map(e => e.name -> e.oracle).toMap
+
+  /** The entries named in `only` (comma-separated; `None` selects all),
+    * in name order. Throws naming every unknown name, so a misspelled
+    * filter fails before any work instead of selecting nothing. */
+  def selected(only: Option[String]): Seq[Entry] = {
+    val byName = entries.sortBy(_.name)
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
+      case None => byName
+      case Some(names) =>
+        val unknown = names -- queries.keySet
+        require(unknown.isEmpty, s"unknown entry names: ${unknown.toSeq.sorted.mkString(", ")}")
+        require(names.nonEmpty, "the entry filter names no entry")
+        byName.filter(e => names(e.name))
+    }
+  }
+
+  /** The graph family's shared edge substrate: undirected mutual edges
+    * of the banded kNN graph at AUTO band width (the oracle recomputes
+    * the width from count(*), so the banding stays bit-reproducible at
+    * every SF — a pinned width caps out at 10× and drops every edge). */
+  private def bandedGraphEdges(s: SparkSession, dir: String): DataFrame =
+    Graph.undirectedMutual(Similarity.knnGraphBanded(
+      Tables.embeddings(s, dir), 10, numPlanes = 0, bands = 4, maxBucket = 500))
 }

@@ -1,64 +1,43 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry entry's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev affordance: SPARK_GRAFT_ONLY=a,b,c restricts the dump to the
+    // named entries (the driver never sets it — full sweep by default);
+    // an unknown name throws before the session starts
+    val attempted = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(Some(s"local[$cpus]"), Some(cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev affordance: SPARK_GRAFT_ONLY=a,b,c restricts the dump to the
-    // named entries (the driver never sets it — full sweep by default)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val attempted = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     // per-entry wall ceiling (seconds): one pathological plan must fail
     // ITS entry (no dump → the compare tool flags it) instead of
     // rc-124ing the whole sweep and erasing every other entry's
     // evidence — the round-11 failure mode. 600 s default: generous vs
     // the ~1 s sf0.1 median, still bounded at the 10x sweep.
     val ceiling = sys.env.getOrElse("SPARK_GRAFT_VERIFY_CEILING", "600").trim.toInt
-    attempted.foreach { case (name, fn) =>
-      val group = s"verify-$name"
-      val task = new java.util.concurrent.FutureTask[Unit](() => {
-        spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-        // repartition(1), NOT coalesce(1): coalesce collapses the whole
-        // final post-shuffle stage to one task, so an entry whose last
-        // stage carries the expensive work (e.g. the SNM families'
-        // candidate Jaccard verification after the pair join) runs it
-        // single-threaded and can blow the wall ceiling at 10x even
-        // though the plan itself is parallel (Bench's noop sink runs the
-        // same entry 30-80x faster). repartition adds one exchange of
-        // the FINAL result — small by construction, every entry is a
-        // bounded report — and keeps the upstream stages parallel.
-        try fn(spark, sfDir).repartition(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        finally spark.sparkContext.clearJobGroup()
-      })
-      val th = new Thread(task, group); th.setDaemon(true); th.start()
-      try task.get(ceiling.toLong, java.util.concurrent.TimeUnit.SECONDS)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          System.err.println(s"[verify] $name exceeded ${ceiling}s ceiling — cancelled")
-          spark.sparkContext.cancelJobGroup(group)
-          task.cancel(true)
-          try task.get(30, java.util.concurrent.TimeUnit.SECONDS)
-          catch { case _: Throwable => () }
-        case e: Throwable =>
-          val cause = e.getCause match { case null => e; case c => c }
-          System.err.println(s"[verify] $name failed: ${cause.getMessage}")
-      }
+    attempted.foreach { e =>
+      // repartition(1), NOT coalesce(1): coalesce collapses the whole
+      // final post-shuffle stage to one task, so an entry whose last
+      // stage carries the expensive work (e.g. the SNM families'
+      // candidate Jaccard verification after the pair join) runs it
+      // single-threaded and can blow the wall ceiling at 10x even
+      // though the plan itself is parallel (Bench's noop sink runs the
+      // same entry 30-80x faster). repartition adds one exchange of
+      // the FINAL result — small by construction, every entry is a
+      // bounded report — and keeps the upstream stages parallel.
+      Bench.runBounded(spark, "verify", e.name, ceiling)(
+        e.build(spark, sfDir).repartition(1).write.mode("overwrite")
+          .parquet(s"$outDir/${e.name}"))
     }
     // manifest of attempted entries: the compare tool flags an
     // attempted entry with no dump as a FAILURE (a crashed query must
     // not silently vanish from the report)
     Files.writeString(Paths.get(s"$outDir/attempted.json"),
-      if (attempted.isEmpty) "[]"
-      else attempted.keys.toSeq.sorted.mkString("[\"", "\", \"", "\"]"))
+      attempted.map(_.name).mkString("[\"", "\", \"", "\"]"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

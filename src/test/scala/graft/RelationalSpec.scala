@@ -49,11 +49,6 @@ class RelationalSpec extends AnyFunSuite {
     }
   }
 
-  test("every oracle key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
-  }
-
   test("q1_agg groups are complete and ordered") {
     val rows = operators.Relational.q1Agg(spark, sf).collect()
     assert(rows.length >= 4)

@@ -141,7 +141,10 @@ for name in sorted(os.listdir(out_dir)):
             fails += 1
             continue
     if name not in oracle:
-        print(f"  [rows-only] {name}: {len(got)} rows")
+        # every SparkEntry entry declares its oracle, so a dump without
+        # one comes from a stale or foreign oracle_sql.json
+        print(f"FAIL {name}: no oracle in oracle_sql.json")
+        fails += 1
         continue
     # one oracle blowing past the memory limit (not every DuckDB
     # operator can spill) must fail ITS row, not kill the sweep.

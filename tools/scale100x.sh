@@ -63,7 +63,7 @@ amp "$AMP100BN" 100 byteneutral
 
 bench1() { # bench1 <sfdir> <entry> <outjson>
   SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_REPS=1 \
-    SPARK_GRAFT_BENCH_CEILING=$CEIL SPARK_GRAFT_BENCH_ONLY="$2" \
+    SPARK_GRAFT_BENCH_CEILING=$CEIL SPARK_GRAFT_ONLY="$2" \
     SPARK_GRAFT_BENCH_OUT="$3" sbt -batch "runMain graft.Bench" || exit 1
 }
 

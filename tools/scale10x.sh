@@ -53,7 +53,7 @@ SPARK_GRAFT_SF_DIR="$AMP" SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_REPS=1 \
 # BYTES per 10x in rows, so text-op wall ratios conflate row scaling
 # with byte inflation. Re-amplify documents byte-neutrally and re-bench
 # the text-dominated entries so their 10x ratios measure ROWS. Both
-# scales run the SAME condition (one isolated BENCH_ONLY JVM, reps=1)
+# scales run the SAME condition (one isolated SPARK_GRAFT_ONLY JVM, reps=1)
 # so the ratio is not polluted by sweep-vs-isolated asymmetry.
 # Stale artifacts from a previous run are removed FIRST so a failed
 # bench can't silently fold last run's numbers into SCALE10X.json.
@@ -63,10 +63,10 @@ AMPBN=${AMPBN:-/tmp/graft_scale10x_bn}
 SPARK_GRAFT_SCALEUP_TEXT=byteneutral SPARK_GRAFT_CPUS=$CPUS \
   sbt -batch "runMain graft.ScaleUp $SRC $AMPBN $FACTOR" || exit 1
 SPARK_GRAFT_SF_DIR="$AMPBN" SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_REPS=1 \
-  SPARK_GRAFT_BENCH_CEILING=600 SPARK_GRAFT_BENCH_ONLY="$TEXT_ENTRIES" \
+  SPARK_GRAFT_BENCH_CEILING=600 SPARK_GRAFT_ONLY="$TEXT_ENTRIES" \
   SPARK_GRAFT_BENCH_OUT=SCALE10X_TEXT.json sbt -batch "runMain graft.Bench" || exit 1
 SPARK_GRAFT_SF_DIR="$SRC" SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_REPS=1 \
-  SPARK_GRAFT_BENCH_CEILING=600 SPARK_GRAFT_BENCH_ONLY="$TEXT_ENTRIES" \
+  SPARK_GRAFT_BENCH_CEILING=600 SPARK_GRAFT_ONLY="$TEXT_ENTRIES" \
   SPARK_GRAFT_BENCH_OUT=SCALE10X_TEXT_1X.json sbt -batch "runMain graft.Bench" || exit 1
 
 # ---- SNM-family isolated bench (r11 item 7) -----------------------------
@@ -89,15 +89,15 @@ SPARK_GRAFT_CPUS=$CPUS sbt -batch \
   "runMain graft.SnmRecall $AMP /tmp/graft_snm_recall_10x.json" || exit 1
 for e in $SNM_ENTRIES; do
   SPARK_GRAFT_SF_DIR="$SRC" SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_REPS=1 \
-    SPARK_GRAFT_BENCH_CEILING=600 SPARK_GRAFT_BENCH_ONLY="$e" \
+    SPARK_GRAFT_BENCH_CEILING=600 SPARK_GRAFT_ONLY="$e" \
     SPARK_GRAFT_BENCH_OUT=/tmp/graft_snm_1x_$e.json sbt -batch "runMain graft.Bench" || exit 1
   SPARK_GRAFT_SF_DIR="$AMP" SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_REPS=1 \
-    SPARK_GRAFT_BENCH_CEILING=600 SPARK_GRAFT_BENCH_ONLY="$e" \
+    SPARK_GRAFT_BENCH_CEILING=600 SPARK_GRAFT_ONLY="$e" \
     SPARK_GRAFT_BENCH_OUT=/tmp/graft_snm_10x_$e.json sbt -batch "runMain graft.Bench" || exit 1
   # byteneutral 10x leg: same row count, ~1x bytes/row — separates the
   # auto-window/candidate growth (real, designed) from byte inflation
   SPARK_GRAFT_SF_DIR="$AMPBN" SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_REPS=1 \
-    SPARK_GRAFT_BENCH_CEILING=600 SPARK_GRAFT_BENCH_ONLY="$e" \
+    SPARK_GRAFT_BENCH_CEILING=600 SPARK_GRAFT_ONLY="$e" \
     SPARK_GRAFT_BENCH_OUT=/tmp/graft_snm_10xbn_$e.json sbt -batch "runMain graft.Bench" || exit 1
 done
 

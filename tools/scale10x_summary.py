@@ -68,7 +68,7 @@ summary = {
 # byte-neutral text sweep (optional): 10x rows at ~1x bytes/row, so the
 # ratio measures ROW scaling without the prefix mode's ~2.3x byte
 # inflation. Both scales are benched under the SAME condition — one
-# isolated BENCH_ONLY JVM, reps=1 (SCALE10X_TEXT_1X.json) — so the
+# isolated SPARK_GRAFT_ONLY JVM, reps=1 (SCALE10X_TEXT_1X.json) — so the
 # ratio is apples-to-apples; the full-sweep reps=3 number is kept
 # alongside as sec_1x_fullsweep for context only.
 if os.path.exists("SCALE10X_TEXT.json"):

@@ -32,5 +32,5 @@ SPARK_GRAFT_ONLY="$ENTRIES" SPARK_GRAFT_CPUS=$CPUS \
 python3 tools/local_verify.py "$AMP" "$OUT" --baseline "$BASE/counts.json" \
   --factor "$FACTOR" | tee /tmp/scale${FACTOR}x_verify.log
 SPARK_GRAFT_SF_DIR="$AMP" SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_REPS=1 \
-  SPARK_GRAFT_BENCH_ONLY="$ENTRIES" \
+  SPARK_GRAFT_ONLY="$ENTRIES" \
   SPARK_GRAFT_BENCH_OUT=SCALE${FACTOR}X_BENCH.json sbt -batch "runMain graft.Bench"

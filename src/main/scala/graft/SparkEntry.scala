@@ -5549,15 +5549,19 @@ object SparkEntry {
     * filter fails before any work instead of selecting nothing. */
   def selected(only: Option[String]): Seq[Entry] = {
     val byName = entries.sortBy(_.name)
-    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
-      case None => byName
-      case Some(names) =>
-        val unknown = names -- queries.keySet
-        require(unknown.isEmpty, s"unknown entry names: ${unknown.toSeq.sorted.mkString(", ")}")
-        require(names.nonEmpty, "the entry filter names no entry")
-        byName.filter(e => names(e.name))
-    }
+    filterNames(only, queries.keySet).fold(byName)(names => byName.filter(e => names(e.name)))
   }
+
+  /** The names a comma-separated filter lists (`None` without one),
+    * checked against `known`: throws naming every unknown name, or when
+    * the filter names none. */
+  private[graft] def filterNames(only: Option[String], known: Set[String]): Option[Set[String]] =
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).map { names =>
+      val unknown = names -- known
+      require(unknown.isEmpty, s"unknown names: ${unknown.toSeq.sorted.mkString(", ")}")
+      require(names.nonEmpty, "the filter names none")
+      names
+    }
 
   /** The graph family's shared edge substrate: undirected mutual edges
     * of the banded kNN graph at AUTO band width (the oracle recomputes

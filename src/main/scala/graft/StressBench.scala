@@ -83,12 +83,10 @@ object StressBench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def run(spark: SparkSession, path: String, verbatimPath: String,
-                  embPath: String, evDir: String, label: String): Map[String, Double] = {
-    val docs = spark.read.parquet(path)
-    val v = spark.read.parquet(verbatimPath)
-    val emb = spark.read.parquet(embPath)
-    val ops: Seq[(String, () => DataFrame)] = Seq(
+  /** The timed ops over one corpus copy (`v` = the verbatim documents);
+    * building the list runs nothing. */
+  private def ops(spark: SparkSession, docs: DataFrame, v: DataFrame, emb: DataFrame,
+                  evDir: String): Seq[(String, () => DataFrame)] = Seq(
       // ---- search family (verbatim amplification: postings and df
       // grow with the factor; must stay scan/shuffle-linear) ----
       "ii_search_boolean" -> (() =>
@@ -294,10 +292,13 @@ object StressBench {
       // string-pair-keyed exchange
       "text_skipgrams" -> (() =>
         operators.TextStats.skipgrams(docs, window = 2, k = 20)))
-    // dev affordance: SPARK_GRAFT_STRESS_ONLY=a,b,c restricts the run
-    val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    ops.filter { case (name, _) => only.forall(_.contains(name)) }
+
+  private def run(spark: SparkSession, path: String, verbatimPath: String,
+                  embPath: String, evDir: String, label: String,
+                  only: Option[Set[String]]): Map[String, Double] = {
+    ops(spark, spark.read.parquet(path), spark.read.parquet(verbatimPath),
+        spark.read.parquet(embPath), evDir)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, f) =>
       timeNoop(f) // warm-up
       val secs = timeNoop(f)
@@ -315,6 +316,10 @@ object StressBench {
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
     val ev = Tables.events(spark, sfDir)
+    // dev affordance: SPARK_GRAFT_STRESS_ONLY=a,b,c restricts the run;
+    // an unknown name throws here, before any table is written
+    val only = SparkEntry.filterNames(sys.env.get("SPARK_GRAFT_STRESS_ONLY"),
+      ops(spark, docs, docs, emb, sfDir).map(_._1).toSet)
     val base = docs.count()
     docs.write.mode("overwrite").parquet(s"$tmp/x1")
     docs.write.mode("overwrite").parquet(s"$tmp/x1t")
@@ -327,9 +332,9 @@ object StressBench {
       .parquet(s"$tmp/ev$factor/events.parquet")
     println(s"[stress] rows: ${base} -> ${base * factor} (${factor}x)")
 
-    val t1 = run(spark, s"$tmp/x1", s"$tmp/x1t", s"$tmp/e1", s"$tmp/ev1", "1x ")
+    val t1 = run(spark, s"$tmp/x1", s"$tmp/x1t", s"$tmp/e1", s"$tmp/ev1", "1x ", only)
     val tN = run(spark, s"$tmp/x$factor", s"$tmp/x${factor}t", s"$tmp/e$factor",
-      s"$tmp/ev$factor", s"${factor}x")
+      s"$tmp/ev$factor", s"${factor}x", only)
     t1.keys.foreach { k =>
       val ratio = tN(k) / t1(k)
       println(f"[stress] ratio $k%-24s ${ratio}%5.2fx time for ${factor}x data " +

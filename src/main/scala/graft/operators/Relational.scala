@@ -434,18 +434,10 @@ object Relational {
 
   /** C18: EQUI-DEPTH histogram — the optimizer-statistics histogram
     * (equal row mass per bucket, data-dependent boundaries), the
-    * complement of the fixed-width `histogram`.
-    *
-    * EXACT boundaries WITHOUT the exact-percentile scale trap: a
-    * single `percentile` aggregate buffers the whole column in one
-    * task's buffer (the documented q_quantiles weakness — and at 3.6s
-    * for 600k rows, the measured one). Instead the column goes through
-    * the repo's two-phase distributed global rank; the two ranked rows
-    * bracketing each i/B position come back (≤ 2(B−1) rows), and the
-    * boundary is the same (pos − ⌊pos⌋)-linear interpolation
-    * `percentile`/quantile_cont use — exact quantiles at the cost of
-    * one range shuffle, no single-task buffer anywhere (3.6s → ~1s at
-    * sf0.1). Boundaries are then LITERALS in the bucket scan (bucket =
+    * complement of the fixed-width `histogram`. The B−1 boundaries are
+    * exact quantiles from `exactQuantiles` over one constant group (one
+    * range shuffle, no column held in one task), read back as one row.
+    * Boundaries are then LITERALS in the bucket scan (bucket =
     * boundaries exceeded), rounded to the reported precision so
     * membership never hinges on a last-ulp difference between
     * engines. */
@@ -453,35 +445,22 @@ object Relational {
                          buckets: Int = 8): DataFrame = {
     import spark.implicits._
     val li = Tables.lineitem(spark, sfDir)
-    val ranked = Dedup.globalRank(
-      li.select($"l_extendedprice".as("v")), Seq("v")).persist()
-    try {
-      val n = ranked.count()
-      val fracs = (1 until buckets).map(_.toDouble / buckets)
-      val need = fracs.flatMap { f =>
-        val p = f * (n - 1); Seq(math.floor(p).toLong, math.ceil(p).toLong)
-      }.distinct
-      // equal values are interchangeable under row_number ties, so the
-      // VALUES at these ranks are deterministic even though tied rows'
-      // rank assignment is not
-      val at = ranked.where($"rank".isin(need: _*)).collect()
-        .map(r => r.getLong(1) -> r.getDouble(0)).toMap
-      val bounds = fracs.map { f =>
-        val p = f * (n - 1)
-        val lo = at(math.floor(p).toLong); val hi = at(math.ceil(p).toLong)
-        BigDecimal(lo + (p - math.floor(p)) * (hi - lo))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
-      val bucket = bounds.foldLeft(lit(0L)) { (acc, b) =>
-        acc + when($"l_extendedprice" > b, 1L).otherwise(0L)
-      }
-      li.select(bucket.as("bucket"), $"l_extendedprice")
-        .groupBy($"bucket")
-        .agg(count(lit(1)).as("n"),
-          round(min($"l_extendedprice"), 2).as("lo"),
-          round(max($"l_extendedprice"), 2).as("hi"))
-        .orderBy($"bucket")
-    } finally ranked.unpersist()
+    val fracs = (1 until buckets).map(_.toDouble / buckets)
+    // an empty table has no group row, an all-NULL column a NULL array:
+    // no boundaries, one bucket
+    val bounds = exactQuantiles(li.select(lit(0).as("g"), $"l_extendedprice"),
+        "g", "l_extendedprice", fracs)
+      .collect().flatMap(r => Option(r.getSeq[Double](2))).headOption.getOrElse(Nil)
+      .map(b => BigDecimal(b).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    val bucket = bounds.foldLeft(lit(0L)) { (acc, b) =>
+      acc + when($"l_extendedprice" > b, 1L).otherwise(0L)
+    }
+    li.select(bucket.as("bucket"), $"l_extendedprice")
+      .groupBy($"bucket")
+      .agg(count(lit(1)).as("n"),
+        round(min($"l_extendedprice"), 2).as("lo"),
+        round(max($"l_extendedprice"), 2).as("hi"))
+      .orderBy($"bucket")
   }
 
   /** C17: column profiling (the ANALYZE-TABLE surface): per column —
@@ -534,55 +513,62 @@ object Relational {
           .otherwise("kept").as("status"))
   }
 
-  /** C15: percentiles per group, conf-routed between the exact and
-    * sketch forms. Exact `percentile` buffers every value of the group
-    * in one ObjectHashAggregate task — correct for bounded groups, a
-    * per-task OOM when one group holds a 100 TB corpus's rows. Exact is
-    * the default; a 100 TB run sets `spark.graft.quantiles.approx=true`
-    * (accuracy via `spark.graft.quantiles.accuracy`, rank error
-    * ≤ 1/accuracy) to route the SAME query shape through the mergeable
-    * `approx_percentile` sketch — constant memory per group, identical
-    * output schema, so callers flip one conf instead of rewriting.
-    * RelationalSpec proves the two routes agree within the sketch's
-    * rank-error bound; the driver entry runs the exact route (DuckDB
-    * oracle is exact). */
+  /** Exact grouped quantiles with no group held in one task: per
+    * group, the values Spark's `percentile` aggregate returns for
+    * `valueCol` at `fractions`. NULL values are dropped and the rest
+    * are counted (n); `TrainingOrder.groupedRank` ranks them on
+    * (group, value) — one range shuffle — and only the two ranks
+    * bracketing each position p = f·(n−1) pass the filter. Each
+    * quantile then interpolates with `percentile`'s formula,
+    * (⌈p⌉−p)·lo + (p−⌊p⌋)·hi, or is lo itself when the two bracketing
+    * values are equal. Tied rows may swap ranks, but their values are
+    * equal, so the bracketing VALUES are deterministic. Returns one
+    * row per group, a NULL group included: the group key, `n` = the
+    * group's rows (count(*), NULL values included) and `qs`, an
+    * array<double> in `fractions` order that is NULL when the group
+    * has no non-NULL value. */
+  def exactQuantiles(df: DataFrame, groupCol: String, valueCol: String,
+                     fractions: Seq[Double]): DataFrame = {
+    require(fractions.nonEmpty && fractions.forall(f => f >= 0 && f <= 1),
+      "quantile fractions must lie in [0, 1]")
+    val vals = df.select(col(groupCol), col(valueCol).cast("double").as("__v"))
+    val counts = vals.groupBy(col(groupCol))
+      .agg(count(lit(1)).as("n"), count(col("__v")).as("__n"))
+    val ranked = TrainingOrder.groupedRank(vals.where(col("__v").isNotNull),
+      groupCol, Seq("__v"))
+    val pos = fractions.map(f => lit(f) * (col("__n") - 1))
+    val near = ranked
+      .join(broadcast(counts.withColumnRenamed(groupCol, "__g")),
+        col(groupCol) <=> col("__g"))
+      .where(pos.flatMap(p => Seq(floor(p), ceil(p))).map(col("grank") === _).reduce(_ || _))
+      .select(col(groupCol), col("n"), col("__n"), col("grank"), col("__v"))
+    // the counts rows keep every group, an all-NULL one included
+    val rows = near.unionByName(counts
+      .withColumn("grank", lit(null).cast("long"))
+      .withColumn("__v", lit(null).cast("double")))
+    val ends = pos.zipWithIndex.flatMap { case (p, i) => Seq(
+      max(when(col("grank") === floor(p), col("__v"))).as(s"__lo$i"),
+      max(when(col("grank") === ceil(p), col("__v"))).as(s"__hi$i")) }
+    val qs = pos.zipWithIndex.map { case (p, i) =>
+      val (lo, hi) = (col(s"__lo$i"), col(s"__hi$i"))
+      when(lo === hi, lo).otherwise((ceil(p) - p) * lo + (p - floor(p)) * hi)
+    }
+    rows.groupBy(col(groupCol))
+      .agg(max(col("n")).as("n"), max(col("__n")).as("__n") +: ends: _*)
+      .select(col(groupCol), col("n"), when(col("__n") > 0, array(qs: _*)).as("qs"))
+  }
+
+  /** C15: exact percentiles per group through `exactQuantiles`. */
   def quantiles(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val approx = spark.conf.getOption("spark.graft.quantiles.approx").exists(_.toBoolean)
-    val accuracy = spark.conf.getOption("spark.graft.quantiles.accuracy")
-      .map(_.toInt).getOrElse(10000)
-    // ONE array-percentile aggregate, not four scalar ones — each
-    // scalar `percentile` buffers the whole group independently (4×
-    // memory, 4× sort), the array form buffers once (4.96s → ~1s at
-    // sf0.1)
-    val qs =
-      if (approx) expr(
-        s"approx_percentile(l_extendedprice, array(0.25, 0.5, 0.75, 0.95), $accuracy)")
-      else expr("percentile(l_extendedprice, array(0.25, 0.5, 0.75, 0.95))")
-    // exact percentile's partial buffers sort whole value lists — keep
-    // the partial phase at session parallelism off a single-split scan
-    Parallelize.spreadScan(Tables.lineitem(spark, sfDir)
-        .select($"l_returnflag", $"l_extendedprice"))
-      .groupBy($"l_returnflag")
-      .agg(qs.cast("array<double>").as("qs"), count(lit(1)).as("n"))
+    exactQuantiles(Tables.lineitem(spark, sfDir), "l_returnflag", "l_extendedprice",
+        Seq(0.25, 0.5, 0.75, 0.95))
       .select($"l_returnflag",
         round(element_at($"qs", 1), 4).as("p25"),
         round(element_at($"qs", 2), 4).as("p50"),
         round(element_at($"qs", 3), 4).as("p75"),
         round(element_at($"qs", 4), 4).as("p95"),
         $"n")
-      .orderBy($"l_returnflag")
-  }
-
-  /** C15 at scale: KLL/GK-style mergeable quantile sketch
-    * (`approx_percentile`) — one pass, constant memory per group,
-    * rank error ≤ 1/accuracy. */
-  def approxQuantiles(spark: SparkSession, sfDir: String, accuracy: Int = 10000): DataFrame = {
-    import spark.implicits._
-    Tables.lineitem(spark, sfDir)
-      .groupBy($"l_returnflag")
-      .agg(expr(s"approx_percentile(l_extendedprice, array(0.25, 0.5, 0.75, 0.95), $accuracy)")
-        .as("qs"), count(lit(1)).as("n"))
       .orderBy($"l_returnflag")
   }
 
@@ -750,36 +736,18 @@ object Relational {
     * quantile band average through a DECIMAL sum (2-decimal prices
     * are exact decimals, so the sum is accumulation-order-independent
     * and engine-identical); everything outside is discarded. Two
-    * passes by construction — bounds, then the filtered aggregate —
-    * but the bounds come from the ONE array-percentile aggregate the
-    * quantile entry already uses and join back as a broadcast
-    * (|groups| rows), so the extra cost is one more scan, not a new
-    * shape. Boundary safety: an interpolated bound either lands ON a
-    * data value (g = 0, exact in both engines) or strictly between
-    * two values 0.01 apart — a last-ulp engine difference can never
-    * flip a >= comparison. */
+    * passes by construction — bounds from `exactQuantiles`, then the
+    * filtered aggregate — and the bounds join back as a broadcast
+    * (|groups| rows). Boundary safety: an interpolated bound either
+    * lands ON a data value (g = 0, exact in both engines) or strictly
+    * between two values 0.01 apart — a last-ulp engine difference can
+    * never flip a >= comparison. */
   def trimmedMeanPerGroup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // spread a single-split scan so the percentile partial buffers and
-    // the trim pass run at session parallelism (no-op at scale)
-    val li = Parallelize.spreadScan(Tables.lineitem(spark, sfDir)
-      .select($"l_returnflag", $"l_extendedprice"))
-    // §5.8: the exact array-percentile buffers whole groups — the same
-    // conf that routes `quantiles` flips these bounds to the mergeable
-    // approx_percentile sketch (constant state per group, identical
-    // schema); the trim then keeps ~[p10, p90] within the sketch's
-    // rank-error bound. The driver entry runs the exact route (DuckDB
-    // oracle is exact).
-    val approx = spark.conf.getOption("spark.graft.quantiles.approx").exists(_.toBoolean)
-    val accuracy = spark.conf.getOption("spark.graft.quantiles.accuracy")
-      .map(_.toInt).getOrElse(10000)
-    val pctl =
-      if (approx) expr(s"approx_percentile(l_extendedprice, array(0.1, 0.9), $accuracy)")
-      else expr("percentile(l_extendedprice, array(0.1, 0.9))")
-    val bounds = li.groupBy($"l_returnflag")
-      .agg(pctl.cast("array<double>").as("b"))
-      .select($"l_returnflag", element_at($"b", 1).as("lo"),
-        element_at($"b", 2).as("hi"))
+    val li = Tables.lineitem(spark, sfDir).select($"l_returnflag", $"l_extendedprice")
+    val bounds = exactQuantiles(li, "l_returnflag", "l_extendedprice", Seq(0.1, 0.9))
+      .select($"l_returnflag", element_at($"qs", 1).as("lo"),
+        element_at($"qs", 2).as("hi"))
     li.join(broadcast(bounds), "l_returnflag")
       .where($"l_extendedprice" >= $"lo" && $"l_extendedprice" <= $"hi")
       .groupBy($"l_returnflag")
@@ -897,23 +865,20 @@ object Relational {
     * distributions where mean/stddev z-scores (q_rolling_anomaly's
     * arithmetic) drown: median and MAD have a 50% breakdown point, so
     * a crawl shard whose spam inflates the tail still scores its bulk
-    * correctly. Two exact `percentile` passes (value median, then
-    * deviation median) over |types| groups. Each pass buffers every
-    * value of a group in one task, so it is sized for bounded groups
-    * (SURVEY §5); it reads no conf and has no sketch route, so a group
-    * holding a 100 TB corpus's rows would not fit one task (ROADMAP:
-    * exact grouped quantiles). Outlier rule: |value − median| > k·MAD. */
+    * correctly. Two `exactQuantiles` passes (value median, then
+    * deviation median) over |types| groups. Outlier rule:
+    * |value − median| > k·MAD. */
   def madOutliers(spark: SparkSession, sfDir: String,
                   k: Double = 3.0): DataFrame = {
     import spark.implicits._
     val ev = Tables.events(spark, sfDir)
       .select($"event_type", $"value".cast("double").as("v"))
-    val med = ev.groupBy($"event_type")
-      .agg(percentile($"v", lit(0.5)).as("med"))
+    val med = exactQuantiles(ev, "event_type", "v", Seq(0.5))
+      .select($"event_type", element_at($"qs", 1).as("med"))
     val dev = ev.join(broadcast(med), "event_type")
       .withColumn("adev", abs($"v" - $"med"))
-    val mad = dev.groupBy($"event_type")
-      .agg(percentile($"adev", lit(0.5)).as("mad"))
+    val mad = exactQuantiles(dev, "event_type", "adev", Seq(0.5))
+      .select($"event_type", element_at($"qs", 1).as("mad"))
     dev.join(broadcast(mad), "event_type")
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),

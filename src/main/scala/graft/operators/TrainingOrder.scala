@@ -73,10 +73,11 @@ object TrainingOrder {
     val offDF = local.groupBy(col("__pid"), col(groupCol))
       .agg(count(lit(1)).as("__c"), min(col("__mid")).as("__m0"))
       .withColumn("__off", coalesce(sum(col("__c")).over(scanW), lit(0L)))
-      .drop("__c")
-    local.join(broadcast(offDF), Seq("__pid", groupCol))
-      .withColumn("grank", col("__mid") - col("__m0") + col("__off"))
-      .drop("__pid", "__mid", "__m0", "__off")
+      .select(col("__pid").as("__opid"), col(groupCol).as("__og"), col("__m0"), col("__off"))
+    // null-safe on the group: a NULL group key is a group like any other
+    local.join(broadcast(offDF), col("__pid") === col("__opid") && col(groupCol) <=> col("__og"))
+      .select(col(groupCol) +: df.columns.filter(_ != groupCol).map(col) :+
+        (col("__mid") - col("__m0") + col("__off")).as("grank"): _*)
   }
 
   /** Multi-epoch reshuffling in ONE pass: epoch e's permutation is the

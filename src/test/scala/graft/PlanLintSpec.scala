@@ -45,6 +45,19 @@ class PlanLintSpec extends AnyFunSuite {
       "one-row leg recombination must broadcast, not shuffle")
   }
 
+  test("grouped-quantile entries plan no percentile buffer and no sketch") {
+    // exact quantiles rank the values (exactQuantiles); a `percentile`
+    // aggregate would hold each group in one task. The final adaptive
+    // plan exists only once the entry has run.
+    Seq("q_quantiles", "q_trimmed_mean", "q_mad", "q_equidepth").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("percentile(") && !plan.contains("approx_percentile"),
+        s"$name plans a percentile aggregate:\n$plan")
+    }
+  }
+
   test("scans are column-pruned: no query reads every documents column needlessly") {
     val plan = SparkEntry.queries("text_tokens")(spark, sf)
       .queryExecution.executedPlan.toString

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -275,72 +275,70 @@ class RelationalSpec extends AnyFunSuite {
     assert(got.size == 4)
   }
 
-  test("quantiles: exact percentiles ordered, approx sketch lands within rank tolerance") {
-    val exact = operators.Relational.quantiles(spark, sf).collect()
-      .map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-      .toMap
-    exact.values.foreach(qs => assert(qs.sameElements(qs.sorted), "percentiles must ascend"))
-    val approx = operators.Relational.approxQuantiles(spark, sf).collect()
-      .map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
-    // accuracy=10000 over ≤60k-row groups: rank error ≤ n/10000 ≈ a few
-    // ranks — the sketch value must sit inside the adjacent exact
-    // percentile bracket
-    approx.foreach { case (flag, qs) =>
-      val e = exact(flag)
-      assert(qs(1) >= e(0) && qs(1) <= e(2), s"$flag approx p50 ${qs(1)} outside [p25,p75] $e")
-      assert(qs(3) >= e(2), s"$flag approx p95 ${qs(3)} below exact p75")
-    }
+  /** `exactQuantiles` must return, group for group, exactly what
+    * Spark's `percentile(v, array(fractions))` returns next to
+    * count(*): the same doubles, and NULL where it gives NULL. */
+  private def assertMatchesPercentile(df: DataFrame, fracs: Seq[Double]): Unit = {
+    import org.apache.spark.sql.functions.{count, expr, lit}
+    def keyed(rows: Array[Row]) = rows.map(r =>
+      Option(r.get(0)) -> ((r.getLong(1), Option(r.getSeq[Double](2))))).toMap
+    val want = keyed(df.groupBy("g").agg(count(lit(1)).as("n"),
+      expr(s"percentile(v, array(${fracs.mkString(", ")}))").as("qs")).collect())
+    val got = keyed(operators.Relational.exactQuantiles(df, "g", "v", fracs).collect())
+    assert(got == want)
   }
 
-  test("quantiles: spark.graft.quantiles.approx reroutes the entry through the sketch") {
-    val exact = operators.Relational.quantiles(spark, sf).collect()
-      .map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-      .toMap
-    spark.conf.set("spark.graft.quantiles.approx", "true")
-    try {
-      val plan = operators.Relational.quantiles(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("approx_percentile") &&
-        !plan.replace("approx_percentile", "").contains("percentile("),
-        s"approx route must plan the sketch, not the exact buffer:\n$plan")
-      val routed = operators.Relational.quantiles(spark, sf).collect()
-        .map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-        .toMap
-      // same schema, same groups, each sketch value within the adjacent
-      // exact bracket (accuracy=10000 → rank error ≤ n/10000)
-      assert(routed.keySet == exact.keySet)
-      routed.foreach { case (flag, qs) =>
-        val e = exact(flag)
-        assert(qs(1) >= e(0) && qs(1) <= e(2), s"$flag routed p50 ${qs(1)} outside [p25,p75] $e")
-        assert(qs(3) >= e(2), s"$flag routed p95 ${qs(3)} below exact p75")
-      }
-    } finally spark.conf.unset("spark.graft.quantiles.approx")
+  private val someFracs = Seq(0.0, 0.1, 0.25, 1.0 / 3, 0.5, 0.9, 0.95, 1.0)
+
+  test("exact quantiles equal percentile on skewed groups, heavy ties and NULL values") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    // 19:1 skew between two groups, 40 distinct values, every 13th value
+    // NULL, and a group made of two tied runs
+    val mixed = (0 until 4000).map { i =>
+      (if (i % 20 == 0) "small" else "big",
+        if (i % 13 == 0) None else Some(rnd.nextInt(40) * 0.25))
+    } ++ (0 until 500).map(i => ("ties", Some(if (i < 400) 5.0 else 7.5)))
+    assertMatchesPercentile(mixed.toDF("g", "v").repartition(7), someFracs)
   }
 
-  test("trimmed mean: spark.graft.quantiles.approx reroutes the trim bounds through the sketch") {
-    val exact = operators.Relational.trimmedMeanPerGroup(spark, sf).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    spark.conf.set("spark.graft.quantiles.approx", "true")
-    try {
-      val plan = operators.Relational.trimmedMeanPerGroup(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("approx_percentile") &&
-        !plan.replace("approx_percentile", "").contains("percentile("),
-        s"approx route must plan the sketch, not the exact buffer:\n$plan")
-      val routed = operators.Relational.trimmedMeanPerGroup(spark, sf).collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-      // same schema and groups; the sketch trims near-identical tails
-      // (accuracy=10000 → rank error ≤ n/10000), so kept counts and the
-      // robust mean move by at most a whisker
-      assert(routed.keySet == exact.keySet)
-      routed.foreach { case (flag, (n, m)) =>
-        val (en, em) = exact(flag)
-        assert(math.abs(n - en).toDouble / en < 0.01,
-          s"$flag kept-count moved ${en} -> ${n} under the sketch route")
-        assert(math.abs(m - em) / em < 0.01,
-          s"$flag trimmed mean moved $em -> $m under the sketch route")
-      }
-    } finally spark.conf.unset("spark.graft.quantiles.approx")
+  test("exact quantiles keep a NULL group key, a one-row group and an all-NULL group") {
+    import spark.implicits._
+    val df = Seq[(Option[String], Option[Double])](
+      (None, Some(3.0)), (None, Some(1.0)), (None, None), (None, Some(2.0)),
+      (Some("one"), Some(42.5)),
+      (Some("empty"), None), (Some("empty"), None),
+      (Some("pair"), Some(-1.0)), (Some("pair"), Some(1.0))).toDF("g", "v").repartition(3)
+    assertMatchesPercentile(df, someFracs)
+    val got = operators.Relational.exactQuantiles(df, "g", "v", Seq(0.5)).collect()
+      .map(r => Option(r.getString(0)) -> ((r.getLong(1), Option(r.getSeq[Double](2))))).toMap
+    assert(got(None) == ((4L, Some(Seq(2.0)))), "the NULL group ranks its non-NULL values")
+    assert(got(Some("one")) == ((1L, Some(Seq(42.5)))))
+    assert(got(Some("empty")) == ((2L, None)), "an all-NULL group keeps its row with NULL quantiles")
+    assert(got(Some("pair")) == ((2L, Some(Seq(0.0)))))
+  }
+
+  test("exact quantiles: q = 0 is the group minimum, q = 1 its maximum; the entry equals percentile") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{count, expr, lit, max, min}
+    val rnd = new scala.util.Random(11)
+    val df = (0 until 3000).map(i => (s"g${i % 5}", rnd.nextGaussian() * 1000)).toDF("g", "v")
+      .repartition(5)
+    assertMatchesPercentile(df, Seq(0.0, 1.0))
+    val ends = operators.Relational.exactQuantiles(df, "g", "v", Seq(0.0, 1.0)).collect()
+      .map(r => r.getString(0) -> r.getSeq[Double](2)).toMap
+    val minMax = df.groupBy("g").agg(min("v"), max("v")).collect()
+      .map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2))).toMap
+    assert(ends == minMax)
+    // the q_quantiles entry: rounded percentile over lineitem, count(*) as n
+    val want = Tables.lineitem(spark, sf).groupBy("l_returnflag")
+      .agg(expr("transform(percentile(l_extendedprice, array(0.25, 0.5, 0.75, 0.95)), " +
+        "q -> round(q, 4))").as("qs"), count(lit(1)).as("n"))
+      .collect().map(r => r.getString(0) -> ((r.getSeq[Double](1), r.getLong(2)))).toMap
+    val got = operators.Relational.quantiles(spark, sf).collect()
+      .map(r => r.getString(0) ->
+        ((Seq(r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)), r.getLong(5)))).toMap
+    assert(got == want)
   }
 
   test("grouped top-k: heap aggregate matches a window row_number, no per-group sort of all rows") {

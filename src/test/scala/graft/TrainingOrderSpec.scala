@@ -54,6 +54,17 @@ class TrainingOrderSpec extends AnyFunSuite {
     }
   }
 
+  test("groupedRank keeps a NULL group: all its rows, ranked 0..k-1") {
+    import spark.implicits._
+    val df = (0 until 300).map(i => (if (i % 3 == 0) None else Some(s"g${i % 3}"), i.toLong))
+      .toDF("stratum", "id").repartition(7)
+    val nulls = TrainingOrder.groupedRank(df, "stratum", Seq("id")).collect()
+      .filter(_.isNullAt(0)).map(r => r.getLong(1) -> r.getLong(2)).sortBy(_._1)
+    assert(nulls.map(_._1).toSeq == (0 until 300 by 3).map(_.toLong),
+      "every NULL-stratum row must survive the rank")
+    assert(nulls.map(_._2).toSeq == (0L until 100L), "ranked 0..k-1 in id order")
+  }
+
   test("epochs: each epoch is an independent permutation matching its own seed sort") {
     val ids = docs.select("doc_id").collect().map(_.getLong(0))
     val got = TrainingOrder.epochs(docs, 3, "ep7").collect()

@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.DatasetBridge
 
 /** The materialization fence used by every iterative / two-phase
-  * operator (global rank, connected components, prefix sums): truncate
+  * operator (the prefix scan `Scan.prefix`, which every rank and
+  * running offset goes through, and connected components): truncate
   * lineage so round r's plan doesn't replay rounds 1..r-1, and pin a
   * partitioning both consumers of a frame agree on.
   *

@@ -143,58 +143,6 @@ object Dedup {
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v).cast("double") / numHashes
 
-  /** L4: exact n-gram Jaccard on candidate pairs — joins raw text to
-    * the pairs FIRST, then shingles only the matched rows (shingling
-    * above the join means the n² -> candidates reduction also applies
-    * to the shingle compute, not just the set arithmetic). */
-  /** Exact 0-based global rank of every row under `orderCols` — the
-    * two-phase distributed form (range-repartition → per-partition
-    * row_number → broadcast exclusive offsets), NOT a partition-less
-    * window that would funnel the corpus through one task. Same
-    * machinery as Packing.prefixSum, including the one materialization
-    * that pins the range boundaries for both consumers. */
-  def globalRank(df: DataFrame, orderCols: Seq[String]): DataFrame = {
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    // asc_nulls_last, not plain asc: Spark's default sorts NULLs FIRST
-    // while DuckDB's (the twins') ORDER BY sorts them LAST — ranks
-    // must agree between engine and oracle even on NULL blocking keys.
-    val sortExprs = orderCols.map(c => col(c).asc_nulls_last)
-    // Local rank WITHOUT a window (guide §2.4 remove shuffles): the
-    // old row_number().over(partitionBy(__pid)) forced a SECOND full
-    // exchange (hashpartitioning(__pid)) right after the range
-    // exchange — pure waste, the range partitions already ARE the
-    // groups — and, worse, AQE's byte-driven coalescing collapsed that
-    // small-bytes exchange to one partition, so the fenced layout
-    // every downstream consumer inherits (SNM's ×window candidate
-    // explode, the quintile joins) ran single-threaded. Now: range
-    // exchange → IN-PARTITION sort (no exchange) →
-    // monotonically_increasing_id, whose documented layout
-    // (partition id in the upper bits, a sequential per-partition
-    // counter in the lower 33) yields exactly the (__pid, __rn) pair
-    // the two-phase rank needs. One exchange total, layout stays at n
-    // partitions. Per-partition row count is bounded by 2^33, Spark's
-    // own limit for the id; the counter follows the sorted order
-    // because the projection sits above the sort and the fence
-    // materializes one outcome (same contract as before).
-    val local = Checkpoints.fence(
-      df.repartitionByRange(n, sortExprs: _*)
-        .sortWithinPartitions(sortExprs: _*)
-        .withColumn("__mid", monotonically_increasing_id())
-        .withColumn("__pid", shiftrightunsigned(col("__mid"), 33).cast("int"))
-        .withColumn("__rn", (col("__mid").bitwiseAND(lit((1L << 33) - 1)) + 1L))
-        .drop("__mid"))
-    val totals = local.groupBy(col("__pid")).agg(count(lit(1)).as("__total"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1).toSeq
-    val offsets = totals.map(_._1).zip(
-      totals.map(_._2).scanLeft(0L)(_ + _).init)
-    val offDF = df.sparkSession.createDataFrame(
-      if (offsets.nonEmpty) offsets else Seq((0, 0L)))
-      .toDF("__pid", "__off")
-    local.join(broadcast(offDF), "__pid")
-      .withColumn("rank", col("__rn") - 1 + col("__off"))
-      .drop("__pid", "__rn", "__off")
-  }
-
   /** AUTO window for the sorted-neighborhood family: the window must
     * cover the per-key DENSITY of the blocking key — rows sharing one
     * key value sort adjacent, and a same-key partner can sit up to
@@ -258,10 +206,12 @@ object Dedup {
                     window: Int = 0,
                     idCol: String = "doc_id"): DataFrame = {
     val win = resolveWindow(docs, sortCols, window)
-    // only (key cols, id) travel through the rank shuffle — never text
-    val ranked = globalRank(
+    // only (key cols, id) travel through the rank shuffle — never text.
+    // NULLs sort last, as in DuckDB (the oracle), not first as Spark's
+    // asc has it: ranks must agree even on NULL blocking keys.
+    val ranked = Scan.prefix(
       docs.select(col(idCol).cast("long").as("__id") +: sortCols.map(col): _*),
-      sortCols :+ "__id")
+      None, (sortCols :+ "__id").map(col(_).asc_nulls_last), "rank")
       .select(col("__id"), col("rank"))
     val probes = ranked
       .withColumn("__d", explode(sequence(lit(1), lit(win - 1))))
@@ -391,6 +341,10 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
+  /** L4: exact n-gram Jaccard on candidate pairs — joins raw text to
+    * the pairs FIRST, then shingles only the matched rows (shingling
+    * above the join means the n² -> candidates reduction also applies
+    * to the shingle compute, not just the set arithmetic). */
   def verifyJaccard(pairs: DataFrame, docs: DataFrame, textCol: String = "text",
                     idCol: String = "doc_id", shingleSize: Int = 3): DataFrame = {
     // Shingle once per DOCUMENT, below the join — a doc in k candidate
@@ -439,9 +393,9 @@ object Dedup {
     // share; corpus density alone would under-window once the batch
     // interleaves
     val win = resolveWindow(all, sortCols, window)
-    val ranked = globalRank(
+    val ranked = Scan.prefix(
       all.select(col(idCol).cast("long").as("__id") +: col("__new") +: sortCols.map(col): _*),
-      sortCols :+ "__id")
+      None, (sortCols :+ "__id").map(col(_).asc_nulls_last), "rank")
       .select(col("__id"), col("__new"), col("rank"))
     val probes = ranked
       .withColumn("__d", explode(sequence(lit(1), lit(win - 1))))

@@ -361,8 +361,11 @@ object EventAnalytics {
       .where($"t1".isNotNull && $"t2".isNotNull && $"t1" < $"t2")
       .select($"user_id",
         (unix_micros($"t2") - unix_micros($"t1")).as("lat_us"))
-    val n = perUser.count() // scalar, bounded
-    Dedup.globalRank(perUser, Seq("lat_us", "user_id"))
+    val ranked = Scan.prefix(perUser, None,
+      Seq($"lat_us".asc_nulls_last, $"user_id".asc_nulls_last), "rank")
+    // counted on the fenced rows: counting `perUser` re-scans events
+    val n = ranked.count()
+    ranked
       .withColumn("decile", expr(s"(rank * 10) DIV ${n}L") + 1)
       .groupBy($"decile")
       .agg(count(lit(1)).as("n_users"),
@@ -402,7 +405,7 @@ object EventAnalytics {
     * map-side-combined aggregate (recency = integer days to the corpus
     * horizon, frequency = count, monetary = exact DECIMAL sum), and
     * each dimension's quintile comes from the two-phase distributed
-    * rank (`Dedup.globalRank` — not a single-partition ntile window),
+    * rank (`Scan.prefix` — not a single-partition ntile window),
     * with score = integer rank·5 DIV n arithmetic, so every derived
     * column is engine-exact. Output is the |5³|-bounded segment grid
     * with member counts. Recency ranks ascending (fewest days = score
@@ -416,22 +419,19 @@ object EventAnalytics {
       .agg(min(datediff(to_date(lit(horizon)), $"ts".cast("date"))).as("rec"),
         count(lit(1)).as("freq"),
         sum($"value".cast("decimal(18,2)")).as("mon"))
-    // one scalar collect — bounded metadata, reused by all three ranks
-    val nUsers = perUser.count()
-    def quintile(df: DataFrame, orderCol: String, asc: Boolean,
-                 outCol: String): DataFrame = {
-      val keyed = if (asc) df.withColumn("__k", col(orderCol))
-        else df.withColumn("__k", -col(orderCol))
-      Dedup.globalRank(keyed, Seq("__k", "user_id"))
-        .withColumn(outCol, expr(s"(rank * 5) DIV ${nUsers}L") + 1)
-        .drop("__k", "rank")
-    }
-    // recency: fewest days since last event ranks FIRST and must score
-    // 5 → rank descending via the negated key, quintile+1
-    val scored = quintile(quintile(quintile(perUser,
-      "rec", asc = false, "r_score"),
-      "freq", asc = true, "f_score"),
-      "mon", asc = true, "m_score")
+    def rank(df: DataFrame, order: Column): DataFrame =
+      Scan.prefix(df, None, Seq(order, $"user_id".asc_nulls_last), "rank")
+    // recency: fewest days since last event ranks LAST and must score
+    // 5 → rank on days descending, quintile+1
+    val byRecency = rank(perUser, $"rec".desc_nulls_last)
+    // one scalar for all three ranks, counted on the first rank's
+    // fenced rows: counting `perUser` re-scans events
+    val nUsers = byRecency.count()
+    def quintile(ranked: DataFrame, outCol: String): DataFrame =
+      ranked.withColumn(outCol, expr(s"(rank * 5) DIV ${nUsers}L") + 1).drop("rank")
+    val byFrequency = rank(quintile(byRecency, "r_score"), $"freq".asc_nulls_last)
+    val byMonetary = rank(quintile(byFrequency, "f_score"), $"mon".asc_nulls_last)
+    val scored = quintile(byMonetary, "m_score")
     scored.groupBy($"r_score", $"f_score", $"m_score")
       .agg(count(lit(1)).as("n_users"))
       .orderBy($"r_score", $"f_score", $"m_score")
@@ -464,16 +464,6 @@ object EventAnalytics {
       .orderBy($"path")
   }
 
-  /** X137: per-group Gini coefficient of the value distribution — the
-    * inequality profile (is spend concentrated in a few whales? are
-    * token counts dominated by a handful of documents?). Uses the
-    * rank formula G = (2·Σi·xᵢ − (n+1)·Σxᵢ) / (n·Σxᵢ) over each
-    * group's ascending sort. Ranks come from the two-phase distributed
-    * groupedRank — NOT a per-group window, so the |types|-cardinality
-    * key can't funnel a partition. Values are exact DECIMAL(18,2)
-    * (the corpus's native 2-dp prices/values), so both Σ terms
-    * accumulate EXACTLY in any order; the only double arithmetic is
-    * the final one-expression ratio per group. */
   /** X166: deterministic A/B test readout — users split 50/50 by the
     * md5 hash chain (the sampler family's engine-portable coin), then
     * per (event_type, arm): n, mean, and a Welch z-score for the
@@ -567,11 +557,21 @@ object EventAnalytics {
       .orderBy($"event_type", $"digit")
   }
 
+  /** X137: per-group Gini coefficient of the value distribution — the
+    * inequality profile (is spend concentrated in a few whales? are
+    * token counts dominated by a handful of documents?). Uses the
+    * rank formula G = (2·Σi·xᵢ − (n+1)·Σxᵢ) / (n·Σxᵢ) over each
+    * group's ascending sort. Ranks come from the two-phase distributed
+    * `Scan.prefix` — NOT a per-group window, so the |types|-cardinality
+    * key can't funnel a partition. Values are exact DECIMAL(18,2)
+    * (the corpus's native 2-dp prices/values), so both Σ terms
+    * accumulate EXACTLY in any order; the only double arithmetic is
+    * the final one-expression ratio per group. */
   def gini(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.events(spark, sfDir)
       .select($"event_type", $"value".cast("decimal(18,2)").as("x"), $"event_id")
-    val ranked = TrainingOrder.groupedRank(ev, "event_type", Seq("x", "event_id"))
+    val ranked = Scan.prefix(ev, Some("event_type"), Seq($"x", $"event_id"), "grank")
     ranked
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),

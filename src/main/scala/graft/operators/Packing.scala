@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence-packing planner: assign documents (in a stable key order)
@@ -14,69 +13,23 @@ import org.apache.spark.sql.functions._
   * The core primitive is a corpus-wide EXCLUSIVE PREFIX SUM of token
   * counts — the textbook global-ordering trap: a naive
   * `sum().over(Window.orderBy(key))` has no partition key, so Spark
-  * plans ONE task holding the whole corpus. This implementation is the
-  * two-phase distributed form instead:
-  *
-  *   1. range-repartition by the order key (each partition owns a
-  *      contiguous key range);
-  *   2. per-partition local prefix sums — a window keyed by the
-  *      PARTITION ID, so every partition scans only itself;
-  *   3. per-partition totals (one row per partition) collected to the
-  *      driver, turned into exclusive partition offsets, broadcast
-  *      back as a tiny join.
-  *
-  * The result is exactly the global prefix sum — local-cumsum plus
-  * partition offset is independent of where the range boundaries
-  * landed — at the cost of one range shuffle plus a partition-count-
-  * sized collect. That is the 100 TB shape.
+  * plans ONE task holding the whole corpus. Here it is `Scan.prefix`
+  * weighted by the token count: one range shuffle, a running sum down
+  * each sorted partition, and partition offsets from a
+  * partition-count-sized table on the driver. That is the 100 TB shape.
   */
 object Packing {
 
-  /** (id, n_tokens, start) with `start` = exclusive prefix sum of
-    * `tokenCol` in ascending `idCol` order. */
-  def prefixSum(docs: DataFrame, tokenCol: String, idCol: String = "doc_id",
-                partitions: Int = 0): DataFrame = {
-    val n = if (partitions > 0) partitions
-            else docs.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = docs
-      .select(col(idCol).cast("long").as("id"), col(tokenCol).cast("long").as("n_tokens"))
-      // a null token count would poison every later start offset (the
-      // window sum skips it but the row's own `start` goes null);
-      // droppable rows must not silently shift the packing, so they
-      // are excluded up front
-      .where(col("n_tokens").isNotNull)
-      .repartitionByRange(n, col("id"))
-      .withColumn("__pid", spark_partition_id())
-    val localW = Window.partitionBy(col("__pid")).orderBy(col("id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // MATERIALIZED once: the per-partition sums below and the final
-    // join both consume `local`, and RangePartitioner re-SAMPLES its
-    // boundaries per job — two independent executions could place ids
-    // in different partitions, pairing totals with the wrong pids
-    // (observed at sf0.1: 6 sequences off). One materialization pins
-    // one boundary set for both consumers; at cluster scale this is
-    // the op's single full pass, persisted like any shuffle output.
-    val local = Checkpoints.fence(
-      ranged.withColumn("__cum", sum(col("n_tokens")).over(localW)))
-    // one row per partition: (pid, total). Collected to the driver —
-    // partition-count-sized, not data-sized.
-    val totals = local.groupBy(col("__pid")).agg(max(col("__cum")).as("__total"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1).toSeq
-    // exclusive scan: partition p's offset = sum of totals of 0..p-1
-    val offsets = totals.map(_._1).zip(
-      totals.map(_._2).scanLeft(0L)(_ + _).init)
-    val offDF = docs.sparkSession.createDataFrame(
-      if (offsets.nonEmpty) offsets else Seq((0, 0L)))
-      .toDF("__pid", "__off")
-    local.join(broadcast(offDF), "__pid")
-      .select(col("id"), col("n_tokens"),
-        (col("__cum") - col("n_tokens") + col("__off")).as("start"))
-  }
-
-  /** The packing plan: (id, n_tokens, start, seq_id). */
+  /** The packing plan: (id, n_tokens, start, seq_id), with `start` the
+    * exclusive prefix sum of `tokenCol` in ascending `idCol` order. */
   def assignSequences(docs: DataFrame, tokenCol: String, budget: Long,
                       idCol: String = "doc_id"): DataFrame =
-    prefixSum(docs, tokenCol, idCol)
+    Scan.prefix(
+      docs.select(col(idCol).cast("long").as("id"), col(tokenCol).cast("long").as("n_tokens"))
+        // a row without a token count has no place in the packing:
+        // dropped up front, never counted as zero tokens
+        .where(col("n_tokens").isNotNull),
+      None, Seq(col("id")), "start", weight = col("n_tokens"))
       .withColumn("seq_id", floor(col("start") / budget))
 
   /** Per-sequence summary: how many docs and tokens landed in each

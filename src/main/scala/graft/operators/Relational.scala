@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -516,8 +518,8 @@ object Relational {
   /** Exact grouped quantiles with no group held in one task: per
     * group, the values Spark's `percentile` aggregate returns for
     * `valueCol` at `fractions`. NULL values are dropped and the rest
-    * are counted (n); `TrainingOrder.groupedRank` ranks them on
-    * (group, value) — one range shuffle — and only the two ranks
+    * are counted (n); `Scan.prefix` ranks them on (group, value) —
+    * one range shuffle — and only the two ranks
     * bracketing each position p = f·(n−1) pass the filter. Each
     * quantile then interpolates with `percentile`'s formula,
     * (⌈p⌉−p)·lo + (p−⌊p⌋)·hi, or is lo itself when the two bracketing
@@ -534,8 +536,8 @@ object Relational {
     val vals = df.select(col(groupCol), col(valueCol).cast("double").as("__v"))
     val counts = vals.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n"), count(col("__v")).as("__n"))
-    val ranked = TrainingOrder.groupedRank(vals.where(col("__v").isNotNull),
-      groupCol, Seq("__v"))
+    val ranked = Scan.prefix(vals.where(col("__v").isNotNull),
+      Some(groupCol), Seq(col("__v")), "grank")
     val pos = fractions.map(f => lit(f) * (col("__n") - 1))
     val near = ranked
       .join(broadcast(counts.withColumnRenamed(groupCol, "__g")),
@@ -873,8 +875,11 @@ object Relational {
     import spark.implicits._
     val ev = Tables.events(spark, sfDir)
       .select($"event_type", $"value".cast("double").as("v"))
-    val med = exactQuantiles(ev, "event_type", "v", Seq(0.5))
+    val medians = exactQuantiles(ev, "event_type", "v", Seq(0.5))
       .select($"event_type", element_at($"qs", 1).as("med"))
+    // the |types|-row table collected once, as a local relation: else
+    // `dev` carries its plan, and the second pass and final query re-run it
+    val med = spark.createDataFrame(medians.collect().toSeq.asJava, medians.schema)
     val dev = ev.join(broadcast(med), "event_type")
       .withColumn("adev", abs($"v" - $"med"))
     val mad = exactQuantiles(dev, "event_type", "adev", Seq(0.5))

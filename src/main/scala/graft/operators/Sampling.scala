@@ -132,7 +132,7 @@ object Sampling {
   def negativeSample(emb: DataFrame, k: Int = 4, tau: Double = 0.5,
                      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val v = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-    val ranked = Dedup.globalRank(v.select(col("id")), Seq("id"))
+    val ranked = Scan.prefix(v.select(col("id")), None, Seq(col("id").asc_nulls_last), "rank")
     val cnt = ranked.agg(count(lit(1)).as("__n"))
     val cand = v.select(col("id").as("vec_id"))
       .crossJoin(broadcast(cnt))

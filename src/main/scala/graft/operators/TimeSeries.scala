@@ -142,8 +142,8 @@ object TimeSeries {
     * its window by `event_type` alone — with a handful of types, a
     * handful of tasks sort EVERYTHING, the low-cardinality-key window
     * skew that kills a 100 TB run. Here each row first gets its
-    * per-type time-order rank from TrainingOrder.groupedRank (the
-    * two-phase distributed rank — partition-count metadata is all the
+    * per-type time-order rank from `Scan.prefix` (the two-phase
+    * distributed scan — a partition-bounded offset table is all the
     * driver ever sees), rows bucket by rank ÷ `bucketRows`, each
     * bucket's last `frame`−1 rows are ALSO replicated into the next
     * bucket as carry context, the identical ROWS frame runs per
@@ -169,7 +169,7 @@ object TimeSeries {
       .select($"event_type", $"event_id",
         unix_micros($"ts").as("tus"),
         $"value".cast("decimal(18,2)").as("y"))
-    val ranked = TrainingOrder.groupedRank(base, "event_type", Seq("tus", "event_id"))
+    val ranked = Scan.prefix(base, Some("event_type"), Seq(col("tus"), col("event_id")), "grank")
       .withColumn("bkt", (col("grank") / bucketRows).cast("long"))
     val carry = ranked
       .where(col("grank") % bucketRows >= bucketRows - (frame - 1))

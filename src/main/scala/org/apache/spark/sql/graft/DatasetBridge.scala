@@ -1,21 +1,28 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Narrow bridge into the sql package's private API: `Dataset.ofRows`
   * (private[sql]) — the only supported way to wrap a hand-built
   * `LogicalPlan` (graft's custom posting-list node) in a user-facing
   * DataFrame, the same pattern the Spark ecosystem uses for custom
-  * plan nodes — and the second parameter list of `LogicalRDD`, where
-  * a checkpoint keeps its origin plan's size estimate. Nothing else in
+  * plan nodes — `ExpressionUtils`, to put a hand-built expression in
+  * a Column, and the second parameter list of `LogicalRDD`, where a
+  * checkpoint keeps its origin plan's size estimate. Nothing else in
   * graft reaches into the sql package.
   */
 object DatasetBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A Column of `f` over `c`'s expression: a hand-built Catalyst
+    * expression (graft's `PartitionPrefixSum`) without a SQL name. */
+  def column(c: Column)(f: Expression => Expression): Column =
+    classic.ExpressionUtils.column(f(classic.ExpressionUtils.expression(c)))
 
   private val MaxSize = BigInt(Long.MaxValue)
 

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Checkpoints, ConnectedComponents, Dedup, TrainingOrder}
+import graft.operators.{Checkpoints, ConnectedComponents, Scan}
 
 /** `spark.graft.reliableCheckpoints` must be a pure durability trade:
   * every fenced operator returns identical results through the
@@ -29,8 +29,8 @@ class CheckpointsSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.reliableCheckpoints", "true")
     try {
       val e = intercept[IllegalArgumentException] {
-        Dedup.globalRank(
-          Tables.documents(spark, sf).select(col("doc_id")), Seq("doc_id")).collect()
+        Scan.prefix(Tables.documents(spark, sf).select(col("doc_id")), None,
+          Seq(col("doc_id").asc_nulls_last), "rank").collect()
       }
       assert(e.getMessage.contains("spark.graft.checkpointDir"))
     } finally spark.conf.unset("spark.graft.reliableCheckpoints")
@@ -38,7 +38,8 @@ class CheckpointsSpec extends AnyFunSuite {
 
   test("globalRank is identical through local and reliable checkpoints") {
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("n_chars"))
-    def run() = Dedup.globalRank(docs, Seq("n_chars", "doc_id")).collect()
+    def run() = Scan.prefix(docs, None,
+        Seq(col("n_chars").asc_nulls_last, col("doc_id").asc_nulls_last), "rank").collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     val local = run()
     val reliable = withReliable(run())
@@ -106,7 +107,7 @@ class CheckpointsSpec extends AnyFunSuite {
   test("groupedRank is identical through both routes") {
     import spark.implicits._
     val df = (0 until 120).map(i => (s"g${i % 2}", i.toLong)).toDF("stratum", "id")
-    def run() = TrainingOrder.groupedRank(df, "stratum", Seq("id")).collect()
+    def run() = Scan.prefix(df, Some("stratum"), Seq(col("id")), "grank").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(run() == withReliable(run()))
   }

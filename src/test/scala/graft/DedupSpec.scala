@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Scan}
 
 class DedupSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -311,16 +311,16 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("globalRank matches a single-window row_number and survives repartitioning") {
-    val ranked = Dedup.globalRank(
-        docs.select(col("doc_id"), col("n_chars")), Seq("n_chars", "doc_id"))
+    val order = Seq(col("n_chars").asc_nulls_last, col("doc_id").asc_nulls_last)
+    val ranked = Scan.prefix(docs.select(col("doc_id"), col("n_chars")), None, order, "rank")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val expect = docs.select("doc_id", "n_chars").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .sortBy { case (id, nc) => (nc, id) }
       .zipWithIndex.map { case ((id, _), i) => id -> i.toLong }.toMap
     assert(ranked == expect)
-    val again = Dedup.globalRank(
-        docs.repartition(13).select(col("doc_id"), col("n_chars")), Seq("n_chars", "doc_id"))
+    val again = Scan.prefix(
+        docs.repartition(13).select(col("doc_id"), col("n_chars")), None, order, "rank")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(again == expect, "rank must be partition-invariant")
   }
@@ -505,9 +505,9 @@ class DedupSpec extends AnyFunSuite {
     val auto = Dedup.sortedNeighborhoodPairs(rows, Seq("lang", "n_chars"),
       window = 0, minJaccard = 0.5).collect()
     assert(auto.nonEmpty, "auto window over NULL-keyed rows must still verify pairs")
-    val ranked = Dedup.globalRank(
-      rows.select(col("doc_id"), col("lang"), col("n_chars")),
-      Seq("lang", "n_chars", "doc_id"))
+    val ranked = Scan.prefix(
+      rows.select(col("doc_id"), col("lang"), col("n_chars")), None,
+      Seq("lang", "n_chars", "doc_id").map(col(_).asc_nulls_last), "rank")
       .orderBy(col("rank")).select(col("doc_id")).as[Long].collect()
     assert(ranked.take(2).toSet == Set(1L, 3L) && ranked.drop(2).toSet == Set(2L, 4L),
       s"NULL keys must rank LAST (DuckDB order), got ${ranked.mkString(",")}")

@@ -546,8 +546,10 @@ class PipelineOpsSpec extends AnyFunSuite {
       .scanLeft((0L, 0L, 0L)) { case ((_, _, cum), (id, t)) => (id, t, cum + t) }
       .drop(1).map { case (id, t, cumIncl) => id -> (cumIncl - t) }.toMap
     for (parts <- Seq(1, 4, 13)) {
-      val got = Packing.prefixSum(docs.repartition(17), "n_tok", partitions = parts)
-        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+      val got = withConf("spark.sql.shuffle.partitions", parts.toString) {
+        Packing.assignSequences(docs.repartition(17), "n_tok", budget = 100)
+          .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+      }
       assert(got == expected, s"prefix sum wrong at $parts range partitions")
     }
   }
@@ -556,13 +558,13 @@ class PipelineOpsSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.operators.Packing
     // regression: RangePartitioner re-samples boundaries per job, and
-    // prefixSum's totals-collect and output pass are separate jobs —
+    // the prefix sum's totals-collect and output pass are separate jobs —
     // without materializing the ranged cumsum once, a 50k-row input
     // could pair partition totals with the wrong partitions (caught at
     // sf0.1 by the DuckDB oracle: starts off by one boundary's worth)
     val docs = spark.range(0, 50000).select(col("id").as("doc_id"),
       (col("id") % 37 + 1).as("n_tok"))
-    val got = Packing.prefixSum(docs, "n_tok")
+    val got = Packing.assignSequences(docs, "n_tok", budget = 100)
     val rows = got.orderBy("id").collect()
     var cum = 0L
     rows.foreach { r =>
@@ -588,7 +590,8 @@ class PipelineOpsSpec extends AnyFunSuite {
   test("prefixSum plan has no global-order window (per-partition windows only)") {
     import graft.operators.Packing
     val docs = Tables.documents(spark, sf)
-    val plan = Packing.prefixSum(docs, "n_chars").queryExecution.executedPlan.toString
+    val plan = Packing.assignSequences(docs, "n_chars", budget = 100)
+      .queryExecution.executedPlan.toString
     // a global-order cumsum plans Window over an empty partition spec
     // preceded by a single-partition Exchange — the 100 TB trap this
     // operator exists to avoid

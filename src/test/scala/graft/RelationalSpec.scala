@@ -11,18 +11,22 @@ object SparkTestSession {
   }
   val sf = "/root/testdata/sf0.001"
 
-  /** Run `body` with `spark.sql.autoBroadcastJoinThreshold` at
-    * `bytes`, then restore it. */
-  def withBroadcastThreshold[T](bytes: Long)(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
+  /** Run `body` with the session conf `key` at `value`, then restore
+    * it. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, bytes.toString)
+    spark.conf.set(key, value)
     try body
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
   }
+
+  /** Run `body` with `spark.sql.autoBroadcastJoinThreshold` at
+    * `bytes`, then restore it. */
+  def withBroadcastThreshold[T](bytes: Long)(body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", bytes.toString)(body)
 
   /** Run `body` with `ConnectedComponents` pinned to its distributed
     * min-label loop (the driver finish needs a non-negative broadcast

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.TrainingOrder
+import graft.operators.{Scan, TrainingOrder}
 
 class TrainingOrderSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -34,7 +34,7 @@ class TrainingOrderSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (0 until 300).map(i => (s"g${i % 3}", i.toLong)).toDF("stratum", "id")
       .repartition(7)
-    val got = TrainingOrder.groupedRank(df, "stratum", Seq("id")).collect()
+    val got = Scan.prefix(df, Some("stratum"), Seq(col("id")), "grank").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     (0 until 300).foreach { i =>
       val g = s"g${i % 3}"
@@ -46,7 +46,7 @@ class TrainingOrderSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (0 until 300).map(i => ((i % 3).toLong, i.toLong)).toDF("stratum", "id")
       .repartition(7)
-    val got = TrainingOrder.groupedRank(df, "stratum", Seq("id")).collect()
+    val got = Scan.prefix(df, Some("stratum"), Seq(col("id")), "grank").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     (0 until 300).foreach { i =>
       val g = (i % 3).toLong
@@ -58,7 +58,7 @@ class TrainingOrderSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (0 until 300).map(i => (if (i % 3 == 0) None else Some(s"g${i % 3}"), i.toLong))
       .toDF("stratum", "id").repartition(7)
-    val nulls = TrainingOrder.groupedRank(df, "stratum", Seq("id")).collect()
+    val nulls = Scan.prefix(df, Some("stratum"), Seq(col("id")), "grank").collect()
       .filter(_.isNullAt(0)).map(r => r.getLong(1) -> r.getLong(2)).sortBy(_._1)
     assert(nulls.map(_._1).toSeq == (0 until 300 by 3).map(_.toLong),
       "every NULL-stratum row must survive the rank")

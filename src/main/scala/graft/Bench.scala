@@ -1,13 +1,12 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
 
 /** Benchmark main: per-query seconds → artifact file + one stdout line.
   *
   * Measurement discipline (a correct number needs all three):
-  *  - materialize through the `noop` sink, not `count()` — count lets
-  *    Catalyst prune projections and drop sorts, under-measuring the
-  *    real work a user's query does;
+  *  - materialize through the `noop` sink (`QueryInstrumentation.noop`),
+  *    not `count()`;
   *  - one warm-up pass over every query first, so session startup,
   *    codegen compilation, and filesystem cache effects don't land on
   *    whichever query happens to run first;
@@ -20,22 +19,29 @@ import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
   *    pathological plan records -1 and the sweep CONTINUES, instead of
   *    rc-124ing the whole gate and erasing the other 250 measurements
   *    (the round-11 q_interp_resample failure mode);
-  *  - the full 251-entry JSON goes to SPARK_GRAFT_BENCH_OUT
-  *    (default BENCH_full.json); stdout gets a SHORT line — total,
+  *  - the full 252-entry JSON goes to SPARK_GRAFT_BENCH_OUT
+  *    (default BENCH_full.json), with each entry's load stamp and its
+  *    median rep's `jobs`, `tasks` and `job_s` (wall − `job_s` is the
+  *    driver gap); stdout gets a SHORT line — total,
   *    failures, top-15 slowest — because the driver captures only a
   *    ~2k-char tail and a full per-query map truncates from the front,
   *    leaving the round with `parsed: null`.
   */
 object Bench {
-  private def materialize(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
+
+  /** One bounded run: its wall seconds, and the jobs, tasks and job
+    * seconds (union of job spans) its job group ran. */
+  private[graft] final case class Run(wallS: Double, jobs: Long, tasks: Long, jobS: Double)
 
   /** Run `body` on its own thread under `ceilingSec`; on timeout cancel
-    * the entry's Spark job group and report failure. Job groups are
-    * thread-local, so the group is set INSIDE the task thread. `tag`
-    * prefixes the group and the stderr lines ("bench", "verify"). */
+    * the entry's Spark job group and report failure (`None`). Job
+    * groups are thread-local, so the group is set INSIDE the task
+    * thread. `tag` prefixes the group and the stderr lines ("bench",
+    * "verify"). A `QueryInstrumentation` listener scoped to the group
+    * counts every job `body` runs, those that run while a DataFrame is
+    * built included; the listener bus drains after the timer stops. */
   private[graft] def runBounded(spark: SparkSession, tag: String, name: String,
-                                ceilingSec: Int)(body: => Unit): Boolean = {
+                                ceilingSec: Int)(body: => Unit): Option[Run] = {
     val group = s"$tag-$name"
     val task = new FutureTask[Unit](() => {
       spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
@@ -43,22 +49,26 @@ object Bench {
     })
     val th = new Thread(task, group)
     th.setDaemon(true)
-    th.start()
-    try { task.get(ceilingSec.toLong, TimeUnit.SECONDS); true }
-    catch {
-      case _: TimeoutException =>
-        System.err.println(s"[$tag] $name exceeded ${ceilingSec}s ceiling — cancelling")
-        spark.sparkContext.cancelJobGroup(group)
-        task.cancel(true)
-        // give the cancelled jobs a moment to drain so they don't
-        // contaminate the NEXT entry's measurement
-        try task.get(30, TimeUnit.SECONDS) catch { case _: Throwable => () }
-        false
-      case e: Throwable =>
-        val cause = e.getCause match { case null => e; case c => c }
-        System.err.println(s"[$tag] $name failed: ${cause.getMessage}")
-        false
+    val (wall, l) = QueryInstrumentation.observe(spark.sparkContext, group) {
+      val t0 = System.nanoTime()
+      th.start()
+      try { task.get(ceilingSec.toLong, TimeUnit.SECONDS); Some((System.nanoTime() - t0) / 1e9) }
+      catch {
+        case _: TimeoutException =>
+          System.err.println(s"[$tag] $name exceeded ${ceilingSec}s ceiling — cancelling")
+          spark.sparkContext.cancelJobGroup(group)
+          task.cancel(true)
+          // give the cancelled jobs a moment to drain so they don't
+          // contaminate the NEXT entry's measurement
+          try task.get(30, TimeUnit.SECONDS) catch { case _: Throwable => () }
+          None
+        case e: Throwable =>
+          val cause = e.getCause match { case null => e; case c => c }
+          System.err.println(s"[$tag] $name failed: ${cause.getMessage}")
+          None
+      }
     }
+    wall.map(Run(_, l.jobs, l.tasks.get(), l.jobSeconds))
   }
 
   def main(args: Array[String]): Unit = {
@@ -152,9 +162,9 @@ object Bench {
     }
     val spark = GraftSession.builder(Some(s"local[$cpus]"), Some(cpus.toString)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    selected.foreach { e =>
-      runBounded(spark, "bench", e.name, ceiling)(materialize(e.build(spark, sfDir)))
-    }
+    def run(e: SparkEntry.Entry): Option[Run] =
+      runBounded(spark, "bench", e.name, ceiling)(QueryInstrumentation.noop(e.build(spark, sfDir)))
+    selected.foreach(run)
     // per-entry 1-min loadavg at the entry's first timed rep: the
     // admission gate above checks the START of the run, but a sweep
     // that begins mid-run contaminates only a SLICE of entries (r17's
@@ -167,22 +177,23 @@ object Bench {
       entryLoads(e.name) = math.rint(loadavg() * 100) / 100
       // a failed/over-ceiling rep must not masquerade as a fast one:
       // such entries report -1 and are excluded from the total
-      val times = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        if (runBounded(spark, "bench", e.name, ceiling)(materialize(e.build(spark, sfDir))))
-          Some((System.nanoTime() - t0) / 1e9)
-        else None
-      }.sorted
-      e.name -> (if (times.length < reps) -1.0 else times(times.length / 2))
+      val runs = (1 to reps).flatMap(_ => run(e)).sortBy(_.wallS)
+      e.name -> (if (runs.length < reps) None else Some(runs(runs.length / 2)))
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val secs = results.map { case (k, r) => k -> r.fold(-1.0)(_.wallS) }
+    val qs = secs.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // the median rep's job counts, detail file only: wall − job_s is
+    // the driver gap (planning, build-time collects, time between jobs)
+    val jobsJson = results.collect { case (k, Some(r)) =>
+      s"\"$k\":{\"jobs\":${r.jobs},\"tasks\":${r.tasks},\"job_s\":${math.rint(r.jobS * 1000) / 1000}}"
+    }.mkString("{", ",", "}")
     // a partial total must not read as a speedup: any failed query
     // poisons the total to -1, and the failures are named explicitly
-    val failed = results.collect { case (k, v) if v < 0 => k }
+    val failed = secs.collect { case (k, v) if v < 0 => k }
     val total =
       if (failed.nonEmpty) -1.0
-      else results.map(_._2).sum
+      else secs.map(_._2).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // cpus is stamped so cross-artifact wall ratios (10x vs 1x) can be
     // read as data scaling, not a silent core-count change
@@ -192,15 +203,15 @@ object Bench {
     val loadsJson = entryLoads.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"entry_loadavg":$loadsJson,$meta}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"entry_loadavg":$loadsJson,"entry_jobs":$jobsJson,$meta}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fullLine + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] artifact write failed: ${e.getMessage}") }
     // stdout: SHORT machine-readable line (top-15 slowest only) so the
     // driver's tail capture parses it; full per-query map is in outFile
-    val top = results.filter(_._2 >= 0).sortBy(-_._2).take(15)
+    val top = secs.filter(_._2 >= 0).sortBy(-_._2).take(15)
       .map { case (k, v) => s"\"" + k + "\":" + (math.rint(v * 1000) / 1000) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.length},"queries":$top,$meta,"detail":"$outFile"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${secs.length},"queries":$top,$meta,"detail":"$outFile"}""")
     spark.stop()
   }
 }

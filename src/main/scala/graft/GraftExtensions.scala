@@ -91,9 +91,6 @@ object GraftExtensions {
     (FunctionIdentifier("graft_langid"),
       new ExpressionInfo(classOf[LangIdText].getName, "graft_langid"),
       (args: Seq[Expression]) => LangIdText(args(0))),
-    (FunctionIdentifier("graft_set_inter"),
-      new ExpressionInfo(classOf[SetIntersectSize].getName, "graft_set_inter"),
-      (args: Seq[Expression]) => SetIntersectSize(args(0), args(1))),
     (FunctionIdentifier("graft_srp"),
       new ExpressionInfo(classOf[SrpSignBits].getName, "graft_srp"),
       (args: Seq[Expression]) =>

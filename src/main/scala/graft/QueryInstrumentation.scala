@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** Per-query stats instrumentation (R9).
@@ -50,28 +51,44 @@ object QueryInstrumentation {
         (if (foreignTasks > 0) s" foreignTasks=$foreignTasks" else "")
   }
 
-  /** Task-metric collector for one instrumented query, SCOPED to the
-    * query's own job group: `onJobStart` records the stage ids of jobs
-    * carrying our group id, and `onTaskEnd` folds in only tasks from
-    * those stages — tasks from concurrent jobs (another thread, a
-    * streaming micro-batch, a lingering speculative task) are counted
-    * in `foreign` instead of polluting the numbers. */
-  private final class TaskMetricsListener(groupId: String) extends SparkListener {
+  /** Task-metric collector for one job group: `onJobStart` records
+    * the stage ids of jobs carrying the group id, and `onTaskEnd`
+    * folds in only tasks from those stages — tasks from concurrent
+    * jobs (another thread, a streaming micro-batch, a lingering
+    * speculative task) are counted in `foreign` instead of polluting
+    * the numbers. It also counts the group's jobs and tasks, and
+    * `jobSeconds` is the time at least one of its jobs was running:
+    * a caller's wall time minus it is the driver gap, time spent
+    * planning or between jobs. */
+  private[graft] final class TaskMetricsListener(groupId: String) extends SparkListener {
     val peak = new AtomicLong(0L)
     val shuffleRead = new AtomicLong(0L)
     val shuffleWrite = new AtomicLong(0L)
     val spilled = new AtomicLong(0L)
     val foreign = new AtomicLong(0L)
+    val tasks = new AtomicLong(0L)
     private val myStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    private val running = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    private val spans = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    private val started = new AtomicLong(0L)
 
     override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
       val props = jobStart.properties
-      if (props != null && groupId == props.getProperty("spark.jobGroup.id"))
+      if (props != null && groupId == props.getProperty("spark.jobGroup.id")) {
+        started.incrementAndGet()
+        running.put(jobStart.jobId, jobStart.time)
         jobStart.stageIds.foreach(myStages.add(_))
+      }
     }
+
+    override def onJobEnd(jobEnd: SparkListenerJobEnd): Unit =
+      Option(running.remove(jobEnd.jobId)).foreach { t0 =>
+        spans.synchronized(spans += ((t0, jobEnd.time)))
+      }
 
     override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
       if (!myStages.contains(taskEnd.stageId)) { foreign.incrementAndGet(); return }
+      tasks.incrementAndGet()
       val m = taskEnd.taskMetrics
       if (m != null) {
         peak.getAndAccumulate(m.peakExecutionMemory, math.max)
@@ -80,7 +97,26 @@ object QueryInstrumentation {
         spilled.addAndGet(m.memoryBytesSpilled)
       }
     }
+
+    def jobs: Long = started.get()
+
+    /** Seconds covered by the union of the group's ended jobs'
+      * [start, end] spans (overlapping jobs count once). */
+    def jobSeconds: Double = {
+      val sorted = spans.synchronized(spans.sortBy(_._1).toList)
+      val (total, _) = sorted.foldLeft((0L, Long.MinValue)) { case ((acc, reach), (s, e)) =>
+        (acc + math.max(0L, e - math.max(s, reach)), math.max(reach, e))
+      }
+      total / 1e3
+    }
   }
+
+  /** Materializes `df` through the `noop` sink: every row is computed
+    * and nothing returns to the driver. Not `count()`, which lets
+    * Catalyst prune projections and drop sorts, under-measuring the
+    * work a user's query does. */
+  def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   private def timed[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime()
@@ -88,26 +124,34 @@ object QueryInstrumentation {
     (r, (System.nanoTime() - t0) / 1e6)
   }
 
+  /** Runs `body` with a listener scoped to job group `groupId`
+    * attached, then waits for the (async) listener bus to drain —
+    * after `body`, so a timer inside `body` does not include the
+    * wait — and returns `body`'s value with the listener. The caller
+    * sets the group on the threads that run the jobs. */
+  private[graft] def observe[T](sc: SparkContext, groupId: String)(body: => T): (T, TaskMetricsListener) = {
+    val l = new TaskMetricsListener(groupId)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.graft.SparkInternals.waitListenerBusEmpty(sc)
+      (r, l)
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Runs `action` under a fresh job group with a group-scoped
-    * task-metrics listener attached, waits for the (async) listener
-    * bus to drain, and returns the measurements. Attribution is by
-    * job group, so concurrent jobs on the shared SparkContext cannot
-    * pollute the numbers (they surface as `foreignTasks`). */
+    * task-metrics listener attached and returns the measurements.
+    * Attribution is by job group, so concurrent jobs on the shared
+    * SparkContext cannot pollute the numbers (they surface as
+    * `foreignTasks`). */
   private def withTaskMetrics[T](df: DataFrame, name: String)(action: => T): (T, Double, TaskMetricsListener) = {
     val sc = df.sparkSession.sparkContext
     val groupId = s"graft-qi-$name-${java.util.UUID.randomUUID()}"
-    val l = new TaskMetricsListener(groupId)
-    sc.addSparkListener(l)
-    sc.setJobGroup(groupId, s"graft instrumented query: $name",
-      interruptOnCancel = false)
-    try {
-      val (r, ms) = timed(action)
-      org.apache.spark.graft.SparkInternals.waitListenerBusEmpty(sc)
-      (r, ms, l)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
+    val ((r, ms), l) = observe(sc, groupId) {
+      sc.setJobGroup(groupId, s"graft instrumented query: $name", interruptOnCancel = false)
+      try timed(action) finally sc.clearJobGroup()
     }
+    (r, ms, l)
   }
 
   /** Run `df` to a driver-side result with per-phase timings and
@@ -132,8 +176,7 @@ object QueryInstrumentation {
     val (_, tAnalyze) = timed(qe.analyzed)
     val (_, tOptimize) = timed(qe.optimizedPlan)
     val (_, tPlan) = timed(qe.executedPlan)
-    val (_, tExec, l) = withTaskMetrics(df, name)(
-      df.write.format("noop").mode("overwrite").save())
+    val (_, tExec, l) = withTaskMetrics(df, name)(noop(df))
     QueryStats(name, Seq(
       "analyze" -> tAnalyze, "optimize" -> tOptimize,
       "plan" -> tPlan, "execute" -> tExec), -1L,

@@ -1,17 +1,15 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Same-scale benchmark against the reference README's published
   * numbers (reference README.md "Query Performance": 10M rows, 700MB
   * clustered parquet, per-query 0.61–1.14s with a Memory Impact
   * column; reference src/main.rs:700-760 runs the same five shapes).
   *
-  * Builds a 10M-row documents table (sf0.1 amplified with remapped
-  * doc ids — the inverted-index family never reads text, so replica
-  * text is kept verbatim), writes it through ClusteredParquet (the
-  * layout the reference benchmarks against: doc_id-sorted, zstd,
-  * stats), and runs the reference's query shapes through
+  * Builds a 10M-row documents table (sf0.1 amplified by `ScaleUp`'s
+  * verbatim mode: remapped doc ids, replica text kept as it is — the
+  * inverted-index family never reads text), writes it through
+  * ClusteredParquet (the layout the reference benchmarks against:
+  * doc_id-sorted, zstd, stats), and runs the reference's query shapes through
   * QueryInstrumentation so each line reports wall time AND memory —
   * the two columns of the reference's table. Run:
   *
@@ -28,13 +26,9 @@ object ReferenceScaleBench {
 
     val docs = Tables.documents(spark, sfDir)
     val base = docs.count()
-    val factor = math.max(1L, target / base)
+    val factor = math.max(1L, target / base).toInt
     val t0 = System.nanoTime()
-    val amplified = docs
-      .withColumn("rep", explode(sequence(lit(0L), lit(factor - 1L))))
-      .select((col("doc_id") * factor + col("rep")).as("doc_id"),
-        col("text"), col("lang"), col("source"), col("n_chars"))
-    sources.ClusteredParquet.write(amplified, path, numFiles = 32)
+    sources.ClusteredParquet.write(ScaleUp.documents(docs, factor, "verbatim"), path, numFiles = 32)
     val rows = spark.read.parquet(path).count()
     println(f"[refscale] wrote $rows%,d rows clustered in ${(System.nanoTime() - t0) / 1e9}%.1fs")
 
@@ -65,7 +59,7 @@ object ReferenceScaleBench {
       "point_lookup(100 ids)        " -> (() =>
         sources.ClusteredParquet.pointLookup(spark, path, ids)))
 
-    queries.foreach { case (name, f) => f().write.format("noop").mode("overwrite").save() } // warm
+    queries.foreach { case (_, f) => QueryInstrumentation.noop(f()) } // warm
     val lines = queries.map { case (name, f) =>
       // median of 3 instrumented runs (the Bench discipline): the
       // 10M-row amplify+write right above leaves GC debt in this same

@@ -19,14 +19,27 @@ import org.apache.spark.sql.functions._
   *    replica is a self-consistent TPC-H world (join cardinalities
   *    per key unchanged, totals × factor);
   *  - documents: replica tokens prefixed `r{rep}_` (rep 0 verbatim) —
-  *    replicas share no shingles, so duplicate DENSITY stays constant
-  *    (the StressBench.amplify argument: N× data, not N× near-dups);
+  *    replicas share no shingles with each other or with rep 0, while
+  *    a planted near-dup pair stays a near-dup inside its replica
+  *    (both members get the same prefix, so their Jaccard is
+  *    unchanged). Duplicate DENSITY stays constant: N× data, not N×
+  *    near-dups. Pair verification cost is linear in true pairs, so a
+  *    text remap that kept shingles shared across replicas (rotating
+  *    tokens does) would grow the pair output far faster than the
+  *    rows and measure the wrong thing. `SPARK_GRAFT_SCALEUP_TEXT`
+  *    picks the mode: `prefix` (default), `byteneutral` (same
+  *    properties at ~1× bytes per row) or `verbatim` (text unchanged,
+  *    search family only: every term's postings and df grow N×,
+  *    which prefixed replicas hide because they never match a query
+  *    term; every replica is an exact duplicate of its rep-0 doc, so
+  *    the dedup family must not read it);
   *  - embeddings: replica vectors rotated by rep components at
   *    constant norm (cell/band diversity), labels kept;
   *  - events: N× users each carrying the ORIGINAL series — constant
   *    per-user history, which is what event growth looks like.
   *
-  * Run: sbt "runMain graft.ScaleUp [srcDir destDir factor]"
+  * Run: sbt "runMain graft.ScaleUp [srcDir destDir factor]"; README
+  * "Running" has the ScaleUp → Bench recipe for 1×/N× wall ratios.
   */
 object ScaleUp {
 
@@ -91,8 +104,10 @@ object ScaleUp {
             call_function("rpad",
               sha2(concat_ws("_", t, col("__rep").cast("string")), 256),
               greatest(length(t), lit(4)), lit("f"))), " "))
+      // id remap only: the search family's hot-term scaling
+      case "verbatim" => col("text")
       case other => throw new IllegalArgumentException(
-        s"unknown text mode '$other' (prefix | byteneutral)")
+        s"unknown text mode '$other' (prefix | byteneutral | verbatim)")
     }
     df.withColumn("__rep", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("doc_id", col("doc_id") * factor + col("__rep"))

@@ -888,8 +888,7 @@ object SparkEntry {
     // union (the merge invariant), which is exactly what the DuckDB
     // oracle rebuilds.
     Entry("ii_index_streaming", (s, dir) => {
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("graft-ii-stream").toString
+      val stateDir = Scratch.dir(s, "graft-ii-stream")
       val docs = Tables.documents(s, dir)
       (0 until 4).foreach { b =>
         graft.streaming.StreamingIndex.processBatch(
@@ -3780,8 +3779,7 @@ object SparkEntry {
     // X109: index time travel — after 4 committed batches, the AS OF
     // version-2 read must equal the one-shot rebuild over batches 0..2
     Entry("ii_index_asof", (s, dir) => {
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("graft-ii-asof").toString
+      val stateDir = Scratch.dir(s, "graft-ii-asof")
       val docs = Tables.documents(s, dir)
       (0 until 4).foreach { b =>
         graft.streaming.StreamingIndex.processBatch(

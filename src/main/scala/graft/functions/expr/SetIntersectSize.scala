@@ -7,13 +7,18 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `graft_set_inter(array<string>, array<string>) -> bigint` — the
-  * size of the set intersection of two distinct-element string arrays,
-  * as ONE fused pass (hash the smaller side, probe with the larger).
+/** `(array<string>, array<string>) -> bigint`, printed
+  * `graft_set_inter` in plans — the size of the set intersection of
+  * two distinct-element string arrays, as ONE fused pass (hash the
+  * smaller side, probe with the larger).
   *
   * Exists for the pair verifiers (Dedup.verifyJaccard /
-  * verifyContainment), replacing `size(array_intersect(a, b))`, for
-  * two measured reasons:
+  * verifyContainment), which build it directly; it is not a SQL
+  * function, because its non-deterministic flag (below) would bar it
+  * from join conditions and aggregates, and duplicate elements in the
+  * larger input would over-count against `size(array_intersect)`. It
+  * replaces `size(array_intersect(a, b))` there for two measured
+  * reasons:
   *
   *  1. No intermediate: array_intersect materializes the whole
   *     intersection ARRAY per pair just to take its length — per

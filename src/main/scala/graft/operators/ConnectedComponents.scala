@@ -13,13 +13,15 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * under-deletes: pairs (a,b), (b,c) without (a,c) would keep both a
   * and c if deletion is done per-pair.
   *
-  * Algorithm: min-label propagation with pointer jumping (the
-  * map-reduce connected-components family of Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14). Each
-  * round every node takes the minimum of its neighbors' labels and
-  * its own label's label (L'(i) = min(min_{j∈N(i)} L(j), L(L(i)))) —
-  * the second term is the pointer-jumping step that collapses label
-  * chains and gives O(log n) rounds on a path instead of O(n).
+  * The distributed loop is min-label propagation with a one-step
+  * shortcut (the map-reduce connected-components family of Kiveris et
+  * al., "Connected Components in MapReduce and Beyond", SoCC'14).
+  * Each round every node takes the minimum of its neighbors' labels
+  * and its own label's label (L'(i) = min(min_{j∈N(i)} L(j), L(L(i)))).
+  * The shortcut does not bound the rounds by log n: they grow with the
+  * diameter unless ids happen to grow along a chain. A replay of the
+  * rule needs about 55 rounds on a 256-node path with random ids, and
+  * such a graph reaches `maxRounds` and throws.
   *
   * Scale shape: each round is one key-partitioned join + one
   * aggregation over the EDGE list plus the label map — no per-node
@@ -31,13 +33,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * reliable FS under `spark.graft.reliableCheckpoints`) truncates
   * lineage so round r's plan does not replay rounds 1..r-1; each
   * superseded fence is released as soon as the next one holds.
-  * Measured through this loop on the committed sf0.1 pair graphs: 12
-  * rounds — the banded/embedding pair lists contain one chain-shaped
-  * component (near-dups of near-dups), not the 2-3 a clique-only graph
-  * would need. The round count grows with the diameter, not with
-  * log2(chain length), unless ids happen to grow along the chain: a
-  * replay of the rule needs about 55 rounds on a 256-node path with
-  * random ids.
+  * No committed graph reaches the loop: the five CC entries at sf0.01
+  * and sf0.1 and the benchmark's `dedup_cc` graph all take the driver
+  * route below (0 rounds).
   *
   * Two routes, chosen once from the raw pair list: the input's
   * (id1, id2) cast to long, with self-loops and NULL ids dropped, is

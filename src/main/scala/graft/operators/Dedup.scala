@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.DatasetBridge
 import graft.functions.TextFunctions._
+import graft.functions.expr.SetIntersectSize
 
 /** Deduplication family (L1-L5) for training-data pipelines.
   *
@@ -362,13 +364,13 @@ object Dedup {
     // partitioning may have collapsed (AQE coalesce);
     // broadcast joins would carry that collapse into the CPU-dense
     // intersect stage — see Parallelize.spreadPairs
-    // graft_set_inter: one fused counting pass per pair (no
+    // SetIntersectSize: one fused counting pass per pair (no
     // intermediate intersection array), and single-eval — the callers'
     // jaccard threshold would otherwise be pushed into the join
     // condition and the intersect computed twice per pair (guide §4.4)
     Parallelize.spreadPairs(pairs).join(d1, "id1").join(d2, "id2")
       .withColumn("__inter",
-        call_function("graft_set_inter", col("__s1"), col("__s2")).cast("double"))
+        DatasetBridge.column(col("__s1"), col("__s2"))(SetIntersectSize(_, _)).cast("double"))
       .select(col("id1"), col("id2"),
         (col("__inter") /
           (size(col("__s1")) + size(col("__s2")) - col("__inter"))).as("jaccard"))
@@ -425,7 +427,7 @@ object Dedup {
     val d2 = sh.select(col("__sid").as("id2"), col("__s").as("__s2"))
     Parallelize.spreadPairs(pairs).join(d1, "id1").join(d2, "id2")
       .withColumn("__inter",
-        call_function("graft_set_inter", col("__s1"), col("__s2")).cast("double"))
+        DatasetBridge.column(col("__s1"), col("__s2"))(SetIntersectSize(_, _)).cast("double"))
       .select(col("id1"), col("id2"),
         (col("__inter") / size(col("__s1"))).as("c1"),
         (col("__inter") / size(col("__s2"))).as("c2"))

@@ -35,7 +35,7 @@ object MaterializedView {
     val ev = Tables.events(spark, sfDir)
       .select(date_format(col("ts"), "yyyy-MM-dd").as("day"), col("event_type"),
         col("value").cast("decimal(18,2)").as("y"))
-    val mvDir = java.nio.file.Files.createTempDirectory("graft-mv").toString
+    val mvDir = graft.Scratch.dir(spark, "graft-mv")
     partialAgg(ev.where(col("day") < splitDay))
       .write.mode("overwrite").parquet(mvDir)
     val stored = spark.read.parquet(mvDir)

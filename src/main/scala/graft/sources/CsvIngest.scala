@@ -47,7 +47,7 @@ object CsvIngest {
     * injected lines cover each kind. */
   def ingestEntry(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val tmp = graft.Scratch.dir(spark, "graft-csv")
     graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
       .write.mode("overwrite")

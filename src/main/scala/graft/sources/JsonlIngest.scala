@@ -43,7 +43,7 @@ object JsonlIngest {
     * aggregation over the parsed columns. */
   def ingestEntry(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+    val tmp = graft.Scratch.dir(spark, "graft-jsonl")
     graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("props"))

@@ -24,7 +24,7 @@ object OrcIngest {
     * truncation, double mangling) breaks the hash. */
   def ingestEntry(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-orc").toString
+    val tmp = graft.Scratch.dir(spark, "graft-orc")
     graft.Tables.events(spark, sfDir)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .write.mode("overwrite").orc(tmp)

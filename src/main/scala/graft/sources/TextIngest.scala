@@ -29,7 +29,7 @@ object TextIngest {
     * a production corpus would escape both at write time.) */
   def ingestEntry(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-text").toString
+    val tmp = graft.Scratch.dir(spark, "graft-text")
     graft.Tables.documents(spark, sfDir)
       .select(concat_ws("\t", $"doc_id", $"lang", $"text").as("value"))
       .write.mode("overwrite").text(tmp)

@@ -50,7 +50,7 @@ object EventStream {
     * state merges split-invariant. */
   def replayWindowedCounts(spark: org.apache.spark.sql.SparkSession,
                            sfDir: String, batches: Int = 4): DataFrame = {
-    val stage = java.nio.file.Files.createTempDirectory("graft-stream-replay").toString
+    val stage = graft.Scratch.dir(spark, "graft-stream-replay")
     val ev = graft.Tables.events(spark, sfDir)
     ev.repartitionByRange(batches, col("ts"))
       .write.mode("overwrite").parquet(stage)

@@ -97,7 +97,7 @@ object Replay {
     }.sum
 
   /** Stage every slice of one frame as single parquet files
-    * `0000.parquet`, `0001.parquet`, … under a fresh temp dir with
+    * `0000.parquet`, `0001.parquet`, … under a fresh `graft.Scratch` dir with
     * strictly increasing mtimes; with maxFilesPerTrigger=1 the
     * streaming file source then replays exactly one slice per
     * micro-batch, in order — in ONE Spark job (guide §1.2: the
@@ -111,7 +111,7 @@ object Replay {
     * pinned-mtimes layout — the micro-batch order contract is
     * unchanged. */
   def stageSliced(dfWithSlice: DataFrame, nSlices: Int): String = {
-    val stage = Files.createTempDirectory("graft-replay").toString
+    val stage = graft.Scratch.dir(dfWithSlice.sparkSession, "graft-replay")
     val tmp = s"$stage/_tmp"
     val df = dfWithSlice.withColumn("__slice", col("__slice").cast("int"))
     // maxRecordsPerFile=0 pinned per-write: a session that sets the

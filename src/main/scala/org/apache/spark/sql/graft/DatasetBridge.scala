@@ -24,6 +24,12 @@ object DatasetBridge {
   def column(c: Column)(f: Expression => Expression): Column =
     classic.ExpressionUtils.column(f(classic.ExpressionUtils.expression(c)))
 
+  /** A Column of `f` over two columns' expressions (graft's
+    * `SetIntersectSize`, which the pair verifiers build directly). */
+  def column(a: Column, b: Column)(f: (Expression, Expression) => Expression): Column =
+    classic.ExpressionUtils.column(
+      f(classic.ExpressionUtils.expression(a), classic.ExpressionUtils.expression(b)))
+
   private val MaxSize = BigInt(Long.MaxValue)
 
   /** A checkpointed `df` whose carried size estimate is capped at

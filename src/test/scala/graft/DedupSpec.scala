@@ -551,6 +551,26 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("graft_set_inter is not a SQL function") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_set_inter(array('a'), array('a'))").collect())
+    assert(e.getMessage.contains("graft_set_inter"), e.getMessage)
+  }
+
+  test("L4 plan: the pair intersect is computed once, above the joins, under the jaccard filter") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
+    import graft.functions.expr.SetIntersectSize
+    val plan = Dedup.minhashLshPairs(docs).queryExecution.optimizedPlan
+    val inters = plan.flatMap(_.expressions.flatMap(_.collect { case s: SetIntersectSize => s }))
+    assert(inters.size == 1, s"one intersect per pair expected:\n$plan")
+    assert(plan.collect { case j: Join => j.condition.toSeq }.flatten
+      .forall(_.collect { case s: SetIntersectSize => s }.isEmpty),
+      s"the jaccard threshold must not reach a join condition:\n$plan")
+    assert(plan.collect { case f: Filter => f.condition.references }
+      .exists(_.exists(_.name == "__inter")),
+      s"the threshold must filter the projected intersect:\n$plan")
+  }
+
   test("L2 plan shape: one exchange on band buckets, no shingle explode before it") {
     val plan = Dedup.minhashLshPairs(docs).queryExecution.optimizedPlan.toString
     // signature computed as the custom per-row expression, not an explode of shingles

@@ -70,4 +70,19 @@ class QueryInstrumentationSpec extends AnyFunSuite {
     assert(stats.shuffleReadBytes > 0L, "final aggregate must read the shuffle")
     assert(stats.pretty.contains("peakTaskMem="))
   }
+
+  test("Bench.runBounded counts its group's jobs, those run while a frame is built included") {
+    // the first collect stands in for a build-time fence or driver
+    // collect; the noop write is the entry's execution
+    val run = Bench.runBounded(spark, "spec", "jobs", 120) {
+      val n = spark.range(0, 1000, 1, 2).collect().length
+      QueryInstrumentation.noop(spark.range(0, n % 97 + 10, 1, 3).toDF())
+    }.getOrElse(fail("the bounded run failed"))
+    assert(run.jobs == 2, s"one build-time job and one write job: $run")
+    assert(run.tasks == 2 + 3, s"the jobs' tasks are counted: $run")
+    assert(run.jobS > 0.0 && run.jobS <= run.wallS,
+      s"job seconds are the union of job spans inside the wall: $run")
+    // a failing body reports no run
+    assert(Bench.runBounded(spark, "spec", "fails", 120)(sys.error("boom")).isEmpty)
+  }
 }

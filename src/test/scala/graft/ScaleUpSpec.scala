@@ -46,4 +46,47 @@ class ScaleUpSpec extends AnyFunSuite {
     assert(toks(amp(4L)).distinct.size == distinctSrc,
       "distinct source tokens must stay distinct after the floored remap")
   }
+
+  private def corpus = {
+    import spark.implicits._
+    Seq(
+      (1L, "the quick brown fox", "en", "web", 19L),
+      (2L, "a b  c", "fr", "books", 6L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+  }
+
+  test("prefix amplification: rep 0 verbatim, replicas lead with a sha256 preamble") {
+    import spark.implicits._
+    val amp = ScaleUp.documents(corpus, factor = 3)
+      .select("doc_id", "text", "lang").as[(Long, String, String)].collect()
+      .map { case (id, t, l) => id -> (t, l) }.toMap
+    assert(amp.keySet == Set(3L, 4L, 5L, 6L, 7L, 8L), "ids remap to doc_id*factor+rep")
+    assert(amp(3L) == ("the quick brown fox", "en"))
+    assert(amp(6L) == ("a b  c", "fr"))
+    val preambles = for ((src, base) <- Seq(("the quick brown fox", 3L), ("a b  c", 6L));
+                         rep <- 1 to 2) yield {
+      val (text, _) = amp(base + rep)
+      val (head, rest) = (toks(text).head, toks(text).tail)
+      assert(head.matches("[0-9a-f]{64}"), s"replica must lead with a sha256 hex token: '$head'")
+      assert(rest == toks(src).map(t => s"r${rep}_$t"),
+        s"replica $rep tokens must be the source tokens prefixed r${rep}_")
+      head
+    }
+    assert(preambles.distinct.size == preambles.size, "one preamble per (doc, rep)")
+    assert(amp(4L)._2 == "en" && amp(8L)._2 == "fr", "other columns are copied")
+  }
+
+  test("verbatim amplification: text identical, ids remapped id*factor+rep") {
+    import spark.implicits._
+    val amp = ScaleUp.documents(corpus, factor = 4, textMode = "verbatim")
+      .as[(Long, String, String, String, Long)].collect()
+    val src = corpus.as[(Long, String, String, String, Long)].collect()
+    val expected = for ((id, t, l, so, n) <- src; rep <- 0 until 4)
+      yield (id * 4 + rep, t, l, so, n)
+    assert(amp.sortBy(_._1).toSeq == expected.sortBy(_._1).toSeq)
+  }
+
+  test("an unknown text mode is refused") {
+    intercept[IllegalArgumentException](ScaleUp.documents(corpus, 2, textMode = "rotate"))
+  }
 }

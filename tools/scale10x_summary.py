@@ -5,16 +5,33 @@ may run in segments), per-query seconds at 10x (SCALE10X_BENCH.json)
 and at 1x (BENCH_full.json), with the wall-time ratio per query.
 Driver-side tooling only.
 
-Usage: scale10x_summary.py [verify_log ...]
-"""
-import glob, json, os, re, sys
+Usage: scale10x_summary.py [--bench1 F] [--bench10 F] [--out F]
+                           [verify_log ...]
 
-logs = sys.argv[1:] or ["/tmp/scale10x_verify.log"]
-bench10 = json.load(open("SCALE10X_BENCH.json"))
+With --bench1/--bench10 it reads that pair of graft.Bench artifacts
+(for example two SPARK_GRAFT_ONLY runs, one per scale) and writes the
+per-entry ratios to --out; the full sweep's optional sections
+(byte-neutral text, SNM) are read only without those two flags.
+With no verify log named and none at the default path, every entry's
+verify reads "not-compared".
+"""
+import argparse, glob, json, os, re
+
+ap = argparse.ArgumentParser()
+ap.add_argument("--bench1")
+ap.add_argument("--bench10")
+ap.add_argument("--out", default="SCALE10X.json")
+ap.add_argument("logs", nargs="*")
+args = ap.parse_args()
+sweep = args.bench1 is None and args.bench10 is None
+bench1_path = args.bench1 or "BENCH_full.json"
+logs = args.logs or [lg for lg in ["/tmp/scale10x_verify.log"] if os.path.exists(lg)]
+bench10 = json.load(open(args.bench10 or "SCALE10X_BENCH.json"))
 try:
-    bench1 = json.load(open("BENCH_full.json"))["queries"]
+    bench1_art = json.load(open(bench1_path))
+    bench1 = bench1_art["queries"]
 except FileNotFoundError:
-    bench1 = {}
+    bench1_art, bench1 = {}, {}
 
 # later logs win: a rerun after a fix supersedes the original row
 status = {}
@@ -53,9 +70,9 @@ for name, sec10 in bench10["queries"].items():
 ratios = sorted((v["ratio"], k) for k, v in queries.items() if "ratio" in v)
 summary = {
     "factor": 10,
-    "base": "BENCH_full.json (sf0.1)" if bench1 else None,
+    "base": f"{bench1_path} ({bench1_art.get('sf')})" if bench1 else None,
     "cpus_10x": bench10.get("cpus"),
-    "cpus_1x": json.load(open("BENCH_full.json")).get("cpus") if bench1 else None,
+    "cpus_1x": bench1_art.get("cpus"),
     "verify": {"ok": ok, "ratio_exempt": exempt, "failed": fails,
                "compared": len(status), "total": len(queries)},
     "bench_total_sec_10x": bench10["value"],
@@ -71,7 +88,7 @@ summary = {
 # isolated SPARK_GRAFT_ONLY JVM, reps=1 (SCALE10X_TEXT_1X.json) — so the
 # ratio is apples-to-apples; the full-sweep reps=3 number is kept
 # alongside as sec_1x_fullsweep for context only.
-if os.path.exists("SCALE10X_TEXT.json"):
+if sweep and os.path.exists("SCALE10X_TEXT.json"):
     bn = json.load(open("SCALE10X_TEXT.json"))
     bn1 = (json.load(open("SCALE10X_TEXT_1X.json"))["queries"]
            if os.path.exists("SCALE10X_TEXT_1X.json") else {})
@@ -94,7 +111,7 @@ if os.path.exists("SCALE10X_TEXT.json"):
 # entry — these ratios are the honest ones; the full-sweep worst-ratio
 # table charges the shared stage to the first payer only
 snm = {}
-for p in glob.glob("/tmp/graft_snm_1x_*.json"):
+for p in glob.glob("/tmp/graft_snm_1x_*.json") if sweep else []:
     name = os.path.basename(p)[len("graft_snm_1x_"):-len(".json")]
     sec1 = json.load(open(p))["queries"].get(name)
     p10 = f"/tmp/graft_snm_10x_{name}.json"
@@ -136,11 +153,15 @@ if snm:
 recall = {}
 for scale, path in [("1x", "/tmp/graft_snm_recall_1x.json"),
                     ("10x", "/tmp/graft_snm_recall_10x.json")]:
-    if os.path.exists(path):
+    if sweep and os.path.exists(path):
         recall[scale] = json.load(open(path))
 if recall:
     summary["snm_recall"] = recall
-json.dump(summary, open("SCALE10X.json", "w"), indent=1)
+json.dump(summary, open(args.out, "w"), indent=1)
 print(f"verify ok={ok}/{len(status)} fails={fails}")
 print(f"bench 10x total={bench10['value']:.1f}s, median ratio="
       f"{summary['median_ratio']}, worst={summary['worst_ratios'][:3]}")
+if not sweep:
+    for k, v in sorted(queries.items()):
+        print(f"{k}: 1x {v.get('sec_1x')} s, 10x {v['sec_10x']} s, "
+              f"ratio {v.get('ratio')}")
